@@ -27,6 +27,11 @@ from tostore_spark.llmops import packing as PK
 from tostore_spark.llmops import similarity as S
 from tostore_spark.llmops import text as TX
 from tostore_spark.localdf import local_df
+from tostore_spark.plans.delta_export import export_delta, optimize_delta
+from tostore_spark.plans.iceberg import (drop_iceberg_column, export_iceberg,
+                                         rename_iceberg_column,
+                                         rewrite_data_files, rewrite_manifests)
+from tostore_spark.plans.layout import optimize_table
 
 _ENGINES: dict[tuple[int, str], ToStoreSpark] = {}
 
@@ -2418,17 +2423,17 @@ def q_delta_roundtrip(spark, sf_dir):
             {"id": f"n{r['n_nationkey']:03d}", "n_name": r["n_name"],
              "key": r["n_nationkey"]} for r in nat])
         db1.flush()
-        db1.export_delta("nat", dest)                       # v0
+        export_delta(db1, "nat", dest)                       # v0
         db1.batch_insert("nat", [
             {"id": f"x{i}", "n_name": f"ADDED{i}", "key": 700 + i}
             for i in range(4)])
         db1.flush()                                         # append seg
-        rep1 = db1.export_delta("nat", dest, mode="update")  # v1
+        rep1 = export_delta(db1, "nat", dest, mode="update")  # v1
         if rep1["commit"] != "append" or rep1["rows"] != 4:
             raise AssertionError(f"expected add-only delta: {rep1}")
         db1.delete("nat").where("key", ">=", 703).execute()
         db1.flush()                                         # MoR delete
-        rep2 = db1.export_delta("nat", dest, mode="update")  # v2
+        rep2 = export_delta(db1, "nat", dest, mode="update")  # v2
         if rep2["commit"] != "refresh":
             raise AssertionError(f"expected full refresh: {rep2}")
         log1 = os.path.join(dest, "_delta_log", f"{1:020d}.json")
@@ -2478,11 +2483,11 @@ def q_delta_dv(spark, sf_dir):
             {"id": f"n{r['n_nationkey']:03d}", "n_name": r["n_name"],
              "key": r["n_nationkey"]} for r in nat])
         db1.flush()
-        db1.export_delta("nat", dest, target_files=1)       # v0
+        export_delta(db1, "nat", dest, target_files=1)       # v0
         db1.delete("nat").where("key", ">=", 20).execute()
         db1.flush()                                # deletion vector
-        rep = db1.export_delta("nat", dest, mode="update",
-                               deletion_vectors=True)
+        rep = export_delta(db1, "nat", dest, mode="update",
+                           deletion_vectors=True)
         if rep["commit"] != "dv" or rep["files"] != 0:
             raise AssertionError(f"expected a dv commit: {rep}")
         log = os.path.join(dest, "_delta_log", f"{1:020d}.json")
@@ -2665,22 +2670,22 @@ def q_delta_cdf(spark, sf_dir):
             {"id": f"n{r['n_nationkey']:03d}", "n_name": r["n_name"],
              "key": r["n_nationkey"]} for r in nat])
         db1.flush()
-        db1.export_delta("nat", dest, change_data=True,
-                         target_files=1)                      # v0
+        export_delta(db1, "nat", dest, change_data=True,
+                     target_files=1)                      # v0
         db1.batch_insert("nat", [
             {"id": f"x{i}", "n_name": f"ADDED{i}", "key": 900 + i}
             for i in range(3)])
         db1.flush()
-        rep1 = db1.export_delta("nat", dest, mode="update",
-                                change_data=True)            # v1
+        rep1 = export_delta(db1, "nat", dest, mode="update",
+                            change_data=True)            # v1
         if rep1["commit"] != "append":
             raise AssertionError(f"expected add-only commit: {rep1}")
         db1.delete("nat").where("key", ">=", 21) \
            .execute()                                        # 21-24+900+
         db1.flush()
-        rep2 = db1.export_delta("nat", dest, mode="update",
-                                deletion_vectors=True,
-                                change_data=True)            # v2
+        rep2 = export_delta(db1, "nat", dest, mode="update",
+                            deletion_vectors=True,
+                            change_data=True)            # v2
         if rep2["commit"] != "dv":
             raise AssertionError(f"expected dv commit: {rep2}")
         feed = read_delta_cdf(spark, dest, 1, 2)
@@ -2737,7 +2742,7 @@ def q_iceberg_cdf(spark, sf_dir):
             {"id": f"n{r['n_nationkey']:03d}", "n_name": r["n_name"],
              "key": r["n_nationkey"]} for r in nat])
         src.flush()
-        src.export_iceberg("nat", dest, target_files=1)       # s1
+        export_iceberg(src, "nat", dest, target_files=1)       # s1
         boot = con.apply_iceberg_changes("nat", dest)
         n_boot = boot["applied"]                     # bootstrap fold
         src.batch_insert("nat", [
@@ -2745,12 +2750,12 @@ def q_iceberg_cdf(spark, sf_dir):
             for i in range(3)] + [
             {"id": "gone", "n_name": "GONE", "key": 999}])
         src.flush()
-        rep1 = src.export_iceberg("nat", dest, mode="update")  # s2
+        rep1 = export_iceberg(src, "nat", dest, mode="update")  # s2
         if rep1["commit"] != "append":
             raise AssertionError(f"expected append commit: {rep1}")
         src.delete("nat").where("key", ">=", 21).execute()
         src.flush()
-        rep2 = src.export_iceberg("nat", dest, mode="update")  # s3
+        rep2 = export_iceberg(src, "nat", dest, mode="update")  # s3
         if rep2["commit"] != "eqdel":
             raise AssertionError(f"expected eq-delete commit: {rep2}")
         feed = read_iceberg_changes(spark, dest,
@@ -2816,7 +2821,7 @@ def q_iceberg_roundtrip(spark, sf_dir):
             {"id": f"n{r['n_nationkey']:03d}", "n_name": r["n_name"],
              "key": r["n_nationkey"]} for r in nat])
         db1.flush()
-        rep1 = db1.export_iceberg("nat", dest, target_files=1)
+        rep1 = export_iceberg(db1, "nat", dest, target_files=1)
         if rep1["snapshot_id"] != 1 or rep1["sequence_number"] != 1:
             raise AssertionError(f"expected snapshot 1: {rep1}")
         db1.batch_insert("nat", [
@@ -2826,8 +2831,8 @@ def q_iceberg_roundtrip(spark, sf_dir):
         # append commits the CURRENT frame as snapshot 2 (the foreign
         # reader sees snapshot1 rows + the whole frame again — the
         # caller-owns-dedup append contract, asserted via counts)
-        rep2 = db1.export_iceberg("nat", dest, mode="append",
-                                  target_files=1)
+        rep2 = export_iceberg(db1, "nat", dest, mode="append",
+                              target_files=1)
         if rep2["snapshot_id"] != 2 or rep2["sequence_number"] != 2:
             raise AssertionError(f"expected snapshot 2: {rep2}")
         n_s1 = read_iceberg(spark, dest, snapshot_id=1).count()
@@ -3250,7 +3255,7 @@ def q_iceberg_bounds_skip(spark, sf_dir):
             .repartitionByRange(4, "o_orderkey"))
         db1.flush()
         dest = os.path.join(tmp, "ice")
-        db1.export_iceberg("ord", dest, target_files=4)
+        export_iceberg(db1, "ord", dest, target_files=4)
         where = {"o_orderkey": {"<": 1000}}
         meta = _load_metadata(dest)
         snap = _pick_snapshot(meta)
@@ -3329,8 +3334,8 @@ def q_bridge_dv(spark, sf_dir):
             {"id": f"n{r['n_nationkey']:03d}", "n_name": r["n_name"],
              "key": r["n_nationkey"]} for r in nat])
         db1.flush()
-        db1.export_delta("nat", dest, target_files=2,
-                         cluster_by=["key"])
+        export_delta(db1, "nat", dest, target_files=2,
+                     cluster_by=["key"])
         convert_delta_to_iceberg(spark, dest)
         files0 = _live_data_files(dest)
 
@@ -3348,8 +3353,8 @@ def q_bridge_dv(spark, sf_dir):
         def _dv_epoch(keys):
             db1.delete("nat").where("key", "IN", keys).execute()
             db1.flush()
-            rep = db1.export_delta("nat", dest, mode="update",
-                                   deletion_vectors=True)
+            rep = export_delta(db1, "nat", dest, mode="update",
+                               deletion_vectors=True)
             if rep.get("commit") != "dv":
                 raise AssertionError(
                     f"expected a DV commit, got {rep.get('commit')}")
@@ -3416,16 +3421,16 @@ def q_iceberg_meta(spark, sf_dir):
             {"id": f"n{r['n_nationkey']:03d}", "n_name": r["n_name"],
              "key": r["n_nationkey"]} for r in nat])
         db1.flush()
-        db1.export_iceberg("nat", dest, target_files=2,
-                           cluster_by=["key"])
+        export_iceberg(db1, "nat", dest, target_files=2,
+                       cluster_by=["key"])
         db1.batch_insert("nat", [
             {"id": f"x{i}", "n_name": f"ADDED{i}", "key": 900 + i}
             for i in range(3)])
         db1.flush()
-        db1.export_iceberg("nat", dest, mode="update")
+        export_iceberg(db1, "nat", dest, mode="update")
         db1.delete("nat").where("key", "IN", [2, 5]).execute()
         db1.flush()
-        db1.export_iceberg("nat", dest, mode="update")
+        export_iceberg(db1, "nat", dest, mode="update")
         snaps = read_iceberg_meta(spark, dest, "snapshots") \
             .orderBy("snapshot_id").collect()
         if [s["operation"] for s in snaps] != \
@@ -3662,7 +3667,7 @@ def q_changes_evolution(spark, sf_dir):
             {"id": f"n{r['n_nationkey']:03d}", "n_name": r["n_name"],
              "key": r["n_nationkey"]} for r in nat])
         db1.flush()
-        db1.export_iceberg("nat", dest, target_files=1)       # s1
+        export_iceberg(db1, "nat", dest, target_files=1)       # s1
         # additive evolution: schema-id 1 = schema-id 0 + tag:string
         meta = _load_metadata(dest)
         old = _current_schema(meta)
@@ -3827,8 +3832,8 @@ def q_bridge_rename(spark, sf_dir):
             {"id": f"n{r['n_nationkey']:03d}", "n_name": r["n_name"],
              "key": r["n_nationkey"]} for r in nat])
         db1.flush()
-        db1.export_delta("nat", dest, target_files=1,
-                         change_data=True)                     # v0
+        export_delta(db1, "nat", dest, target_files=1,
+                     change_data=True)                     # v0
         convert_delta_to_iceberg(spark, dest)
         s1 = _load_metadata(dest)["current-snapshot-id"]
         # v1: foreign column-mapping ENABLEMENT (physicalName frozen)
@@ -3946,21 +3951,21 @@ def q_rename_column(spark, sf_dir):
             {"id": f"n{r['n_nationkey']:03d}", "n_name": r["n_name"],
              "key": r["n_nationkey"]} for r in nat])
         db1.flush()
-        db1.export_iceberg("nat", dest, target_files=1)        # s1
+        export_iceberg(db1, "nat", dest, target_files=1)        # s1
         s1 = _load_metadata(dest)["current-snapshot-id"]
         db1.batch_insert("nat", [
             {"id": "zz1", "n_name": "FRESH1", "key": 990},
             {"id": "zz2", "n_name": "FRESH2", "key": 991}])
         db1.flush()
-        db1.export_iceberg("nat", dest, mode="update")         # s2
+        export_iceberg(db1, "nat", dest, mode="update")         # s2
         db1.delete("nat").where("id", "IN",
                                 ["n001", "n005"]).execute()
         db1.flush()
-        rep = db1.export_iceberg("nat", dest, mode="update")   # s3
+        rep = export_iceberg(db1, "nat", dest, mode="update")   # s3
         if rep["commit"] != "eqdel":
             raise AssertionError(f"expected eqdel route: {rep}")
         data_before = sorted(os.listdir(os.path.join(dest, "data")))
-        db1.rename_iceberg_column(dest, {"n_name": "nation_name"})
+        rename_iceberg_column(dest, {"n_name": "nation_name"})
         if sorted(os.listdir(os.path.join(dest, "data"))) != \
                 data_before:
             raise AssertionError("rename touched data files")
@@ -4039,17 +4044,17 @@ def q_drop_widen_column(spark, sf_dir):
             {"id": f"n{r['n_nationkey']:03d}", "n_name": r["n_name"],
              "key": r["n_nationkey"]} for r in nat])
         db1.flush()
-        db1.export_iceberg("nat", dest, target_files=1)        # s1
+        export_iceberg(db1, "nat", dest, target_files=1)        # s1
         s1 = _load_metadata(dest)["current-snapshot-id"]
         db1.batch_insert("nat", [
             {"id": "zz1", "n_name": "FRESH1", "key": 990},
             {"id": "zz2", "n_name": "FRESH2", "key": 991}])
         db1.flush()
-        db1.export_iceberg("nat", dest, mode="update")         # s2
+        export_iceberg(db1, "nat", dest, mode="update")         # s2
         db1.delete("nat").where("id", "IN",
                                 ["n001", "n005"]).execute()
         db1.flush()
-        rep = db1.export_iceberg("nat", dest, mode="update")   # s3
+        rep = export_iceberg(db1, "nat", dest, mode="update")   # s3
         if rep["commit"] != "eqdel":
             raise AssertionError(f"expected eqdel route: {rep}")
         # dropping the eq-bound key column refuses; a widen no-op
@@ -4063,7 +4068,7 @@ def q_drop_widen_column(spark, sf_dir):
                 dest, {"key": "long"})["metadata_version"] is not None:
             raise AssertionError("no-op widen committed metadata")
         data_before = sorted(os.listdir(os.path.join(dest, "data")))
-        rep = db1.drop_iceberg_column(dest, ["n_name"])
+        rep = drop_iceberg_column(dest, ["n_name"])
         if rep["dropped"] != ["n_name"]:
             raise AssertionError(f"drop report wrong: {rep}")
         if sorted(os.listdir(os.path.join(dest, "data"))) != \
@@ -4301,7 +4306,7 @@ def q_reverse_bridge(spark, sf_dir):
             {"id": f"n{r['n_nationkey']:03d}", "n_name": r["n_name"],
              "key": r["n_nationkey"]} for r in nat])
         db1.flush()
-        db1.export_iceberg("nat", dest, target_files=2)        # s1
+        export_iceberg(db1, "nat", dest, target_files=2)        # s1
         rep = convert_iceberg_to_delta(spark, dest)
         if rep["version"] != 0:
             raise AssertionError(f"convert wrong: {rep}")
@@ -4323,7 +4328,7 @@ def q_reverse_bridge(spark, sf_dir):
         db1.delete("nat").where("id", "IN",
                                 ["n001", "n005"]).execute()
         db1.flush()
-        rep = db1.export_iceberg("nat", dest, mode="update")
+        rep = export_iceberg(db1, "nat", dest, mode="update")
         if rep["commit"] != "mor":
             raise AssertionError(f"expected mor route: {rep}")
         rep = sync_iceberg_to_delta(spark, dest)
@@ -4338,11 +4343,11 @@ def q_reverse_bridge(spark, sf_dir):
         db1.batch_insert("nat", [
             {"id": "zz3", "n_name": "FRESH3", "key": 992}])
         db1.flush()
-        db1.export_iceberg("nat", dest, mode="update")
+        export_iceberg(db1, "nat", dest, mode="update")
         sync_iceberg_to_delta(spark, dest)
         _agree()
         # compaction → rewrite commit
-        db1.optimize_iceberg(dest, min_files=2)
+        rewrite_data_files(db1.spark, dest, min_files=2)
         sync_iceberg_to_delta(spark, dest)
         _agree()
         # metadata-only DROP catches up as a metaData-only commit
@@ -4410,19 +4415,19 @@ def q_rewrite_manifests(spark, sf_dir):
             {"id": f"n{r['n_nationkey']:03d}", "n_name": r["n_name"],
              "key": r["n_nationkey"]} for r in nat])
         db1.flush()
-        db1.export_iceberg("nat", dest, target_files=2)        # s1
+        export_iceberg(db1, "nat", dest, target_files=2)        # s1
         for j, key in enumerate((990, 991)):   # 2 append commits
             db1.batch_insert("nat", [
                 {"id": f"zz{j}", "n_name": f"FRESH{j}", "key": key}])
             db1.flush()
-            db1.export_iceberg("nat", dest, mode="update")
+            export_iceberg(db1, "nat", dest, mode="update")
         # one mixed epoch → MoR delete manifest in the stack
         db1.batch_insert("nat", [
             {"id": "zz2", "n_name": "FRESH2", "key": 992}])
         db1.delete("nat").where("id", "IN",
                                 ["n001", "n005"]).execute()
         db1.flush()
-        rep = db1.export_iceberg("nat", dest, mode="update")
+        rep = export_iceberg(db1, "nat", dest, mode="update")
         if rep["commit"] != "mor":
             raise AssertionError(f"expected mor route: {rep}")
         n_before = _mcount(dest)
@@ -4433,7 +4438,7 @@ def q_rewrite_manifests(spark, sf_dir):
         # 5 manifests stacked: initial + 2 appends + the mor commit's
         # data + delete.  The 4-deep data group merges to 1; the
         # single delete manifest carries over verbatim (< merge min)
-        rep = db1.rewrite_iceberg_manifests(dest)
+        rep = rewrite_manifests(dest)
         if rep["rewritten"] != n_before - 1 or rep["manifests"] != 2:
             raise AssertionError(f"rewrite wrong: {rep} "
                                  f"(before={n_before})")
@@ -4451,7 +4456,7 @@ def q_rewrite_manifests(spark, sf_dir):
         db1.batch_insert("nat", [
             {"id": "zz3", "n_name": "FRESH3", "key": 993}])
         db1.flush()
-        db1.export_iceberg("nat", dest, mode="update")
+        export_iceberg(db1, "nat", dest, mode="update")
         cur = read_iceberg(spark, dest)
         row = cur.agg(
             F.count(F.lit(1)).alias("n_final"),
@@ -4503,7 +4508,7 @@ def q_partition_evolution(spark, sf_dir):
         db1.register_table("nat", df=src, schema=sch1,
                            partition_by=["rk"])
         db1.flush()
-        db1.export_iceberg("nat", dest, mode="update")        # s1
+        export_iceberg(db1, "nat", dest, mode="update")        # s1
         meta = _load_metadata(dest)
         s1 = meta["current-snapshot-id"]
         if int(meta["default-spec-id"]) != 1:
@@ -4521,7 +4526,7 @@ def q_partition_evolution(spark, sf_dir):
         db1.register_table("nat", df=evolved, schema=sch2,
                            partition_by=["par"])
         db1.flush()
-        rep = db1.export_iceberg("nat", dest, mode="update")
+        rep = export_iceberg(db1, "nat", dest, mode="update")
         if rep["commit"] != "refresh":
             raise AssertionError(f"evolution must refresh: {rep}")
         meta = _load_metadata(dest)
@@ -4533,7 +4538,7 @@ def q_partition_evolution(spark, sf_dir):
         db1.batch_insert("nat", [{"id": "zz", "n_name": "FRESH",
                                   "rk": 9, "key": 990, "par": 0}])
         db1.flush()
-        rep = db1.export_iceberg("nat", dest, mode="update")
+        rep = export_iceberg(db1, "nat", dest, mode="update")
         if rep["commit"] != "append":
             raise AssertionError(f"post-evolution append broke: {rep}")
         # BOTH specs prune: current snapshot by par, s1 by rk —
@@ -4587,7 +4592,7 @@ def q_uniform_bridge(spark, sf_dir):
             partition_by=["o_orderstatus"])
         db1.flush()
         dest = os.path.join(tmp, "dx")
-        db1.export_delta("ord", dest)
+        export_delta(db1, "ord", dest)
         mtimes = {}
         for dirpath, dirs, names in os.walk(dest):
             dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
@@ -4767,25 +4772,25 @@ def q_optimize_compact(spark, sf_dir):
              "key": r["n_nationkey"]} for r in nat])
         db1.flush()
         dd, di = os.path.join(tmp, "dx"), os.path.join(tmp, "ice")
-        db1.export_delta("nat", dd, target_files=4, change_data=True,
-                         deletion_vectors=True)
-        db1.export_iceberg("nat", di, target_files=4)
+        export_delta(db1, "nat", dd, target_files=4, change_data=True,
+                     deletion_vectors=True)
+        export_iceberg(db1, "nat", di, target_files=4)
         for r in range(2):
             db1.batch_insert("nat", [
                 {"id": f"x{r}_{i}", "n_name": f"ADD{r}{i}",
                  "key": 700 + 10 * r + i} for i in range(3)])
             db1.flush()
-            db1.export_delta("nat", dd, mode="update",
-                             deletion_vectors=True)
-            db1.export_iceberg("nat", di, mode="update")
+            export_delta(db1, "nat", dd, mode="update",
+                         deletion_vectors=True)
+            export_iceberg(db1, "nat", di, mode="update")
         db1.delete("nat").where("key", ">=", 710).execute()
         db1.flush()
-        db1.export_delta("nat", dd, mode="update",
-                         deletion_vectors=True)
-        db1.export_iceberg("nat", di, mode="update")
+        export_delta(db1, "nat", dd, mode="update",
+                     deletion_vectors=True)
+        export_iceberg(db1, "nat", di, mode="update")
         n_files_before = len(_replay(dd, None)["files"])
-        rep_d = db1.optimize_delta(dd, target_file_bytes=64 << 20)
-        rep_i = db1.optimize_iceberg(di, target_file_bytes=64 << 20)
+        rep_d = optimize_delta(db1.spark, dd, target_file_bytes=64 << 20)
+        rep_i = rewrite_data_files(db1.spark, di, target_file_bytes=64 << 20)
         st = _replay(dd, None)
         log = os.path.join(dd, "_delta_log",
                            f"{rep_d['version']:020d}.json")
@@ -4984,7 +4989,7 @@ def q_delta_export(spark, sf_dir):
             {"id": "n005", "n_name": "EXPORTED"},    # update in place
             {"id": "x1", "n_name": "ADDED", "key": 777}])
         db1.flush()                                  # replace epoch
-        rep = db1.export_delta("nat", dest, target_files=1)
+        rep = export_delta(db1, "nat", dest, target_files=1)
         log = os.path.join(dest, "_delta_log", f"{0:020d}.json")
         actions = [_json.loads(line) for line in open(log)]
         adds = [a["add"] for a in actions if "add" in a]
@@ -5968,8 +5973,8 @@ def q_zorder_rewrite(spark, sf_dir):
             df=db.df("customer").select("c_custkey", "c_acctbal",
                                         "c_mktsegment"))
         db1.flush()
-        db1.optimize_table("customer", target_partitions=4,
-                           zorder=["c_custkey", "c_acctbal"])
+        optimize_table(db1, "customer", target_partitions=4,
+                       zorder=["c_custkey", "c_acctbal"])
         out = ToStoreSpark(spark, warehouse=tmp).df("customer")
         # pin via driver collect (1.5k rows at sf0.01): the lazy frame
         # reads the tempdir warehouse, which dies with this scope — see

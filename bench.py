@@ -36,6 +36,8 @@ import os
 import sys
 import time
 from tostore_spark.localdf import local_df
+from tostore_spark.plans.delta_export import export_delta
+from tostore_spark.plans.iceberg import export_iceberg
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -942,10 +944,10 @@ def _interop_export_stat(spark, sf_dir: str) -> dict | None:
                 ddel = _os.path.join(tmp, "dx")
                 dice = _os.path.join(tmp, "ice")
                 dcl = _os.path.join(tmp, "dcl")
-                db.export_delta("t", ddel, change_data=True)
-                db.export_iceberg("t", dice, mode="update")
-                db.export_delta("tc", dcl, target_files=8,
-                                cluster_by=["id"])
+                export_delta(db, "t", ddel, change_data=True)
+                export_iceberg(db, "t", dice, mode="update")
+                export_delta(db, "tc", dcl, target_files=8,
+                             cluster_by=["id"])
                 # delete keys: VALUE-random (each file's id range
                 # spans the keyspace, so min/max refutes nothing) but
                 # physically CO-BATCHED — the rows of one staged file,
@@ -980,14 +982,14 @@ def _interop_export_stat(spark, sf_dir: str) -> dict | None:
                          for i in range(100)], L["base"].schema))
                     db.flush(only=["t"])
                     t0 = _t.time()
-                    r = db.export_delta("t", L["ddel"],
-                                        mode="update",
-                                        deletion_vectors=True)
+                    r = export_delta(db, "t", L["ddel"],
+                                     mode="update",
+                                     deletion_vectors=True)
                     L["times"]["delta_append"].append(_t.time() - t0)
                     assert r["commit"] == "append", r
                     t0 = _t.time()
-                    r = db.export_iceberg("t", L["dice"],
-                                          mode="update")
+                    r = export_iceberg(db, "t", L["dice"],
+                                       mode="update")
                     L["times"]["iceberg_append"].append(
                         _t.time() - t0)
                     assert r["commit"] == "append", r
@@ -1002,15 +1004,15 @@ def _interop_export_stat(spark, sf_dir: str) -> dict | None:
                     assert n == 100, n
                     db.flush(only=["t"])
                     t0 = _t.time()
-                    r = db.export_delta("t", L["ddel"],
-                                        mode="update",
-                                        deletion_vectors=True)
+                    r = export_delta(db, "t", L["ddel"],
+                                     mode="update",
+                                     deletion_vectors=True)
                     L["times"]["delta_dv_delete"].append(
                         _t.time() - t0)
                     assert r["commit"] == "dv", r
                     t0 = _t.time()
-                    r = db.export_iceberg("t", L["dice"],
-                                          mode="update")
+                    r = export_iceberg(db, "t", L["dice"],
+                                       mode="update")
                     L["times"]["iceberg_mor_delete"].append(
                         _t.time() - t0)
                     # pure-delete epoch: the equality-delete route
@@ -1027,9 +1029,9 @@ def _interop_export_stat(spark, sf_dir: str) -> dict | None:
                     assert n == 100, n
                     db.flush(only=["tc"])
                     t0 = _t.time()
-                    r = db.export_delta("tc", L["dcl"],
-                                        mode="update",
-                                        deletion_vectors=True)
+                    r = export_delta(db, "tc", L["dcl"],
+                                     mode="update",
+                                     deletion_vectors=True)
                     L["times"]["delta_dv_delete_clustered"].append(
                         _t.time() - t0)
                     assert r["commit"] == "dv", r
@@ -1135,10 +1137,10 @@ def _changelog_sync_stat(spark, sf_dir: str) -> dict | None:
                 dice = _os.path.join(tmp, "ice")
                 ddel = _os.path.join(tmp, "dx")
                 drev = _os.path.join(tmp, "rx")
-                db.export_iceberg("ti", dice, target_files=8)
-                db.export_delta("td", ddel, target_files=8)
+                export_iceberg(db, "ti", dice, target_files=8)
+                export_delta(db, "td", ddel, target_files=8)
                 convert_delta_to_iceberg(spark, ddel)
-                db.export_iceberg("tr", drev, target_files=8)
+                export_iceberg(db, "tr", drev, target_files=8)
                 convert_iceberg_to_delta(spark, drev)
                 ids = [r["id"] for r in
                        base.limit(REPS * 100).collect()]
@@ -1161,7 +1163,7 @@ def _changelog_sync_stat(spark, sf_dir: str) -> dict | None:
                         [(f"a{rep}{i:03d}", 1, 1.0, "A")
                          for i in range(100)], L["base"].schema))
                     db.flush(only=["ti"])
-                    db.export_iceberg("ti", L["dice"], mode="update")
+                    export_iceberg(db, "ti", L["dice"], mode="update")
                     t0 = _t.time()
                     n = read_iceberg_changes(
                         spark, L["dice"], from_snapshot=cur).count()
@@ -1178,8 +1180,8 @@ def _changelog_sync_stat(spark, sf_dir: str) -> dict | None:
                     db.delete("ti").where(
                         "id", "IN", L["del_batches"][rep]).execute()
                     db.flush(only=["ti"])
-                    r = db.export_iceberg("ti", L["dice"],
-                                          mode="update")
+                    r = export_iceberg(db, "ti", L["dice"],
+                                       mode="update")
                     assert r["commit"] in ("eqdel", "mor"), r
                     t0 = _t.time()
                     n = read_iceberg_changes(
@@ -1196,7 +1198,7 @@ def _changelog_sync_stat(spark, sf_dir: str) -> dict | None:
                         [(f"p{rep}{i:03d}", 1, 1.0, "P")
                          for i in range(100)], L["base"].schema))
                     db.flush(only=["td"])
-                    db.export_delta("td", L["ddel"], mode="update")
+                    export_delta(db, "td", L["ddel"], mode="update")
                     t0 = _t.time()
                     r = sync_delta_to_iceberg(spark, L["ddel"])
                     L["times"]["bridge_append"].append(
@@ -1213,8 +1215,8 @@ def _changelog_sync_stat(spark, sf_dir: str) -> dict | None:
                             [(f"q{rep}{j}{i:03d}", 1, 1.0, "Q")
                              for i in range(100)], L["base"].schema))
                         db.flush(only=["td"])
-                        db.export_delta("td", L["ddel"],
-                                        mode="update")
+                        export_delta(db, "td", L["ddel"],
+                                     mode="update")
                         sync_delta_to_iceberg(spark, L["ddel"])
                     optimize_delta(spark, L["ddel"],
                                    target_file_bytes=16 * 1024,
@@ -1236,9 +1238,9 @@ def _changelog_sync_stat(spark, sf_dir: str) -> dict | None:
                     db.delete("td").where(
                         "id", "IN", L["del_batches"][rep]).execute()
                     db.flush(only=["td"])
-                    r = db.export_delta("td", L["ddel"],
-                                        mode="update",
-                                        deletion_vectors=True)
+                    r = export_delta(db, "td", L["ddel"],
+                                     mode="update",
+                                     deletion_vectors=True)
                     assert r["commit"] == "dv", r
                     t0 = _t.time()
                     rs = sync_delta_to_iceberg(spark, L["ddel"])
@@ -1257,7 +1259,7 @@ def _changelog_sync_stat(spark, sf_dir: str) -> dict | None:
                         [(f"v{rep}{i:03d}", 1, 1.0, "V")
                          for i in range(100)], L["base"].schema))
                     db.flush(only=["tr"])
-                    db.export_iceberg("tr", L["drev"], mode="update")
+                    export_iceberg(db, "tr", L["drev"], mode="update")
                     t0 = _t.time()
                     rs = sync_iceberg_to_delta(spark, L["drev"])
                     L["times"]["reverse_append"].append(
@@ -1277,9 +1279,9 @@ def _changelog_sync_stat(spark, sf_dir: str) -> dict | None:
                     db.delete("tr").where(
                         "id", "IN", L["del_batches"][rep]).execute()
                     db.flush(only=["tr"])
-                    r = db.export_iceberg("tr", L["drev"],
-                                          mode="update",
-                                          delete_route="position")
+                    r = export_iceberg(db, "tr", L["drev"],
+                                       mode="update",
+                                       delete_route="position")
                     assert r["commit"] == "mor", r
                     t0 = _t.time()
                     rs = sync_iceberg_to_delta(spark, L["drev"])
@@ -1361,7 +1363,7 @@ def _consumer_bootstrap_stat(spark, sf_dir: str) -> dict | None:
                 db.register_table("t", df=base, schema=_sch("t"))
                 db.flush()
                 dice = _os.path.join(tmp, "ice")
-                db.export_iceberg("t", dice, target_files=8)
+                export_iceberg(db, "t", dice, target_files=8)
                 ids = [r["id"] for r in base.limit(100).collect()]
                 n_live, n_changes, n_del = 60000, 60000, 0
                 for c in range(commits - 1):
@@ -1381,7 +1383,7 @@ def _consumer_bootstrap_stat(spark, sf_dir: str) -> dict | None:
                         n_live += 10
                         n_changes += 10
                     db.flush(only=["t"])
-                    db.export_iceberg("t", dice, mode="update")
+                    export_iceberg(db, "t", dice, mode="update")
                 # compact BOTH legs to the same physical shape: the
                 # bootstrap then reads comparable layouts (history
                 # length must not leak in through small-file debt),
@@ -1491,10 +1493,10 @@ def _interop_skip_stat(spark, sf_dir: str) -> dict | None:
                 db.flush()
                 ddel = _os.path.join(tmp, "dx")
                 dice = _os.path.join(tmp, "ice")
-                db.export_delta("t", ddel, target_files=files,
-                                cluster_by=["l_orderkey"])
-                db.export_iceberg("t", dice, target_files=files,
-                                  cluster_by=["l_orderkey"])
+                export_delta(db, "t", ddel, target_files=files,
+                             cluster_by=["l_orderkey"])
+                export_iceberg(db, "t", dice, target_files=files,
+                               cluster_by=["l_orderkey"])
                 where = {"l_orderkey": {"BETWEEN": {"start": lo,
                                                     "end": hi}}}
                 # kept/total from the pruners (file-level observable)

@@ -6,6 +6,10 @@ import pytest
 
 from tostore_spark.schema import (DataType, FieldSchema, PrimaryKeyConfig,
                                   PrimaryKeyType, TableSchema, TableTtlConfig)
+from tostore_spark.functions.ranking import top_k_per_group
+from tostore_spark.functions.timeseries import resample
+from tostore_spark.llmops.search import bm25_build_index, bm25_search_indexed
+from tostore_spark.plans.validate import validate_table
 
 
 def fresh(spark):
@@ -281,13 +285,13 @@ def test_validate_row_rules_single_scan(spark):
 
 def test_engine_facade_new_operators(spark, db):
     from tostore_spark.plans import validate as V
-    rep = db.validate("orders", [V.not_null("o_orderkey")]).collect()
+    rep = validate_table(db.df("orders"), [V.not_null("o_orderkey")]).collect()
     assert rep[0].n_violations == 0
-    top = db.top_k_per_group("events", "user_id", "-value", 2)
+    top = top_k_per_group(db.df("events"), "user_id", "-value", 2)
     from pyspark.sql import functions as F
     mx = top.groupBy("user_id").count().agg(F.max("count")).collect()[0][0]
     assert mx <= 2
-    rs = db.resample("events", "user_id", "ts", "value", 7 * 86400)
+    rs = resample(db.df("events"), "user_id", "ts", "value", 7 * 86400)
     assert {"bucket_ts", "avg_value", "n_obs", "is_observed"} <= set(rs.columns)
 
 
@@ -355,9 +359,10 @@ def test_clip_outliers_modes(spark):
 
 
 def test_engine_text_index_facade(spark, db, tmp_path):
-    meta = db.build_text_index("documents", str(tmp_path / "tix"))
+    meta = bm25_build_index(db.df("documents"), str(tmp_path / "tix"))
     assert meta["n_docs"] > 0
-    hits = db.text_search(str(tmp_path / "tix"), "spark join", k=5).collect()
+    hits = bm25_search_indexed(db.spark, str(tmp_path / "tix"),
+                               "spark join", k=5).collect()
     assert len(hits) == 5 and hits[0]["score"] >= hits[-1]["score"]
 
 

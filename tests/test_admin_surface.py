@@ -7,6 +7,8 @@ queryMigrationTaskStatus tostore.dart:356, 944-1158.
 """
 
 import pytest
+from tostore_spark.plans.stats import (column_corr, column_histogram,
+                                       join_advice)
 
 
 def _mk(spark):
@@ -228,11 +230,12 @@ def test_facade_kv_methods_match_reference_names(spark):
 
 
 def test_stats_facade_methods(spark, db):
-    """histogram / column_corr / join_advice ride the engine facade like
-    analyze_table, so planning reads never leave the db handle."""
-    h = db.histogram("orders", "o_totalprice", n_buckets=4).collect()
+    """column_histogram / column_corr / join_advice: the planning-stats
+    module functions over an engine's tables."""
+    h = column_histogram(db.df("orders"), "o_totalprice",
+                         n_buckets=4).collect()
     assert len(h) == 4 and sum(r.n_rows for r in h) == db.df("orders").count()
-    c = db.column_corr("lineitem", ["l_quantity", "l_discount"]).collect()
+    c = column_corr(db.df("lineitem"), ["l_quantity", "l_discount"]).collect()
     assert len(c) == 1 and abs(c[0].corr) < 0.2
-    adv = db.join_advice("lineitem", "part", ("l_partkey", "p_partkey"))
+    adv = join_advice(db, "lineitem", "part", ("l_partkey", "p_partkey"))
     assert adv["strategy"] == "broadcast"

@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 from tostore_spark.engine import ToStoreSpark
 from tostore_spark.schema import (DataType, FieldSchema,
                                   PrimaryKeyConfig, TableSchema)
+from tostore_spark.plans.delta_export import export_delta
+from tostore_spark.plans.iceberg import export_iceberg
 
 
 def _rows(df):
@@ -121,12 +123,12 @@ class TestBoundedDvProbe:
                                                       read_delta)
         db = _mk(spark, tmp_path)
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=1)
+        export_delta(db, "notes", dest, target_files=1)
         monkeypatch.setattr(dv, "MAX_TOTAL_POSITIONS", 3)
         db.delete("notes").where("n", "<", 10).execute()   # 10 hits
         db.flush()
-        rep = db.export_delta("notes", dest, mode="update",
-                              deletion_vectors=True)
+        rep = export_delta(db, "notes", dest, mode="update",
+                           deletion_vectors=True)
         assert rep["commit"] != "dv"
         st = _replay(dest, None)
         assert not any(a.get("deletionVector")
@@ -140,12 +142,12 @@ class TestBoundedDvProbe:
                                                       read_delta)
         db = _mk(spark, tmp_path)
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=1)
+        export_delta(db, "notes", dest, target_files=1)
         monkeypatch.setattr(dv, "MAX_TOTAL_POSITIONS", 100)
         db.delete("notes").where("n", "<", 10).execute()
         db.flush()
-        rep = db.export_delta("notes", dest, mode="update",
-                              deletion_vectors=True)
+        rep = export_delta(db, "notes", dest, mode="update",
+                           deletion_vectors=True)
         assert rep["commit"] == "dv"
         st = _replay(dest, None)
         assert any(a.get("deletionVector")
@@ -160,9 +162,9 @@ class TestStagingConfRestore:
         try:
             spark.conf.set(key, "INT96")
             db = _mk(spark, tmp_path, rows=10)
-            db.export_delta("notes", str(tmp_path / "dx"))
+            export_delta(db, "notes", str(tmp_path / "dx"))
             assert spark.conf.get(key) == "INT96"
-            db.export_iceberg("notes", str(tmp_path / "ice"))
+            export_iceberg(db, "notes", str(tmp_path / "ice"))
             assert spark.conf.get(key) == "INT96"
         finally:
             spark.conf.set(key, old)
@@ -177,13 +179,13 @@ class TestManifestListCounts:
         db = _mk(spark, tmp_path, rows=20000)
         dest = str(tmp_path / "ice")
         # one big file + small files: the big file survives binpack
-        db.export_iceberg("notes", dest, target_files=1)
+        export_iceberg(db, "notes", dest, target_files=1)
         for r in range(2):
             db.batch_insert("notes",
                             [{"id": f"x{r}_{i}", "n": 100 + 10 * r + i}
                              for i in range(5)])
             db.flush()
-            db.export_iceberg("notes", dest, mode="update")
+            export_iceberg(db, "notes", dest, mode="update")
         rep = rewrite_data_files(spark, dest,
                                  target_file_bytes=50 << 10)
         assert rep["mode"] == "binpack"
@@ -228,8 +230,8 @@ class TestDvProbeBoundsPruning:
             {"id": f"k{i:04d}", "n": i} for i in range(400)])
         db.flush()
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=4,
-                        cluster_by=["id"])
+        export_delta(db, "notes", dest, target_files=4,
+                     cluster_by=["id"])
         probed = []
         orig = de._prune_adds
 
@@ -241,8 +243,8 @@ class TestDvProbeBoundsPruning:
         db.delete("notes").where(
             "id", "IN", [f"k{i:04d}" for i in range(10)]).execute()
         db.flush()
-        rep = db.export_delta("notes", dest, mode="update",
-                              deletion_vectors=True)
+        rep = export_delta(db, "notes", dest, mode="update",
+                           deletion_vectors=True)
         assert rep["commit"] == "dv"
         assert probed and probed[-1][1] == 4 and probed[-1][0] == 1, \
             probed
@@ -261,12 +263,12 @@ class TestDvProbeBoundsPruning:
             {"id": f"k{i:04d}", "n": i} for i in range(100)])
         db.flush()
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=4)
+        export_delta(db, "notes", dest, target_files=4)
         db.delete("notes").where(
             "id", "IN", ["k0000", "k0099"]).execute()
         db.flush()
-        rep = db.export_delta("notes", dest, mode="update",
-                              deletion_vectors=True)
+        rep = export_delta(db, "notes", dest, mode="update",
+                           deletion_vectors=True)
         assert rep["commit"] == "dv"
         got = sorted(r["id"] for r in
                      read_delta(spark, dest).collect())

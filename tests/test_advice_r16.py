@@ -11,6 +11,7 @@ from tostore_spark.engine import ToStoreSpark
 from tostore_spark.plans.delta_export import _key_bounds_where
 from tostore_spark.schema import (DataType, FieldSchema,
                                   PrimaryKeyConfig, TableSchema)
+from tostore_spark.plans.iceberg import export_iceberg
 
 
 class _TZ:
@@ -128,8 +129,8 @@ class TestCompositeEqDeleteBoundsPrune:
             {"id": f"k{i:04d}", "n": i} for i in range(400)])
         db.flush()
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=4,
-                          cluster_by=["n"])
+        export_iceberg(db, "notes", dest, target_files=4,
+                       cluster_by=["n"])
         meta, ids = _ice_field_ids(dest)
         s1 = meta["current-snapshot-id"]
         keys = [(f"k{i:04d}", i) for i in range(10)]
@@ -179,8 +180,8 @@ class TestCompositeEqDeleteBoundsPrune:
             for i in range(240)])
         db.flush()
         dest = str(tmp_path / "ice")
-        db.export_iceberg("ev", dest, target_files=4,
-                          cluster_by=["ts"])
+        export_iceberg(db, "ev", dest, target_files=4,
+                       cluster_by=["ts"])
         meta, ids = _ice_field_ids(dest)
         s1 = meta["current-snapshot-id"]
         kill_us = [int((base + timedelta(minutes=m)

@@ -11,6 +11,8 @@ import pytest
 from tostore_spark.engine import ToStoreSpark
 from tostore_spark.schema import (DataType, FieldSchema,
                                   PrimaryKeyConfig, TableSchema)
+from tostore_spark.plans.delta_export import export_delta
+from tostore_spark.plans.iceberg import export_iceberg
 
 
 def _mk(spark, wh, rows=8):
@@ -37,8 +39,8 @@ class TestBootstrapEmptyTargetGuard:
                                                      tmp_path):
         db = _mk(spark, str(tmp_path / "wh"))
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=1,
-                        change_data=True)
+        export_delta(db, "notes", dest, target_files=1,
+                     change_data=True)
         con = _consumer(spark, str(tmp_path / "wc"))
         con.batch_insert("notes", [{"id": "stale", "n": -1}])
         con.flush()
@@ -59,10 +61,10 @@ class TestBootstrapEmptyTargetGuard:
         from tostore_spark.plans.iceberg import _load_metadata
         db = _mk(spark, str(tmp_path / "wh"))
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)      # s1
+        export_iceberg(db, "notes", dest, target_files=1)      # s1
         db.batch_insert("notes", [{"id": "x9", "n": 99}])
         db.flush()
-        db.export_iceberg("notes", dest, mode="update")       # s2
+        export_iceberg(db, "notes", dest, mode="update")       # s2
         con = _consumer(spark, str(tmp_path / "wc"))
         con.batch_insert("notes", [{"id": "stale", "n": -1}])
         con.flush()
@@ -91,7 +93,7 @@ class TestRebootstrapOnRefuse:
             self, spark, tmp_path):
         db = _mk(spark, str(tmp_path / "wh"))
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)      # s1
+        export_iceberg(db, "notes", dest, target_files=1)      # s1
         con = _consumer(spark, str(tmp_path / "wc"))
         assert con.apply_iceberg_changes("notes", dest)["applied"] == 8
         # a same-schema CLEAR+reinsert → ops reset → REFRESH snapshot
@@ -101,7 +103,7 @@ class TestRebootstrapOnRefuse:
             {"id": f"k{i:03d}", "n": 777 if i == 2 else i}
             for i in range(8)])
         db.flush()
-        rep = db.export_iceberg("notes", dest, mode="update")
+        rep = export_iceberg(db, "notes", dest, mode="update")
         assert rep["commit"] == "refresh"
         with pytest.raises(ValueError, match="rewrite"):
             con.apply_iceberg_changes("notes", dest)
@@ -117,7 +119,7 @@ class TestRebootstrapOnRefuse:
         # the cursor resumed at HEAD: the next pull is incremental
         db.batch_insert("notes", [{"id": "x9", "n": 99}])
         db.flush()
-        db.export_iceberg("notes", dest, mode="update")
+        export_iceberg(db, "notes", dest, mode="update")
         rep2 = con.apply_iceberg_changes("notes", dest)
         assert rep2["applied"] == 1
         assert con.df("notes").count() == db.df("notes").count()
@@ -131,8 +133,8 @@ class TestRebootstrapOnRefuse:
                                                       read_delta)
         db = _mk(spark, str(tmp_path / "wh"))
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=1,
-                        change_data=True)                      # v0
+        export_delta(db, "notes", dest, target_files=1,
+                     change_data=True)                      # v0
         con = _consumer(spark, str(tmp_path / "wc"))
         assert con.apply_cdf("notes", dest)["applied"] == 8
         # foreign writer rewrites a file WITHOUT cdc actions: remove
@@ -173,7 +175,7 @@ class TestRebootstrapOnRefuse:
         from tostore_spark.schema import FieldSchema
         db = _mk(spark, str(tmp_path / "wh"))
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)
+        export_iceberg(db, "notes", dest, target_files=1)
         con = _consumer(spark, str(tmp_path / "wc"))
         con.apply_iceberg_changes("notes", dest)
         # schema migration → refresh with a NEW column the consumer
@@ -182,7 +184,7 @@ class TestRebootstrapOnRefuse:
             FieldSchema("tag", DataType.text,
                         default_value="T")).execute()
         db.flush()
-        db.export_iceberg("notes", dest, mode="update")
+        export_iceberg(db, "notes", dest, mode="update")
         with pytest.raises(ValueError, match="column mismatch"):
             con.apply_iceberg_changes("notes", dest,
                                       on_refuse="rebootstrap")
@@ -201,7 +203,7 @@ class TestFieldIdGateSurvivesConfLeak:
         from tostore_spark.plans.iceberg import read_iceberg
         db = _mk(spark, str(tmp_path / "wh"), rows=4)
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)
+        export_iceberg(db, "notes", dest, target_files=1)
         # strip the parquet field ids in place (same rows, no
         # PARQUET:field_id metadata) — the spec-violation shape
         ddir = os.path.join(dest, "data")

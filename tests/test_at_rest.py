@@ -12,6 +12,7 @@ from tostore_spark import EncryptionConfig
 from tostore_spark.engine import ToStoreSpark
 from tostore_spark.schema import (DataType, FieldSchema, PrimaryKeyConfig,
                                   TableSchema)
+from tostore_spark.plans.delta_export import export_delta
 
 KEY = "round11-test-passphrase"
 
@@ -319,9 +320,9 @@ class TestAtRestInterplay:
         wh, dest = str(tmp_path / "wh"), str(tmp_path / "dx")
         db = _mk(spark, wh, rows=3)
         with pytest.raises(ValueError, match="DECRYPTED"):
-            db.export_delta("people", dest)
-        rep = db.export_delta("people", dest, allow_decrypted=True,
-                              target_files=1)
+            export_delta(db, "people", dest)
+        rep = export_delta(db, "people", dest, allow_decrypted=True,
+                           target_files=1)
         assert rep["rows"] == 3
 
     def test_validation_refusals(self, spark, tmp_path):

@@ -4,6 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tostore_spark.functions.behavior import cohort_retention, funnel
+from tostore_spark.plans.stats import analyze_table
 
 
 def test_funnel_matches_duck(spark, db, duck):
@@ -110,11 +111,11 @@ def test_analyze_table_cache_invalidates_on_write(spark, db):
     eng = ToStoreSpark(spark)
     eng.register_table("t", df=spark.createDataFrame(
         [(1, "a"), (2, "b")], "id int, v string"))
-    s1 = eng.analyze_table("t", exact_ndv=True)
+    s1 = analyze_table(eng, "t", exact_ndv=True)
     assert {r.column: r.n_rows for r in s1.collect()} == {"id": 2, "v": 2}
     eng.set_df("t", eng.df("t").unionByName(
         spark.createDataFrame([(3, "c")], "id int, v string")))
-    s2 = eng.analyze_table("t", exact_ndv=True)
+    s2 = analyze_table(eng, "t", exact_ndv=True)
     assert {r.column: r.ndv for r in s2.collect()} == {"id": 3, "v": 3}
 
 
@@ -294,13 +295,13 @@ def test_analyze_cache_survives_other_table_and_reregister(spark, db):
     eng = ToStoreSpark(spark)
     eng.register_table("a", df=spark.createDataFrame([(1,)], "x int"))
     eng.register_table("b", df=spark.createDataFrame([(1,), (2,)], "y int"))
-    sa = eng.analyze_table("a", exact_ndv=True)
-    eng.analyze_table("b", exact_ndv=True)  # must NOT evict a's entry
-    assert eng.analyze_table("a", exact_ndv=True) is sa
+    sa = analyze_table(eng, "a", exact_ndv=True)
+    analyze_table(eng, "b", exact_ndv=True)  # must NOT evict a's entry
+    assert analyze_table(eng, "a", exact_ndv=True) is sa
     # re-registering replaces the data → generation bumps → fresh stats
     eng.register_table("a", df=spark.createDataFrame(
         [(1,), (2,), (3,)], "x int"))
-    assert eng.analyze_table("a", exact_ndv=True).first()["n_rows"] == 3
+    assert analyze_table(eng, "a", exact_ndv=True).first()["n_rows"] == 3
 
 
 def test_column_stats_empty_table_zero_nulls(spark):

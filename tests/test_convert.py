@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from tostore_spark.plans.delta_export import (_replay, convert_to_delta,
                                               read_delta)
+from tostore_spark.plans.delta_export import export_delta
 
 
 def _rows(df):
@@ -198,7 +199,7 @@ class TestDeltaIcebergBridge:
                                                  read_iceberg)
         db = self._mk(spark, tmp_path)
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=4)
+        export_delta(db, "notes", dest, target_files=4)
         rep = convert_delta_to_iceberg(spark, dest)
         assert rep["files"] == 4 and rep["delta_version"] == 0
         assert _rows(read_iceberg(spark, dest)) == \
@@ -214,7 +215,7 @@ class TestDeltaIcebergBridge:
                                                  read_iceberg)
         db = self._mk(spark, tmp_path, partition_by=["p"])
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest)
+        export_delta(db, "notes", dest)
         rep = convert_delta_to_iceberg(spark, dest)
         assert rep["partition_columns"] == ["p"]
         assert _rows(read_iceberg(spark, dest)) == \
@@ -238,12 +239,12 @@ class TestDeltaIcebergBridge:
             {"id": f"k{i:03d}", "n": i} for i in range(30)])
         db.flush()
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=3,
-                        deletion_vectors=True)
+        export_delta(db, "notes", dest, target_files=3,
+                     deletion_vectors=True)
         db.delete("notes").where("n", "IN", [1, 2]).execute()
         db.flush()
-        rep0 = db.export_delta("notes", dest, mode="update",
-                               deletion_vectors=True)
+        rep0 = export_delta(db, "notes", dest, mode="update",
+                            deletion_vectors=True)
         assert rep0["commit"] == "dv"
         # late r17: the refusal is LIFTED — live vectors fold into
         # the bootstrap snapshot as one position-delete file and the

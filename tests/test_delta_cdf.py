@@ -14,6 +14,7 @@ from tostore_spark.plans.delta_export import (read_delta, read_delta_cdf,
                                               vacuum_delta)
 from tostore_spark.schema import (DataType, FieldSchema, PrimaryKeyConfig,
                                   TableSchema)
+from tostore_spark.plans.delta_export import export_delta
 
 
 def _mk(spark, wh, rows=20):
@@ -36,7 +37,7 @@ def _feed(spark, dest, lo, hi):
 def test_cdf_append_and_dv_delete(spark, tmp_path):
     db = _mk(spark, str(tmp_path / "wh"))
     dest = str(tmp_path / "dx")
-    db.export_delta("notes", dest, change_data=True)
+    export_delta(db, "notes", dest, change_data=True)
     # commit meta: property set, writer version upgraded
     with open(os.path.join(dest, "_delta_log",
                            f"{0:020d}.json")) as fh:
@@ -49,12 +50,12 @@ def test_cdf_append_and_dv_delete(spark, tmp_path):
     db.batch_insert("notes", [{"id": f"x{i}", "body": "a", "n": 100 + i}
                               for i in range(3)])
     db.flush()
-    r1 = db.export_delta("notes", dest, mode="update", change_data=True)
+    r1 = export_delta(db, "notes", dest, mode="update", change_data=True)
     assert r1["commit"] == "append"
     db.delete("notes").where("n", ">=", 101).execute()
     db.flush()
-    r2 = db.export_delta("notes", dest, mode="update",
-                         deletion_vectors=True, change_data=True)
+    r2 = export_delta(db, "notes", dest, mode="update",
+                      deletion_vectors=True, change_data=True)
     assert r2["commit"] == "dv"
     assert _feed(spark, dest, 1, 2) == [
         (1, "insert", 100), (1, "insert", 101), (1, "insert", 102),
@@ -78,12 +79,12 @@ def test_cdf_append_and_dv_delete(spark, tmp_path):
 def test_cdf_replace_epoch_nets_delete_insert(spark, tmp_path):
     db = _mk(spark, str(tmp_path / "wh"))
     dest = str(tmp_path / "dx")
-    db.export_delta("notes", dest, change_data=True)
+    export_delta(db, "notes", dest, change_data=True)
     db.batch_upsert("notes", [{"id": "k005", "body": "CHANGED", "n": 555},
                               {"id": "zzz", "body": "NEW", "n": 999}])
     db.flush()
-    r = db.export_delta("notes", dest, mode="update",
-                        deletion_vectors=True, change_data=True)
+    r = export_delta(db, "notes", dest, mode="update",
+                     deletion_vectors=True, change_data=True)
     assert r["commit"] == "dv"
     assert _feed(spark, dest, 1, 1) == [
         (1, "delete", 5), (1, "insert", 555), (1, "insert", 999)]
@@ -94,15 +95,15 @@ def test_cdf_same_commit_insert_delete_nets_out(spark, tmp_path):
     outside observers — it must appear in neither feed direction."""
     db = _mk(spark, str(tmp_path / "wh"))
     dest = str(tmp_path / "dx")
-    db.export_delta("notes", dest, change_data=True)
+    export_delta(db, "notes", dest, change_data=True)
     db.batch_insert("notes", [{"id": f"x{i}", "body": "a", "n": 100 + i}
                               for i in range(3)])
     # kill one NEW row (n=101) and one OLD row (n=3) before flushing
     db.delete("notes").where("n", "=", 101).execute()
     db.delete("notes").where("n", "=", 3).execute()
     db.flush()
-    r = db.export_delta("notes", dest, mode="update",
-                        deletion_vectors=True, change_data=True)
+    r = export_delta(db, "notes", dest, mode="update",
+                     deletion_vectors=True, change_data=True)
     assert r["commit"] == "dv"
     assert _feed(spark, dest, 1, 1) == [
         (1, "delete", 3), (1, "insert", 100), (1, "insert", 102)]
@@ -113,16 +114,16 @@ def test_cdf_prior_dv_positions_do_not_resurface(spark, tmp_path):
     earlier commit's DV must not re-emit those pre-images."""
     db = _mk(spark, str(tmp_path / "wh"))
     dest = str(tmp_path / "dx")
-    db.export_delta("notes", dest, change_data=True)
+    export_delta(db, "notes", dest, change_data=True)
     db.delete("notes").where("n", "=", 5).execute()
     db.flush()
-    db.export_delta("notes", dest, mode="update",
-                    deletion_vectors=True, change_data=True)
+    export_delta(db, "notes", dest, mode="update",
+                 deletion_vectors=True, change_data=True)
     # range delete covering the already-dead n=5
     db.delete("notes").where("n", "<=", 7).execute()
     db.flush()
-    db.export_delta("notes", dest, mode="update",
-                    deletion_vectors=True, change_data=True)
+    export_delta(db, "notes", dest, mode="update",
+                 deletion_vectors=True, change_data=True)
     assert _feed(spark, dest, 2, 2) == [
         (2, "delete", 0), (2, "delete", 1), (2, "delete", 2),
         (2, "delete", 3), (2, "delete", 4), (2, "delete", 6),
@@ -135,10 +136,10 @@ def test_cdf_refresh_commit_exact_diff(spark, tmp_path):
     carry an explicit exact-diff cdc file."""
     db = _mk(spark, str(tmp_path / "wh"))
     dest = str(tmp_path / "dx")
-    db.export_delta("notes", dest, change_data=True)
+    export_delta(db, "notes", dest, change_data=True)
     db.delete("notes").where("n", "=", 7).execute()
     db.flush()
-    r = db.export_delta("notes", dest, mode="update", change_data=True)
+    r = export_delta(db, "notes", dest, mode="update", change_data=True)
     assert r["commit"] == "refresh"
     assert _feed(spark, dest, 1, 1) == [(1, "delete", 7)]
 
@@ -148,11 +149,11 @@ def test_cdf_property_persists_without_flag(spark, tmp_path):
     when the caller forgets change_data=True (the writer contract)."""
     db = _mk(spark, str(tmp_path / "wh"))
     dest = str(tmp_path / "dx")
-    db.export_delta("notes", dest, change_data=True)
+    export_delta(db, "notes", dest, change_data=True)
     db.delete("notes").where("n", "=", 4).execute()
     db.flush()
-    db.export_delta("notes", dest, mode="update",
-                    deletion_vectors=True)        # no change_data flag
+    export_delta(db, "notes", dest, mode="update",
+                 deletion_vectors=True)        # no change_data flag
     assert _feed(spark, dest, 1, 1) == [(1, "delete", 4)]
 
 
@@ -161,11 +162,11 @@ def test_cdf_mid_history_upgrade(spark, tmp_path):
     table in that commit; ranges starting before it refuse."""
     db = _mk(spark, str(tmp_path / "wh"))
     dest = str(tmp_path / "dx")
-    db.export_delta("notes", dest)                # v0: NO cdf
+    export_delta(db, "notes", dest)                # v0: NO cdf
     db.delete("notes").where("n", "=", 9).execute()
     db.flush()
-    db.export_delta("notes", dest, mode="update",
-                    deletion_vectors=True, change_data=True)
+    export_delta(db, "notes", dest, mode="update",
+                 deletion_vectors=True, change_data=True)
     assert _feed(spark, dest, 1, 1) == [(1, "delete", 9)]
     with pytest.raises(ValueError, match="enableChangeDataFeed"):
         read_delta_cdf(spark, dest, 0, 1)
@@ -175,17 +176,17 @@ def test_cdf_refuses_non_cdf_table_and_underivable_commit(spark,
                                                           tmp_path):
     db = _mk(spark, str(tmp_path / "wh"))
     dest = str(tmp_path / "dx")
-    db.export_delta("notes", dest)                # no cdf anywhere
+    export_delta(db, "notes", dest)                # no cdf anywhere
     with pytest.raises(ValueError, match="enableChangeDataFeed"):
         read_delta_cdf(spark, dest, 0)
     # cdf enabled but a later dv commit written WITHOUT the feed
     # (foreign writer violating the property): refuse, never derive
     dest2 = str(tmp_path / "dx2")
-    db.export_delta("notes", dest2, change_data=True)
+    export_delta(db, "notes", dest2, change_data=True)
     db.delete("notes").where("n", "=", 2).execute()
     db.flush()
-    db.export_delta("notes", dest2, mode="update",
-                    deletion_vectors=True, change_data=True)
+    export_delta(db, "notes", dest2, mode="update",
+                 deletion_vectors=True, change_data=True)
     log1 = os.path.join(dest2, "_delta_log", f"{1:020d}.json")
     with open(log1) as fh:
         acts = [json.loads(ln) for ln in fh]
@@ -200,12 +201,12 @@ def test_cdf_refuses_non_cdf_table_and_underivable_commit(spark,
 def test_cdf_vacuum_keeps_retained_reclaims_dead(spark, tmp_path):
     db = _mk(spark, str(tmp_path / "wh"))
     dest = str(tmp_path / "dx")
-    db.export_delta("notes", dest, change_data=True)
+    export_delta(db, "notes", dest, change_data=True)
     for i in (3, 11):
         db.delete("notes").where("n", "=", i).execute()
         db.flush()
-        db.export_delta("notes", dest, mode="update",
-                        deletion_vectors=True, change_data=True)
+        export_delta(db, "notes", dest, mode="update",
+                     deletion_vectors=True, change_data=True)
     # keep the last 2 versions (v1, v2): v1's cdc file must survive,
     # and its feed must still read exactly
     rep = vacuum_delta(dest, keep_versions=2)
@@ -229,11 +230,11 @@ def test_cdf_partitioned_table(spark, tmp_path):
     db.register_table("ev", df=src, schema=sch, partition_by=["grp"])
     db.flush(only=["ev"])
     dest = str(tmp_path / "dx")
-    db.export_delta("ev", dest, change_data=True)
+    export_delta(db, "ev", dest, change_data=True)
     db.delete("ev").where("n", "=", 7).execute()
     db.flush()
-    db.export_delta("ev", dest, mode="update",
-                    deletion_vectors=True, change_data=True)
+    export_delta(db, "ev", dest, mode="update",
+                 deletion_vectors=True, change_data=True)
     feed = read_delta_cdf(spark, dest, 1, 1)
     rows = [(r["_change_type"], r["grp"], r["n"])
             for r in feed.collect()]
@@ -340,16 +341,16 @@ def test_apply_cdf_subscription_exactly_once(spark, tmp_path):
     applies nothing), netting across the range, incremental pulls."""
     prod = _mk(spark, str(tmp_path / "wh1"))
     dest = str(tmp_path / "dx")
-    prod.export_delta("notes", dest, change_data=True)
+    export_delta(prod, "notes", dest, change_data=True)
     cons = ToStoreSpark(spark, warehouse=str(tmp_path / "wh2"))
-    cons.register_delta("notes2", dest)
+    cons.register_table("notes2", df=read_delta(cons.spark, dest))
     cons.flush()
 
     prod.delete("notes").where("n", ">=", 18).execute()
     prod.batch_insert("notes", [{"id": "new1", "body": "x", "n": 100}])
     prod.flush()
-    prod.export_delta("notes", dest, mode="update",
-                      deletion_vectors=True)
+    export_delta(prod, "notes", dest, mode="update",
+                 deletion_vectors=True)
     r1 = cons.apply_cdf("notes2", dest, from_version=1)
     assert r1["applied"] == 3                     # 2 deletes + 1 insert
 
@@ -363,8 +364,8 @@ def test_apply_cdf_subscription_exactly_once(spark, tmp_path):
     # incremental pull of the next commit
     prod.delete("notes").where("n", "=", 0).execute()
     prod.flush()
-    prod.export_delta("notes", dest, mode="update",
-                      deletion_vectors=True)
+    export_delta(prod, "notes", dest, mode="update",
+                 deletion_vectors=True)
     r3 = cons.apply_cdf("notes2", dest)
     assert r3["applied"] == 1 and r3["from_version"] == 2
     assert _rows(cons, "notes2") == _rows(prod, "notes")
@@ -379,18 +380,18 @@ def test_apply_cdf_nets_across_commits(spark, tmp_path):
     touch the consumer when both commits apply in one pull."""
     prod = _mk(spark, str(tmp_path / "wh1"))
     dest = str(tmp_path / "dx")
-    prod.export_delta("notes", dest, change_data=True)
+    export_delta(prod, "notes", dest, change_data=True)
     cons = ToStoreSpark(spark, warehouse=str(tmp_path / "wh2"))
-    cons.register_delta("notes2", dest)
+    cons.register_table("notes2", df=read_delta(cons.spark, dest))
     cons.flush()
     prod.batch_insert("notes", [{"id": "tmp1", "body": "t", "n": 400}])
     prod.flush()
-    prod.export_delta("notes", dest, mode="update",
-                      deletion_vectors=True)      # v1: insert
+    export_delta(prod, "notes", dest, mode="update",
+                 deletion_vectors=True)      # v1: insert
     prod.delete("notes").where("n", "=", 400).execute()
     prod.flush()
-    prod.export_delta("notes", dest, mode="update",
-                      deletion_vectors=True)      # v2: delete it again
+    export_delta(prod, "notes", dest, mode="update",
+                 deletion_vectors=True)      # v2: delete it again
     r = cons.apply_cdf("notes2", dest, from_version=1)
     assert r["to_version"] == 2
     assert cons.df("notes2").filter("n = 400").count() == 0
@@ -409,7 +410,7 @@ def test_start_cdf_sync_live_replication(spark, tmp_path):
     dest = str(tmp_path / "dx")
     prod.mirror_delta("notes", dest, change_data=True)
     cons = ToStoreSpark(spark, warehouse=str(tmp_path / "wh2"))
-    cons.register_delta("notes2", dest)
+    cons.register_table("notes2", df=read_delta(cons.spark, dest))
     cons.flush()
     cons.start_cdf_sync("notes2", dest, interval_s=0.5,
                         from_version=1)
@@ -439,11 +440,11 @@ def test_cdf_commit_timestamp_column(spark, tmp_path):
     versions; excluded from apply_cdf's netting keys."""
     db = _mk(spark, str(tmp_path / "wh"))
     dest = str(tmp_path / "dx")
-    db.export_delta("notes", dest, change_data=True)
+    export_delta(db, "notes", dest, change_data=True)
     db.delete("notes").where("n", "=", 3).execute()
     db.flush()
-    db.export_delta("notes", dest, mode="update",
-                    deletion_vectors=True)
+    export_delta(db, "notes", dest, mode="update",
+                 deletion_vectors=True)
     feed = read_delta_cdf(spark, dest, 0, 1)
     assert "_commit_timestamp" in feed.columns
     ts = {r["_commit_version"]: r["_commit_timestamp"]
@@ -477,12 +478,12 @@ def test_delta_schema_evolution_on_refresh(spark, tmp_path):
     from tostore_spark.schema import DataType, FieldSchema
     db = _mk(spark, str(tmp_path / "wh"))
     dest = str(tmp_path / "dx")
-    db.export_delta("notes", dest, change_data=True)
+    export_delta(db, "notes", dest, change_data=True)
     db.update_schema("notes").add_field(
         FieldSchema(name="extra", type=DataType.integer,
                     default_value=7)).execute()
     db.flush()
-    r = db.export_delta("notes", dest, mode="update", change_data=True)
+    r = export_delta(db, "notes", dest, mode="update", change_data=True)
     assert r["commit"] == "refresh"
     cur = read_delta(spark, dest)
     assert "extra" in cur.columns
@@ -508,20 +509,20 @@ def test_cdf_where_filters_and_prunes(spark, tmp_path):
     being read (cdc files filter row-side only)."""
     wh, dest = str(tmp_path / "wh"), str(tmp_path / "dx")
     db = _mk(spark, wh)
-    db.export_delta("notes", dest, change_data=True,
-                    deletion_vectors=True)
+    export_delta(db, "notes", dest, change_data=True,
+                 deletion_vectors=True)
     # v1: append 20 rows range-clustered into files (derivable)
     db.batch_insert("notes", [
         {"id": f"x{i:03d}", "body": "a", "n": 100 + i}
         for i in range(20)])
     db.flush()
-    db.export_delta("notes", dest, mode="update",
-                    deletion_vectors=True, cluster_by=["n"])
+    export_delta(db, "notes", dest, mode="update",
+                 deletion_vectors=True, cluster_by=["n"])
     # v2: dv delete (explicit cdc file)
     db.delete("notes").where("n", "IN", [3, 104]).execute()
     db.flush()
-    db.export_delta("notes", dest, mode="update",
-                    deletion_vectors=True)
+    export_delta(db, "notes", dest, mode="update",
+                 deletion_vectors=True)
     full = read_delta_cdf(spark, dest, 1)
     got = read_delta_cdf(spark, dest, 1, where={"n": {">=": 104}})
     want = sorted((r["_commit_version"], r["_change_type"], r["n"])
@@ -541,11 +542,12 @@ def test_register_delta_as_of_ms(spark, tmp_path):
     import time as _time
     wh, dest = str(tmp_path / "wh"), str(tmp_path / "dx")
     db = _mk(spark, wh)
-    db.export_delta("notes", dest)
+    export_delta(db, "notes", dest)
     t_mid = int(_time.time() * 1000)
     _time.sleep(1.1)
     db.batch_insert("notes", [{"id": "z", "body": "n", "n": 999}])
     db.flush()
-    db.export_delta("notes", dest, mode="update")
-    db.register_delta("old_view", dest, as_of_ms=t_mid)
+    export_delta(db, "notes", dest, mode="update")
+    db.register_table("old_view",
+                      df=read_delta(db.spark, dest, as_of_ms=t_mid))
     assert db.query("old_view").count() == 20

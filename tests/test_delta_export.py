@@ -12,6 +12,7 @@ from pyspark.sql.types import StructType
 from tostore_spark.engine import ToStoreSpark
 from tostore_spark.schema import (DataType, FieldSchema, PrimaryKeyConfig,
                                   TableSchema)
+from tostore_spark.plans.delta_export import export_delta, read_delta
 
 
 def _mk(spark, wh, rows=30):
@@ -42,7 +43,7 @@ class TestDeltaExport:
         db.batch_upsert("notes", [{"id": "k010", "body": "EDIT"},
                                   {"id": "zz", "body": "NEW", "n": 99}])
         db.flush()
-        report = db.export_delta("notes", dest, target_files=2)
+        report = export_delta(db, "notes", dest, target_files=2)
         assert report["rows"] == 26 and report["files"] <= 2
         # documented fallback read-back: a fresh v0 export has every
         # listed file live, so a plain parquet read IS the snapshot
@@ -52,7 +53,7 @@ class TestDeltaExport:
     def test_log_is_a_valid_delta_v0_commit(self, spark, tmp_path):
         wh, dest = str(tmp_path / "wh"), str(tmp_path / "dx")
         db = _mk(spark, wh, rows=12)
-        db.export_delta("notes", dest, target_files=1)
+        export_delta(db, "notes", dest, target_files=1)
         log = os.path.join(dest, "_delta_log",
                            f"{0:020d}.json")
         assert os.path.exists(log)
@@ -88,13 +89,13 @@ class TestDeltaExport:
         import pytest
         wh, dest = str(tmp_path / "wh"), str(tmp_path / "dx")
         db = _mk(spark, wh, rows=5)
-        db.export_delta("notes", dest)
+        export_delta(db, "notes", dest)
         with pytest.raises(ValueError):
-            db.export_delta("notes", dest)
+            export_delta(db, "notes", dest)
         db.batch_insert("notes", [{"id": "p1", "body": "x", "n": 50}])
         db.flush()
-        rep = db.export_delta("notes", dest, mode="overwrite",
-                              target_files=1)
+        rep = export_delta(db, "notes", dest, mode="overwrite",
+                           target_files=1)
         assert rep["rows"] == 6
         assert spark.read.parquet(dest).count() == 6
 
@@ -106,11 +107,11 @@ class TestDeltaVersionedExport:
         from tostore_spark.plans.delta_export import read_delta
         wh, dest = str(tmp_path / "wh"), str(tmp_path / "dx")
         db = _mk(spark, wh, rows=10)
-        db.export_delta("notes", dest)                      # v0
+        export_delta(db, "notes", dest)                      # v0
         db.batch_insert("notes", [{"id": f"z{i}", "body": "zz",
                                    "n": 90 + i} for i in range(4)])
         db.flush()                                          # append seg
-        rep = db.export_delta("notes", dest, mode="update")  # v1
+        rep = export_delta(db, "notes", dest, mode="update")  # v1
         assert rep["commit"] == "append" and rep["version"] == 1
         assert rep["rows"] == 4, "append commit ships ONLY the delta"
         log = os.path.join(dest, "_delta_log", f"{1:020d}.json")
@@ -129,10 +130,10 @@ class TestDeltaVersionedExport:
         from tostore_spark.plans.delta_export import read_delta
         wh, dest = str(tmp_path / "wh"), str(tmp_path / "dx")
         db = _mk(spark, wh, rows=10)
-        db.export_delta("notes", dest, target_files=2)      # v0
+        export_delta(db, "notes", dest, target_files=2)      # v0
         db.delete("notes").where("n", "<", 3).execute()
         db.flush()
-        rep = db.export_delta("notes", dest, mode="update")  # v1
+        rep = export_delta(db, "notes", dest, mode="update")  # v1
         assert rep["commit"] == "refresh" and rep["rows"] == 7
         log = os.path.join(dest, "_delta_log", f"{1:020d}.json")
         actions = [json.loads(x) for x in open(log)]
@@ -143,7 +144,7 @@ class TestDeltaVersionedExport:
         # a second append after the refresh rides add-only again
         db.batch_insert("notes", [{"id": "a1", "body": "b", "n": 70}])
         db.flush()
-        rep2 = db.export_delta("notes", dest, mode="update")
+        rep2 = export_delta(db, "notes", dest, mode="update")
         assert rep2["commit"] == "append" and rep2["version"] == 2
         assert read_delta(spark, dest).count() == 8
 
@@ -160,10 +161,10 @@ class TestDeltaVersionedExport:
         db = _mk(spark, wh, rows=10)
         db.batch_insert("notes", [{"id": f"x{i}", "body": "late",
                                    "n": 100 + i} for i in range(5)])
-        db.export_delta("notes", dest)          # DIRTY v0: 15 rows
+        export_delta(db, "notes", dest)          # DIRTY v0: 15 rows
         assert read_delta(spark, dest).count() == 15
         db.flush()          # the same 5 rows become an append segment
-        rep = db.export_delta("notes", dest, mode="update")
+        rep = export_delta(db, "notes", dest, mode="update")
         assert rep["commit"] == "refresh", \
             "a dirty-export state must disqualify the append fast path"
         assert read_delta(spark, dest).count() == 15, \
@@ -174,7 +175,7 @@ class TestDeltaVersionedExport:
         # rides the add-only fast path again
         db.batch_insert("notes", [{"id": "y0", "body": "b", "n": 200}])
         db.flush()
-        rep2 = db.export_delta("notes", dest, mode="update")
+        rep2 = export_delta(db, "notes", dest, mode="update")
         assert rep2["commit"] == "append" and rep2["rows"] == 1
         assert read_delta(spark, dest).count() == 16
 
@@ -200,7 +201,7 @@ class TestDeltaVersionedExport:
         far = now + datetime.timedelta(hours=1)
         db.batch_insert("ev", [{"id": "a", "n": 1, "created": far}])
         db.flush()
-        db.export_delta("ev", dest)                         # v0
+        export_delta(db, "ev", dest)                         # v0
         db.batch_insert("ev", [
             {"id": "live", "n": 2, "created": far},
             {"id": "dying", "n": 3, "created": now}])
@@ -208,7 +209,7 @@ class TestDeltaVersionedExport:
         db.update_schema("ev").set_ttl(
             TableTtlConfig(ttl_ms=800, source_field="created")).execute()
         _t.sleep(1.2)                   # 'dying' expires post-flush
-        rep = db.export_delta("ev", dest, mode="update")
+        rep = export_delta(db, "ev", dest, mode="update")
         assert rep["commit"] == "append"
         assert rep["rows"] == 1, \
             "the append commit must TTL-filter raw segment reads"
@@ -218,10 +219,10 @@ class TestDeltaVersionedExport:
     def test_register_delta_and_noop(self, spark, tmp_path):
         wh, dest = str(tmp_path / "wh"), str(tmp_path / "dx")
         db = _mk(spark, wh, rows=6)
-        db.export_delta("notes", dest)
-        rep = db.export_delta("notes", dest, mode="update")
+        export_delta(db, "notes", dest)
+        rep = export_delta(db, "notes", dest, mode="update")
         assert rep["commit"] == "noop"
-        db.register_delta("notes_ext", dest)
+        db.register_table("notes_ext", df=read_delta(db.spark, dest))
         assert _collect_sorted(db.df("notes_ext")) == \
             _collect_sorted(db.df("notes"))
 
@@ -359,7 +360,7 @@ class TestDeltaPartitionedExport:
             "id string, bucket int, n int")
         db.register_table("pt", df=df, partition_by=["bucket"])
         db.flush()
-        db.export_delta("pt", dest)
+        export_delta(db, "pt", dest)
         log = os.path.join(dest, "_delta_log", f"{0:020d}.json")
         actions = [json.loads(x) for x in open(log)]
         meta = next(a["metaData"] for a in actions if "metaData" in a)
@@ -379,7 +380,7 @@ class TestDeltaPartitionedExport:
         db.batch_insert("pt", [{"id": "z1", "bucket": 1, "n": 99},
                                {"id": "z2", "bucket": 7, "n": 98}])
         db.flush()
-        rep = db.export_delta("pt", dest, mode="update")
+        rep = export_delta(db, "pt", dest, mode="update")
         assert rep["commit"] == "append" and rep["rows"] == 2
         back2 = read_delta(spark, dest)
         assert _collect_sorted(back2) == _collect_sorted(db.df("pt"))
@@ -737,12 +738,12 @@ class TestDeltaDvExport:
         from tostore_spark.plans.delta_export import read_delta
         wh, dest = str(tmp_path / "wh"), str(tmp_path / "dx")
         db = _mk(spark, wh, rows=20)
-        db.export_delta("notes", dest, target_files=1)       # v0
+        export_delta(db, "notes", dest, target_files=1)       # v0
         db.delete("notes").where("id", "IN",
                                  ["k003", "k007", "k011"]).execute()
         db.flush()                                   # del epoch
-        rep = db.export_delta("notes", dest, mode="update",
-                              deletion_vectors=True)
+        rep = export_delta(db, "notes", dest, mode="update",
+                           deletion_vectors=True)
         assert rep["commit"] == "dv" and rep["version"] == 1
         assert rep["dv_positions"] == 3 and rep["files"] == 0, \
             "a 3-row delete must not restage the table"
@@ -762,8 +763,8 @@ class TestDeltaDvExport:
         # second delete epoch: descriptor accumulates
         db.delete("notes").where("id", "=", "k000").execute()
         db.flush()
-        rep2 = db.export_delta("notes", dest, mode="update",
-                               deletion_vectors=True)
+        rep2 = export_delta(db, "notes", dest, mode="update",
+                            deletion_vectors=True)
         assert rep2["commit"] == "dv"
         assert _collect_sorted(read_delta(spark, dest)) == \
             _collect_sorted(db.df("notes"))
@@ -778,7 +779,7 @@ class TestDeltaDvExport:
         from tostore_spark.plans.delta_export import read_delta
         wh, dest = str(tmp_path / "wh"), str(tmp_path / "dx")
         db = _mk(spark, wh, rows=10)
-        db.export_delta("notes", dest, target_files=1)       # v0
+        export_delta(db, "notes", dest, target_files=1)       # v0
         db.batch_upsert("notes", [{"id": "k004", "body": "EDIT"},
                                   {"id": "zz", "body": "NEW", "n": 99}])
         db.flush()                                   # replace epoch
@@ -787,8 +788,8 @@ class TestDeltaDvExport:
         db.flush()                                   # seg epoch
         db.delete("notes").where("id", "IN", ["y1", "k008"]).execute()
         db.flush()                                   # del epoch
-        rep = db.export_delta("notes", dest, mode="update",
-                              deletion_vectors=True)
+        rep = export_delta(db, "notes", dest, mode="update",
+                           deletion_vectors=True)
         assert rep["commit"] == "dv"
         assert rep["rows"] == 6, "replace + insert rows staged"
         back = read_delta(spark, dest)
@@ -809,12 +810,12 @@ class TestDeltaDvExport:
         from tostore_spark.plans.delta_export import read_delta
         wh, dest = str(tmp_path / "wh"), str(tmp_path / "dx")
         db = _mk(spark, wh, rows=6)
-        db.export_delta("notes", dest, target_files=1)
+        export_delta(db, "notes", dest, target_files=1)
         db.delete("notes").where(
             "id", "IN", [f"k{i:03d}" for i in range(6)]).execute()
         db.flush()
-        rep = db.export_delta("notes", dest, mode="update",
-                              deletion_vectors=True)
+        rep = export_delta(db, "notes", dest, mode="update",
+                           deletion_vectors=True)
         assert rep["commit"] == "dv"
         log = os.path.join(dest, "_delta_log", f"{1:020d}.json")
         actions = [json.loads(x) for x in open(log)]
@@ -840,12 +841,12 @@ class TestDeltaDvExport:
             "id string, bucket int, n int")
         db.register_table("pt", df=df, partition_by=["bucket"])
         db.flush()
-        db.export_delta("pt", dest)                         # v0
+        export_delta(db, "pt", dest)                         # v0
         db.delete("pt").where("id", "IN", ["k4", "k10", "k17"]) \
           .execute()
         db.flush()
-        rep = db.export_delta("pt", dest, mode="update",
-                              deletion_vectors=True)
+        rep = export_delta(db, "pt", dest, mode="update",
+                           deletion_vectors=True)
         assert rep["commit"] == "refresh"
         back = read_delta(spark, dest)
         assert _collect_sorted(back) == _collect_sorted(db.df("pt"))
@@ -863,12 +864,12 @@ class TestDeltaDvExport:
         monkeypatch.setattr(delta_dv, "INLINE_MAX_BYTES", 8)
         wh, dest = str(tmp_path / "wh"), str(tmp_path / "dx")
         db = _mk(spark, wh, rows=12)
-        db.export_delta("notes", dest, target_files=1)
+        export_delta(db, "notes", dest, target_files=1)
         db.delete("notes").where("id", "IN",
                                  ["k001", "k005", "k009"]).execute()
         db.flush()
-        rep = db.export_delta("notes", dest, mode="update",
-                              deletion_vectors=True)
+        rep = export_delta(db, "notes", dest, mode="update",
+                           deletion_vectors=True)
         assert rep["commit"] == "dv"
         log = os.path.join(dest, "_delta_log", f"{1:020d}.json")
         desc = next(a["add"]["deletionVector"]
@@ -911,16 +912,16 @@ class TestDeltaDvExport:
                                                       read_delta)
         wh, dest = str(tmp_path / "wh"), str(tmp_path / "dx")
         db = _mk(spark, wh, rows=8)
-        db.export_delta("notes", dest, target_files=1)
+        export_delta(db, "notes", dest, target_files=1)
         db.delete("notes").where("id", "=", "k002").execute()
         db.flush()
-        rep = db.export_delta("notes", dest, mode="update")
+        rep = export_delta(db, "notes", dest, mode="update")
         assert rep["commit"] == "refresh", \
             "deletion vectors must stay opt-in"
         db.delete("notes").where("id", "=", "k003").execute()
         db.flush()
-        rep2 = db.export_delta("notes", dest, mode="update",
-                               deletion_vectors=True)
+        rep2 = export_delta(db, "notes", dest, mode="update",
+                            deletion_vectors=True)
         assert rep2["commit"] == "dv"
         _write_checkpoint(dest, rep2["version"])
         ck = os.path.join(dest, "_delta_log",
@@ -946,11 +947,11 @@ class TestDeltaVacuum:
                                                       vacuum_delta)
         wh, dest = str(tmp_path / "wh"), str(tmp_path / "dx")
         db = _mk(spark, wh, rows=10)
-        db.export_delta("notes", dest, target_files=1)       # v0
+        export_delta(db, "notes", dest, target_files=1)       # v0
         for i, kill in enumerate(("k000", "k001")):          # v1, v2
             db.delete("notes").where("id", "=", kill).execute()
             db.flush()
-            rep = db.export_delta("notes", dest, mode="update")
+            rep = export_delta(db, "notes", dest, mode="update")
             assert rep["commit"] == "refresh"
         before = glob.glob(os.path.join(dest, "*.parquet"))
         log2 = os.path.join(dest, "_delta_log", f"{2:020d}.json")
@@ -983,11 +984,11 @@ class TestDeltaVacuum:
         monkeypatch.setattr(delta_dv, "INLINE_MAX_BYTES", 8)
         wh, dest = str(tmp_path / "wh"), str(tmp_path / "dx")
         db = _mk(spark, wh, rows=10)
-        db.export_delta("notes", dest, target_files=1)       # v0
+        export_delta(db, "notes", dest, target_files=1)       # v0
         db.delete("notes").where("id", "=", "k003").execute()
         db.flush()
-        rep = db.export_delta("notes", dest, mode="update",
-                              deletion_vectors=True)          # v1: dv
+        rep = export_delta(db, "notes", dest, mode="update",
+                           deletion_vectors=True)          # v1: dv
         assert rep["commit"] == "dv"
         assert glob.glob(os.path.join(dest, "deletion_vector_*.bin"))
         out = vacuum_delta(dest, keep_versions=1)
@@ -1010,12 +1011,12 @@ class TestDeltaCheckpointWrite:
         from tostore_spark.plans.delta_export import read_delta
         wh, dest = str(tmp_path / "wh"), str(tmp_path / "dx")
         db = _mk(spark, wh, rows=4)
-        db.export_delta("notes", dest)                      # v0
+        export_delta(db, "notes", dest)                      # v0
         for i in range(12):                                 # v1..v12
             db.batch_insert("notes", [{"id": f"a{i:02d}",
                                        "body": "b", "n": 50 + i}])
             db.flush()
-            rep = db.export_delta("notes", dest, mode="update")
+            rep = export_delta(db, "notes", dest, mode="update")
             assert rep["commit"] == "append"
         log = os.path.join(dest, "_delta_log")
         ck = os.path.join(log, f"{10:020d}.checkpoint.parquet")
@@ -1055,12 +1056,12 @@ class TestDeltaDvExportPartitioned:
             "id string, bucket string, n int"),
             schema=sch, partition_by=["bucket"])
         db.flush()
-        db.export_delta("pt", dest)                         # v0
+        export_delta(db, "pt", dest)                         # v0
         db.delete("pt").where("id", "IN", ["k04", "k10", "k17"]) \
           .execute()
         db.flush()                          # partitioned del epoch
-        rep = db.export_delta("pt", dest, mode="update",
-                              deletion_vectors=True)
+        rep = export_delta(db, "pt", dest, mode="update",
+                           deletion_vectors=True)
         assert rep["commit"] == "dv", rep
         assert rep["dv_positions"] == 3 and rep["files"] == 0
         back = read_delta(spark, dest)
@@ -1070,8 +1071,8 @@ class TestDeltaDvExportPartitioned:
         db.batch_upsert("pt", [{"id": "k05", "n": 999},
                                {"id": "zz", "bucket": "01", "n": 77}])
         db.flush()
-        rep2 = db.export_delta("pt", dest, mode="update",
-                               deletion_vectors=True)
+        rep2 = export_delta(db, "pt", dest, mode="update",
+                            deletion_vectors=True)
         assert rep2["commit"] == "dv", rep2
         assert _collect_sorted(read_delta(spark, dest)) == \
             _collect_sorted(db.df("pt"))
@@ -1082,11 +1083,11 @@ class TestDeltaDvExportPartitioned:
         may cover values that exist only in deleted rows."""
         wh, dest = str(tmp_path / "wh"), str(tmp_path / "dx")
         db = _mk(spark, wh, rows=12)
-        db.export_delta("notes", dest, target_files=1)
+        export_delta(db, "notes", dest, target_files=1)
         db.delete("notes").where("id", "=", "k011").execute()
         db.flush()
-        rep = db.export_delta("notes", dest, mode="update",
-                              deletion_vectors=True)
+        rep = export_delta(db, "notes", dest, mode="update",
+                           deletion_vectors=True)
         assert rep["commit"] == "dv"
         log = os.path.join(dest, "_delta_log", f"{1:020d}.json")
         dv_adds = [a["add"] for a in map(json.loads, open(log))
@@ -1107,12 +1108,12 @@ class TestCheckpointSpecSchema:
         import pyarrow.parquet as pq
         wh, dest = str(tmp_path / "wh"), str(tmp_path / "dx")
         db = _mk(spark, wh, rows=4)
-        db.export_delta("notes", dest)
+        export_delta(db, "notes", dest)
         for i in range(10):
             db.batch_insert("notes", [{"id": f"a{i:02d}", "body": "b",
                                        "n": 50 + i}])
             db.flush()
-            db.export_delta("notes", dest, mode="update")
+            export_delta(db, "notes", dest, mode="update")
         ck = os.path.join(dest, "_delta_log",
                           f"{10:020d}.checkpoint.parquet")
         schema = pq.read_schema(ck)
@@ -1401,7 +1402,7 @@ class TestDvExternalProof:
         rows = [{"id": f"k{i:03d}", "n": i} for i in range(6)]
         db.batch_insert("notes", rows)
         db.flush()
-        db.export_delta("notes", dest, target_files=1)      # v0
+        export_delta(db, "notes", dest, target_files=1)      # v0
         v0 = [f for f in os.listdir(dest) if f.endswith(".parquet")]
         assert len(v0) == 1
         tbl0 = pq.read_table(os.path.join(dest, v0[0]))
@@ -1412,8 +1413,8 @@ class TestDvExternalProof:
         db.delete("notes").where("id", "IN",
                                  [order[1], order[3]]).execute()
         db.flush()
-        rep = db.export_delta("notes", dest, mode="update",
-                              deletion_vectors=True)
+        rep = export_delta(db, "notes", dest, mode="update",
+                           deletion_vectors=True)
         assert rep["commit"] == "dv"
         # ---- independent replay: stdlib + pyarrow only --------------
         log = os.path.join(dest, "_delta_log", f"{1:020d}.json")
@@ -1471,7 +1472,7 @@ class TestDvExternalProof:
         import pyarrow.parquet as pq
         wh, dest = str(tmp_path / "wh"), str(tmp_path / "dx")
         db = _mk(spark, wh, rows=30)
-        db.export_delta("notes", dest, target_files=1)
+        export_delta(db, "notes", dest, target_files=1)
         # push the vector over the inline cap so the export writes the
         # .bin sidecar form
         import tostore_spark.plans.delta_dv as dvmod
@@ -1480,9 +1481,9 @@ class TestDvExternalProof:
         try:
             db.delete("notes").where("n", "IN", [2, 5, 9]).execute()
             db.flush()
-            rep = db.export_delta("notes", dest,
-                                  mode="update",
-                                  deletion_vectors=True)
+            rep = export_delta(db, "notes", dest,
+                               mode="update",
+                               deletion_vectors=True)
         finally:
             dvmod.INLINE_MAX_BYTES = old_cap
         assert rep["commit"] == "dv"
@@ -1636,11 +1637,11 @@ class TestCommitClaimFallback:
         def no_link(src, dst, *a, **k):
             raise OSError(errno.ENOTSUP, "hard links not supported")
         monkeypatch.setattr(os, "link", no_link)
-        rep = db.export_delta("notes", dest)
+        rep = export_delta(db, "notes", dest)
         assert rep["version"] == 0
         db.batch_insert("notes", [{"id": "x1", "body": "b", "n": 9}])
         db.flush()
-        rep2 = db.export_delta("notes", dest, mode="update")
+        rep2 = export_delta(db, "notes", dest, mode="update")
         assert rep2["version"] == 1 and rep2["commit"] == "append"
         back = de.read_delta(spark, dest)
         assert back.count() == 5
@@ -1661,10 +1662,10 @@ class TestVacuumSafety:
         from tostore_spark.plans.delta_export import vacuum_delta
         wh, dest = str(tmp_path / "wh"), str(tmp_path / "dx")
         db = _mk(spark, wh, rows=4)
-        db.export_delta("notes", dest)                      # v0
+        export_delta(db, "notes", dest)                      # v0
         db.set_df("notes", db.df("notes"))
         db.flush()
-        db.export_delta("notes", dest, mode="update")       # v1 refresh
+        export_delta(db, "notes", dest, mode="update")       # v1 refresh
         # an in-flight concurrent exporter staged v2 data but has not
         # committed yet
         staged = os.path.join(dest, "v00002-f0000-part-zz.parquet")
@@ -1677,7 +1678,7 @@ class TestVacuumSafety:
         # retention window: fresh dead files survive a retained vacuum
         db.set_df("notes", db.df("notes"))
         db.flush()
-        db.export_delta("notes", dest, mode="update")       # v2 refresh
+        export_delta(db, "notes", dest, mode="update")       # v2 refresh
         rep2 = vacuum_delta(dest, keep_versions=1,
                             retention_sec=3600)
         assert not any(d.startswith("v00001-")

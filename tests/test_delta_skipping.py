@@ -19,6 +19,7 @@ from tostore_spark.plans.delta_export import (_add_summary,
                                               read_delta)
 from tostore_spark.schema import (DataType, FieldSchema, PrimaryKeyConfig,
                                   TableSchema)
+from tostore_spark.plans.delta_export import export_delta
 
 
 def _mk_export(spark, tmp_path, rows=40, files=4, **export_kw):
@@ -31,7 +32,7 @@ def _mk_export(spark, tmp_path, rows=40, files=4, **export_kw):
         {"id": f"k{i:03d}", "body": f"b{i}", "n": i} for i in range(rows)])
     db.flush()
     dest = str(tmp_path / "dx")
-    db.export_delta("notes", dest, target_files=files, **export_kw)
+    export_delta(db, "notes", dest, target_files=files, **export_kw)
     return db, dest
 
 
@@ -106,8 +107,8 @@ class TestStatsPruning:
         db, dest = _mk_export(spark, tmp_path, deletion_vectors=True)
         db.delete("notes").where("n", "IN", [1, 6, 36]).execute()
         db.flush()
-        db.export_delta("notes", dest, mode="update",
-                        deletion_vectors=True)
+        export_delta(db, "notes", dest, mode="update",
+                     deletion_vectors=True)
         full = read_delta(spark, dest)
         got = _rows(read_delta(spark, dest, where={"n": {"<": 10}}))
         want = _rows(full.filter(F.col("n") < 10))
@@ -118,7 +119,7 @@ class TestStatsPruning:
         db, dest = _mk_export(spark, tmp_path)
         db.batch_insert("notes", [{"id": "x1", "body": "new", "n": 2}])
         db.flush()
-        db.export_delta("notes", dest, mode="update")
+        export_delta(db, "notes", dest, mode="update")
         v0 = read_delta(spark, dest, version=0, where={"n": {"<": 3}})
         v1 = read_delta(spark, dest, version=1, where={"n": {"<": 3}})
         assert v1.count() == v0.count() + 1
@@ -141,15 +142,15 @@ class TestClusterBy:
             {"id": f"k{i:03d}", "n": i} for i in order])
         db.flush()
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=4,
-                        cluster_by=["n"])
+        export_delta(db, "notes", dest, target_files=4,
+                     cluster_by=["n"])
         kept, total = _pruned_count(dest, {"n": 17})
         assert total == 4 and kept == 1
         got = read_delta(spark, dest, where={"n": 17}).collect()
         assert [r.id for r in got] == ["k017"]
         # without clustering the same layout would keep every file
         dest2 = str(tmp_path / "dx2")
-        db.export_delta("notes", dest2, target_files=4)
+        export_delta(db, "notes", dest2, target_files=4)
         kept2, total2 = _pruned_count(dest2, {"n": 17})
         assert total2 == 4 and kept2 == 4
 

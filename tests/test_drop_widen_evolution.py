@@ -44,6 +44,8 @@ from tostore_spark.plans.iceberg import (_ice_type_widens,
                                          widen_iceberg_column)
 from tostore_spark.schema import (DataType, FieldSchema,
                                   PrimaryKeyConfig, TableSchema)
+from tostore_spark.plans.delta_export import export_delta
+from tostore_spark.plans.iceberg import export_iceberg
 
 
 def _mk(spark, wh, rows=10):
@@ -93,8 +95,8 @@ class TestBridgeDrop:
     def test_drop_folds_and_keeps_bridging(self, spark, tmp_path):
         db = _mk(spark, str(tmp_path / "wh"))
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=1,
-                        change_data=True)                        # v0
+        export_delta(db, "notes", dest, target_files=1,
+                     change_data=True)                        # v0
         convert_delta_to_iceberg(spark, dest)
         s1 = _load_metadata(dest)["current-snapshot-id"]
         # v1: foreign DROP COLUMN n (metadata-only — the Delta
@@ -158,7 +160,7 @@ class TestBridgeDrop:
         re-add instead of silently diverging."""
         db = _mk(spark, str(tmp_path / "wh"), rows=4)
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=1)
+        export_delta(db, "notes", dest, target_files=1)
         convert_delta_to_iceberg(spark, dest)
         meta_d = dict(_replay(dest)["meta"])
         sj = json.loads(meta_d["schemaString"])
@@ -286,10 +288,10 @@ class TestNativeDrop:
     def test_drop_column_metadata_only(self, spark, tmp_path):
         db = _mk(spark, str(tmp_path / "wh"))
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=2)
+        export_iceberg(db, "notes", dest, target_files=2)
         before = sorted(os.listdir(os.path.join(dest, "data")))
         s1 = _load_metadata(dest)["current-snapshot-id"]
-        rep = db.drop_iceberg_column(dest, ["body"])
+        rep = drop_iceberg_column(dest, ["body"])
         assert rep["schema_id"] == 1 and rep["dropped"] == ["body"]
         # METADATA-ONLY: zero data files touched
         assert sorted(os.listdir(os.path.join(dest, "data"))) == before
@@ -301,13 +303,13 @@ class TestNativeDrop:
         db.update_schema("notes").remove_field("body").execute()
         db.batch_insert("notes", [{"id": "x1", "n": 100}])
         db.flush()
-        rep = db.export_iceberg("notes", dest, mode="update")
+        rep = export_iceberg(db, "notes", dest, mode="update")
         assert read_iceberg(spark, dest).count() == 11
 
     def test_drop_refusals(self, spark, tmp_path):
         db = _mk(spark, str(tmp_path / "wh"), rows=6)
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)
+        export_iceberg(db, "notes", dest, target_files=1)
         with pytest.raises(ValueError, match="unknown column"):
             drop_iceberg_column(dest, ["nope"])
         with pytest.raises(ValueError, match="every column"):
@@ -316,7 +318,7 @@ class TestNativeDrop:
         db.delete("notes").where("id", "IN", ["k001", "k002"]) \
             .execute()
         db.flush()
-        rep = db.export_iceberg("notes", dest, mode="update")
+        rep = export_iceberg(db, "notes", dest, mode="update")
         assert rep["commit"] == "eqdel"
         with pytest.raises(ValueError, match="equality-delete"):
             drop_iceberg_column(dest, ["id"])
@@ -339,7 +341,7 @@ class TestNativeDrop:
                           partition_by=["cat"])
         db.flush()
         dest = str(tmp_path / "ice")
-        db.export_iceberg("ev", dest)
+        export_iceberg(db, "ev", dest)
         with pytest.raises(ValueError, match="partition source"):
             drop_iceberg_column(dest, ["cat"])
 
@@ -350,13 +352,13 @@ class TestNativeDrop:
         replica built on the end schema converges."""
         db = _mk(spark, str(tmp_path / "wh"))
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)      # s1
+        export_iceberg(db, "notes", dest, target_files=1)      # s1
         db.delete("notes").where("id", "IN",
                                  ["k001", "k005"]).execute()
         db.flush()
-        rep = db.export_iceberg("notes", dest, mode="update")  # s2
+        rep = export_iceberg(db, "notes", dest, mode="update")  # s2
         assert rep["commit"] == "eqdel"
-        db.drop_iceberg_column(dest, ["body"])
+        drop_iceberg_column(dest, ["body"])
         feed = read_iceberg_changes(spark, dest)
         assert "body" not in feed.columns
         rows = feed.collect()
@@ -381,10 +383,10 @@ class TestNativeDrop:
         still produce it): the changelog refuses rather than lying."""
         db = _mk(spark, str(tmp_path / "wh"), rows=6)
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)
+        export_iceberg(db, "notes", dest, target_files=1)
         db.delete("notes").where("id", "IN", ["k001"]).execute()
         db.flush()
-        rep = db.export_iceberg("notes", dest, mode="update")
+        rep = export_iceberg(db, "notes", dest, mode="update")
         assert rep["commit"] == "eqdel"
         meta = _load_metadata(dest)
         sid = max(s["schema-id"] for s in meta["schemas"]) + 1 \
@@ -465,7 +467,7 @@ class TestNativeWiden:
     def test_bridge_refuses_native_alter(self, spark, tmp_path):
         db = _mk(spark, str(tmp_path / "wh"), rows=3)
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=1)
+        export_delta(db, "notes", dest, target_files=1)
         convert_delta_to_iceberg(spark, dest)
         with pytest.raises(ValueError, match="bridge"):
             drop_iceberg_column(dest, ["body"])
@@ -486,7 +488,7 @@ class TestNativeWiden:
         import pyarrow.parquet as pq
         db = _mk(spark, str(tmp_path / "wh"), rows=4)
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)       # s1
+        export_iceberg(db, "notes", dest, target_files=1)       # s1
         meta = _load_metadata(dest)
         s1 = meta["current-snapshot-id"]
         # rewrite s1's file with n as int32, preserving field ids
@@ -523,7 +525,7 @@ class TestNativeWiden:
         db.batch_insert("notes", [
             {"id": "big", "body": "huge", "n": 5_000_000_000}])
         db.flush()
-        db.export_iceberg("notes", dest, mode="update")        # s2
+        export_iceberg(db, "notes", dest, mode="update")        # s2
         feed = read_iceberg_changes(spark, dest)
         assert dict(feed.dtypes)["n"] == "bigint"
         rows = feed.collect()

@@ -20,6 +20,8 @@ from tostore_spark.plans.delta_export import read_delta
 from tostore_spark.plans.iceberg import read_iceberg
 from tostore_spark.schema import (DataType, FieldSchema,
                                   PrimaryKeyConfig, TableSchema)
+from tostore_spark.plans.delta_export import export_delta
+from tostore_spark.plans.iceberg import export_iceberg
 
 
 def _mk(spark, wh, rows=400):
@@ -50,12 +52,12 @@ class TestDeltaDvBloomProbe:
         already builds + uses them."""
         wh, dest = str(tmp_path / "wh"), str(tmp_path / "dx")
         db = _mk(spark, wh)
-        db.export_delta("notes", dest, target_files=8)
+        export_delta(db, "notes", dest, target_files=8)
         db.delete("notes").where(
             "id", "IN", ["k001", "k199", "k383"]).execute()
         db.flush()
-        rep = db.export_delta("notes", dest, mode="update",
-                              deletion_vectors=True)
+        rep = export_delta(db, "notes", dest, mode="update",
+                           deletion_vectors=True)
         assert rep["commit"] == "dv", rep
         st = dict(de._PROBE_STATS)
         assert st["keys"] == 3
@@ -67,8 +69,8 @@ class TestDeltaDvBloomProbe:
         db.delete("notes").where(
             "id", "IN", ["k010", "k300"]).execute()
         db.flush()
-        rep2 = db.export_delta("notes", dest, mode="update",
-                               deletion_vectors=True)
+        rep2 = export_delta(db, "notes", dest, mode="update",
+                            deletion_vectors=True)
         assert rep2["commit"] == "dv", rep2
         st2 = dict(de._PROBE_STATS)
         assert st2["built"] == 0 and st2["kept"] <= 2, st2
@@ -86,11 +88,11 @@ class TestDeltaDvBloomProbe:
         from tostore_spark.plans.skipping import bloom_may_contain
         wh, dest = str(tmp_path / "wh"), str(tmp_path / "dx")
         db = _mk(spark, wh, rows=100)
-        db.export_delta("notes", dest, target_files=2)
+        export_delta(db, "notes", dest, target_files=2)
         db.delete("notes").where("id", "=", "k001").execute()
         db.flush()
-        assert db.export_delta("notes", dest, mode="update",
-                               deletion_vectors=True)["commit"] == "dv"
+        assert export_delta(db, "notes", dest, mode="update",
+                            deletion_vectors=True)["commit"] == "dv"
         store = de._load_export_blooms(dest)
         assert store["files"]
         # every id physically present in a bloomed file must test
@@ -114,12 +116,12 @@ class TestDeltaDvBloomProbe:
         wh, dest = str(tmp_path / "wh"), str(tmp_path / "dx")
         monkeypatch.setattr(de, "_BLOOM_MAX_KEYS", 4)
         db = _mk(spark, wh, rows=60)
-        db.export_delta("notes", dest, target_files=4)
+        export_delta(db, "notes", dest, target_files=4)
         db.delete("notes").where(
             "id", "IN", [f"k{i:03d}" for i in range(10)]).execute()
         db.flush()
-        rep = db.export_delta("notes", dest, mode="update",
-                              deletion_vectors=True)
+        rep = export_delta(db, "notes", dest, mode="update",
+                           deletion_vectors=True)
         assert rep["commit"] == "dv"
         st = dict(de._PROBE_STATS)
         assert st["keys"] is None and st["built"] == 0
@@ -132,22 +134,22 @@ class TestDeltaDvBloomProbe:
         probe's sidecar save drops entries for dead rels."""
         wh, dest = str(tmp_path / "wh"), str(tmp_path / "dx")
         db = _mk(spark, wh, rows=100)
-        db.export_delta("notes", dest, target_files=4)
+        export_delta(db, "notes", dest, target_files=4)
         db.delete("notes").where("id", "=", "k001").execute()
         db.flush()
-        db.export_delta("notes", dest, mode="update",
-                        deletion_vectors=True)
+        export_delta(db, "notes", dest, mode="update",
+                     deletion_vectors=True)
         old = set(de._load_export_blooms(dest)["files"])
         assert old
         # update WITHOUT deletion_vectors → full refresh, new rels
         db.delete("notes").where("id", "=", "k002").execute()
         db.flush()
-        assert db.export_delta("notes", dest,
-                               mode="update")["commit"] == "refresh"
+        assert export_delta(db, "notes", dest,
+                            mode="update")["commit"] == "refresh"
         db.delete("notes").where("id", "=", "k003").execute()
         db.flush()
-        assert db.export_delta("notes", dest, mode="update",
-                               deletion_vectors=True)["commit"] == "dv"
+        assert export_delta(db, "notes", dest, mode="update",
+                            deletion_vectors=True)["commit"] == "dv"
         cur = de._load_export_blooms(dest)["files"]
         assert cur and not (set(cur) & old), "stale rels must drop"
         assert read_delta(spark, dest).count() == 97
@@ -159,7 +161,7 @@ class TestIcebergMorBloomProbe:
         probe; staged-this-commit files always probe."""
         wh, dest = str(tmp_path / "wh"), str(tmp_path / "ice")
         db = _mk(spark, wh)
-        db.export_iceberg("notes", dest, mode="update", target_files=8)
+        export_iceberg(db, "notes", dest, mode="update", target_files=8)
         db.batch_insert("notes", [
             {"id": f"z{i}", "body": "new", "n": 900 + i}
             for i in range(3)])
@@ -167,7 +169,7 @@ class TestIcebergMorBloomProbe:
         db.delete("notes").where(
             "id", "IN", ["k001", "k199", "k383"]).execute()
         db.flush()
-        rep = db.export_iceberg("notes", dest, mode="update")
+        rep = export_iceberg(db, "notes", dest, mode="update")
         assert rep["commit"] == "mor", rep
         st = dict(de._PROBE_STATS)
         assert st["kept"] <= 3 and st["built"] == st["candidates"] > 0
@@ -177,7 +179,7 @@ class TestIcebergMorBloomProbe:
         db.flush()
         db.delete("notes").where("id", "IN", ["k010", "k300"]).execute()
         db.flush()
-        rep2 = db.export_iceberg("notes", dest, mode="update")
+        rep2 = export_iceberg(db, "notes", dest, mode="update")
         assert rep2["commit"] == "mor", rep2
         st2 = dict(de._PROBE_STATS)
         assert st2["built"] == 0 and st2["kept"] <= 2, st2

@@ -232,8 +232,8 @@ def test_export_mode_guards(spark, tmp_path):
 def test_engine_surface(spark, tmp_path):
     db = _mk(spark, str(tmp_path / "wh"), rows=8)
     dest = str(tmp_path / "ice")
-    db.export_iceberg("notes", dest)
-    db.register_iceberg("notes_ice", dest)
+    export_iceberg(db, "notes", dest)
+    db.register_table("notes_ice", df=read_iceberg(db.spark, dest))
     assert _rows(db.df("notes_ice")) == _rows(db.df("notes"))
 
 

@@ -19,6 +19,8 @@ from tostore_spark.plans.iceberg import (_commit_snapshot,
                                          rewrite_data_files)
 from tostore_spark.schema import (DataType, FieldSchema,
                                   PrimaryKeyConfig, TableSchema)
+from tostore_spark.plans.delta_export import export_delta
+from tostore_spark.plans.iceberg import export_iceberg
 
 
 def _rows(df):
@@ -46,14 +48,14 @@ class TestChangelogDerivation:
     def test_full_history_with_eq_delete_epoch(self, spark, tmp_path):
         db = _mk(spark, str(tmp_path / "wh"))
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)      # s1
+        export_iceberg(db, "notes", dest, target_files=1)      # s1
         db.batch_insert("notes", [{"id": f"x{i}", "n": 100 + i}
                                   for i in range(3)])
         db.flush()
-        db.export_iceberg("notes", dest, mode="update")       # s2 append
+        export_iceberg(db, "notes", dest, mode="update")       # s2 append
         db.delete("notes").where("n", "IN", [3, 7, 11]).execute()
         db.flush()
-        rep = db.export_iceberg("notes", dest, mode="update")  # s3
+        rep = export_iceberg(db, "notes", dest, mode="update")  # s3
         assert rep["commit"] == "eqdel"
         feed = read_iceberg_changes(spark, dest)
         by = {(r["_change_type"], r["_commit_version"]): r["count"]
@@ -71,12 +73,12 @@ class TestChangelogDerivation:
     def test_incremental_after_cursor(self, spark, tmp_path):
         db = _mk(spark, str(tmp_path / "wh"))
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)
+        export_iceberg(db, "notes", dest, target_files=1)
         meta = _load_metadata(dest)
         s1 = meta["current-snapshot-id"]
         db.batch_insert("notes", [{"id": "x0", "n": 100}])
         db.flush()
-        db.export_iceberg("notes", dest, mode="update")
+        export_iceberg(db, "notes", dest, mode="update")
         inc = read_iceberg_changes(spark, dest, from_snapshot=s1)
         assert _changes(inc) == [("insert", "x0", 100, 2)]
         # from == to: empty with the full schema
@@ -93,13 +95,13 @@ class TestChangelogDerivation:
         snapshot: derivable as inserts + position-delete pre-images."""
         db = _mk(spark, str(tmp_path / "wh"))
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)
+        export_iceberg(db, "notes", dest, target_files=1)
         s1 = _load_metadata(dest)["current-snapshot-id"]
         db.batch_insert("notes", [{"id": "x0", "n": 100},
                                   {"id": "x1", "n": 101}])
         db.delete("notes").where("n", "IN", [5, 9]).execute()
         db.flush()
-        rep = db.export_iceberg("notes", dest, mode="update")
+        rep = export_iceberg(db, "notes", dest, mode="update")
         assert rep["commit"] == "mor"
         meta = _load_metadata(dest)
         assert meta["snapshots"][-1]["summary"]["operation"] == \
@@ -112,11 +114,11 @@ class TestChangelogDerivation:
     def test_update_epoch_is_delete_plus_insert(self, spark, tmp_path):
         db = _mk(spark, str(tmp_path / "wh"))
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)
+        export_iceberg(db, "notes", dest, target_files=1)
         s1 = _load_metadata(dest)["current-snapshot-id"]
         db.update("notes", {"n": 999}).where("n", "=", 0).execute()
         db.flush()
-        rep = db.export_iceberg("notes", dest, mode="update")
+        rep = export_iceberg(db, "notes", dest, mode="update")
         assert rep["commit"] == "mor"
         inc = read_iceberg_changes(spark, dest, from_snapshot=s1)
         assert _changes(inc) == [("delete", "k000", 0, 2),
@@ -125,11 +127,11 @@ class TestChangelogDerivation:
     def test_compaction_contributes_nothing(self, spark, tmp_path):
         db = _mk(spark, str(tmp_path / "wh"))
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=4)
+        export_iceberg(db, "notes", dest, target_files=4)
         s1 = _load_metadata(dest)["current-snapshot-id"]
         db.batch_insert("notes", [{"id": "x0", "n": 100}])
         db.flush()
-        db.export_iceberg("notes", dest, mode="update")
+        export_iceberg(db, "notes", dest, mode="update")
         rw = rewrite_data_files(spark, dest,
                                 target_file_bytes=10 << 20)
         assert rw["mode"] == "binpack"
@@ -142,10 +144,10 @@ class TestChangelogDerivation:
         saw it die in the earlier snapshot)."""
         db = _mk(spark, str(tmp_path / "wh"))
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)
+        export_iceberg(db, "notes", dest, target_files=1)
         db.delete("notes").where("n", "=", 2).execute()
         db.flush()
-        rep = db.export_iceberg("notes", dest, mode="update")
+        rep = export_iceberg(db, "notes", dest, mode="update")
         assert rep["commit"] in ("eqdel", "mor")
         meta = _load_metadata(dest)
         snap = [s for s in meta["snapshots"]
@@ -174,12 +176,12 @@ class TestChangelogDerivation:
     def test_where_filters_and_prunes(self, spark, tmp_path):
         db = _mk(spark, str(tmp_path / "wh"))
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)
+        export_iceberg(db, "notes", dest, target_files=1)
         s1 = _load_metadata(dest)["current-snapshot-id"]
         db.batch_insert("notes", [{"id": f"x{i}", "n": 100 + i}
                                   for i in range(4)])
         db.flush()
-        db.export_iceberg("notes", dest, mode="update")
+        export_iceberg(db, "notes", dest, mode="update")
         feed = read_iceberg_changes(spark, dest, from_snapshot=s1,
                                     where={"n": {">=": 102}})
         assert sorted(r["n"] for r in feed.collect()) == [102, 103]
@@ -192,7 +194,7 @@ class TestChangelogRefusals:
         import tostore_spark.plans.delta_dv as dv
         db = _mk(spark, str(tmp_path / "wh"))
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)
+        export_iceberg(db, "notes", dest, target_files=1)
         s1 = _load_metadata(dest)["current-snapshot-id"]
         # force the refresh tier: a MIXED epoch (the eq-delete route
         # only covers pure deletes) whose position probe bound trips
@@ -200,7 +202,7 @@ class TestChangelogRefusals:
         db.batch_insert("notes", [{"id": "x0", "n": 100}])
         db.delete("notes").where("n", "<", 5).execute()
         db.flush()
-        rep = db.export_iceberg("notes", dest, mode="update")
+        rep = export_iceberg(db, "notes", dest, mode="update")
         assert rep["commit"] == "refresh"
         with pytest.raises(ValueError, match="rewrite"):
             read_iceberg_changes(spark, dest,
@@ -213,7 +215,7 @@ class TestChangelogRefusals:
     def test_non_ancestor_refuses(self, spark, tmp_path):
         db = _mk(spark, str(tmp_path / "wh"))
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest)
+        export_iceberg(db, "notes", dest)
         with pytest.raises(ValueError, match="ancestor"):
             read_iceberg_changes(spark, dest,
                                  from_snapshot=999999).count()
@@ -232,7 +234,7 @@ class TestChangelogRefusals:
         inconsistent summary — refuse, never mis-derive."""
         db = _mk(spark, str(tmp_path / "wh"))
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)
+        export_iceberg(db, "notes", dest, target_files=1)
         meta = _load_metadata(dest)
         snap = meta["snapshots"][-1]
         data, _pd, _ed, _parts, _fs = _scan_files(meta, snap, dest)
@@ -259,17 +261,17 @@ class TestApplyAndSync:
     def test_apply_bootstrap_increment_cursor(self, spark, tmp_path):
         src, dst = self._pair(spark, tmp_path)
         dest = str(tmp_path / "ice")
-        src.export_iceberg("notes", dest, target_files=1)
+        export_iceberg(src, "notes", dest, target_files=1)
         rep = dst.apply_iceberg_changes("notes", dest)
         # bootstrap reports the ancestry ROOT as the range start (the
         # Delta twin's versions[0] analog — r17 advice), never None
         assert rep["applied"] == 20 and rep["from_snapshot"] == 1
         src.batch_insert("notes", [{"id": "x0", "n": 100}])
         src.flush()
-        src.export_iceberg("notes", dest, mode="update")
+        export_iceberg(src, "notes", dest, mode="update")
         src.delete("notes").where("n", "IN", [2, 4]).execute()
         src.flush()
-        src.export_iceberg("notes", dest, mode="update")
+        export_iceberg(src, "notes", dest, mode="update")
         rep2 = dst.apply_iceberg_changes("notes", dest)
         assert rep2["applied"] == 3 and rep2["from_snapshot"] == 1
         assert _rows(dst.df("notes")) == _rows(src.df("notes"))
@@ -280,14 +282,14 @@ class TestApplyAndSync:
     def test_apply_nets_insert_then_delete(self, spark, tmp_path):
         src, dst = self._pair(spark, tmp_path)
         dest = str(tmp_path / "ice")
-        src.export_iceberg("notes", dest, target_files=1)
+        export_iceberg(src, "notes", dest, target_files=1)
         dst.apply_iceberg_changes("notes", dest)
         src.batch_insert("notes", [{"id": "gone", "n": 500}])
         src.flush()
-        src.export_iceberg("notes", dest, mode="update")
+        export_iceberg(src, "notes", dest, mode="update")
         src.delete("notes").where("id", "=", "gone").execute()
         src.flush()
-        src.export_iceberg("notes", dest, mode="update")
+        export_iceberg(src, "notes", dest, mode="update")
         rep = dst.apply_iceberg_changes("notes", dest)
         assert rep["applied"] == 0, \
             "insert+delete across the range must NET to nothing"
@@ -298,7 +300,7 @@ class TestApplyAndSync:
         seeds from_snapshot=N and never re-applies the bootstrap."""
         src, dst = self._pair(spark, tmp_path)
         dest = str(tmp_path / "ice")
-        src.export_iceberg("notes", dest, target_files=1)
+        export_iceberg(src, "notes", dest, target_files=1)
         s1 = _load_metadata(dest)["current-snapshot-id"]
         boot = read_iceberg(spark, dest)
         dst.batch_insert("notes", [r.asDict() for r in boot.collect()])
@@ -310,7 +312,7 @@ class TestApplyAndSync:
         assert rep0["applied"] == 0
         src.batch_insert("notes", [{"id": "x0", "n": 100}])
         src.flush()
-        src.export_iceberg("notes", dest, mode="update")
+        export_iceberg(src, "notes", dest, mode="update")
         rep = dst.apply_iceberg_changes("notes", dest,
                                         from_snapshot=s1)
         assert rep["applied"] == 1
@@ -319,12 +321,12 @@ class TestApplyAndSync:
     def test_live_sync_loop(self, spark, tmp_path):
         src, dst = self._pair(spark, tmp_path)
         dest = str(tmp_path / "ice")
-        src.export_iceberg("notes", dest, target_files=1)
+        export_iceberg(src, "notes", dest, target_files=1)
         dst.start_iceberg_sync("notes", dest, interval_s=0.3)
         try:
             src.batch_insert("notes", [{"id": "x0", "n": 100}])
             src.flush()
-            src.export_iceberg("notes", dest, mode="update")
+            export_iceberg(src, "notes", dest, mode="update")
             deadline = time.time() + 30
             while time.time() < deadline:
                 if dst.df("notes").count() == 21:
@@ -350,9 +352,9 @@ class TestFilteredSubscription:
         con_d.create_table(sch)
         dice = str(tmp_path / "ice")
         ddel = str(tmp_path / "dx")
-        src.export_iceberg("notes", dice, target_files=1)
-        src.export_delta("notes", ddel, target_files=1,
-                         change_data=True)
+        export_iceberg(src, "notes", dice, target_files=1)
+        export_delta(src, "notes", ddel, target_files=1,
+                     change_data=True)
         where = {"n": {"<": 10}}
         rep = con_i.apply_iceberg_changes("notes", dice, where=where)
         assert rep["applied"] == 10
@@ -362,14 +364,14 @@ class TestFilteredSubscription:
         src.batch_insert("notes", [{"id": "in0", "n": 5},
                                    {"id": "out0", "n": 100}])
         src.flush()
-        src.export_iceberg("notes", dice, mode="update")
-        src.export_delta("notes", ddel, mode="update",
-                         change_data=True)
+        export_iceberg(src, "notes", dice, mode="update")
+        export_delta(src, "notes", ddel, mode="update",
+                     change_data=True)
         src.delete("notes").where("n", "IN", [3, 40]).execute()
         src.flush()
-        src.export_iceberg("notes", dice, mode="update")
-        src.export_delta("notes", ddel, mode="update",
-                         change_data=True, deletion_vectors=True)
+        export_iceberg(src, "notes", dice, mode="update")
+        export_delta(src, "notes", ddel, mode="update",
+                     change_data=True, deletion_vectors=True)
         rep_i = con_i.apply_iceberg_changes("notes", dice,
                                             where=where)
         rep_d = con_d.apply_cdf("notes", ddel, where=where)
@@ -391,14 +393,14 @@ class TestFilteredSubscription:
         import tostore_spark.plans.iceberg as ice
         db = _mk(spark, str(tmp_path / "wh"))
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)
+        export_iceberg(db, "notes", dest, target_files=1)
         s1 = ice._load_metadata(dest)["current-snapshot-id"]
         # one clustered append epoch -> 4 range-disjoint added files
         db.batch_insert("notes", [{"id": f"x{i:03d}", "n": 1000 + i}
                                   for i in range(400)])
         db.flush()
-        db.export_iceberg("notes", dest, mode="update",
-                          target_files=4, cluster_by=["n"])
+        export_iceberg(db, "notes", dest, mode="update",
+                       target_files=4, cluster_by=["n"])
         pruned = []
         orig = ice._prune_by_stats
 
@@ -432,7 +434,7 @@ class TestChangelogHardening:
             spark.conf.set(key, "false")
             db = _mk(spark, str(tmp_path / "wh"), rows=5)
             dest = str(tmp_path / "ice")
-            db.export_iceberg("notes", dest, target_files=1)
+            export_iceberg(db, "notes", dest, target_files=1)
             feed = read_iceberg_changes(spark, dest)
             assert spark.conf.get(key) == "false"
             assert sorted(r["n"] for r in feed.collect()) == \
@@ -452,11 +454,11 @@ class TestChangelogHardening:
         from tostore_spark.plans.iceberg import expire_snapshots
         db = _mk(spark, str(tmp_path / "wh"), rows=8)
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)       # s1
+        export_iceberg(db, "notes", dest, target_files=1)       # s1
         s1 = _load_metadata(dest)["current-snapshot-id"]
         db.delete("notes").where("n", "IN", [1, 2]).execute()
         db.flush()
-        rep = db.export_iceberg("notes", dest, mode="update")  # s2
+        rep = export_iceberg(db, "notes", dest, mode="update")  # s2
         assert rep["commit"] in ("posdel", "eqdel", "delete")
         expire_snapshots(dest, keep_last=1)
         with pytest.raises(ValueError):
@@ -474,7 +476,7 @@ class TestChangelogHardening:
                                                  _current_schema)
         db = _mk(spark, str(tmp_path / "wh"), rows=2)
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)      # s1
+        export_iceberg(db, "notes", dest, target_files=1)      # s1
         meta = _load_metadata(dest)
         ids = {f["name"]: f["id"]
                for f in _current_schema(meta)["fields"]}
@@ -564,7 +566,7 @@ class TestChangelogSchemaEvolution:
                                                  read_iceberg)
         db = _mk(spark, str(tmp_path / "wh"), rows=3)
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)      # s1
+        export_iceberg(db, "notes", dest, target_files=1)      # s1
         tag_id = self._evolve_add_tag(dest)
         meta = _load_metadata(dest)
         ids = {f["name"]: f["id"]
@@ -595,7 +597,7 @@ class TestChangelogSchemaEvolution:
                                                  _current_schema)
         db = _mk(spark, str(tmp_path / "wh"), rows=4)
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)      # s1
+        export_iceberg(db, "notes", dest, target_files=1)      # s1
         s1 = _load_metadata(dest)["current-snapshot-id"]
         self._evolve_add_tag(dest)
         meta = _load_metadata(dest)
@@ -629,7 +631,7 @@ class TestChangelogSchemaEvolution:
                                                  _write_metadata_json)
         db = _mk(spark, str(tmp_path / "wh"), rows=3)
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)      # s1
+        export_iceberg(db, "notes", dest, target_files=1)      # s1
         meta = _load_metadata(dest)
         old = _current_schema(meta)
         old_sid = int(meta.get("current-schema-id", 0))
@@ -683,7 +685,7 @@ class TestFilteredCursorSignature:
     def _src(self, spark, tmp_path):
         db = _mk(spark, str(tmp_path / "wh"), rows=10)
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)
+        export_iceberg(db, "notes", dest, target_files=1)
         return db, dest
 
     def _consumer(self, spark, tmp_path):
@@ -703,7 +705,7 @@ class TestFilteredCursorSignature:
         db.batch_insert("notes", [{"id": "x1", "n": 3},
                                   {"id": "x2", "n": 50}])
         db.flush()
-        db.export_iceberg("notes", dest, mode="update")
+        export_iceberg(db, "notes", dest, mode="update")
         # identical where (different dict instance) resumes
         rep2 = con.apply_iceberg_changes("notes", dest,
                                          where={"n": {"<": 5}})
@@ -735,7 +737,7 @@ class TestFilteredCursorSignature:
         con.kv.set_value(ckey, int(cur["v"]))      # downgrade to r15
         db.batch_insert("notes", [{"id": "y1", "n": 77}])
         db.flush()
-        db.export_iceberg("notes", dest, mode="update")
+        export_iceberg(db, "notes", dest, mode="update")
         with pytest.raises(ValueError, match="predates"):
             con.apply_iceberg_changes("notes", dest,
                                       where={"n": {">": 0}})
@@ -746,8 +748,8 @@ class TestFilteredCursorSignature:
     def test_delta_cdf_twin_same_rule(self, spark, tmp_path):
         db = _mk(spark, str(tmp_path / "wh"), rows=6)
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=1,
-                        change_data=True)
+        export_delta(db, "notes", dest, target_files=1,
+                     change_data=True)
         con = self._consumer(spark, tmp_path)
         rep = con.apply_cdf("notes", dest, where={"n": {"<": 4}})
         assert rep["applied"] == 4
@@ -769,7 +771,7 @@ class TestBootstrapFastPath:
         from tostore_spark.schema import FieldSchema
         db = _mk(spark, str(tmp_path / "wh"), rows=8)
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)      # s1
+        export_iceberg(db, "notes", dest, target_files=1)      # s1
         # a schema migration forces a REFRESH export: an overwrite
         # snapshot that drops the parent's manifests — underivable
         # by the changelog
@@ -777,7 +779,7 @@ class TestBootstrapFastPath:
             FieldSchema("tag", DataType.text,
                         default_value="T")).execute()
         db.flush()
-        rep = db.export_iceberg("notes", dest, mode="update")
+        rep = export_iceberg(db, "notes", dest, mode="update")
         assert rep["commit"] == "refresh"
         with pytest.raises(ValueError, match="rewrite"):
             read_iceberg_changes(spark, dest).collect()
@@ -797,7 +799,7 @@ class TestBootstrapFastPath:
         db.batch_insert("notes", [{"id": "x1", "n": 99,
                                    "tag": "zz"}])
         db.flush()
-        db.export_iceberg("notes", dest, mode="update")
+        export_iceberg(db, "notes", dest, mode="update")
         rep2 = con.apply_iceberg_changes("notes", dest)
         assert rep2["applied"] == 1
         cols = sorted(db.df("notes").columns)
@@ -811,11 +813,11 @@ class TestBootstrapFastPath:
         import tostore_spark.plans.delta_export as de
         db = _mk(spark, str(tmp_path / "wh"), rows=6)
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=1,
-                        change_data=True)
+        export_delta(db, "notes", dest, target_files=1,
+                     change_data=True)
         db.delete("notes").where("n", "=", 0).execute()
         db.flush()
-        db.export_delta("notes", dest, mode="update")
+        export_delta(db, "notes", dest, mode="update")
         con = ToStoreSpark(spark, warehouse=str(tmp_path / "wc"))
         con.create_table(TableSchema(
             name="notes", primary_key=PrimaryKeyConfig(name="id"),
@@ -830,7 +832,7 @@ class TestBootstrapFastPath:
         monkeypatch.undo()
         db.batch_insert("notes", [{"id": "y1", "n": 70}])
         db.flush()
-        db.export_delta("notes", dest, mode="update")
+        export_delta(db, "notes", dest, mode="update")
         rep2 = con.apply_cdf("notes", dest)
         assert rep2["applied"] == 1
         assert con.df("notes").count() == 6
@@ -839,8 +841,8 @@ class TestBootstrapFastPath:
                                                 tmp_path):
         db = _mk(spark, str(tmp_path / "wh"), rows=12)
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=4,
-                          cluster_by=["n"])
+        export_iceberg(db, "notes", dest, target_files=4,
+                       cluster_by=["n"])
         con = ToStoreSpark(spark, warehouse=str(tmp_path / "wc"))
         con.create_table(TableSchema(
             name="notes", primary_key=PrimaryKeyConfig(name="id"),
@@ -864,8 +866,8 @@ class TestFilteredPreimagePruning:
         import tostore_spark.plans.iceberg as ice
         db = _mk(spark, str(tmp_path / "wh"), rows=400)
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=4,
-                          cluster_by=["n"])
+        export_iceberg(db, "notes", dest, target_files=4,
+                       cluster_by=["n"])
         meta = _load_metadata(dest)
         s1 = meta["current-snapshot-id"]
         snap = [s for s in meta["snapshots"]
@@ -905,15 +907,15 @@ class TestFilteredPreimagePruning:
         import tostore_spark.plans.iceberg as ice
         db = _mk(spark, str(tmp_path / "wh"), rows=400)
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=4,
-                          cluster_by=["n"])
+        export_iceberg(db, "notes", dest, target_files=4,
+                       cluster_by=["n"])
         s1 = _load_metadata(dest)["current-snapshot-id"]
         # kill one low-n and one high-n key: the key BOUNDS span the
         # whole table, so only the caller's where can narrow
         db.delete("notes").where("id", "IN",
                                  ["k000", "k399"]).execute()
         db.flush()
-        rep = db.export_iceberg("notes", dest, mode="update")
+        rep = export_iceberg(db, "notes", dest, mode="update")
         assert rep["commit"] == "eqdel"
         seen = {}
         orig = ice.read_iceberg
@@ -948,7 +950,7 @@ class TestFilteredPreimagePruning:
         import tostore_spark.plans.iceberg as ice
         db = _mk(spark, str(tmp_path / "wh"), rows=4)
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)      # s1
+        export_iceberg(db, "notes", dest, target_files=1)      # s1
         s1 = _load_metadata(dest)["current-snapshot-id"]
         # evolve: + tag string (hand metadata edit, foreign style)
         from tostore_spark.plans.iceberg import (

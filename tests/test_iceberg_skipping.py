@@ -21,6 +21,7 @@ from tostore_spark.plans.iceberg import (_deser_bound, _entry_stats,
                                          read_iceberg)
 from tostore_spark.schema import (DataType, FieldSchema, PrimaryKeyConfig,
                                   TableSchema)
+from tostore_spark.plans.iceberg import export_iceberg
 
 
 class TestAppendixDSerialization:
@@ -77,7 +78,7 @@ def _mk_export(spark, tmp_path, rows=40):
         {"id": f"k{i:03d}", "body": f"b{i}", "n": i} for i in range(rows)])
     db.flush()
     dest = str(tmp_path / "ice")
-    db.export_iceberg("notes", dest, target_files=4)
+    export_iceberg(db, "notes", dest, target_files=4)
     return db, dest
 
 
@@ -145,8 +146,8 @@ class TestClusterBy:
             {"id": f"k{i:03d}", "n": i} for i in order])
         db.flush()
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=4,
-                          cluster_by=["n"])
+        export_iceberg(db, "notes", dest, target_files=4,
+                       cluster_by=["n"])
         meta, sj, data, parts, fstats = _scan(dest)
         node = to_condition_node({"n": 17})
         kept = _prune_by_stats(meta, sj, data, parts, fstats, node)
@@ -188,7 +189,7 @@ class TestReaderPruning:
         db, dest = _mk_export(spark, tmp_path)
         db.delete("notes").where("n", "IN", [2, 7, 33]).execute()
         db.flush()
-        db.export_iceberg("notes", dest, mode="update")
+        export_iceberg(db, "notes", dest, mode="update")
         full = read_iceberg(spark, dest)
         got = _rows(read_iceberg(spark, dest, where={"n": {"<": 10}}))
         want = _rows(full.filter(F.col("n") < 10))
@@ -206,7 +207,7 @@ class TestReaderPruning:
         db, dest = _mk_export(spark, tmp_path)
         db.batch_insert("notes", [{"id": "x1", "body": "new", "n": 2}])
         db.flush()
-        db.export_iceberg("notes", dest, mode="update")
+        export_iceberg(db, "notes", dest, mode="update")
         meta = _load_metadata(dest)
         snaps = sorted(s["snapshot-id"] for s in meta["snapshots"])
         v0 = read_iceberg(spark, dest, snapshot_id=snaps[0],
@@ -236,7 +237,7 @@ class TestReaderPruning:
             for i in range(40)])
         db.flush()
         dest = str(tmp_path / "ice")
-        db.export_iceberg("ev", dest, target_files=4)
+        export_iceberg(db, "ev", dest, target_files=4)
         meta, sj, data, parts, fstats = _scan(dest)
         tid = {f["name"]: f["id"] for f in sj["fields"]}["ts"]
         typ = {f["name"]: f["type"] for f in sj["fields"]}["ts"]

@@ -16,6 +16,10 @@ from tostore_spark.plans.iceberg import (convert_delta_to_iceberg,
                                          remove_orphan_files)
 from tostore_spark.schema import (DataType, FieldSchema,
                                   PrimaryKeyConfig, TableSchema)
+from tostore_spark.plans.delta_export import (describe_delta_detail,
+                                              describe_delta_history,
+                                              export_delta)
+from tostore_spark.plans.iceberg import export_iceberg, sync_delta_to_iceberg
 
 
 def _mk(spark, tmp_path, rows=20):
@@ -34,13 +38,13 @@ def bridge(spark, tmp_path):
     """2-file bridge + one DV delete epoch: ops append, delete."""
     db = _mk(spark, tmp_path)
     dest = str(tmp_path / "dx")
-    db.export_delta("notes", dest, target_files=2, cluster_by=["id"])
+    export_delta(db, "notes", dest, target_files=2, cluster_by=["id"])
     convert_delta_to_iceberg(spark, dest)
     db.delete("notes").where("n", "IN", [3, 7]).execute()
     db.flush()
-    db.export_delta("notes", dest, mode="update",
-                    deletion_vectors=True)
-    db.sync_delta_to_iceberg(dest)
+    export_delta(db, "notes", dest, mode="update",
+                 deletion_vectors=True)
+    sync_delta_to_iceberg(db.spark, dest)
     return db, dest
 
 
@@ -100,7 +104,7 @@ class TestIcebergMetaTables:
                           partition_by=["grp"])
         db.flush(only=["ev"])
         dest = str(tmp_path / "ice")
-        db.export_iceberg("ev", dest)
+        export_iceberg(db, "ev", dest)
         parts = read_iceberg_meta(spark, dest, "partitions") \
             .orderBy("partition.grp").collect()
         assert [(p["partition"]["grp"], p["record_count"])
@@ -124,18 +128,18 @@ class TestIcebergMetaTables:
 class TestDeltaHistoryDetail:
     def test_history_newest_first_with_flags(self, spark, bridge):
         db, dest = bridge
-        hist = db.delta_history(dest).collect()
+        hist = describe_delta_history(db.spark, dest).collect()
         assert [r["version"] for r in hist] == [1, 0]
         assert hist[0]["has_dv"] and not hist[1]["has_dv"]
         assert hist[0]["num_removed_files"] == \
             hist[0]["num_added_files"]          # DV remove+re-add
         assert hist[1]["num_added_files"] == 2
-        lim = db.delta_history(dest, limit=1).collect()
+        lim = describe_delta_history(db.spark, dest, limit=1).collect()
         assert [r["version"] for r in lim] == [1]
 
     def test_detail_row(self, spark, bridge):
         db, dest = bridge
-        det = db.delta_detail(dest).collect()[0]
+        det = describe_delta_detail(db.spark, dest).collect()[0]
         assert det["format"] == "parquet"
         assert det["num_files"] == 2
         assert det["version"] == 1
@@ -148,7 +152,7 @@ class TestRemoveOrphanFiles:
     def test_orphan_removed_referenced_kept(self, spark, tmp_path):
         db = _mk(spark, tmp_path, rows=30)
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=2)
+        export_iceberg(db, "notes", dest, target_files=2)
         stray = os.path.join(dest, "data", "orphan-dead.parquet")
         spark.createDataFrame([(1,)], "x int").coalesce(1) \
             .write.mode("overwrite") \
@@ -165,7 +169,7 @@ class TestRemoveOrphanFiles:
     def test_older_than_guards_fresh_files(self, spark, tmp_path):
         db = _mk(spark, tmp_path)
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)
+        export_iceberg(db, "notes", dest, target_files=1)
         stray = os.path.join(dest, "data", "orphan-young.parquet")
         shutil.copy(glob.glob(os.path.join(
             dest, "data", "*.parquet"))[0], stray)
@@ -184,10 +188,10 @@ class TestRemoveOrphanFiles:
         when the current snapshot no longer lists them."""
         db = _mk(spark, tmp_path)
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)
+        export_iceberg(db, "notes", dest, target_files=1)
         db.delete("notes").where("n", "<", 5).execute()
         db.flush()
-        db.export_iceberg("notes", dest, mode="update")
+        export_iceberg(db, "notes", dest, mode="update")
         r = remove_orphan_files(dest)
         assert r["removed"] == []
         # both snapshots still time-travel

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from tostore_spark import ToStoreSpark
 from tostore_spark.plans.layout import optimize_layout, zvalue
+from tostore_spark.plans.layout import optimize_table
 
 
 def _data_files(version_dir):
@@ -48,7 +49,7 @@ def test_compaction_rewrites_to_target_files(spark, db, tmp_path):
     assert len(_data_files(v1)) == 16
 
     before = set(map(tuple, eng.df("orders").collect()))
-    flushed = eng.optimize_table("orders", target_partitions=2)
+    flushed = optimize_table(eng, "orders", target_partitions=2)
     assert flushed == ["orders"]
     v2 = eng._tables[eng._resolve("orders")]["path"]
     assert v2 != v1 and len(_data_files(v2)) == 2
@@ -61,8 +62,8 @@ def test_zorder_narrows_file_stats_on_both_columns(spark, db, tmp_path):
     eng.flush()
 
     n_files = 8
-    eng.optimize_table("orders", target_partitions=n_files,
-                       zorder=["o_custkey", "o_totalprice"])
+    optimize_table(eng, "orders", target_partitions=n_files,
+                   zorder=["o_custkey", "o_totalprice"])
     files = _data_files(eng._tables[eng._resolve("orders")]["path"])
     assert len(files) == n_files
 
@@ -179,7 +180,7 @@ def test_optimize_table_does_not_flush_other_tables(spark, db, tmp_path):
     # stage an unrelated pending mutation on nation, then optimize region
     eng.update("nation", {"n_name": "PENDING"}) \
        .where("n_nationkey", "=", 0).execute()
-    flushed = eng.optimize_table("region", target_partitions=1)
+    flushed = optimize_table(eng, "region", target_partitions=1)
     assert flushed == ["region"]
     # nation's mutation is still pending (not committed by the rewrite)
     reopened = ToStoreSpark(spark, warehouse=str(tmp_path))

@@ -16,6 +16,9 @@ from tostore_spark.plans.iceberg import (_load_metadata, _pick_snapshot,
                                          rewrite_data_files)
 from tostore_spark.schema import (DataType, FieldSchema, PrimaryKeyConfig,
                                   TableSchema)
+from tostore_spark.plans.delta_export import (export_delta, optimize_delta,
+                                              vacuum_delta)
+from tostore_spark.plans.iceberg import export_iceberg
 
 
 def _rows(df):
@@ -41,24 +44,24 @@ class TestOptimizeDelta:
                 {"id": f"x{r}_{i}", "n": 100 + 10 * r + i}
                 for i in range(5)])
             db.flush()
-            db.export_delta("notes", dest, mode="update",
-                            deletion_vectors=True)
+            export_delta(db, "notes", dest, mode="update",
+                         deletion_vectors=True)
 
     def test_compacts_and_preserves_everything(self, spark, tmp_path):
         db = _mk(spark, tmp_path)
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=6,
-                        change_data=True, deletion_vectors=True)
+        export_delta(db, "notes", dest, target_files=6,
+                     change_data=True, deletion_vectors=True)
         self._grow(db, dest)
         db.delete("notes").where("n", "IN", [3, 7]).execute()
         db.flush()
-        db.export_delta("notes", dest, mode="update",
-                        deletion_vectors=True)
+        export_delta(db, "notes", dest, mode="update",
+                     deletion_vectors=True)
         before = _rows(read_delta(spark, dest))
         st = _replay(dest, None)
         n_before = len(st["files"])
         assert any(a.get("deletionVector") for a in st["files"].values())
-        rep = db.optimize_delta(dest, target_file_bytes=10 << 20)
+        rep = optimize_delta(db.spark, dest, target_file_bytes=10 << 20)
         assert rep["rewritten"] == n_before and rep["files"] == 1
         st2 = _replay(dest, None)
         # DV purge: the rewritten file carries no vector
@@ -90,8 +93,8 @@ class TestOptimizeDelta:
     def test_noop_below_min_files(self, spark, tmp_path):
         db = _mk(spark, tmp_path)
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=1)
-        rep = db.optimize_delta(dest)
+        export_delta(db, "notes", dest, target_files=1)
+        rep = optimize_delta(db.spark, dest)
         assert rep["version"] is None and rep["rewritten"] == 0
 
     def test_incremental_export_survives_optimize(self, spark,
@@ -101,19 +104,19 @@ class TestOptimizeDelta:
         probes the CURRENT live files."""
         db = _mk(spark, tmp_path)
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=6,
-                        deletion_vectors=True)
+        export_delta(db, "notes", dest, target_files=6,
+                     deletion_vectors=True)
         self._grow(db, dest, commits=2)
-        db.optimize_delta(dest, target_file_bytes=10 << 20)
+        optimize_delta(db.spark, dest, target_file_bytes=10 << 20)
         db.batch_insert("notes", [{"id": "post", "n": 999}])
         db.flush()
-        rep = db.export_delta("notes", dest, mode="update",
-                              deletion_vectors=True)
+        rep = export_delta(db, "notes", dest, mode="update",
+                           deletion_vectors=True)
         assert rep["commit"] == "append" and rep["rows"] == 1
         db.delete("notes").where("n", "=", 999).execute()
         db.flush()
-        rep = db.export_delta("notes", dest, mode="update",
-                              deletion_vectors=True)
+        rep = export_delta(db, "notes", dest, mode="update",
+                           deletion_vectors=True)
         assert rep["commit"] == "dv"
         assert _rows(read_delta(spark, dest)) == \
             _rows(db.df("notes"))
@@ -121,10 +124,10 @@ class TestOptimizeDelta:
     def test_vacuum_reclaims_compacted_files(self, spark, tmp_path):
         db = _mk(spark, tmp_path)
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=6)
+        export_delta(db, "notes", dest, target_files=6)
         before = _rows(read_delta(spark, dest))
-        db.optimize_delta(dest, target_file_bytes=10 << 20)
-        rep = db.vacuum_delta(dest, keep_versions=1)
+        optimize_delta(db.spark, dest, target_file_bytes=10 << 20)
+        rep = vacuum_delta(dest, keep_versions=1)
         assert rep["deleted"], rep
         assert _rows(read_delta(spark, dest)) == before
 
@@ -142,11 +145,11 @@ class TestOptimizeDelta:
             {"id": f"k{i:03d}", "n": i} for i in order])
         db.flush()
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=4)
+        export_delta(db, "notes", dest, target_files=4)
         st = _replay(dest, None)
         quarter = sum(int(a["size"]) for a in st["files"].values()) // 4
-        db.optimize_delta(dest, target_file_bytes=max(1, quarter),
-                          cluster_by=["n"])
+        optimize_delta(db.spark, dest, target_file_bytes=max(1, quarter),
+                       cluster_by=["n"])
         from tests.test_delta_skipping import _pruned_count
         kept, total = _pruned_count(dest, {"n": 17})
         assert total >= 2 and kept == 1
@@ -156,13 +159,13 @@ class TestRewriteIceberg:
     def test_binpack_survivors_keep_seq(self, spark, tmp_path):
         db = _mk(spark, tmp_path)
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=6)
+        export_iceberg(db, "notes", dest, target_files=6)
         for r in range(2):
             db.batch_insert("notes", [
                 {"id": f"x{r}_{i}", "n": 100 + 10 * r + i}
                 for i in range(5)])
             db.flush()
-            db.export_iceberg("notes", dest, mode="update")
+            export_iceberg(db, "notes", dest, mode="update")
         before = _rows(read_iceberg(spark, dest))
         rep = rewrite_data_files(spark, dest,
                                  target_file_bytes=10 << 20)
@@ -177,13 +180,13 @@ class TestRewriteIceberg:
     def test_materialize_under_mor_deletes(self, spark, tmp_path):
         db = _mk(spark, tmp_path)
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=6)
+        export_iceberg(db, "notes", dest, target_files=6)
         db.batch_insert("notes", [{"id": "z1", "n": 100}])
         db.flush()
-        db.export_iceberg("notes", dest, mode="update")
+        export_iceberg(db, "notes", dest, mode="update")
         db.delete("notes").where("n", "IN", [3, 7]).execute()
         db.flush()
-        db.export_iceberg("notes", dest, mode="update")
+        export_iceberg(db, "notes", dest, mode="update")
         before = _rows(read_iceberg(spark, dest))
         rep = rewrite_data_files(spark, dest,
                                  target_file_bytes=10 << 20)
@@ -197,7 +200,7 @@ class TestRewriteIceberg:
     def test_noop_when_nothing_small(self, spark, tmp_path):
         db = _mk(spark, tmp_path)
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)
+        export_iceberg(db, "notes", dest, target_files=1)
         rep = rewrite_data_files(spark, dest)
         assert rep["snapshot_id"] is None and rep["mode"] == "noop"
 
@@ -205,7 +208,7 @@ class TestRewriteIceberg:
         from tostore_spark.plans.iceberg import expire_snapshots
         db = _mk(spark, tmp_path)
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=6)
+        export_iceberg(db, "notes", dest, target_files=6)
         before = _rows(read_iceberg(spark, dest))
         rewrite_data_files(spark, dest, target_file_bytes=10 << 20)
         rep = expire_snapshots(dest, keep_last=1)

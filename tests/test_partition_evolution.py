@@ -24,6 +24,8 @@ from tostore_spark.plans.iceberg import (_load_metadata, _norm_path,
                                          rewrite_data_files)
 from tostore_spark.schema import (DataType, FieldSchema,
                                   PrimaryKeyConfig, TableSchema)
+from tostore_spark.plans.delta_export import export_delta
+from tostore_spark.plans.iceberg import export_iceberg
 
 
 def _sch():
@@ -57,7 +59,7 @@ class TestPartitionedExport:
                                                        tmp_path):
         db = _mk(spark, str(tmp_path / "wh"))
         dest = str(tmp_path / "ice")
-        db.export_iceberg("ev", dest, mode="update")
+        export_iceberg(db, "ev", dest, mode="update")
         meta, data, parts = _live(dest)
         specs = {int(s["spec-id"]): s for s in meta["partition-specs"]}
         assert specs[0]["fields"] == []          # unpartitioned spec 0
@@ -86,7 +88,7 @@ class TestPartitionedExport:
     def test_partition_filter_prunes_files(self, spark, tmp_path):
         db = _mk(spark, str(tmp_path / "wh"))
         dest = str(tmp_path / "ice")
-        db.export_iceberg("ev", dest, mode="update")
+        export_iceberg(db, "ev", dest, mode="update")
         _meta, data, parts = _live(dest)
         g1_files = {fp for fp, _ in data if parts[fp]["g"] == "g1"}
         out = read_iceberg(spark, dest, partition_filter={"g": "g1"})
@@ -98,18 +100,18 @@ class TestPartitionedExport:
                                                      tmp_path):
         db = _mk(spark, str(tmp_path / "wh"))
         dest = str(tmp_path / "ice")
-        db.export_iceberg("ev", dest, mode="update")
+        export_iceberg(db, "ev", dest, mode="update")
         db.batch_insert("ev", [{"id": "x1", "g": "g9", "h": 9,
                                 "n": 900}])
         db.flush()
-        rep = db.export_iceberg("ev", dest, mode="update")
+        rep = export_iceberg(db, "ev", dest, mode="update")
         assert rep["commit"] == "append"
         _meta, data, parts = _live(dest)
         assert {parts[fp]["g"] for fp, _ in data} == {
             "g0", "g1", "g2", "g3", "g9"}
         db.delete("ev").where("id", "IN", ["k001", "x1"]).execute()
         db.flush()
-        rep = db.export_iceberg("ev", dest, mode="update")
+        rep = export_iceberg(db, "ev", dest, mode="update")
         assert rep["commit"] in ("eqdel", "mor")
         a = sorted(map(tuple, read_iceberg(spark, dest)
                        .select("id", "g", "n").collect()))
@@ -121,14 +123,14 @@ class TestPartitionedExport:
                                                        tmp_path):
         db = _mk(spark, str(tmp_path / "wh"))
         dest = str(tmp_path / "ice")
-        db.export_iceberg("ev", dest, mode="update")
+        export_iceberg(db, "ev", dest, mode="update")
         s1 = _load_metadata(dest)["current-snapshot-id"]
         # repartition the store table: g → h (schema re-passed so
         # the PK config — and with it the delete fast path — survives)
         db.register_table("ev", df=db.df("ev"), schema=_sch(),
                           partition_by=["h"])
         db.flush()
-        rep = db.export_iceberg("ev", dest, mode="update")
+        rep = export_iceberg(db, "ev", dest, mode="update")
         assert rep["commit"] == "refresh"
         meta, data, parts = _live(dest)
         specs = {int(s["spec-id"]): s for s in meta["partition-specs"]}
@@ -153,7 +155,7 @@ class TestPartitionedExport:
         db.batch_insert("ev", [{"id": "y1", "g": "gz", "h": 7,
                                 "n": 901}])
         db.flush()
-        rep = db.export_iceberg("ev", dest, mode="update")
+        rep = export_iceberg(db, "ev", dest, mode="update")
         assert rep["commit"] == "append"
         meta2, data2, parts2 = _live(dest)
         assert any(parts2[fp].get("h") == 7 for fp, _ in data2)
@@ -164,14 +166,14 @@ class TestPartitionedExport:
         the mechanism that lets old files keep their own spec."""
         db = _mk(spark, str(tmp_path / "wh"))
         dest = str(tmp_path / "ice")
-        db.export_iceberg("ev", dest, mode="update")
+        export_iceberg(db, "ev", dest, mode="update")
         db.register_table("ev", df=db.df("ev"), schema=_sch(),
                           partition_by=["h"])
         db.flush()
-        db.export_iceberg("ev", dest, mode="update")       # refresh
+        export_iceberg(db, "ev", dest, mode="update")       # refresh
         db.batch_insert("ev", [{"id": "z", "g": "q", "h": 5, "n": 9}])
         db.flush()
-        db.export_iceberg("ev", dest, mode="update")       # append
+        export_iceberg(db, "ev", dest, mode="update")       # append
         meta = _load_metadata(dest)
         snap = _pick_snapshot(meta)
         _, ml = read_container_file(_norm_path(snap["manifest-list"]))
@@ -181,7 +183,7 @@ class TestPartitionedExport:
         # delete commit: delete manifest binds the unpartitioned spec
         db.delete("ev").where("id", "=", "z").execute()
         db.flush()
-        rep = db.export_iceberg("ev", dest, mode="update")
+        rep = export_iceberg(db, "ev", dest, mode="update")
         assert rep["commit"] in ("eqdel", "mor")
         meta = _load_metadata(dest)
         snap = _pick_snapshot(meta)
@@ -203,7 +205,7 @@ class TestPartitionedExport:
                                                  _pick_snapshot)
         db = _mk(spark, str(tmp_path / "wh"))
         dest = str(tmp_path / "ice")
-        db.export_iceberg("ev", dest, mode="update")     # spec 1 (g)
+        export_iceberg(db, "ev", dest, mode="update")     # spec 1 (g)
         before = sorted(map(tuple, read_iceberg(spark, dest)
                             .select("id", "g", "h", "n").collect()))
         rep = rewrite_data_files(spark, dest,
@@ -225,7 +227,7 @@ class TestPartitionedExport:
         db.register_table("ev", df=db.df("ev"), schema=_sch(),
                           partition_by=["h"])
         db.flush()
-        db.export_iceberg("ev", dest, mode="update")     # refresh
+        export_iceberg(db, "ev", dest, mode="update")     # refresh
         rep = rewrite_data_files(spark, dest,
                                  target_file_bytes=64 << 20,
                                  cluster_by=["n"])
@@ -247,14 +249,14 @@ class TestPartitionedExport:
         from tostore_spark.plans.iceberg import read_iceberg_changes
         db = _mk(spark, str(tmp_path / "wh"))
         dest = str(tmp_path / "ice")
-        db.export_iceberg("ev", dest, mode="update")
+        export_iceberg(db, "ev", dest, mode="update")
         db.batch_insert("ev", [{"id": "x1", "g": "g1", "h": 2,
                                 "n": 900}])
         db.flush()
-        db.export_iceberg("ev", dest, mode="update")
+        export_iceberg(db, "ev", dest, mode="update")
         db.delete("ev").where("id", "IN", ["k002", "x1"]).execute()
         db.flush()
-        rep = db.export_iceberg("ev", dest, mode="update")
+        rep = export_iceberg(db, "ev", dest, mode="update")
         assert rep["commit"] in ("eqdel", "mor")
         feed = read_iceberg_changes(spark, dest)
         rows = feed.collect()
@@ -298,7 +300,7 @@ class TestBridgePartitionEvolution:
         db.register_table("ev", df=src, schema=sch, partition_by=["g"])
         db.flush()
         dest = str(tmp_path / "dx")
-        db.export_delta("ev", dest)          # hive-partitioned delta
+        export_delta(db, "ev", dest)          # hive-partitioned delta
         convert_delta_to_iceberg(spark, dest)
         return db, dest
 

@@ -32,6 +32,8 @@ from tostore_spark.plans.iceberg import (_load_metadata,
                                          sync_delta_to_iceberg)
 from tostore_spark.schema import (DataType, FieldSchema,
                                   PrimaryKeyConfig, TableSchema)
+from tostore_spark.plans.delta_export import export_delta
+from tostore_spark.plans.iceberg import export_iceberg
 
 
 def _mk(spark, wh, rows=10):
@@ -103,7 +105,7 @@ class TestBridgeRename:
     def test_bridge_and_reads_survive_rename(self, spark, tmp_path):
         db = _mk(spark, str(tmp_path / "wh"))
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=1)        # v0
+        export_delta(db, "notes", dest, target_files=1)        # v0
         convert_delta_to_iceberg(spark, dest)
         s1 = _load_metadata(dest)["current-snapshot-id"]
         meta_d, sj = _enable_mapping_commit(dest, 1)          # v1
@@ -145,8 +147,8 @@ class TestBridgeRename:
         rows surface under the range-END logical names."""
         db = _mk(spark, str(tmp_path / "wh"), rows=4)
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=1,
-                        change_data=True)                     # v0
+        export_delta(db, "notes", dest, target_files=1,
+                     change_data=True)                     # v0
         meta_d, sj = _enable_mapping_commit(dest, 1)
         meta_d, sj = _rename_commit(dest, 2, meta_d, sj, 1,
                                     "note_text")
@@ -170,7 +172,7 @@ class TestBridgeRename:
         test_drop_widen_evolution.py for the full lifecycle)."""
         db = _mk(spark, str(tmp_path / "wh"), rows=4)
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=1)
+        export_delta(db, "notes", dest, target_files=1)
         convert_delta_to_iceberg(spark, dest)
         meta_d, sj = _enable_mapping_commit(dest, 1)
         sj2 = {"type": "struct",
@@ -191,7 +193,7 @@ class TestBridgeRename:
         never seen, so the rename validation refuses."""
         db = _mk(spark, str(tmp_path / "wh"), rows=4)
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=1)
+        export_delta(db, "notes", dest, target_files=1)
         convert_delta_to_iceberg(spark, dest)
         meta_d, sj = _enable_mapping_commit(dest, 1)
         sj2 = json.loads(json.dumps(sj))
@@ -209,10 +211,10 @@ class TestIcebergRename:
     def test_rename_column_metadata_only(self, spark, tmp_path):
         db = _mk(spark, str(tmp_path / "wh"))
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=2)
+        export_iceberg(db, "notes", dest, target_files=2)
         before = sorted(os.listdir(os.path.join(dest, "data")))
         s1 = _load_metadata(dest)["current-snapshot-id"]
-        rep = db.rename_iceberg_column(dest, {"body": "note_text"})
+        rep = rename_iceberg_column(dest, {"body": "note_text"})
         assert rep["schema_id"] == 1
         # METADATA-ONLY: zero data files touched
         assert sorted(os.listdir(os.path.join(dest, "data"))) == before
@@ -229,7 +231,7 @@ class TestIcebergRename:
     def test_rename_refusals(self, spark, tmp_path):
         db = _mk(spark, str(tmp_path / "wh"), rows=4)
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)
+        export_iceberg(db, "notes", dest, target_files=1)
         with pytest.raises(ValueError, match="unknown column"):
             rename_iceberg_column(dest, {"nope": "x"})
         with pytest.raises(ValueError, match="collides"):
@@ -243,17 +245,17 @@ class TestIcebergRename:
         consumer applies them; drops still refuse."""
         db = _mk(spark, str(tmp_path / "wh"))
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)      # s1
+        export_iceberg(db, "notes", dest, target_files=1)      # s1
         db.batch_insert("notes", [{"id": "x1", "body": "xx", "n": 100},
                                   {"id": "x2", "body": "yy", "n": 101}])
         db.flush()
-        db.export_iceberg("notes", dest, mode="update")       # s2
+        export_iceberg(db, "notes", dest, mode="update")       # s2
         db.delete("notes").where("id", "IN",
                                  ["k001", "k005"]).execute()
         db.flush()
-        rep = db.export_iceberg("notes", dest, mode="update")  # s3
+        rep = export_iceberg(db, "notes", dest, mode="update")  # s3
         assert rep["commit"] == "eqdel"
-        db.rename_iceberg_column(dest, {"body": "note_text"})
+        rename_iceberg_column(dest, {"body": "note_text"})
         feed = read_iceberg_changes(spark, dest)
         assert "note_text" in feed.columns
         rows = feed.collect()
@@ -294,9 +296,9 @@ class TestIcebergRename:
         OLD names — the rename only surfaces for current-head pulls."""
         db = _mk(spark, str(tmp_path / "wh"), rows=4)
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)
+        export_iceberg(db, "notes", dest, target_files=1)
         s1 = _load_metadata(dest)["current-snapshot-id"]
-        db.rename_iceberg_column(dest, {"body": "note_text"})
+        rename_iceberg_column(dest, {"body": "note_text"})
         feed = read_iceberg_changes(spark, dest, to_snapshot=s1)
         assert "body" in feed.columns and \
             "note_text" not in feed.columns

@@ -22,6 +22,8 @@ from tostore_spark.plans.xtable import (convert_iceberg_to_delta,
                                         sync_iceberg_to_delta)
 from tostore_spark.schema import (DataType, FieldSchema,
                                   PrimaryKeyConfig, TableSchema)
+from tostore_spark.plans.delta_export import export_delta
+from tostore_spark.plans.iceberg import export_iceberg
 
 
 def _mk(spark, wh, rows=10):
@@ -50,14 +52,14 @@ def _stack_commits(db, dest, n=3, start=0):
             {"id": f"x{j}{i}", "body": "xx", "n": 100 + j * 10 + i}
             for i in range(3)])
         db.flush()
-        db.export_iceberg("notes", dest, mode="update")
+        export_iceberg(db, "notes", dest, mode="update")
 
 
 class TestRewriteManifests:
     def test_consolidates_and_preserves_reads(self, spark, tmp_path):
         db = _mk(spark, str(tmp_path / "wh"))
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=2)
+        export_iceberg(db, "notes", dest, target_files=2)
         _stack_commits(db, dest, n=3)
         n_before, _ = _manifest_count(dest)
         assert n_before == 4                  # 1 initial + 3 appends
@@ -94,14 +96,14 @@ class TestRewriteManifests:
         stay alive."""
         db = _mk(spark, str(tmp_path / "wh"))
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)
+        export_iceberg(db, "notes", dest, target_files=1)
         # two mixed epochs → two MoR delete snapshots
         for j, victims in enumerate((["k001"], ["k003"])):
             db.batch_insert("notes", [
                 {"id": f"m{j}", "body": "mm", "n": 300 + j}])
             db.delete("notes").where("id", "IN", victims).execute()
             db.flush()
-            r = db.export_iceberg("notes", dest, mode="update")
+            r = export_iceberg(db, "notes", dest, mode="update")
             assert r["commit"] == "mor", r
         before = sorted(r["id"] for r in
                         read_iceberg(spark, dest).collect())
@@ -119,7 +121,7 @@ class TestRewriteManifests:
         db.batch_insert("notes", [{"id": "z9", "body": "zz",
                                    "n": 999}])
         db.flush()
-        db.export_iceberg("notes", dest, mode="update")
+        export_iceberg(db, "notes", dest, mode="update")
         assert read_iceberg(spark, dest).count() == len(before) + 1
 
     def test_forward_bridge_index_rebuilds_after_rewrite(
@@ -129,7 +131,7 @@ class TestRewriteManifests:
         keeps folding."""
         db = _mk(spark, str(tmp_path / "wh"))
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=2)
+        export_delta(db, "notes", dest, target_files=2)
         from tostore_spark.plans.iceberg import \
             convert_delta_to_iceberg
         convert_delta_to_iceberg(spark, dest)
@@ -137,14 +139,14 @@ class TestRewriteManifests:
             db.batch_insert("notes", [
                 {"id": f"y{j}", "body": "yy", "n": 200 + j}])
             db.flush()
-            db.export_delta("notes", dest, mode="update")
+            export_delta(db, "notes", dest, mode="update")
             sync_delta_to_iceberg(spark, dest)
         rep = rewrite_manifests(dest)
         assert rep["rewritten"] >= 2
         db.delete("notes").where("id", "IN", ["k002"]).execute()
         db.flush()
-        db.export_delta("notes", dest, mode="update",
-                        deletion_vectors=False)
+        export_delta(db, "notes", dest, mode="update",
+                     deletion_vectors=False)
         sync_delta_to_iceberg(spark, dest)
         a = sorted(r["id"] for r in read_iceberg(spark, dest)
                    .collect())
@@ -156,7 +158,7 @@ class TestRewriteManifests:
                                                      tmp_path):
         db = _mk(spark, str(tmp_path / "wh"), rows=6)
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)
+        export_iceberg(db, "notes", dest, target_files=1)
         _stack_commits(db, dest, n=2)
         convert_iceberg_to_delta(spark, dest)
         rewrite_manifests(dest)
@@ -172,7 +174,7 @@ class TestRewriteManifests:
         import json
         db = _mk(spark, str(tmp_path / "wh"), rows=4)
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)
+        export_iceberg(db, "notes", dest, target_files=1)
         meta = _load_metadata(dest)
         meta["format-version"] = 1
         from tostore_spark.plans.iceberg import (

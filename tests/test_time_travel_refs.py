@@ -14,6 +14,8 @@ from tostore_spark.plans.iceberg import (_load_metadata, create_ref,
                                          expire_snapshots, read_iceberg)
 from tostore_spark.schema import (DataType, FieldSchema, PrimaryKeyConfig,
                                   TableSchema)
+from tostore_spark.plans.delta_export import export_delta
+from tostore_spark.plans.iceberg import export_iceberg
 
 
 def _mk(spark, tmp_path, rows=10):
@@ -42,11 +44,11 @@ class TestDeltaTimestampTravel:
     def test_picks_latest_at_or_before(self, spark, tmp_path):
         db = _mk(spark, tmp_path)
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest)
+        export_delta(db, "notes", dest)
         for r in range(2):
             db.batch_insert("notes", [{"id": f"x{r}", "n": 100 + r}])
             db.flush()
-            db.export_delta("notes", dest, mode="update")
+            export_delta(db, "notes", dest, mode="update")
         self._stamp(dest, 0, 1000)
         self._stamp(dest, 1, 2000)
         self._stamp(dest, 2, 3000)
@@ -69,10 +71,10 @@ class TestDeltaTimestampTravel:
         is adjusted up — the pick can never go back in version order."""
         db = _mk(spark, tmp_path)
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest)
+        export_delta(db, "notes", dest)
         db.batch_insert("notes", [{"id": "x", "n": 100}])
         db.flush()
-        db.export_delta("notes", dest, mode="update")
+        export_delta(db, "notes", dest, mode="update")
         self._stamp(dest, 0, 5000)
         self._stamp(dest, 1, 1000)          # skewed backwards
         # v1's effective timestamp becomes max(5000, 1000) = 5000
@@ -83,7 +85,7 @@ class TestDeltaTimestampTravel:
     def test_composes_with_where(self, spark, tmp_path):
         db = _mk(spark, tmp_path)
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest)
+        export_delta(db, "notes", dest)
         self._stamp(dest, 0, 1000)
         out = read_delta(spark, dest, as_of_ms=1000,
                          where={"n": {"<": 3}})
@@ -94,14 +96,14 @@ class TestIcebergRefs:
     def test_tag_read_and_expire_retention(self, spark, tmp_path):
         db = _mk(spark, tmp_path)
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest)
-        rep = db.tag_iceberg(dest, "audit-v1")
+        export_iceberg(db, "notes", dest)
+        rep = create_ref(dest, "audit-v1")
         assert rep["type"] == "tag"
         # two more snapshots on main
         for r in range(2):
             db.batch_insert("notes", [{"id": f"x{r}", "n": 100 + r}])
             db.flush()
-            db.export_iceberg("notes", dest, mode="update")
+            export_iceberg(db, "notes", dest, mode="update")
         assert read_iceberg(spark, dest).count() == 12
         assert read_iceberg(spark, dest, ref="audit-v1").count() == 10
         # a later commit must not clobber the custom ref
@@ -114,8 +116,8 @@ class TestIcebergRefs:
     def test_unknown_ref_and_duplicates_refuse(self, spark, tmp_path):
         db = _mk(spark, tmp_path)
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest)
-        db.tag_iceberg(dest, "t1")
+        export_iceberg(db, "notes", dest)
+        create_ref(dest, "t1")
         with pytest.raises(ValueError, match="already exists"):
             create_ref(dest, "t1")
         with pytest.raises(ValueError, match="not found"):

@@ -17,6 +17,8 @@ from tostore_spark.plans.iceberg import (_load_metadata,
                                          sync_delta_to_iceberg)
 from tostore_spark.schema import (DataType, FieldSchema,
                                   PrimaryKeyConfig, TableSchema)
+from tostore_spark.plans.delta_export import export_delta
+from tostore_spark.plans.iceberg import export_iceberg
 
 
 def _rows(df):
@@ -95,18 +97,18 @@ class TestContinuousBridge:
         commits, sync folds them (and a no-op sync is a no-op)."""
         db = _mk(spark, tmp_path)
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=2)
+        export_delta(db, "notes", dest, target_files=2)
         convert_delta_to_iceberg(spark, dest)
         rep0 = sync_delta_to_iceberg(spark, dest)
         assert rep0["snapshots"] == 0
         db.batch_insert("notes", [{"id": "x0", "n": 100}])
         db.flush()
-        db.export_delta("notes", dest, mode="update")
+        export_delta(db, "notes", dest, mode="update")
         db.delete("notes").where("n", "=", 0).execute()
         db.flush()
-        db.export_delta("notes", dest, mode="update",
-                        deletion_vectors=False)
-        rep = db.sync_delta_to_iceberg(dest)
+        export_delta(db, "notes", dest, mode="update",
+                     deletion_vectors=False)
+        rep = sync_delta_to_iceberg(db.spark, dest)
         assert rep["snapshots"] == 2
         _check_equal(spark, db, dest)
         # rewritten manifests: survivors EXISTING with original seqs,
@@ -123,12 +125,12 @@ class TestContinuousBridge:
         pruning works on them like on converted ones."""
         db = _mk(spark, tmp_path)
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=1)
+        export_delta(db, "notes", dest, target_files=1)
         convert_delta_to_iceberg(spark, dest)
         db.batch_insert("notes", [{"id": f"x{i}", "n": 1000 + i}
                                   for i in range(5)])
         db.flush()
-        db.export_delta("notes", dest, mode="update")
+        export_delta(db, "notes", dest, mode="update")
         sync_delta_to_iceberg(spark, dest)
         out = read_iceberg(spark, dest, where={"n": {">=": 1000}})
         assert sorted(r["n"] for r in out.collect()) == \
@@ -140,12 +142,12 @@ class TestContinuousBridge:
         position-delete file, both views value-equal."""
         db = _mk(spark, tmp_path)
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=1)
+        export_delta(db, "notes", dest, target_files=1)
         convert_delta_to_iceberg(spark, dest)
         db.delete("notes").where("n", "IN", [3]).execute()
         db.flush()
-        rep = db.export_delta("notes", dest, mode="update",
-                              deletion_vectors=True)
+        rep = export_delta(db, "notes", dest, mode="update",
+                           deletion_vectors=True)
         assert rep["commit"] == "dv"
         r = sync_delta_to_iceberg(spark, dest)
         assert r["snapshots"] == 1
@@ -160,31 +162,31 @@ class TestContinuousBridge:
         TestBridgeSchemaEvolution) — but a RETYPE still refuses."""
         db = _mk(spark, tmp_path)
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=1)
+        export_delta(db, "notes", dest, target_files=1)
         convert_delta_to_iceberg(spark, dest)
         db.update_schema("notes").modify_field(
             "n", type=DataType.double).execute()
         db.flush()
-        db.export_delta("notes", dest, mode="update")
+        export_delta(db, "notes", dest, mode="update")
         with pytest.raises(ValueError, match="cannot follow"):
             sync_delta_to_iceberg(spark, dest)
 
     def test_non_bridge_refuses(self, spark, tmp_path):
         db = _mk(spark, tmp_path)
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest)
+        export_iceberg(db, "notes", dest)
         with pytest.raises(ValueError, match="not a delta"):
             sync_delta_to_iceberg(spark, dest)
 
     def test_log_gap_refuses(self, spark, tmp_path):
         db = _mk(spark, tmp_path)
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=1)
+        export_delta(db, "notes", dest, target_files=1)
         convert_delta_to_iceberg(spark, dest)
         for i in range(2):
             db.batch_insert("notes", [{"id": f"x{i}", "n": 100 + i}])
             db.flush()
-            db.export_delta("notes", dest, mode="update")
+            export_delta(db, "notes", dest, mode="update")
         os.unlink(os.path.join(dest, "_delta_log",
                                f"{1:020d}.json"))
         with pytest.raises(ValueError, match="gap"):
@@ -239,12 +241,12 @@ def _spawn(script, args):
 def test_two_processes_race_bridge_sync(spark, tmp_path):
     db = _mk(spark, tmp_path)
     dest = str(tmp_path / "dx")
-    db.export_delta("notes", dest, target_files=2)
+    export_delta(db, "notes", dest, target_files=2)
     convert_delta_to_iceberg(spark, dest)
     for i in range(3):                      # 3 unfolded delta commits
         db.batch_insert("notes", [{"id": f"x{i}", "n": 100 + i}])
         db.flush()
-        db.export_delta("notes", dest, mode="update")
+        export_delta(db, "notes", dest, mode="update")
     reports = [str(tmp_path / f"rep{w}.txt") for w in range(2)]
     procs = [_spawn(_SYNC_WORKER.format(repo=REPO), [dest, reports[w]])
              for w in range(2)]
@@ -279,16 +281,16 @@ def test_expire_then_vacuum_coordination(spark, tmp_path):
     from tostore_spark.plans.iceberg import expire_snapshots
     db = _mk(spark, tmp_path)
     dest = str(tmp_path / "dx")
-    db.export_delta("notes", dest, target_files=2)
+    export_delta(db, "notes", dest, target_files=2)
     convert_delta_to_iceberg(spark, dest)
     for i in range(2):
         db.batch_insert("notes", [{"id": f"x{i}", "n": 100 + i}])
         db.flush()
-        db.export_delta("notes", dest, mode="update")
+        export_delta(db, "notes", dest, mode="update")
     db.delete("notes").where("n", "=", 0).execute()
     db.flush()
-    db.export_delta("notes", dest, mode="update",
-                    deletion_vectors=False)
+    export_delta(db, "notes", dest, mode="update",
+                 deletion_vectors=False)
     sync_delta_to_iceberg(spark, dest)
     rep = expire_snapshots(dest, keep_last=1)
     assert rep["expired"]
@@ -317,8 +319,8 @@ class TestBridgeScalePaths:
     def _bridge(self, spark, tmp_path, rows=20):
         db = _mk(spark, tmp_path, rows=rows)
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=2,
-                        cluster_by=["id"])
+        export_delta(db, "notes", dest, target_files=2,
+                     cluster_by=["id"])
         convert_delta_to_iceberg(spark, dest)
         return db, dest
 
@@ -327,7 +329,7 @@ class TestBridgeScalePaths:
         db, dest = self._bridge(spark, tmp_path)
         db.batch_insert("notes", [{"id": "x0", "n": 100}])
         db.flush()
-        db.export_delta("notes", dest, mode="update")
+        export_delta(db, "notes", dest, mode="update")
         seen = self._spy(monkeypatch)
         rep = sync_delta_to_iceberg(spark, dest)
         assert rep["snapshots"] == 1
@@ -341,16 +343,16 @@ class TestBridgeScalePaths:
         # first delete: no index yet -> full decode builds it
         db.delete("notes").where("id", "=", "k000").execute()
         db.flush()
-        db.export_delta("notes", dest, mode="update",
-                        deletion_vectors=False)
+        export_delta(db, "notes", dest, mode="update",
+                     deletion_vectors=False)
         sync_delta_to_iceberg(spark, dest)
         assert os.path.exists(os.path.join(
             dest, "metadata", ice._BRIDGE_INDEX))
         # second delete: candidate manifests only (1 of several)
         db.delete("notes").where("id", "=", "k039").execute()
         db.flush()
-        db.export_delta("notes", dest, mode="update",
-                        deletion_vectors=False)
+        export_delta(db, "notes", dest, mode="update",
+                     deletion_vectors=False)
         meta = _load_metadata(dest)
         n_manifests = len(read_iceberg(spark, dest).inputFiles())
         seen = self._spy(monkeypatch)
@@ -398,16 +400,16 @@ class TestBridgeDeletionVectors:
     def _bridge(self, spark, tmp_path, rows=20):
         db = _mk(spark, tmp_path, rows=rows)
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=2,
-                        cluster_by=["id"])
+        export_delta(db, "notes", dest, target_files=2,
+                     cluster_by=["id"])
         convert_delta_to_iceberg(spark, dest)
         return db, dest
 
     def _dv_delete(self, db, dest, ns):
         db.delete("notes").where("n", "IN", ns).execute()
         db.flush()
-        rep = db.export_delta("notes", dest, mode="update",
-                              deletion_vectors=True)
+        rep = export_delta(db, "notes", dest, mode="update",
+                           deletion_vectors=True)
         assert rep["commit"] == "dv"
 
     def _last_delete_file_rows(self, spark, dest):
@@ -507,8 +509,8 @@ class TestBridgeDeletionVectors:
         import tostore_spark.plans.iceberg as ice
         db = _mk(spark, tmp_path)
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=2,
-                        cluster_by=["id"])
+        export_delta(db, "notes", dest, target_files=2,
+                     cluster_by=["id"])
         self._dv_delete(db, dest, [2, 5, 11])
         convert_delta_to_iceberg(spark, dest)
         _check_equal(spark, db, dest)
@@ -534,8 +536,8 @@ class TestBridgeDeletionVectors:
         db.flush()
         db.delete("notes").where("n", "=", 901).execute()
         db.flush()
-        rep = db.export_delta("notes", dest, mode="update",
-                              deletion_vectors=True)
+        rep = export_delta(db, "notes", dest, mode="update",
+                           deletion_vectors=True)
         assert rep["commit"] == "dv"
         sync_delta_to_iceberg(spark, dest)
         _check_equal(spark, db, dest)
@@ -614,7 +616,7 @@ class TestBridgeSchemaEvolution:
         import pyarrow.parquet as papq
         db = _mk(spark, tmp_path, rows=4)
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=1)
+        export_delta(db, "notes", dest, target_files=1)
         convert_delta_to_iceberg(spark, dest)
         log = os.path.join(dest, "_delta_log")
         meta_d = json.loads(open(os.path.join(
@@ -662,7 +664,7 @@ class TestBridgeSchemaEvolution:
     def test_rename_still_refuses(self, spark, tmp_path):
         db = _mk(spark, tmp_path, rows=4)
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=1)
+        export_delta(db, "notes", dest, target_files=1)
         convert_delta_to_iceberg(spark, dest)
         log = os.path.join(dest, "_delta_log")
         meta_d = None

@@ -13,6 +13,7 @@ from tostore_spark import ToStoreSpark
 from tostore_spark.plans.delta_export import read_delta
 from tostore_spark.schema import (DataType, FieldSchema,
                                   PrimaryKeyConfig, TableSchema)
+from tostore_spark.plans.delta_export import export_delta
 
 
 def _mk(spark, wh, rows=6):
@@ -30,13 +31,13 @@ class TestV2CheckpointWrite:
     def test_v2_layout_written_and_read_back(self, spark, tmp_path):
         db = _mk(spark, str(tmp_path / "wh"))
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=1,
-                        checkpoint_format="v2")
+        export_delta(db, "notes", dest, target_files=1,
+                     checkpoint_format="v2")
         for v in range(1, 11):          # checkpoint fires at v10
             db.batch_insert("notes", [{"id": f"a{v:02d}",
                                        "n": 100 + v}])
             db.flush()
-            rep = db.export_delta("notes", dest, mode="update")
+            rep = export_delta(db, "notes", dest, mode="update")
             assert rep["commit"] == "append", rep
         log = os.path.join(dest, "_delta_log")
         names = sorted(os.listdir(log))
@@ -71,18 +72,18 @@ class TestV2CheckpointWrite:
         # tail commit past the checkpoint + pre-checkpoint travel
         db.batch_insert("notes", [{"id": "tail", "n": 999}])
         db.flush()
-        db.export_delta("notes", dest, mode="update")
+        export_delta(db, "notes", dest, mode="update")
         assert read_delta(spark, dest).count() == 17
         assert read_delta(spark, dest, version=3).count() == 9
 
     def test_classic_export_upgrades_on_update(self, spark, tmp_path):
         db = _mk(spark, str(tmp_path / "wh"), rows=1)
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=1)   # classic
+        export_delta(db, "notes", dest, target_files=1)   # classic
         db.batch_insert("notes", [{"id": "y", "n": 2}])
         db.flush()
-        db.export_delta("notes", dest, mode="update",
-                        checkpoint_format="v2")
+        export_delta(db, "notes", dest, mode="update",
+                     checkpoint_format="v2")
         proto = None
         for ln in open(os.path.join(dest, "_delta_log",
                                     f"{1:020d}.json")):
@@ -96,7 +97,7 @@ class TestV2CheckpointWrite:
         # the persisted choice survives later updates without the flag
         db.batch_insert("notes", [{"id": "z", "n": 3}])
         db.flush()
-        db.export_delta("notes", dest, mode="update")
+        export_delta(db, "notes", dest, mode="update")
         st = json.load(open(os.path.join(dest,
                                          "_export_state.json")))
         assert st["ckfmt"] == "v2"
@@ -106,12 +107,12 @@ class TestV2CheckpointWrite:
         never clobber v2Checkpoint off the table."""
         db = _mk(spark, str(tmp_path / "wh"), rows=8)
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=1,
-                        checkpoint_format="v2")
+        export_delta(db, "notes", dest, target_files=1,
+                     checkpoint_format="v2")
         db.delete("notes").where("id", "=", "k001").execute()
         db.flush()
-        rep = db.export_delta("notes", dest, mode="update",
-                              deletion_vectors=True)
+        rep = export_delta(db, "notes", dest, mode="update",
+                           deletion_vectors=True)
         assert rep["commit"] == "dv"
         proto = None
         for ln in open(os.path.join(dest, "_delta_log",
@@ -125,5 +126,5 @@ class TestV2CheckpointWrite:
     def test_bad_format_refuses(self, spark, tmp_path):
         db = _mk(spark, str(tmp_path / "wh"), rows=1)
         with pytest.raises(ValueError, match="checkpoint_format"):
-            db.export_delta("notes", str(tmp_path / "dx"),
-                            checkpoint_format="v3")
+            export_delta(db, "notes", str(tmp_path / "dx"),
+                         checkpoint_format="v3")

@@ -26,6 +26,8 @@ from tostore_spark.plans.xtable import (REVERSE_BRIDGE_PROP,
                                         sync_iceberg_to_delta)
 from tostore_spark.schema import (DataType, FieldSchema,
                                   PrimaryKeyConfig, TableSchema)
+from tostore_spark.plans.delta_export import export_delta
+from tostore_spark.plans.iceberg import export_iceberg, rewrite_data_files
 
 
 def _mk(spark, wh, rows=10):
@@ -54,7 +56,7 @@ class TestConvert:
     def test_convert_catalogs_current_snapshot(self, spark, tmp_path):
         db = _mk(spark, str(tmp_path / "wh"))
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=2)
+        export_iceberg(db, "notes", dest, target_files=2)
         rep = convert_iceberg_to_delta(spark, dest)
         assert rep["version"] == 0 and rep["files"] == 2
         assert rep["dv_files"] == 0
@@ -71,14 +73,14 @@ class TestConvert:
                                                  tmp_path):
         db = _mk(spark, str(tmp_path / "wh"))
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)
+        export_iceberg(db, "notes", dest, target_files=1)
         # mixed epoch → MERGE-ON-READ position deletes live at convert
         db.batch_insert("notes", [{"id": "x1", "body": "xx",
                                    "n": 100}])
         db.delete("notes").where("id", "IN",
                                  ["k001", "k005"]).execute()
         db.flush()
-        rep = db.export_iceberg("notes", dest, mode="update")
+        rep = export_iceberg(db, "notes", dest, mode="update")
         assert rep["commit"] == "mor"
         rep = convert_iceberg_to_delta(spark, dest)
         assert rep["dv_files"] == 1
@@ -90,16 +92,16 @@ class TestConvert:
     def test_convert_refusals(self, spark, tmp_path):
         db = _mk(spark, str(tmp_path / "wh"), rows=6)
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)
+        export_iceberg(db, "notes", dest, target_files=1)
         # eq-deletes refuse (pure-delete epochs take the eqdel route)
         db.delete("notes").where("id", "IN", ["k001"]).execute()
         db.flush()
-        rep = db.export_iceberg("notes", dest, mode="update")
+        rep = export_iceberg(db, "notes", dest, mode="update")
         assert rep["commit"] == "eqdel"
         with pytest.raises(ValueError, match="EQUALITY"):
             convert_iceberg_to_delta(spark, dest)
         # optimize materializes the deletes; conversion then works
-        db.optimize_iceberg(dest, min_files=1)
+        rewrite_data_files(db.spark, dest, min_files=1)
         rep = convert_iceberg_to_delta(spark, dest)
         assert _same(spark, dest) == 5
         # an existing _delta_log refuses re-conversion
@@ -109,7 +111,7 @@ class TestConvert:
     def test_rename_history_refuses(self, spark, tmp_path):
         db = _mk(spark, str(tmp_path / "wh"), rows=4)
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)
+        export_iceberg(db, "notes", dest, target_files=1)
         rename_iceberg_column(dest, {"body": "note_text"})
         with pytest.raises(ValueError, match="renamed"):
             convert_iceberg_to_delta(spark, dest)
@@ -128,7 +130,7 @@ class TestConvert:
                           partition_by=["g"])
         db.flush()
         dest = str(tmp_path / "ice")
-        db.export_iceberg("ev", dest)
+        export_iceberg(db, "ev", dest)
         rep = convert_iceberg_to_delta(spark, dest)
         assert rep["partition_columns"] == ["g"]
         assert _same(spark, dest, cols=("id", "g", "n")) == 12
@@ -142,7 +144,7 @@ class TestSync:
     def test_append_dv_compact_lifecycle(self, spark, tmp_path):
         db = _mk(spark, str(tmp_path / "wh"))
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=2)
+        export_iceberg(db, "notes", dest, target_files=2)
         convert_iceberg_to_delta(spark, dest)
         # mixed epoch → DV commit on the delta side
         db.batch_insert("notes", [{"id": "x1", "body": "xx",
@@ -150,7 +152,7 @@ class TestSync:
         db.delete("notes").where("id", "IN",
                                  ["k001", "k005"]).execute()
         db.flush()
-        db.export_iceberg("notes", dest, mode="update")
+        export_iceberg(db, "notes", dest, mode="update")
         rep = sync_iceberg_to_delta(spark, dest)
         assert rep["snapshots"] == 1 and rep["version"] == 1
         assert _same(spark, dest) == 9
@@ -161,7 +163,7 @@ class TestSync:
             {"id": f"y{i}", "body": "yy", "n": 200 + i}
             for i in range(3)])
         db.flush()
-        db.export_iceberg("notes", dest, mode="update")
+        export_iceberg(db, "notes", dest, mode="update")
         rep = sync_iceberg_to_delta(spark, dest)
         assert rep["snapshots"] == 1
         assert _same(spark, dest) == 12
@@ -171,7 +173,7 @@ class TestSync:
             acts = [json.loads(ln) for ln in fh if ln.strip()]
         assert not [a for a in acts if "remove" in a]
         # compaction → remove/add; both sides agree after
-        db.optimize_iceberg(dest, min_files=2)
+        rewrite_data_files(db.spark, dest, min_files=2)
         rep = sync_iceberg_to_delta(spark, dest)
         assert rep["snapshots"] == 1
         assert _same(spark, dest) == 12
@@ -181,12 +183,12 @@ class TestSync:
     def test_delta_time_travel_rides_snapshots(self, spark, tmp_path):
         db = _mk(spark, str(tmp_path / "wh"), rows=6)
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)
+        export_iceberg(db, "notes", dest, target_files=1)
         convert_iceberg_to_delta(spark, dest)
         db.batch_insert("notes", [{"id": "z1", "body": "zz",
                                    "n": 50}])
         db.flush()
-        db.export_iceberg("notes", dest, mode="update")
+        export_iceberg(db, "notes", dest, mode="update")
         sync_iceberg_to_delta(spark, dest)
         assert read_delta(spark, dest).count() == 7
         assert read_delta(spark, dest, version=0).count() == 6
@@ -223,18 +225,18 @@ class TestSync:
             self, spark, tmp_path):
         db = _mk(spark, str(tmp_path / "wh"), rows=6)
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)
+        export_iceberg(db, "notes", dest, target_files=1)
         convert_iceberg_to_delta(spark, dest)
         db.delete("notes").where("id", "IN", ["k002"]).execute()
         db.flush()
-        rep = db.export_iceberg("notes", dest, mode="update")
+        rep = export_iceberg(db, "notes", dest, mode="update")
         assert rep["commit"] == "eqdel"
         with pytest.raises(ValueError, match="EQUALITY"):
             sync_iceberg_to_delta(spark, dest)
         # materializing the deletes lets the bridge catch up: the
         # eq-delete snapshot gets NO delta version; the optimize
         # folds as the net diff against the last bridged state
-        db.optimize_iceberg(dest, min_files=1)
+        rewrite_data_files(db.spark, dest, min_files=1)
         rep = sync_iceberg_to_delta(spark, dest)
         assert rep["snapshots"] == 1
         assert _same(spark, dest) == 5
@@ -242,7 +244,7 @@ class TestSync:
     def test_sync_refuses_non_bridge(self, spark, tmp_path):
         db = _mk(spark, str(tmp_path / "wh"), rows=4)
         dest = str(tmp_path / "dx")
-        db.export_delta("notes", dest, target_files=1)
+        export_delta(db, "notes", dest, target_files=1)
         with pytest.raises(ValueError, match="not an iceberg"):
             sync_iceberg_to_delta(spark, dest)
 
@@ -285,7 +287,7 @@ class TestSync:
     def test_no_cdf_on_reverse_bridge(self, spark, tmp_path):
         db = _mk(spark, str(tmp_path / "wh"), rows=4)
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=1)
+        export_iceberg(db, "notes", dest, target_files=1)
         convert_iceberg_to_delta(spark, dest)
         with pytest.raises(ValueError, match="ChangeDataFeed"):
             read_delta_cdf(spark, dest, 0)
@@ -298,7 +300,7 @@ class TestSync:
                                                       vacuum_delta)
         db = _mk(spark, str(tmp_path / "wh"), rows=4)
         dest = str(tmp_path / "ice")
-        db.export_iceberg("notes", dest, target_files=2)
+        export_iceberg(db, "notes", dest, target_files=2)
         convert_iceberg_to_delta(spark, dest)
         with pytest.raises(ValueError, match="reverse bridge"):
             optimize_delta(spark, dest, min_files=2)

@@ -5,7 +5,8 @@ Checks, per headline query, that:
 - projections prune columns (``ReadSchema`` ⊂ table schema),
 - small-dim joins broadcast (``BroadcastHashJoin``),
 - order+limit compiles to ``TakeOrderedAndProject`` (no full sort),
-- the keyset-cursor tuple-compare is sargable (appears in PushedFilters).
+- the keyset-cursor tuple-compare is sargable (appears in PushedFilters),
+- bounded top-k windows keep the map-side ``WindowGroupLimit`` (Partial).
 
 Run: python tools/explain_audit.py   (exit 1 on any missing shape)
 """
@@ -15,6 +16,7 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -42,7 +44,7 @@ CHECKS: dict[str, list[str]] = {
     # task forwards more than k rows per query, no single reducer ever
     # sorts a query's full N (r18: replaces the manual __pid pre-rank,
     # which duplicated this bound at the cost of a second exchange).
-    "q_knn_join": ["WindowGroupLimit"],
+    "q_knn_join": ["WindowGroupLimit(Partial)"],
     # distributed LPT sharding: the ranking window is partitioned by the
     # md5 hash group — never a global single-partition window
     "q_corpus_shards": ["__grp"],
@@ -52,7 +54,7 @@ CHECKS: dict[str, list[str]] = {
     # batch IVF: the broadcast of the (query, probe-cell) side is what
     # makes dynamic partition pruning possible over a persisted index,
     # and the shared two-stage top-k bounds every sort
-    "q_ivf_batch": ["BroadcastHashJoin", "WindowGroupLimit"],
+    "q_ivf_batch": ["BroadcastHashJoin", "WindowGroupLimit(Partial)"],
     # packing/caps: every ranking/cumsum window must be key-partitioned —
     # a global window (single reducer) would show an empty partition spec
     "q_pack_sequences": ["windowspecdefinition(shard#"],
@@ -62,7 +64,7 @@ CHECKS: dict[str, list[str]] = {
     "q_quality_filter": ["BroadcastNestedLoopJoin"],
     # quantized k-NN: the small quantized-query side must broadcast (the
     # corpus streams), and both top-k stages stay WindowGroupLimit-bounded
-    "q_quantized_knn": ["BroadcastNestedLoopJoin", "WindowGroupLimit"],
+    "q_quantized_knn": ["BroadcastNestedLoopJoin", "WindowGroupLimit(Partial)"],
     # PQ/ADC search: the score is pure map-side column math — the only
     # ordering operators must be bounded top-k, never a full sort
     "q_pq_search": ["TakeOrderedAndProject"],
@@ -89,13 +91,13 @@ CHECKS: dict[str, list[str]] = {
     "q_mv_incremental": ["HashAggregate", "Union"],
     # SCD2: the open-rows-vs-delta join broadcasts the (small) delta;
     # the latest-per-key window over the delta is group-limit bounded
-    "q_scd2_history": ["BroadcastHashJoin", "WindowGroupLimit"],
+    "q_scd2_history": ["BroadcastHashJoin", "WindowGroupLimit(Partial)"],
     # heavy hitters: the 1-row total folds in as a broadcast inside the
     # same plan — no separate count() action/driver round-trip
     "q_heavy_hitters": ["BroadcastNestedLoopJoin", "HashAggregate"],
     # topic balance: the per-cell cut is a cell-partitioned window with
     # a group limit — no global sort
-    "q_topic_balance": ["WindowGroupLimit", "windowspecdefinition(cell_id"],
+    "q_topic_balance": ["WindowGroupLimit(Partial)", "windowspecdefinition(cell_id"],
     # unpivot: a pure per-row Expand — zero shuffles (no Exchange at all)
     "q_unpivot_long": ["Expand"],
     # funnel: stepwise conditional-min folds are hash-aggregates over
@@ -145,7 +147,7 @@ CHECKS: dict[str, list[str]] = {
     # window over the posexploded paragraphs
     "q_paragraph_dedup": ["Generate", "windowspecdefinition(__h"],
     # group-wise top-k: the rank filter must rewrite to WindowGroupLimit
-    "q_topk_per_group": ["WindowGroupLimit"],
+    "q_topk_per_group": ["WindowGroupLimit(Partial)"],
     # semi/anti joins: filter-join operators, no fan-out join + distinct
     "q_outer_join_shapes": ["LeftSemi", "LeftAnti", "FullOuter"],
     # time-range window: entity-partitioned RANGE frame
@@ -260,7 +262,7 @@ CHECKS: dict[str, list[str]] = {
     "q_rolling_active": ["BroadcastNestedLoopJoin", "partial_count"],
     # TF-IDF top terms: per-doc rank is group-limit bounded, and the
     # output doc slice pushes down THROUGH the window to the scan
-    "q_tfidf_terms": ["WindowGroupLimit", "LessThan(doc_id,50)"],
+    "q_tfidf_terms": ["WindowGroupLimit(Partial)", "LessThan(doc_id,50)"],
     # TF-IDF pairs: final k is a bounded top-k, aggregates combine
     # map-side; the no-cartesian sweep pins the token-blocked pair join
     "q_tfidf_pairs": ["TakeOrderedAndProject", "partial_count"],
@@ -282,12 +284,27 @@ CHECKS: dict[str, list[str]] = {
     # and the degree cap rewrites to a group limit; the no-cartesian
     # sweep pins the covering-pair join to the node_id key
     "q_graph_prune": ["windowspecdefinition(node_id",
-                      "WindowGroupLimit"],
+                      "WindowGroupLimit(Partial)"],
     # CCNet buckets (r10 single-exchange path): both the in-group rank
     # and the threshold extraction are LANG-partitioned windows — no
     # global window, no percentile value-map aggregate
     "q_ppl_buckets": ["windowspecdefinition(lang"],
 }
+
+#: a needle ``Node(Mode)`` (e.g. ``WindowGroupLimit(Partial)``, the
+#: map-side group limit below the exchange) must match a plan node of
+#: that name whose formatted ``Arguments`` end in that mode — a plain
+#: substring would also accept the Final node alone
+_NODE_MODE = re.compile(r"(\w+)\((Partial|Final)\)")
+
+
+def _present(plan: str, needle: str) -> bool:
+    m = _NODE_MODE.fullmatch(needle)
+    if m is None:
+        return needle in plan
+    node = rf"^\(\d+\) {m[1]}\n(?:.+\n)*?Arguments: .*, {m[2]}$"
+    return re.search(node, plan, re.M) is not None
+
 
 #: plans that must NOT contain these operators (checked for every query
 #: in CHECKS): an unblocked pair stage would appear as a cartesian
@@ -306,7 +323,7 @@ def audit(spark, sf_dir: str) -> list[str]:
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
         plan = buf.getvalue()
-        missing = [n for n in needles if n not in plan]
+        missing = [n for n in needles if not _present(plan, n)]
         banned = [n for n in FORBIDDEN if n in plan]
         if missing or banned:
             failures.append(f"{name}: missing plan shapes: {missing}"

@@ -48,6 +48,12 @@ def _cast_to_table_schema(df: DataFrame, schema) -> DataFrame:
         for c in df.columns])
 
 
+def _abs_local(path: str) -> str:
+    """Absolute local form of a path or ``file:`` URI."""
+    return os.path.abspath(path[len("file:"):] if path.startswith("file:")
+                           else path)
+
+
 class DbResult:
     """Graceful-error result for admin operations (the reference returns a
     DbResult instead of raising for business-logic errors, tostore.dart:1134+)."""
@@ -1418,22 +1424,6 @@ class ToStoreSpark:
         return _store.table_diff(self, table, from_version, to_version,
                                  space=self._resolve(table)[0])
 
-    def build_text_index(self, table: str, path: str,
-                         text_field: str = "text",
-                         id_field: str = "doc_id") -> dict:
-        """Persist a BM25 inverted index for a table (range-sorted
-        postings + doclens + (N, avgdl) sidecar) — the lexical
-        counterpart of build_vector_index (search.bm25_build_index)."""
-        from tostore_spark.llmops.search import bm25_build_index
-        return bm25_build_index(self.df(table), path,
-                                text_field=text_field, id_field=id_field)
-
-    def text_search(self, path: str, query: str, k: int = 10, **kw):
-        """BM25 top-k against a persisted text index — reads only the
-        query terms' postings (search.bm25_search_indexed)."""
-        from tostore_spark.llmops.search import bm25_search_indexed
-        return bm25_search_indexed(self.spark, path, query, k=k, **kw)
-
     def fsck(self):
         """Warehouse consistency report (manifest vs filesystem):
         missing / orphan / empty version directories as a DataFrame;
@@ -1473,76 +1463,6 @@ class ToStoreSpark:
         return _store.export_table(self, table, path, format=format,
                                    partition_by=partition_by, mode=mode,
                                    **options)
-
-    def export_delta(self, table: str, dest: str, mode: str = "error",
-                     target_files: Optional[int] = None,
-                     allow_decrypted: bool = False,
-                     deletion_vectors: bool = False,
-                     change_data: bool = False,
-                     cluster_by: Optional[list] = None,
-                     checkpoint_format: Optional[str] = None) -> dict:
-        """Export the table's current version (segments unioned,
-        deletion vectors resolved) as a standard Delta Lake table —
-        protocol/metaData/add log with per-file footer stats — so
-        external Delta readers can consume it without the store's
-        manifest (plans/delta_export; the SURVEY's table-format
-        interop rung).  ``deletion_vectors=True`` lets updates commit
-        merge-on-read vectors for delete/replace epochs (opt-in:
-        upgrades the export's reader protocol).  ``change_data=True``
-        maintains a Delta CHANGE DATA FEED on the export (the
-        ``delta.enableChangeDataFeed`` table property + explicit cdc
-        files on dv/refresh commits), consumable incrementally by
-        foreign CDF readers or ``read_delta_cdf``."""
-        from tostore_spark.plans.delta_export import export_delta as _ed
-        return _ed(self, table, dest, mode=mode,
-                   target_files=target_files,
-                   allow_decrypted=allow_decrypted,
-                   deletion_vectors=deletion_vectors,
-                   change_data=change_data, cluster_by=cluster_by,
-                   checkpoint_format=checkpoint_format)
-
-    def read_delta_cdf(self, path: str, from_version: int,
-                       to_version: Optional[int] = None,
-                       where=None):
-        """Read an external Delta table's CHANGE DATA FEED over a
-        commit range: each row is a change tagged ``_change_type`` +
-        ``_commit_version`` — cost ∝ the range's change files, never a
-        snapshot diff (plans/delta_export.read_delta_cdf).  ``where``
-        filters the feed (derivable append commits prune their add
-        files by log stats).  Pairs with ``apply_changes`` for
-        incremental consumption."""
-        from tostore_spark.plans.delta_export import read_delta_cdf
-        return read_delta_cdf(self.spark, path, from_version,
-                              to_version=to_version, where=where)
-
-    def read_delta(self, path: str, version: Optional[int] = None,
-                   where=None,
-                   as_of_ms: Optional[int] = None) -> DataFrame:
-        """Read an external Delta table (or an ``export_delta``
-        output) via transaction-log replay — no Delta library
-        (plans/delta_export.read_delta).  ``version`` time-travels;
-        ``where`` (the engine predicate language) prunes files by the
-        log's per-file stats/partitionValues BEFORE the scan and
-        re-applies to rows — the selective-read path for large
-        foreign tables."""
-        from tostore_spark.plans.delta_export import read_delta
-        return read_delta(self.spark, path, version=version,
-                          where=where, as_of_ms=as_of_ms)
-
-    def register_delta(self, name: str, path: str,
-                       version: Optional[int] = None,
-                       where=None,
-                       as_of_ms: Optional[int] = None,
-                       is_global: bool = False) -> None:
-        """Register an external Delta table (or an ``export_delta``
-        output) as a readable source via transaction-log replay — no
-        Delta library (plans/delta_export.read_delta).  ``version`` /
-        ``as_of_ms`` pin a historical commit (time travel); ``where``
-        pre-filters with log-stats file pruning (see ``read_delta``)."""
-        from tostore_spark.plans.delta_export import read_delta
-        df = read_delta(self.spark, path, version=version, where=where,
-                        as_of_ms=as_of_ms)
-        self.register_table(name, df=df, is_global=is_global)
 
     def mirror_delta(self, table: str, dest: str,
                      deletion_vectors: bool = True,
@@ -1613,247 +1533,6 @@ class ToStoreSpark:
         return (getattr(self, "_delta_mirrors", {}) or {}) \
             .pop(key, None) is not None
 
-    def convert_delta_to_iceberg(self, path: str) -> dict:
-        """UniForm-style bridge: Iceberg v2 metadata over a Delta
-        table's CURRENT live files — same parquet, two formats, no
-        copy; foreign Iceberg engines read the Delta state
-        (plans/iceberg.convert_delta_to_iceberg).  Snapshot-in-time;
-        live deletion vectors fold into the bootstrap snapshot as
-        position deletes (late r17)."""
-        from tostore_spark.plans.iceberg import convert_delta_to_iceberg
-        return convert_delta_to_iceberg(self.spark, path)
-
-    def sync_delta_to_iceberg(self, path: str) -> dict:
-        """Bring a delta→iceberg bridge CURRENT: fold every Delta
-        commit since the last bridged version into an incremental
-        Iceberg snapshot over the same files — the continuous-UniForm
-        loop (plans/iceberg.sync_delta_to_iceberg); runs automatically
-        per flush under ``mirror_delta(bridge_iceberg=True)``."""
-        from tostore_spark.plans.iceberg import sync_delta_to_iceberg
-        return sync_delta_to_iceberg(self.spark, path)
-
-    def convert_to_iceberg(self, path: str) -> dict:
-        """Catalog an existing plain-parquet directory (flat or hive-
-        partitioned) as an Iceberg v2 table IN PLACE — no data copied;
-        name-mapping property for id-less files, hive dirs become an
-        identity partition spec with values in the manifests, bounds
-        written for immediate skipping (plans/iceberg.
-        convert_to_iceberg)."""
-        from tostore_spark.plans.iceberg import convert_to_iceberg
-        return convert_to_iceberg(self.spark, path)
-
-    def convert_to_delta(self, path: str) -> dict:
-        """Catalog an existing plain-parquet directory (flat or hive-
-        partitioned) as a Delta table IN PLACE — no data copied; v0
-        lists the files with footer stats and hive partitionValues
-        (plans/delta_export.convert_to_delta).  The adoption path for
-        pre-existing datasets."""
-        from tostore_spark.plans.delta_export import convert_to_delta
-        return convert_to_delta(self.spark, path)
-
-    def optimize_delta(self, dest: str,
-                       target_file_bytes: int = 128 * 1024 * 1024,
-                       cluster_by: Optional[list] = None,
-                       min_files: int = 2) -> dict:
-        """Compact a Delta export's small files into ~target-sized
-        ones as a dataChange=false commit (CDF/stream readers skip
-        it; deletion vectors purge; time travel intact until
-        vacuum_delta) — the maintenance companion to mirror_delta's
-        many small commits (plans/delta_export.optimize_delta)."""
-        from tostore_spark.plans.delta_export import optimize_delta
-        return optimize_delta(self.spark, dest,
-                              target_file_bytes=target_file_bytes,
-                              cluster_by=cluster_by,
-                              min_files=min_files)
-
-    def tag_iceberg(self, dest: str, name: str,
-                    snapshot_id: Optional[int] = None,
-                    kind: str = "tag") -> dict:
-        """Create a named branch/tag ref on an Iceberg export —
-        read back with read_iceberg(ref=name); expire_snapshots
-        retains ref'd snapshots (plans/iceberg.create_ref)."""
-        from tostore_spark.plans.iceberg import create_ref
-        return create_ref(dest, name, snapshot_id=snapshot_id,
-                          kind=kind)
-
-    def rename_iceberg_column(self, dest: str, renames: dict) -> dict:
-        """ALTER ... RENAME COLUMN on an Iceberg export — metadata-only
-        (field ids are the identity; zero data IO at any size).
-        Current reads and changelog ranges surface the new names; time
-        travel keeps each snapshot's own names
-        (plans/iceberg.rename_iceberg_column)."""
-        from tostore_spark.plans.iceberg import rename_iceberg_column
-        return rename_iceberg_column(dest, renames)
-
-    def drop_iceberg_column(self, dest: str, columns: list) -> dict:
-        """ALTER ... DROP COLUMN on an Iceberg export — metadata-only
-        (readers project by field id; data files keep the column
-        bytes).  Time travel keeps each snapshot's own columns;
-        changelog ranges crossing the drop surface rows under the
-        range-END schema (plans/iceberg.drop_iceberg_column)."""
-        from tostore_spark.plans.iceberg import drop_iceberg_column
-        return drop_iceberg_column(dest, columns)
-
-    def widen_iceberg_column(self, dest: str, changes: dict) -> dict:
-        """ALTER ... TYPE (widening) on an Iceberg export —
-        metadata-only for spec-legal promotions (int→long,
-        float→double, decimal precision widening); old files keep the
-        narrow physical type and readers upcast at the scan
-        (plans/iceberg.widen_iceberg_column)."""
-        from tostore_spark.plans.iceberg import widen_iceberg_column
-        return widen_iceberg_column(dest, changes)
-
-    def convert_iceberg_to_delta(self, dest: str) -> dict:
-        """In-place catalog of an Iceberg table's current snapshot as
-        a Delta table over the SAME files — the reverse-bridge
-        direction (Apache XTable's shape): position deletes fold into
-        Delta deletion vectors, identity partition values into
-        partitionValues; zero data IO (plans/xtable)."""
-        from tostore_spark.plans.xtable import convert_iceberg_to_delta
-        return convert_iceberg_to_delta(self.spark, dest)
-
-    def sync_iceberg_to_delta(self, dest: str) -> dict:
-        """Fold every Iceberg snapshot since the bridged one into an
-        incremental Delta commit (appends, deletion-vector deletes,
-        dataChange=false compactions, additive/drop/widen schema
-        evolution) — the continuous reverse bridge (plans/xtable)."""
-        from tostore_spark.plans.xtable import sync_iceberg_to_delta
-        return sync_iceberg_to_delta(self.spark, dest)
-
-    def optimize_iceberg(self, dest: str,
-                         target_file_bytes: int = 128 * 1024 * 1024,
-                         cluster_by: Optional[list] = None,
-                         min_files: int = 2) -> dict:
-        """Iceberg rewriteDataFiles for exports: bin-pack small data
-        files as a ``replace`` snapshot — survivors re-listed as
-        EXISTING entries with their original sequence numbers; under
-        live merge-on-read deletes the rewrite materializes instead
-        (plans/iceberg.rewrite_data_files)."""
-        from tostore_spark.plans.iceberg import rewrite_data_files
-        return rewrite_data_files(self.spark, dest,
-                                  target_file_bytes=target_file_bytes,
-                                  cluster_by=cluster_by,
-                                  min_files=min_files)
-
-    def vacuum_delta(self, dest: str, keep_versions: int = 1,
-                     dry_run: bool = False,
-                     retention_sec: float = 0.0) -> dict:
-        """Reclaim an ``export_delta`` destination's data files that
-        only dead versions reference (plans/delta_export.vacuum_delta;
-        the log is never touched, retained versions keep time-
-        traveling exactly).  ``retention_sec`` additionally spares
-        files younger than the window — Delta's own VACUUM retention
-        model, for destinations with concurrent foreign writers."""
-        from tostore_spark.plans.delta_export import vacuum_delta as _vd
-        return _vd(dest, keep_versions=keep_versions, dry_run=dry_run,
-                   retention_sec=retention_sec)
-
-    def iceberg_meta(self, dest: str, kind: str = "snapshots",
-                     snapshot_id: Optional[int] = None,
-                     as_of_ms: Optional[int] = None,
-                     ref: Optional[str] = None):
-        """Iceberg METADATA TABLES for an export/foreign table —
-        snapshots / history / refs / manifests / files / partitions
-        as DataFrames (plans/iceberg.read_iceberg_meta); the
-        ``table$snapshots``-style inspection surface.  Manifest-scale
-        driver work, never row data."""
-        from tostore_spark.plans.iceberg import read_iceberg_meta
-        return read_iceberg_meta(self.spark, dest, kind,
-                                 snapshot_id=snapshot_id,
-                                 as_of_ms=as_of_ms, ref=ref)
-
-    def remove_orphan_files(self, dest: str,
-                            older_than_ms: Optional[int] = None,
-                            dry_run: bool = False) -> dict:
-        """Iceberg removeOrphanFiles for exports: delete data-dir
-        parquet no retained snapshot references — crashed-export
-        debris (plans/iceberg.remove_orphan_files; refuses on a
-        UniForm bridge — use vacuum_delta there)."""
-        from tostore_spark.plans.iceberg import remove_orphan_files
-        return remove_orphan_files(dest, older_than_ms=older_than_ms,
-                                   dry_run=dry_run)
-
-    def delta_history(self, dest: str, limit: Optional[int] = None):
-        """DESCRIBE HISTORY for a Delta export/foreign table — one
-        row per commit, newest first
-        (plans/delta_export.describe_delta_history).  O(log) driver
-        metadata, never row data."""
-        from tostore_spark.plans.delta_export import \
-            describe_delta_history
-        return describe_delta_history(self.spark, dest, limit=limit)
-
-    def delta_detail(self, dest: str):
-        """DESCRIBE DETAIL for a Delta export/foreign table — one row
-        of current-state facts (plans/delta_export.
-        describe_delta_detail)."""
-        from tostore_spark.plans.delta_export import \
-            describe_delta_detail
-        return describe_delta_detail(self.spark, dest)
-
-    def export_iceberg(self, table: str, dest: str,
-                       mode: str = "error",
-                       target_files: Optional[int] = None,
-                       allow_decrypted: bool = False,
-                       cluster_by: Optional[list] = None,
-                       delete_route: str = "auto") -> dict:
-        """Export the table's current version as an Apache Iceberg v2
-        table (metadata JSON + Avro manifest list/manifests + parquet
-        data files with field ids) a foreign Iceberg reader can
-        consume — the second open-format interop rung next to
-        ``export_delta`` (plans/iceberg).  ``mode='append'`` commits
-        the current frame as an additional snapshot;
-        ``mode='update'`` commits the NEXT snapshot incrementally
-        (append-only extensions add only the delta rows, deletes
-        become merge-on-read position-delete files, anything else an
-        overwrite snapshot).  ``cluster_by`` range-clusters the staged
-        data files so per-file manifest bounds are disjoint — what
-        makes bounds-based file skipping effective for readers."""
-        from tostore_spark.plans.iceberg import export_iceberg as _ei
-        return _ei(self, table, dest, mode=mode,
-                   target_files=target_files,
-                   allow_decrypted=allow_decrypted,
-                   cluster_by=cluster_by,
-                   delete_route=delete_route)
-
-    def read_iceberg(self, path: str,
-                     snapshot_id: Optional[int] = None,
-                     as_of_ms: Optional[int] = None,
-                     partition_filter: Optional[dict] = None,
-                     where=None, ref: Optional[str] = None) -> DataFrame:
-        """Read an external Iceberg v1/v2 table (or an
-        ``export_iceberg`` output) — pure-Python Avro manifest
-        decoding, field-id column resolution, v2 merge-on-read
-        deletes, snapshot time travel (plans/iceberg.read_iceberg).
-        ``where`` (the engine predicate language) prunes data files by
-        the manifests' column bounds and identity partition values
-        BEFORE the scan and re-applies to rows."""
-        from tostore_spark.plans.iceberg import read_iceberg
-        return read_iceberg(self.spark, path, snapshot_id=snapshot_id,
-                            as_of_ms=as_of_ms,
-                            partition_filter=partition_filter,
-                            where=where, ref=ref)
-
-    def register_iceberg(self, name: str, path: str,
-                         snapshot_id: Optional[int] = None,
-                         as_of_ms: Optional[int] = None,
-                         partition_filter: Optional[dict] = None,
-                         where=None,
-                         is_global: bool = False) -> None:
-        """Register an external Iceberg v1/v2 table (or an
-        ``export_iceberg`` output) as a readable source — pure-Python
-        Avro manifest decoding, field-id column resolution, v2
-        merge-on-read position/equality deletes, snapshot time travel
-        (plans/iceberg.read_iceberg).  ``partition_filter`` prunes
-        data files at the manifest level (identity transforms) before
-        Spark lists them; ``where`` additionally prunes by manifest
-        column bounds (see ``read_iceberg``)."""
-        from tostore_spark.plans.iceberg import read_iceberg
-        df = read_iceberg(self.spark, path, snapshot_id=snapshot_id,
-                          as_of_ms=as_of_ms,
-                          partition_filter=partition_filter,
-                          where=where)
-        self.register_table(name, df=df, is_global=is_global)
-
     def apply_cdf(self, table: str, path: str,
                   to_version: Optional[int] = None,
                   from_version: Optional[int] = None,
@@ -1872,7 +1551,7 @@ class ToStoreSpark:
 
         ``from_version`` seeds the FIRST call for a consumer that
         bootstrapped from an existing snapshot (e.g.
-        ``register_delta`` at version N → ``from_version=N+1``);
+        ``read_delta`` at version N → ``from_version=N+1``);
         without it the first call BOOTSTRAPS by reading the target
         snapshot directly as inserts — O(current state), never an
         O(history) replay, and correct even across checkpoint-
@@ -2104,57 +1783,20 @@ class ToStoreSpark:
         per (table, path); ``stop_cdf_sync()`` ends it.  The applied
         rows become durable at this engine's next flush, atomically
         with the cursor."""
-        import threading
-
-        self.stop_cdf_sync(table, path)
-        self.last_cdf_sync_error: Optional[tuple] = None
-        key = (self._resolve(table), os.path.abspath(
-            path[len("file:"):] if path.startswith("file:") else path))
-        stop = threading.Event()
-
-        def _loop():
-            while not stop.wait(interval_s):
-                try:
-                    # the seed is passed EVERY tick: apply_cdf prefers
-                    # the KV cursor once one exists, and a tick that
-                    # applied nothing must not burn the seed (the
-                    # next tick would fall back to the earliest
-                    # commit and re-apply the bootstrap snapshot)
-                    self.apply_cdf(table, path,
-                                   from_version=from_version,
-                                   where=where)
-                    self.last_cdf_sync_error = None
-                except Exception as exc:   # pragma: no cover - timing
-                    self.last_cdf_sync_error = (table, str(exc))
-
-        t = threading.Thread(target=_loop, daemon=True,
-                             name=f"cdf-sync-{key[0][1]}")
-        if not hasattr(self, "_cdf_syncs"):
-            self._cdf_syncs = {}
-        self._cdf_syncs[key] = (stop, t)
-        t.start()
+        # the seed is passed EVERY tick: apply_cdf prefers the KV
+        # cursor once one exists, and a tick that applied nothing must
+        # not burn the seed (the next tick would fall back to the
+        # earliest commit and re-apply the bootstrap snapshot)
+        self._start_sync("cdf", table, path, interval_s,
+                         lambda: self.apply_cdf(table, path,
+                                                from_version=from_version,
+                                                where=where))
 
     def stop_cdf_sync(self, table: Optional[str] = None,
                       path: Optional[str] = None) -> int:
         """Stop CDF sync daemons — the one for (table, path), all for
         ``table``, or all.  Returns the number stopped."""
-        syncs = getattr(self, "_cdf_syncs", {}) or {}
-        if table is not None:
-            tkey = self._resolve(table)
-            pabs = None
-            if path is not None:
-                p = path[len("file:"):] if path.startswith("file:") \
-                    else path
-                pabs = os.path.abspath(p)
-            doomed = [k for k in syncs
-                      if k[0] == tkey and (pabs is None
-                                           or k[1] == pabs)]
-        else:
-            doomed = list(syncs)
-        for k in doomed:
-            stop, t = syncs.pop(k)
-            stop.set()
-        return len(doomed)
+        return self._stop_sync("cdf", table, path)
 
     def mirror_iceberg(self, table: str, dest: str,
                        allow_decrypted: bool = False,
@@ -2201,55 +1843,12 @@ class ToStoreSpark:
                 rep["bridge"] = convert_iceberg_to_delta(self.spark, p)
         return rep
 
-    def rewrite_iceberg_manifests(self, dest: str,
-                                  min_count_to_merge: int = 2) -> dict:
-        """Iceberg rewriteManifests for exports/bridges: consolidate
-        the stacked per-commit manifests into one per (content, spec)
-        group — EXISTING entries re-emitted verbatim with their
-        original sequence numbers, zero data IO
-        (plans/iceberg.rewrite_manifests)."""
-        from tostore_spark.plans.iceberg import rewrite_manifests
-        return rewrite_manifests(dest,
-                                 min_count_to_merge=min_count_to_merge)
-
-    def expire_iceberg_snapshots(self, dest: str, keep_last: int = 1,
-                                 dry_run: bool = False) -> dict:
-        """Iceberg ``expireSnapshots`` for an ``export_iceberg``
-        destination: atomically drop all but the newest ``keep_last``
-        snapshots and reclaim the files only they referenced; retained
-        snapshots keep time-traveling exactly
-        (plans/iceberg.expire_snapshots)."""
-        from tostore_spark.plans.iceberg import expire_snapshots
-        return expire_snapshots(dest, keep_last=keep_last,
-                                dry_run=dry_run)
-
     def unmirror_iceberg(self, table: str) -> bool:
         """Stop auto-exporting ``table`` to its Iceberg mirror (the
         destination keeps its snapshots)."""
         key = self._resolve(table)
         return (getattr(self, "_iceberg_mirrors", {}) or {}) \
             .pop(key, None) is not None
-
-    def read_iceberg_changes(self, path: str,
-                             from_snapshot: Optional[int] = None,
-                             to_snapshot: Optional[int] = None,
-                             where=None) -> DataFrame:
-        """Read an Iceberg table's INCREMENTAL CHANGELOG — the
-        consumer interface ``read_delta_cdf`` gives Delta tables:
-        every row is a change tagged ``_change_type`` (insert/delete),
-        ``_commit_snapshot_id``, ``_commit_version`` (sequence
-        number) and ``_commit_timestamp``.  ``from_snapshot`` is
-        EXCLUSIVE (the subscriber's cursor), ``to_snapshot`` inclusive
-        (None = current).  Appends derive inserts from added files;
-        merge-on-read delete snapshots derive exact delete pre-images;
-        compactions contribute nothing; true rewrites refuse.  Cost ∝
-        the range's touched files — never a snapshot diff
-        (plans/iceberg.read_iceberg_changes)."""
-        from tostore_spark.plans.iceberg import read_iceberg_changes
-        return read_iceberg_changes(self.spark, path,
-                                    from_snapshot=from_snapshot,
-                                    to_snapshot=to_snapshot,
-                                    where=where)
 
     def apply_iceberg_changes(self, table: str, path: str,
                               to_snapshot: Optional[int] = None,
@@ -2381,165 +1980,62 @@ class ToStoreSpark:
         on ``engine.last_iceberg_sync_error`` and polling continues.
         One sync per (table, path); ``stop_iceberg_sync()`` ends
         it."""
-        import threading
-
-        self.stop_iceberg_sync(table, path)
-        self.last_iceberg_sync_error: Optional[tuple] = None
-        key = (self._resolve(table), os.path.abspath(
-            path[len("file:"):] if path.startswith("file:") else path))
-        stop = threading.Event()
-
-        def _loop():
-            while not stop.wait(interval_s):
-                try:
-                    # the seed passes EVERY tick — apply_iceberg_changes
-                    # prefers the KV cursor once one exists, and a tick
-                    # that applied nothing must not burn the seed
-                    self.apply_iceberg_changes(
-                        table, path, from_snapshot=from_snapshot,
-                        where=where)
-                    self.last_iceberg_sync_error = None
-                except Exception as exc:   # pragma: no cover - timing
-                    self.last_iceberg_sync_error = (table, str(exc))
-
-        t = threading.Thread(target=_loop, daemon=True,
-                             name=f"ice-sync-{key[0][1]}")
-        if not hasattr(self, "_ice_syncs"):
-            self._ice_syncs = {}
-        self._ice_syncs[key] = (stop, t)
-        t.start()
+        # the seed passes EVERY tick, as in start_cdf_sync
+        self._start_sync("iceberg", table, path, interval_s,
+                         lambda: self.apply_iceberg_changes(
+                             table, path, from_snapshot=from_snapshot,
+                             where=where))
 
     def stop_iceberg_sync(self, table: Optional[str] = None,
                           path: Optional[str] = None) -> int:
         """Stop Iceberg changelog sync daemons — the one for (table,
         path), all for ``table``, or all.  Returns the number
         stopped."""
-        syncs = getattr(self, "_ice_syncs", {}) or {}
-        if table is not None:
-            tkey = self._resolve(table)
-            pabs = None
-            if path is not None:
-                pp = path[len("file:"):] if path.startswith("file:") \
-                    else path
-                pabs = os.path.abspath(pp)
-            doomed = [k for k in syncs
-                      if k[0] == tkey and (pabs is None
-                                           or k[1] == pabs)]
-        else:
-            doomed = list(syncs)
+        return self._stop_sync("iceberg", table, path)
+
+    def _start_sync(self, kind: str, table: str, path: str,
+                    interval_s: float, apply) -> None:
+        """Shared body of start_cdf_sync / start_iceberg_sync: a daemon
+        thread calls ``apply()`` every ``interval_s``.  Errors land on
+        ``last_<kind>_sync_error`` and polling continues (a transient
+        reader failure must not kill replication)."""
+        import threading
+
+        self._stop_sync(kind, table, path)
+        err = f"last_{kind}_sync_error"
+        setattr(self, err, None)
+        key = (kind, self._resolve(table), _abs_local(path))
+        stop = threading.Event()
+
+        def _loop():
+            while not stop.wait(interval_s):
+                try:
+                    apply()
+                    setattr(self, err, None)
+                except Exception as exc:   # pragma: no cover - timing
+                    setattr(self, err, (table, str(exc)))
+
+        t = threading.Thread(target=_loop, daemon=True,
+                             name=f"{kind}-sync-{key[1][1]}")
+        if not hasattr(self, "_syncs"):
+            self._syncs = {}
+        self._syncs[key] = (stop, t)
+        t.start()
+
+    def _stop_sync(self, kind: str, table: Optional[str],
+                   path: Optional[str]) -> int:
+        """Shared body of stop_cdf_sync / stop_iceberg_sync: stop the
+        ``kind`` daemons for (table, path), all for ``table``, or all.
+        Returns the number stopped."""
+        syncs = getattr(self, "_syncs", {}) or {}
+        tkey = None if table is None else self._resolve(table)
+        pabs = None if table is None or path is None \
+            else _abs_local(path)
+        doomed = [k for k in syncs if k[0] == kind
+                  and tkey in (None, k[1]) and pabs in (None, k[2])]
         for k in doomed:
-            stop, t = syncs.pop(k)
-            stop.set()
+            syncs.pop(k)[0].set()
         return len(doomed)
-
-    def analyze_table(self, table: str, cols=None,
-                      exact_ndv: bool = False):
-        """One-pass column statistics (rows, nulls, ndv, min/max) for
-        planning decisions (broadcastability, skew, z-order candidates);
-        cached per table generation."""
-        from tostore_spark.plans.stats import analyze_table as _an
-        return _an(self, table, cols=cols, exact_ndv=exact_ndv)
-
-    def histogram(self, table: str, col: str, n_buckets: int = 10,
-                  exact: bool = True):
-        """Equi-height histogram of one numeric column — see
-        plans/stats.column_histogram (``exact=False`` = approx bounds,
-        the constant-memory form for huge tables)."""
-        from tostore_spark.plans.stats import column_histogram
-        return column_histogram(self.df(table), col, n_buckets=n_buckets,
-                                exact=exact)
-
-    def column_corr(self, table: str, cols):
-        """Pairwise Pearson correlations from exact DECIMAL moments —
-        see plans/stats.column_corr."""
-        from tostore_spark.plans.stats import column_corr as _cc
-        return _cc(self.df(table), cols)
-
-    def join_advice(self, left: str, right: str, key, **kw) -> dict:
-        """Stats-driven join strategy (broadcast / salt / shuffle, with
-        a bloom-prefilter hint) — see plans/stats.join_advice."""
-        from tostore_spark.plans.stats import join_advice as _ja
-        return _ja(self, left, right, key, **kw)
-
-    def validate(self, table: str, rules: list):
-        """Data-quality rule report (plans/validate.validate_table):
-        row rules fold into one single-scan aggregate; unique/fk rules
-        add one hash-agg / joined count each."""
-        from tostore_spark.plans.validate import validate_table
-        return validate_table(self.df(table), rules)
-
-    def resample(self, table: str, partition: str, ts_field: str,
-                 value: str, interval_s: int, fill="ffill"):
-        """Per-entity regular-grid resample with gap fill — see
-        functions/timeseries.resample."""
-        from tostore_spark.functions.timeseries import resample as _rs
-        return _rs(self.df(table), partition, ts_field, value,
-                   interval_s, fill=fill)
-
-    def top_k_per_group(self, table: str, group, order, k: int, **kw):
-        """Top-k rows per group (WindowGroupLimit shape) — see
-        functions/ranking.top_k_per_group."""
-        from tostore_spark.functions.ranking import top_k_per_group as _tk
-        return _tk(self.df(table), group, order, k, **kw)
-
-    def rolling_active(self, table: str, ts_field: str, entity: str,
-                       window_days: int = 7):
-        """Sliding exact count-distinct per day (WAU/MAU) — see
-        functions/timeseries.rolling_distinct."""
-        from tostore_spark.functions.timeseries import rolling_distinct
-        return rolling_distinct(self.df(table), ts_field, entity,
-                                window_days=window_days)
-
-    def drift_report(self, ref_table: str, cur_table: str, col: str,
-                     n_buckets: int = 10):
-        """PSI distribution drift between two table snapshots — see
-        plans/stats.drift_report."""
-        from tostore_spark.plans.stats import drift_report
-        return drift_report(self.df(ref_table), self.df(cur_table),
-                            col, n_buckets=n_buckets)
-
-    def seasonal_decompose(self, table: str, partition: str, order: str,
-                           value: str, period: int = 7):
-        """Classical additive trend/seasonal/resid per entity series —
-        see functions/timeseries.seasonal_decompose."""
-        from tostore_spark.functions.timeseries import seasonal_decompose
-        return seasonal_decompose(self.df(table), partition, order,
-                                  value, period=period)
-
-    def fuzzy_match(self, left: str, right: str, left_field: str,
-                    right_field=None, max_dist: int = 2, **kw):
-        """Levenshtein entity-resolution join between two tables — see
-        joins.fuzzy_join (positional-prefix block by default — LOSSY:
-        an edit inside the first 2 chars escapes; lossless length band
-        as refinement; ``blocking='length'`` for the exact-recall
-        mode)."""
-        from tostore_spark.joins import fuzzy_join
-        return fuzzy_join(self.df(left), self.df(right), left_field,
-                          right_field=right_field, max_dist=max_dist,
-                          **kw)
-
-    def top_terms(self, table: str, top_n: int = 3, **kw):
-        """Per-document TF-IDF keywords — see
-        llmops/search.tfidf_top_terms."""
-        from tostore_spark.llmops.search import tfidf_top_terms
-        return tfidf_top_terms(self.df(table), top_n=top_n, **kw)
-
-    def similar_documents(self, table: str, k: int = 20, **kw):
-        """Top-k document pairs by sparse TF-IDF cosine — see
-        llmops/search.tfidf_similar_pairs (token-blocked, df-capped)."""
-        from tostore_spark.llmops.search import tfidf_similar_pairs
-        return tfidf_similar_pairs(self.df(table), k=k, **kw)
-
-    def optimize_table(self, table: str, target_partitions: int = 8,
-                       zorder=None) -> list[str]:
-        """Layout-only rewrite (same rows): compact to
-        ``target_partitions`` files and, with ``zorder`` columns,
-        cluster rows so parquet min/max stats prune on every clustering
-        dimension.  Flushes as the next version via the per-table CAS
-        (time travel / vacuum apply unchanged)."""
-        from tostore_spark.plans.layout import optimize_table as _opt
-        return _opt(self, table, target_partitions=target_partitions,
-                    zorder=zorder)
 
     def unpin_versions(self) -> int:
         """Release every version pinned by ``df_at`` so vacuum may prune

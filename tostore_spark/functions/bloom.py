@@ -96,10 +96,10 @@ def bloom_prune(probe: DataFrame, bloom: DataFrame, key_field: str,
     over one probe scan: the bitmap rides in as a broadcast 1-row map,
     and the membership test is a conjunction over the k bit positions —
     the probe side is never exploded, shuffled, or collected."""
-    # eager barrier (the minhash_band_index precedent): the compact
-    # 1-row bitmap materializes once, so every downstream action pays
-    # the probe scan only — without it each action re-runs the build
-    # side's scan + the gap-fill join
+    # lazy barrier (the minhash_band_index precedent): the compact
+    # 1-row bitmap materializes once, at the first action, so every
+    # later action pays the probe scan only — without it each action
+    # re-runs the build side's scan + the gap-fill join
     compact = _bloom_compact(bloom, m_bits).localCheckpoint(eager=False)
     # membership = conjunction over the k bit tests; each conjunct is
     # scalar column math (O(1) dense-array index + shift + mask — no

@@ -105,7 +105,8 @@ def connected_components(edges: DataFrame, src: str = "src",
     Thin graph-facing alias of ``llmops.dedup.dedup_clusters`` (min-label
     propagation with pointer jumping, O(log chain) rounds, two key
     shuffles per round, lineage-checkpointed) — the same oracle-verified
-    implementation (q_dedup_clusters), reusable for any graph."""
+    implementation (q_dedup_clusters), reusable for any graph.  Raises
+    ``RuntimeError`` when ``max_iterations`` rounds do not converge."""
     from tostore_spark.llmops.dedup import dedup_clusters
     return dedup_clusters(edges, id_a=src, id_b=dst,
                           max_iterations=max_iterations)

@@ -761,9 +761,10 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     then contracts ``label <- label(label)``.  The contraction halves the
     remaining tree height, so a chain of N near-dups converges in
     O(log N) rounds, not O(N); each round is two key shuffles.  Lineage
-    is cut with an eagerly-reclaimed localCheckpoint per round (same
-    trade documented at minhash_lsh_pairs), and the loop exits on the
-    first round with no label change.
+    is cut with a lazy localCheckpoint per round (only ``edges`` is
+    pinned eagerly), and the loop exits on the first round with no
+    label change.  Raises ``RuntimeError`` if ``max_iterations`` rounds
+    pass without such a round: the labels would be partial.
     """
     edges = (pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
              .unionByName(
@@ -799,6 +800,10 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
         labels = jumped.select("id", "label")
         if done:
             break
+    else:
+        raise RuntimeError(
+            f"dedup_clusters did not converge in {max_iterations} rounds "
+            "(labels still changing); raise max_iterations")
     w = Window.partitionBy("cluster_id")
     return (labels.select("id", F.col("label").alias("cluster_id"))
             .withColumn("cluster_size", F.count(F.lit(1)).over(w)))

@@ -1665,8 +1665,8 @@ def optimize_delta(spark, path: str,
             "this table is an iceberg→delta reverse bridge — the "
             "Iceberg side owns the files; a delta-side rewrite would "
             "be clobbered by (and diverge from) the next "
-            "sync_iceberg_to_delta.  Run optimize_iceberg/"
-            "rewrite_data_files and sync instead")
+            "sync_iceberg_to_delta.  Run rewrite_data_files and "
+            "sync instead")
     cm_mode = (meta.get("configuration") or {}).get(
         "delta.columnMapping.mode", "none")
     if cm_mode not in ("none", ""):

@@ -551,7 +551,7 @@ def join_advice(engine, left: str, right: str, key,
     keys = {left: lk, right: rk}
 
     def _rows(t):
-        return engine.analyze_table(t, cols=[keys[t]]).first()["n_rows"]
+        return analyze_table(engine, t, cols=[keys[t]]).first()["n_rows"]
 
     ln, rn = _rows(left), _rows(right)
     small, big = (left, right) if ln <= rn else (right, left)

@@ -21,8 +21,8 @@ is shared.
 Refusals (never a silent divergence):
 
 * equality deletes — Delta has no equality-delete concept; positions
-  would need a data scan to materialize (``optimize_iceberg`` /
-  ``rewrite_data_files`` materializes them, then sync);
+  would need a data scan to materialize (``rewrite_data_files``
+  materializes them, then sync);
 * rename history — Delta resolves columns BY NAME and post/pre-rename
   files disagree physically; a single global column mapping cannot
   describe per-file names;
@@ -37,8 +37,7 @@ Maintenance: the ICEBERG side owns the files — ``optimize_delta`` and
 be clobbered by the next sync; a delta-side vacuum could delete files
 Iceberg snapshots reference), and ``remove_orphan_files`` already
 refuses on any directory with a ``_delta_log``.  Run
-``optimize_iceberg`` / ``rewrite_data_files`` / ``expire_snapshots``
-and sync; after an expire, STALE delta versions may fail at a missing
+``rewrite_data_files`` / ``expire_snapshots`` and sync; after an expire, STALE delta versions may fail at a missing
 file — the same contract Delta's own VACUUM gives time travel.
 
 Change data feed: the reverse bridge does NOT maintain cdc files
@@ -272,7 +271,7 @@ def convert_iceberg_to_delta(spark, path: str) -> dict:
     agrees across formats.
 
     Refusals: an existing ``_delta_log``, equality deletes
-    (``optimize_iceberg`` materializes them first), rename history,
+    (``rewrite_data_files`` materializes them first), rename history,
     mixed partition specs, non-identity transforms, files outside the
     table root (see module docstring)."""
     from tostore_spark.plans.delta_export import (_maybe_checkpoint,
@@ -303,7 +302,7 @@ def convert_iceberg_to_delta(spark, path: str) -> dict:
             raise ValueError(
                 "the current snapshot carries EQUALITY delete files — "
                 "Delta cannot express them without a data scan; run "
-                "optimize_iceberg/rewrite_data_files (materializes "
+                "rewrite_data_files (materializes "
                 "the deletes) and convert again")
         pnames, ptypes = _live_spec(meta, data, fspec)
         dead = _dead_positions(pos_del, data, location)
@@ -455,7 +454,7 @@ def sync_iceberg_to_delta(spark, path: str) -> dict:
                 raise ValueError(
                     f"snapshot {snap['snapshot-id']} carries "
                     "EQUALITY delete files — Delta cannot express "
-                    "them; optimize_iceberg first, then sync")
+                    "them; rewrite_data_files first, then sync")
             continue
         pnames, ptypes = _live_spec(meta, data, fspec)
         if pnames != list(meta_d.get("partitionColumns") or []):

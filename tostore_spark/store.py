@@ -855,20 +855,22 @@ def flush_tables(engine, flush_storage: bool = True,
                 engine._kv_baseline = engine._kv.snapshot()
         finally:
             lock.release()
-        # ---- post-commit: continuous Delta mirrors (no lock) --------
+        # ---- post-commit: continuous Delta/Iceberg mirrors (no lock) -
         # every flushed table with a registered mirror exports its
         # NEXT incremental commit — appends as add-only, deletes/
-        # replaces as merge-on-read DVs — so the mirror destination is
-        # a standard Delta table that always reads the store's last
-        # committed state.  Post-commit and best-effort by design: a
-        # mirror failure can't un-commit the flush (it surfaces in
-        # engine.last_mirror_error and heals on the next flush via a
-        # refresh commit, because the export-state sidecar still
-        # matches an older recipe prefix).
-        mirrors = getattr(engine, "_delta_mirrors", None)
-        if mirrors:
-            from tostore_spark.plans.delta_export import export_delta
+        # replaces as merge-on-read deletes — so the mirror destination
+        # always reads the store's last committed state.  Post-commit
+        # and best-effort by design: a mirror failure can't un-commit
+        # the flush (it surfaces in engine.last_mirror_error and heals
+        # on the next flush via a refresh/overwrite commit, because the
+        # export-state sidecar still matches an older recipe prefix).
+        hooks = [(m, fn) for m, fn in (
+            (getattr(engine, "_delta_mirrors", None), _mirror_delta),
+            (getattr(engine, "_iceberg_mirrors", None), _mirror_iceberg))
+            if m]
+        if hooks:
             engine.last_mirror_error = None
+        for mirrors, export in hooks:
             for key, gen, *_ in staged:
                 cfg = mirrors.get(key)
                 if cfg is None:
@@ -878,55 +880,7 @@ def flush_tables(engine, flush_storage: bool = True,
                         raise ValueError(
                             f"mirror table {key} not resolvable from "
                             f"the current space {engine._space!r}")
-                    export_delta(engine, key[1], cfg["dest"],
-                                 mode="update",
-                                 deletion_vectors=cfg.get("dv", True),
-                                 allow_decrypted=cfg.get(
-                                     "allow_decrypted", False))
-                    if cfg.get("bridge"):
-                        # continuous UniForm: fold the just-written
-                        # Delta commit into the next Iceberg snapshot
-                        from tostore_spark.plans.iceberg import \
-                            sync_delta_to_iceberg
-                        d = cfg["dest"]
-                        sync_delta_to_iceberg(
-                            engine.spark,
-                            d[len("file:"):] if d.startswith("file:")
-                            else d)
-                except Exception as exc:      # pragma: no cover
-                    engine.last_mirror_error = (key[1], str(exc))
-        ice_mirrors = getattr(engine, "_iceberg_mirrors", None)
-        if ice_mirrors:
-            from tostore_spark.plans.iceberg import export_iceberg
-            if not mirrors:
-                engine.last_mirror_error = None
-            for key, gen, *_ in staged:
-                cfg = ice_mirrors.get(key)
-                if cfg is None:
-                    continue
-                try:
-                    if engine._resolve(key[1]) != key:
-                        raise ValueError(
-                            f"mirror table {key} not resolvable from "
-                            f"the current space {engine._space!r}")
-                    export_iceberg(engine, key[1], cfg["dest"],
-                                   mode="update",
-                                   allow_decrypted=cfg.get(
-                                       "allow_decrypted", False),
-                                   delete_route=("position"
-                                                 if cfg.get("bridge")
-                                                 else "auto"))
-                    if cfg.get("bridge"):
-                        # continuous reverse bridge: fold the
-                        # just-committed snapshot into the next
-                        # incremental Delta commit
-                        from tostore_spark.plans.xtable import \
-                            sync_iceberg_to_delta
-                        d = cfg["dest"]
-                        sync_iceberg_to_delta(
-                            engine.spark,
-                            d[len("file:"):] if d.startswith("file:")
-                            else d)
+                    export(engine, key[1], cfg)
                 except Exception as exc:      # pragma: no cover
                     engine.last_mirror_error = (key[1], str(exc))
     except ConcurrentWriteError:
@@ -986,6 +940,37 @@ def flush_tables(engine, flush_storage: bool = True,
 #: The reference's analog is the in-process change-event push
 #: (notification_manager.dart:9-40).
 _EVENTS_DIR = "_events"
+
+
+def _local_dest(dest: str) -> str:
+    return dest[len("file:"):] if dest.startswith("file:") else dest
+
+
+def _mirror_delta(engine, table: str, cfg: dict) -> None:
+    """One mirror_delta flush hook: the next incremental Delta commit,
+    then (bridge) its fold into the next Iceberg snapshot — the
+    continuous UniForm loop."""
+    from tostore_spark.plans.delta_export import export_delta
+    export_delta(engine, table, cfg["dest"], mode="update",
+                 deletion_vectors=cfg.get("dv", True),
+                 allow_decrypted=cfg.get("allow_decrypted", False))
+    if cfg.get("bridge"):
+        from tostore_spark.plans.iceberg import sync_delta_to_iceberg
+        sync_delta_to_iceberg(engine.spark, _local_dest(cfg["dest"]))
+
+
+def _mirror_iceberg(engine, table: str, cfg: dict) -> None:
+    """One mirror_iceberg flush hook: the next incremental Iceberg
+    snapshot, then (bridge) its fold into the next Delta commit — the
+    continuous reverse bridge."""
+    from tostore_spark.plans.iceberg import export_iceberg
+    export_iceberg(engine, table, cfg["dest"], mode="update",
+                   allow_decrypted=cfg.get("allow_decrypted", False),
+                   delete_route=("position" if cfg.get("bridge")
+                                 else "auto"))
+    if cfg.get("bridge"):
+        from tostore_spark.plans.xtable import sync_iceberg_to_delta
+        sync_iceberg_to_delta(engine.spark, _local_dest(cfg["dest"]))
 
 
 def _write_flush_event(fs, warehouse: str, seq: int,
