@@ -578,3 +578,241 @@ class TestSnapshotMoR:
                 == [f"k{i:03d}" for i in range(4, 10)]
         finally:
             snap.release()
+
+
+def _notes_schema():
+    return TableSchema(
+        name="notes", primary_key=PrimaryKeyConfig(name="id"),
+        fields=[FieldSchema(name="body", type=DataType.text),
+                FieldSchema(name="n", type=DataType.integer),
+                FieldSchema(name="code", type=DataType.integer,
+                            unique=True)])
+
+
+def _ab_run(spark, tmp_path, mutate, setup=None, tables=("notes",)):
+    """Run the same history on two warehouses — deletion vectors on
+    (the one-pass path) and off (every mutation rewrites) — and return
+    ``{dv: (db, mutate(db) result, {table: reopened rows})}``.  The
+    history: 12 base rows, ``setup(db)``, a flush, two single-key
+    delete epochs (so the one-pass side carries two pending deletion
+    vectors in its recipe), then ``mutate`` and a flush."""
+    from tostore_spark.schema import PrimaryKeyType
+    out = {}
+    for dv in (True, False):
+        wh = str(tmp_path / f"wh_{dv}")
+        db = ToStoreSpark(spark, warehouse=wh)
+        db.delete_vectors = dv
+        db.create_table(_notes_schema())
+        db.batch_insert("notes", [
+            {"id": f"k{i:03d}", "body": f"b{i}", "n": i, "code": i * 10}
+            for i in range(12)])
+        if setup is not None:
+            setup(db, PrimaryKeyType)
+        db.flush()
+        for pk in ("k010", "k011"):
+            assert db.delete("notes").where("id", "=", pk).execute() == 1
+            db.flush()
+        kinds = [k for k, _ in db._tables[("default", "notes")]["ops"]]
+        assert kinds.count("del") == (2 if dv else 0), kinds
+        try:
+            res = mutate(db)
+        except ValueError as exc:
+            res = f"raised: {exc}"
+        db.flush()
+        db2 = ToStoreSpark(spark, warehouse=wh)
+        rows = {t: sorted((tuple(r) for r in db2.df(t).collect()), key=repr)
+                for t in tables}
+        out[dv] = (db, res, rows)
+    assert out[True][1] == out[False][1]
+    assert out[True][2] == out[False][2]
+    return out
+
+
+@pytest.mark.usefixtures("spark")
+class TestOnePassMutations:
+    """PK-keyed update/delete pin their touched rows once and probe
+    them in one job (write._MutationBuilder._one_pass); each case runs
+    A/B against ``delete_vectors=False`` (the rewrite path) and must
+    leave identical rows after flush + reopen."""
+
+    def _pending(self, db):
+        """The epoch deltas on the one-pass side; (None, None) on the
+        rewrite side, where every mutation poisons the epoch."""
+        key = ("default", "notes")
+        return db._append_deltas.get(key), db._delete_deltas.get(key)
+
+    def _keyed(self, db):
+        return (not db.delete_vectors) or self._pending(db)[1] is not None
+
+    def test_ab_plain_update_and_delete(self, spark, tmp_path):
+        def mutate(db):
+            n = db.update("notes", {"body": "U"}).where("n", "<", 4) \
+                .execute()
+            m = db.delete("notes").where("n", ">=", 8).execute()
+            assert self._keyed(db)                     # vector kept
+            return n, m
+        out = _ab_run(spark, tmp_path, mutate)
+        assert out[True][1] == (4, 2)
+        kinds = [k for k, _ in out[True][0]._tables[
+            ("default", "notes")]["ops"]]
+        assert kinds[-2:] == ["del", "seg"]            # replace epoch
+
+    def test_ab_duplicate_pk_veto(self, spark, tmp_path):
+        def setup(db, _t):
+            db.append_rows("notes", spark.createDataFrame(
+                [("k001", "DUP", 77, 770)],
+                "id string, body string, n int, code int"))
+
+        def mutate(db):
+            n = db.update("notes", {"body": "U"}).where("n", "=", 1) \
+                .execute()
+            assert self._pending(db) == (None, None)   # vetoed
+            m = db.delete("notes").where("n", "=", 77).execute()
+            db.flush()
+            db.append_rows("notes", spark.createDataFrame(
+                [("k002", "DUP", 78, 780)],
+                "id string, body string, n int, code int"))
+            db.flush()
+            # a condition on the PK alone matches every copy: no
+            # survivor shares the key, so the vector stands
+            d = db.delete("notes").where("id", "=", "k002").execute()
+            assert self._keyed(db)
+            return n, m, d
+        out = _ab_run(spark, tmp_path, mutate, setup=setup)
+        assert out[True][1] == (1, 1, 2)
+        rows = out[True][2]["notes"]
+        assert [r for r in rows if r[0] == "k001"] == [("k001", "U", 1, 10)]
+        assert not [r for r in rows if r[0] == "k002"]
+
+    def test_ab_null_pk_veto(self, spark, tmp_path):
+        def setup(db, _t):
+            db.append_rows("notes", spark.createDataFrame(
+                [(None, "NULLPK", 50, 500)],
+                "id string, body string, n int, code int"))
+
+        def mutate(db):
+            n = db.update("notes", {"body": "U"}).where("n", ">=", 9) \
+                .execute()
+            assert self._pending(db) == (None, None)   # vetoed
+            m = db.delete("notes").where("n", "=", 50).execute()
+            return n, m
+        out = _ab_run(spark, tmp_path, mutate, setup=setup)
+        assert out[True][1] == (2, 1)
+        assert all(r[0] is not None for r in out[True][2]["notes"])
+
+    def test_ab_ordered_limited(self, spark, tmp_path):
+        def mutate(db):
+            n = (db.update("notes").where("n", ">=", 0)
+                 .order_by_desc("n").limit(2).set({"body": "TOP"}))
+            m = (db.delete("notes").where("n", "<", 9)
+                 .order_by_asc("n").offset(1).limit(3).execute())
+            assert self._keyed(db)
+            return n, m
+        out = _ab_run(spark, tmp_path, mutate)
+        assert out[True][1] == (2, 3)
+        ids = {r[0]: r[1] for r in out[True][2]["notes"]}
+        assert ids["k009"] == "TOP" and ids["k008"] == "TOP"
+        assert "k000" in ids and not {"k001", "k002", "k003"} & set(ids)
+
+    def test_ab_unique_field_update(self, spark, tmp_path):
+        def mutate(db):
+            with pytest.raises(ValueError, match="unique"):
+                db.update("notes").where("id", "=", "k001") \
+                    .set({"code": 20})
+            # keeper: lowest pk; k001 and k002 collide and are skipped
+            return (db.update("notes").where("n", "<", 3)
+                    .continue_on_partial_errors().set({"code": 999}))
+        out = _ab_run(spark, tmp_path, mutate)
+        assert out[True][1] == 1
+        codes = {r[0]: r[3] for r in out[True][2]["notes"]}
+        assert codes["k000"] == 999 and codes["k001"] == 10
+
+    def test_ab_fk_cascade_delete(self, spark, tmp_path):
+        from tostore_spark.schema import ForeignKeyAction, ForeignKeySchema
+
+        def setup(db, pk_types):
+            db.create_table(TableSchema(
+                name="tags",
+                fields=[FieldSchema(name="note_id", type=DataType.text),
+                        FieldSchema(name="tag", type=DataType.text)],
+                primary_key=PrimaryKeyConfig(name="tid"),
+                foreign_keys=[ForeignKeySchema(
+                    fields=["note_id"], referenced_table="notes",
+                    referenced_fields=["id"],
+                    on_delete=ForeignKeyAction.cascade)]))
+            db.batch_insert("tags", [
+                {"tid": "t1", "note_id": "k003", "tag": "a"},
+                {"tid": "t2", "note_id": "k004", "tag": "b"},
+                {"tid": "t3", "note_id": "k005", "tag": "c"}])
+
+        def mutate(db):
+            return db.delete("notes").where("id", "IN",
+                                            ["k003", "k005"]).execute()
+        out = _ab_run(spark, tmp_path, mutate, setup=setup,
+                      tables=("notes", "tags"))
+        assert out[True][1] == 2
+        tags = out[True][2]["tags"]
+        assert len(tags) == 1 and "t2" in tags[0]
+
+    def test_ab_counts_off(self, spark, tmp_path):
+        def mutate(db):
+            db.eager_mutation_counts = False
+            return (db.update("notes", {"body": "U"}).where("n", "<", 2)
+                    .execute(),
+                    db.delete("notes").where("n", "=", 5).execute())
+        out = _ab_run(spark, tmp_path, mutate)
+        assert out[True][1] == (-1, -1)
+
+    def test_zero_match_mutation_is_a_noop(self, spark, tmp_path):
+        """A PK-keyed mutation matching no row changes nothing: the
+        frame, its generation and the epoch deltas stay as they are, so
+        the next flush still takes the fast path instead of rewriting."""
+        wh = str(tmp_path / "wh")
+        db = _mk(spark, wh, rows=6)
+        key = ("default", "notes")
+        gen = db.generation("notes")
+        assert db.delete("notes").where("id", "=", "nope").execute() == 0
+        assert db.update("notes", {"body": "x"}).where("n", ">", 99) \
+            .execute() == 0
+        assert db.generation("notes") == gen
+        assert db.flush() == []                      # nothing to commit
+        db.batch_insert("notes", [{"id": "x1", "body": "y", "n": 1}])
+        frame = db._tables[key]["df"]
+        assert db.delete("notes").where("id", "=", "nope").execute() == 0
+        assert db._tables[key]["df"] is frame
+        assert db._append_deltas.get(key) is not None
+        assert db._delete_deltas.get(key) is None
+        before = set(os.listdir(os.path.join(wh, "default", "notes")))
+        db.flush()
+        ent = db._tables[key]
+        assert ent["ops"][-1][0] == "seg" and len(ent["segments"]) == 2
+        new = set(os.listdir(os.path.join(wh, "default", "notes"))) - before
+        assert new == {os.path.basename(ent["path"])}
+        import pyarrow.parquet as pq
+        assert pq.read_table(ent["path"]).num_rows == 1   # not a rewrite
+
+    def test_update_and_delete_run_one_pin_and_one_collect(
+            self, spark, tmp_path, monkeypatch):
+        """On a flushed table an update and a delete each run exactly two
+        driver actions: the pin of the touched rows and the probe."""
+        from pyspark.sql.classic.dataframe import DataFrame as CDF
+        db = _mk(spark, str(tmp_path / "wh"), rows=20)
+        db.delete("notes").where("id", "=", "k019").execute()
+        db.flush()                      # a pending deletion vector
+        calls = []
+        for name in ("take", "localCheckpoint", "count", "collect",
+                     "first", "toPandas", "toLocalIterator"):
+            orig = getattr(CDF, name)
+
+            def wrapper(self, *a, _n=name, _o=orig, **kw):
+                calls.append(_n)
+                return _o(self, *a, **kw)
+
+            monkeypatch.setattr(CDF, name, wrapper)
+        assert db.update("notes", {"body": "U"}).where("n", "<", 3) \
+            .execute() == 3
+        assert calls == ["localCheckpoint", "collect"], calls
+        db.flush()
+        calls.clear()
+        assert db.delete("notes").where("n", ">", 15).execute() == 3
+        assert calls == ["localCheckpoint", "collect"], calls

@@ -115,7 +115,7 @@ class TestPartitionedMoR:
 
     def test_time_travel_partitioned_dv(self, spark, tmp_path):
         """read_version folds historical DV recipes with the pinned
-        partition schema (sidecar spark_schema)."""
+        partition schema (the version's recorded schema sidecar)."""
         wh = str(tmp_path / "wh")
         db = _mk(spark, wh, rows=6)
         key = ("default", "pt")

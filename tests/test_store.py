@@ -1887,3 +1887,106 @@ def test_clear_is_durable(spark, tmp_path_factory):
                                 "n_comment": "c"}])
     db.flush()
     assert db.df("nation").count() == 1
+
+
+def _pk_table(spark, wh):
+    """A PK'd warehouse table whose frame carries non-nullable and
+    nested columns, flushed once (the rewrite base)."""
+    from pyspark.sql import types as T
+
+    from tostore_spark import ToStoreSpark
+    from tostore_spark.schema import (DataType, FieldSchema,
+                                      PrimaryKeyConfig, TableSchema)
+    db = ToStoreSpark(spark, warehouse=wh)
+    sch = T.StructType([
+        T.StructField("id", T.StringType(), False),
+        T.StructField("n", T.LongType(), False),
+        T.StructField("v", T.ArrayType(T.DoubleType(), False), True)])
+    df = spark.createDataFrame(
+        [(f"k{i:02d}", i, [float(i)]) for i in range(10)], sch)
+    db.register_table("t", df=df, schema=TableSchema(
+        name="t", primary_key=PrimaryKeyConfig(name="id"),
+        fields=[FieldSchema(name="n", type=DataType.bigInt),
+                FieldSchema(name="v", type=DataType.vector)]))
+    db.flush()
+    return db
+
+
+class _JobsInReads:
+    """Counts the Spark jobs started INSIDE ``ToStoreSpark._read_parquet``
+    calls: building a parquet read starts a job only to infer its
+    schema, so with recorded schemas the count stays zero."""
+
+    def __init__(self, spark, monkeypatch):
+        from tostore_spark.engine import ToStoreSpark
+        self.sc = spark.sparkContext
+        self.jobs = 0
+        orig = ToStoreSpark._read_parquet
+
+        def counted(eng, *a, **kw):
+            group = "schema-pin-probe"
+            self.sc.setJobGroup(group, "")
+            before = set(self.sc.statusTracker().getJobIdsForGroup(group))
+            try:
+                return orig(eng, *a, **kw)
+            finally:
+                self.jobs += len(set(self.sc.statusTracker()
+                                     .getJobIdsForGroup(group)) - before)
+                self.sc.setLocalProperty("spark.jobGroup.id", None)
+
+        monkeypatch.setattr(ToStoreSpark, "_read_parquet", counted)
+
+
+def test_flush_reloads_without_schema_inference(spark, tmp_path,
+                                                monkeypatch):
+    """Every flush records the schemas it wrote (``_schema.json``), so
+    the reload of an append, a delete-vector and a replace epoch — and a
+    reopen — build their reads without one schema-inference job; a
+    version whose record is gone falls back to inferring (which the
+    probe sees)."""
+    from tostore_spark import ToStoreSpark
+    wh = str(tmp_path / "wh")
+    db = _pk_table(spark, wh)
+    probe = _JobsInReads(spark, monkeypatch)
+    db.batch_insert("t", [{"id": "a1", "n": 100, "v": [1.0]}])
+    db.flush()                                      # append segment
+    db.delete("t").where("n", "<", 2).execute()
+    db.flush()                                      # deletion vector
+    db.update("t", {"n": 7}).where("id", "=", "k05").execute()
+    db.batch_insert("t", [{"id": "a2", "n": 101, "v": None}])
+    db.flush()                                      # replace epoch
+    ent = db._tables[("default", "t")]
+    assert [k for k, _ in ent["ops"]] == ["seg", "seg", "del", "del",
+                                          "seg"]
+    assert db.query("t").where("n", ">=", 100).count() == 2   # pruned
+    db2 = ToStoreSpark(spark, warehouse=wh)
+    rows = {r["id"]: r["n"] for r in db2.df("t").collect()}
+    assert probe.jobs == 0
+    assert len(rows) == 10 and rows["k05"] == 7 and "k01" not in rows
+    # the sensitivity check: without records the same reload infers
+    for root in {p for _k, p in ent["ops"]}:
+        os.remove(os.path.join(root, "_schema.json"))
+    ToStoreSpark(spark, warehouse=wh).df("t")
+    assert probe.jobs > 0
+
+
+def test_pinned_reload_schema_equals_inferred(spark, tmp_path):
+    """A reload pinned to the recorded schema has exactly the schema
+    (nullability included) Spark infers from the same files, and a
+    multi-segment recipe stays ONE multi-root scan."""
+    from tostore_spark import ToStoreSpark
+    wh = str(tmp_path / "wh")
+    db = _pk_table(spark, wh)
+    db.batch_insert("t", [{"id": "a1", "n": 100, "v": [1.0, 2.0]}])
+    db.flush()
+    ent = db._tables[("default", "t")]
+    segs = [p for _k, p in ent["ops"]]
+    assert len(segs) == 2
+    inferred = spark.read.parquet(*segs).schema
+    assert ent["df"].schema == inferred
+    assert ToStoreSpark(spark, warehouse=wh).df("t").schema == inferred
+    plan = ent["df"]._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 1
+    db.delete("t").where("id", "=", "k03").execute()
+    db.flush()
+    assert db._tables[("default", "t")]["df"].schema == inferred

@@ -181,29 +181,28 @@ class ToStoreSpark:
         TIMESTAMP(NANOS) by default): read them as long nanos and convert to
         microsecond timestamps — exact integer math, no double rounding.
 
-        ``schema`` (StructType) pins the read schema — REQUIRED for
-        hive-partitioned warehouse dirs, where partition-column type
-        inference would otherwise retype numeric-looking string values
-        ('001' → int 1, leading zeros irrecoverably lost) and move the
-        partition columns to the end of the schema.
+        ``schema`` (StructType) pins the read schema: the read starts
+        no schema-inference job, and columns come back in the pinned
+        order.  Warehouse reads pass the schema the flush recorded
+        (store._SCHEMA_SIDECAR); it is REQUIRED for hive-partitioned
+        dirs, where partition-column type inference would otherwise
+        retype numeric-looking string values ('001' → int 1, leading
+        zeros irrecoverably lost).  None (registered sources, versions
+        written before schemas were recorded) infers.
 
         ``path`` may be a list of directories — the SEGMENT read of an
         append-fast-path table (store.flush_tables): one multi-root
-        parquet scan over base + delta segments, still one plan node."""
+        parquet scan over base + delta segments, still one plan node.
+        Hive-partitioned roots cannot share a scan (partition discovery
+        rejects several partitioned roots): callers read those one root
+        at a time (store._ops_frame)."""
         paths = [path] if isinstance(path, str) else list(path)
         if schema is not None:
-            # hive-partitioned roots can't share one multi-root scan
-            # (partition discovery wants a single basePath) — read each
-            # segment root pinned and union; partition PRUNING still
-            # applies per scan, and the union is a no-shuffle plan node
-            frames = [
-                self.spark.read.schema(schema).parquet(p)
-                    .select(*[f.name for f in schema.fields])
-                for p in paths]
-            out = frames[0]
-            for f in frames[1:]:
-                out = out.unionByName(f)
-            return out
+            df = self.spark.read.schema(schema).parquet(*paths)
+            names = schema.fieldNames()
+            # hive roots append partition columns; reorder only then (a
+            # no-op select still costs a py4j call per column)
+            return df if df.columns == names else df.select(*names)
         ns_cols: list[str] = []
         try:
             import pyarrow.parquet as pq
@@ -650,7 +649,7 @@ class ToStoreSpark:
             return None
         from tostore_spark.plans.skipping import (node_may_match,
                                                   prune_segments)
-        from tostore_spark.store import _DELETES_SUBDIR, _norm_path
+        from tostore_spark.store import _norm_path
         ops = ent.get("ops")
         has_del = bool(ops and any(k == "del" for k, _p in ops))
         if ent.get("bloom_cols"):
@@ -712,49 +711,28 @@ class ToStoreSpark:
             self._last_prune_files = (kept_f, total_f)
         if len(surviving) == len(segs) and not use_files:
             return None
-        if not has_del:
-            # pure-segment table: keep the single multi-root scan
-            if use_files:
-                if ent.get("partition_by"):
-                    # hive roots: explicit files re-read per segment
-                    # under their basePath so the path-encoded
-                    # partition columns survive the file-level read
-                    parts = [
-                        self._pruned_read_part(
-                            seg, file_sel[_norm_path(seg)], base.schema)
-                        .select(*base.columns)
-                        for seg in surviving
-                        if file_sel[_norm_path(seg)]]
-                    if not parts:
-                        df = local_df(self.spark, [], base.schema)
-                    else:
-                        df = parts[0]
-                        for p in parts[1:]:
-                            df = df.unionByName(p)
-                    return self._ttl_filtered(df, ent)
-                files = [f for seg in surviving
-                         for f in file_sel[_norm_path(seg)]]
-                if not files:
-                    df = local_df(self.spark, [], base.schema)
-                else:
-                    df = self._pruned_read(files).select(*base.columns)
-            elif not surviving:
-                df = local_df(self.spark, [], base.schema)
-            else:
-                pin = base.schema if ent.get("partition_by") else None
-                df = self._pruned_read(
-                    surviving if len(surviving) > 1 else surviving[0],
-                    schema=pin).select(*base.columns)
-            return self._ttl_filtered(df, ent)
-        # deletion vectors pending: fold the recipe, pruning each seg
-        # step and re-applying every anti-join in epoch order.  Hive-
-        # partitioned segments read pinned (and, file-grain, under
-        # their basePath) so the path-encoded partition columns keep
-        # their exact types — same discipline as the pure-seg branch.
-        from pyspark.sql import functions as F
+        # every rebuilt read pins the registry frame's schema: no
+        # schema-inference job per root, and exact partition-value
+        # types for hive roots (the frame itself was read pinned to the
+        # recorded schemas, or inferred for unrecorded versions)
+        pin = base.schema
         pby = bool(ent.get("partition_by"))
+        if not has_del and not pby:
+            # pure-segment table: keep the single multi-root scan
+            files = ([f for seg in surviving
+                      for f in file_sel[_norm_path(seg)]]
+                     if use_files else list(surviving))
+            df = (self._pruned_read(files, pin) if files
+                  else local_df(self.spark, [], base.schema))
+            return self._ttl_filtered(df.select(*base.columns), ent)
+        # deletion vectors pending or hive roots: fold the recipe one
+        # root at a time, pruning each seg step and re-applying every
+        # anti-join in epoch order.  Hive-partitioned segments read
+        # file-grain under their basePath so the path-encoded partition
+        # columns survive.
+        from pyspark.sql import functions as F
         df = None
-        for kind, path in ops:
+        for kind, path in ops or [("seg", s) for s in segs]:
             np_ = _norm_path(path)
             if kind == "seg":
                 if np_ not in surv:
@@ -765,13 +743,11 @@ class ToStoreSpark:
                         continue
                     if pby:
                         root = path[:-1] if path.endswith("/") else path
-                        part = self._pruned_read_part(root, files,
-                                                      base.schema)
+                        part = self._pruned_read_part(root, files, pin)
                     else:
-                        part = self._pruned_read(files)
+                        part = self._pruned_read(files, pin)
                 else:
-                    part = self._pruned_read(
-                        path, schema=base.schema if pby else None)
+                    part = self._pruned_read(path, pin)
                 part = part.select(*base.columns)
                 df = part if df is None else df.unionByName(part)
             elif df is not None:
@@ -910,18 +886,18 @@ class ToStoreSpark:
                 "delete_epochs": sum(1 for k, _p in ops if k == "del"),
                 "bloom_cols": list(bl["cols"]) if bl else None}
 
-    def _pruned_read(self, paths, schema=None) -> DataFrame:
+    def _pruned_read(self, paths, schema) -> DataFrame:
         """Memoized ``_read_parquet`` for skipping's rebuilt scans:
-        a pruned read lists files and reads footers when its plan is
-        built, and the SAME predicate re-run would otherwise pay that
-        driver-side cost every call.  Version dirs are immutable, so a
-        plan keyed by its exact path set stays valid; the cache is
+        a pruned read lists files when its plan is built, and the SAME
+        predicate re-run would otherwise pay that driver-side cost
+        every call.  Version dirs are immutable, so a plan keyed by its
+        exact path set and read schema stays valid; the cache is
         cleared with the sidecar caches at flush/refresh."""
         cache = getattr(self, "_prune_plan_cache", None)
         if cache is None:
             cache = self._prune_plan_cache = {}
         key = (tuple(paths) if isinstance(paths, list) else paths,
-               schema is not None)
+               schema.json())
         df = cache.get(key)
         if df is None:
             df = self._read_parquet(paths, schema=schema)
@@ -1001,7 +977,13 @@ class ToStoreSpark:
         delete paths), pass the deleted-PK frame — the flush then
         commits a deletion vector instead of rewriting.  Any write
         without a delta (or mixing the two kinds in one epoch) poisons
-        both fast paths until the next flush."""
+        both fast paths until the next flush.
+
+        ``deltas_pinned``: the caller vouches that both deltas are
+        already self-contained — a driver-resident batch (insert) or
+        frames derived from an eager localCheckpoint (the one-pass
+        update/delete, ``write._MutationBuilder._one_pass``) — so the
+        epoch fold pins nothing again."""
         self._set_df_at_key(self._resolve(name), df, weight=weight,
                             append_delta=append_delta,
                             delete_delta=delete_delta,
@@ -1084,12 +1066,11 @@ class ToStoreSpark:
                 def _pin(delta):
                     # pin the delta's rows now: its lineage may reference
                     # frames a later mutation invalidates pre-flush.
-                    # Callers that built the delta from driver-resident
-                    # rows (insert's createDataFrame batch) vouch via
-                    # ``deltas_pinned`` — a parallelized local collection
-                    # is self-contained, so the checkpoint job would pin
-                    # nothing it doesn't already hold (r17: one Spark job
-                    # per mutation saved).
+                    # Callers whose deltas are already self-contained
+                    # vouch via ``deltas_pinned``: insert's parallelized
+                    # driver batch, and update/delete deltas selected
+                    # from their own eager checkpoint — a second pin
+                    # would hold nothing new (one Spark job per delta).
                     if deltas_pinned:
                         return delta
                     return delta.localCheckpoint(eager=True)
@@ -1098,11 +1079,12 @@ class ToStoreSpark:
                     if delete_delta is not None:
                         pinned_d = _pin(delete_delta)
                         if cur_a is not None:
-                            # R ∖ D — deleting rows this epoch appended
-                            cur_a = (cur_a.join(F.broadcast(pinned_d),
-                                                on=list(pinned_d.columns),
-                                                how="left_anti")
-                                     .localCheckpoint(eager=True))
+                            # R ∖ D — deleting rows this epoch appended.
+                            # Both sides are already pinned, so the fold
+                            # stays lazy: the flush computes it once
+                            cur_a = cur_a.join(F.broadcast(pinned_d),
+                                               on=list(pinned_d.columns),
+                                               how="left_anti")
                         new_d = (cur_d.unionByName(pinned_d)
                                  if cur_d is not None else pinned_d)
                         if append_delta is not None:

@@ -288,33 +288,93 @@ _MAX_SEGMENTS = 16
 _DELETES_SUBDIR = "_deletes"
 
 
+#: per-version schema record, written by every flush: ``spark_schema``
+#: (the Spark schema of the rows written into this dir — the table's
+#: schema for a deletion-vector-only dir), ``partitioned`` (hive roots)
+#: and, for dirs holding a deletion vector, ``key_schema``.  Readers pin
+#: these instead of running one schema-inference job per directory.
+_SCHEMA_SIDECAR = "_schema.json"
+
+
+def _schema_record(fs, vdir: str) -> dict:
+    """The version dir's schema record, {} when it has none.  Dirs
+    written before the record existed fall back to the partitioned
+    ``spark_schema`` pin of their ``_segments.json`` (only partitioned
+    versions wrote one)."""
+    for name in (_SCHEMA_SIDECAR, _SEGMENTS_SIDECAR):
+        path = _fsmod.join(vdir, name)
+        try:
+            if not fs.exists(path):
+                continue
+            d = json.loads(fs.read_text(path))
+        except (OSError, ValueError):
+            continue
+        if name == _SCHEMA_SIDECAR:
+            return d
+        if d.get("spark_schema"):
+            return {"spark_schema": d["spark_schema"], "partitioned": True}
+    return {}
+
+
+def _struct(schema_json: Optional[str]):
+    if not schema_json:
+        return None
+    from pyspark.sql.types import StructType
+    return StructType.fromJson(json.loads(schema_json))
+
+
+def _read_back_form(schema_json: str) -> str:
+    """A recorded schema as parquet reads it back: Spark writes every
+    column nullable, so records that differ only in nullability describe
+    the same files."""
+    def walk(t):
+        if isinstance(t, dict):
+            return {k: (True if k in ("nullable", "containsNull",
+                                      "valueContainsNull") else walk(v))
+                    for k, v in t.items()}
+        if isinstance(t, list):
+            return [walk(v) for v in t]
+        return t
+    return json.dumps(walk(json.loads(schema_json)), sort_keys=True)
+
+
+def _recipe_pin(fs, ops):
+    """``(pin, partitioned)`` for reading a recipe's data segments.
+
+    ``pin`` is the recorded schema when every segment root recorded the
+    same one (newest root's record), else None: the read infers, as for
+    versions written before schemas were recorded or tables whose
+    roots disagree.  Hive-partitioned recipes always pin (the newest
+    record): an inferred read would retype partition values that live
+    in directory names ('001' -> 1)."""
+    recs = [_schema_record(fs, p) for k, p in ops if k == "seg"]
+    partitioned = any(r.get("partitioned") for r in recs)
+    schemas = [r.get("spark_schema") for r in recs]
+    agree = all(schemas) and len({_read_back_form(s)
+                                  for s in schemas}) == 1
+    if not (agree or partitioned):
+        return None, False
+    return _struct(next((s for s in reversed(schemas) if s),
+                        None)), partitioned
+
+
 def read_delete_keys(engine, vdir: str):
     """The deletion-vector key frame of a version dir, read via its
     explicit part files (module doc: avoids the per-read hidden-path
-    WARN).  Falls back to the directory read when listing fails (e.g.
-    an fs shim without listdir support) — correct either way."""
+    WARN) with the key schema the flush recorded.  Falls back to the
+    directory read when listing fails (e.g. an fs shim without listdir
+    support) — correct either way."""
     ddir = _fsmod.join(vdir, _DELETES_SUBDIR)
+    fs = _fs(engine)
+    pin = _struct(_schema_record(fs, vdir).get("key_schema"))
     try:
-        fs = _fs(engine)
         files = [f for f in fs.listdir(ddir) if f.endswith(".parquet")]
         if files:
             return engine._read_parquet(
-                [_fsmod.join(ddir, f) for f in files])
+                [_fsmod.join(ddir, f) for f in files], schema=pin)
     except Exception:
         pass
-    return engine._read_parquet(ddir)
-
-
-def _version_segments(fs, vdir: str) -> list[str]:
-    """The FULL content of a flushed version: its sidecar's segment
-    list (append commit) or the directory alone (rewrite commit)."""
-    path = _fsmod.join(vdir, _SEGMENTS_SIDECAR)
-    try:
-        if not fs.exists(path):         # Hadoop shim raises Py4J errors,
-            return [vdir]               # not OSError — probe first
-        return list(json.loads(fs.read_text(path))["segments"])
-    except (OSError, ValueError, KeyError):
-        return [vdir]
+    return engine._read_parquet(ddir, schema=pin)
 
 
 def _version_ops(fs, vdir: str) -> list:
@@ -337,23 +397,15 @@ def _version_ops(fs, vdir: str) -> list:
 
 
 def _version_pin(fs, vdir: str):
-    """The exact Spark schema a PARTITIONED version's reads must pin
-    (sidecar ``spark_schema``, written at flush): partition-column
-    values live in directory names, and an unpinned read would re-INFER
-    their types (a string partition value that looks numeric comes back
-    as int).  None for unpartitioned versions / pre-pin sidecars —
-    readers then use the plain read, exactly the old behavior."""
-    path = _fsmod.join(vdir, _SEGMENTS_SIDECAR)
-    try:
-        if not fs.exists(path):
-            return None
-        sj = json.loads(fs.read_text(path)).get("spark_schema")
-        if not sj:
-            return None
-        from pyspark.sql.types import StructType
-        return StructType.fromJson(json.loads(sj))
-    except (OSError, ValueError, KeyError):
-        return None
+    """The Spark schema a version's reads pin: the ``spark_schema`` of
+    its schema record, written by every flush (``_SCHEMA_SIDECAR``).
+    Partitioned versions depend on it — partition-column values live in
+    directory names, and an unpinned read would re-INFER their types (a
+    string partition value that looks numeric comes back as int); for
+    the rest it saves a schema-inference job per read.  None only for
+    unpartitioned versions written before schemas were recorded —
+    readers then infer, exactly the old behavior."""
+    return _struct(_schema_record(fs, vdir).get("spark_schema"))
 
 
 def _version_refs(fs, vdir: str) -> list[str]:
@@ -363,28 +415,38 @@ def _version_refs(fs, vdir: str) -> list[str]:
     return [p for _k, p in _version_ops(fs, vdir)]
 
 
-def _ops_frame(engine, ops, pin=None):
+def _ops_frame(engine, ops):
     """Fold a version recipe into one lazy frame: segments union in
     order, each deletion vector anti-joins on its PK column (the frame
-    is broadcast — delete sets are small relative to data).  Pure-seg
-    recipes keep the single multi-root scan."""
+    is broadcast — delete sets are small relative to data).  Every read
+    pins the schemas the flush recorded (``_recipe_pin``,
+    ``read_delete_keys``), so building the frame runs no schema-
+    inference job.  Unpartitioned pure-seg recipes keep the single
+    multi-root scan; hive-partitioned roots read one scan per root
+    (partition discovery cannot share a scan across roots)."""
     from pyspark.sql import functions as F
+    pin, partitioned = _recipe_pin(_fs(engine), ops)
     segs = [p for k, p in ops if k == "seg"]
-    if len(segs) == len(ops):
+    if len(segs) == len(ops) and (len(segs) == 1 or not partitioned):
         return engine._read_parquet(segs if len(segs) > 1 else segs[0],
                                     schema=pin)
     df = None
     for kind, path in ops:
         if kind == "seg":
             part = engine._read_parquet(path, schema=pin)
-            if pin is not None:
-                part = part.select(*[f.name for f in pin.fields])
             df = part if df is None else df.unionByName(part)
         elif df is not None:
             keys = read_delete_keys(engine, path)
             df = df.join(F.broadcast(keys), on=list(keys.columns),
                          how="left_anti")
     return df
+
+
+def _entry_ops(ent: dict) -> list:
+    """A manifest entry's recipe: its ``ops`` (deletion-vector recipes
+    only), else its segment list."""
+    return ent.get("ops") or [["seg", p] for p in
+                              ent.get("segments") or [ent["path"]]]
 
 
 def _claim_path(wh: str, space: str, table: str, version: int) -> str:
@@ -555,7 +617,7 @@ def flush_tables(engine, flush_storage: bool = True,
 
     # ---- phase 2: claim versions + write data (no lock) ------------
     claims: list[str] = []
-    staged = []   # (key, gen, vdir, written_schema, pby, segments, stats)
+    staged = []   # (key, gen, vdir, segments, stats, ops, del_counts)
     try:
         for key in dirty_keys:
             ent = engine._tables[key]
@@ -677,21 +739,23 @@ def flush_tables(engine, flush_storage: bool = True,
                     else [["seg", vdir]]
                 segments = (base_segs + [vdir]) if fast else None
             has_del = any(k == "del" for k, _p in ops)
-            # partitioned tables write the sidecar on EVERY commit
-            # (rewrites included): time travel needs the schema pin
-            # even for a single-segment version
-            if segments or has_del or pby:
-                sidecar = {"segments": [p for k, p in ops if k == "seg"],
-                           "ops": ops}
-                if pby:
-                    # partitioned recipes pin their read-back schema in
-                    # the version dir itself (_version_pin): time
-                    # travel / CDC / merge folds then retype partition
-                    # values exactly, manifest present or not
-                    sidecar["spark_schema"] = written_schema.json()
+            if segments or has_del:
                 fs.write_atomic(
                     _fsmod.join(vdir, _SEGMENTS_SIDECAR),
-                    json.dumps(sidecar))
+                    json.dumps({"segments": [p for k, p in ops
+                                             if k == "seg"],
+                                "ops": ops}))
+            # every commit records the schemas it wrote (_SCHEMA_SIDECAR):
+            # reloads, pruned reads, time travel and CDC pin them instead
+            # of inferring each directory's schema with a Spark job
+            data_schema = (delta.schema if fast or fast_replace
+                           else written_schema)
+            record = {"spark_schema": data_schema.json(),
+                      "partitioned": bool(pby)}
+            if fast_del or fast_replace:
+                record["key_schema"] = ddelta.schema.json()
+            fs.write_atomic(_fsmod.join(vdir, _SCHEMA_SIDECAR),
+                            json.dumps(record))
             # per-segment footer stats for manifest-level data skipping
             # (plans/skipping): metadata-only reads of what was just
             # written — base segments keep their prior stats on the
@@ -774,13 +838,14 @@ def flush_tables(engine, flush_storage: bool = True,
                     from tostore_spark.plans.skipping import \
                         build_bloom_payload
                     payload = build_bloom_payload(
-                        engine._read_parquet(vdir), bl_cfg, root=vdir)
+                        engine._read_parquet(vdir, schema=data_schema),
+                        bl_cfg, root=vdir)
                     if payload:
                         fs.write_atomic(
                             _fsmod.join(vdir, _BLOOM_SIDECAR),
                             json.dumps(payload))
-            staged.append((key, gen, vdir, written_schema, pby,
-                           segments, seg_stats, ops, del_counts))
+            staged.append((key, gen, vdir, segments, seg_stats, ops,
+                           del_counts))
             for c in claims:      # keep every claim visibly live while
                 try:              # later tables write (freshness signal
                     fs.touch(c)   # for other writers' stale checks)
@@ -805,22 +870,12 @@ def flush_tables(engine, flush_storage: bool = True,
             lock.heartbeat()
             merge_from = (cur or {"seq": base_seq, "tables": {}}) \
                 if base_seq != getattr(engine, "_store_seq", 0) else None
-            # adopt the written directories into the registry (schema
-            # pinned so partition-column inference can't retype values)
-            for key, gen, vdir, wsch, pby, segs, seg_stats, ops, \
+            # adopt the written directories into the registry, every
+            # read pinned to the schemas recorded at write time
+            for key, gen, vdir, segs, seg_stats, ops, \
                     del_counts in staged:
                 ent = engine._tables[key]
-                if any(k == "del" for k, _p in ops):
-                    # pin partitioned recipes: the fold re-reads hive
-                    # roots, and unpinned partition-value inference
-                    # could retype them (same discipline as the pure-
-                    # segment branch below)
-                    ent["df"] = _ops_frame(engine, ops,
-                                           pin=wsch if pby else None)
-                else:
-                    ent["df"] = engine._read_parquet(
-                        segs if segs else vdir,
-                        schema=wsch if pby else None)
+                ent["df"] = _ops_frame(engine, ops)
                 ent["path"] = vdir
                 ent["segments"] = segs or [vdir]
                 ent["ops"] = ops
@@ -1065,17 +1120,8 @@ def _fold_merged(engine, manifest: dict) -> None:
             continue   # ours (just flushed or untouched) — already right
         segs = ent.get("segments") or [ent["path"]]
         fops = ent.get("ops")
-        pin = None
-        if ent.get("partition_by") and ent.get("spark_schema"):
-            from pyspark.sql.types import StructType
-            pin = StructType.fromJson(json.loads(ent["spark_schema"]))
-        if fops and any(k == "del" for k, _p in fops):
-            fdf = _ops_frame(engine, fops, pin=pin)
-        else:
-            fdf = engine._read_parquet(
-                segs if len(segs) > 1 else ent["path"], schema=pin)
         engine._tables[key] = {
-            "df": fdf,
+            "df": _ops_frame(engine, _entry_ops(ent)),
             "path": ent["path"],
             "schema": _schema_from_dict(ent["schema"]),
             "global": ent["global"],
@@ -1134,10 +1180,6 @@ def _build_manifest(engine) -> dict:
                 entry["ops"] = [list(o) for o in ops]
                 if ent.get("del_counts"):
                     entry["del_counts"] = ent["del_counts"]
-            if ent.get("partition_by"):
-                # exact Spark types for the partitioned read-back pin —
-                # TableSchema's logical types are lossy (e.g. NTZ)
-                entry["spark_schema"] = ent["df"].schema.json()
             tables[f"{space}/{name}"] = entry
     manifest = {
         "seq": getattr(engine, "_store_seq", 0),
@@ -1167,22 +1209,12 @@ def load_warehouse(engine) -> list[str]:
     for ent in man["tables"].values():
         sch = _schema_from_dict(ent["schema"])
         key = (ent["space"], ent["name"])
-        pby = ent.get("partition_by")
-        pin = None
-        if pby and ent.get("spark_schema"):
-            from pyspark.sql.types import StructType
-            pin = StructType.fromJson(json.loads(ent["spark_schema"]))
         segs = ent.get("segments") or [ent["path"]]
         ops = ent.get("ops")
-        if ops and any(k == "del" for k, _p in ops):
-            df = _ops_frame(engine, ops, pin=pin)
-        else:
-            df = engine._read_parquet(
-                segs if len(segs) > 1 else ent["path"], schema=pin)
         engine._tables[key] = {
-            "df": df,
+            "df": _ops_frame(engine, _entry_ops(ent)),
             "path": ent["path"], "schema": sch, "global": ent["global"],
-            "partition_by": pby, "segments": segs,
+            "partition_by": ent.get("partition_by"), "segments": segs,
             "segment_stats": ent.get("segment_stats"),
             "bloom_cols": ent.get("bloom_cols"),
             "ops": ops,
@@ -1568,16 +1600,7 @@ def read_version(engine, table: str, version: int,
     # names the version's FULL recipe (vacuum resolves pins through
     # the same sidecar, so base AND deletion-vector dirs stay
     # protected); a deletion-vector version folds its anti-joins
-    ops = _version_ops(fs, vdir)
-    pin = _version_pin(fs, vdir)
-    if any(k == "del" for k, _p in ops):
-        out = _ops_frame(engine, ops, pin=pin)
-    else:
-        segs = _version_segments(fs, vdir)
-        out = engine._read_parquet(segs if len(segs) > 1 else vdir,
-                                   schema=pin)
-        if pin is not None:
-            out = out.select(*[f.name for f in pin.fields])
+    out = _ops_frame(engine, _version_ops(fs, vdir))
     ent = engine._tables.get((space, table))
     sch_ttl = getattr(ent["schema"], "ttl", None) if ent else None
     if sch_ttl is not None and sch_ttl.ttl_ms and sch_ttl.source_field:
@@ -1738,9 +1761,9 @@ def _diff_from_recipe(engine, table: str, from_version: int,
     engine._pinned_versions.add((space, table, from_version))
     engine._pinned_versions.add((space, table, to_version))
     tail = ops_to[len(ops_from):]
-    # partitioned recipes pin their reads (sidecar spark_schema) so
-    # partition-value types stay exact; extending chains share one
-    # schema, so the to-version's pin covers base and tail alike
+    # every read pins the to-version's recorded schema (exact
+    # partition-value types, no inference job per root); extending
+    # chains share one schema, so it covers base and tail alike
     pin = _version_pin(fs, vt)
     # TTL tables: raw segment reads would resurrect expired-but-
     # unswept rows that the exceptAll fallback (read_version, TTL-
@@ -1773,8 +1796,6 @@ def _diff_from_recipe(engine, table: str, from_version: int,
     for kind, path in tail:
         if kind == "seg":
             rows = _ttlf(engine._read_parquet(path, schema=pin))
-            if pin is not None:
-                rows = rows.select(*[f.name for f in pin.fields])
             rows = _decrypt_for(engine, space, table, rows)
             if cols is None:
                 cols = sorted(rows.columns)
@@ -1879,7 +1900,7 @@ def _cdc_base_state(engine, consumed, tail_keys, pin=None):
     except Exception:
         node = None
     if node is None:
-        return _ops_frame(engine, consumed, pin=pin)
+        return _ops_frame(engine, consumed)
     from tostore_spark.plans.skipping import (collect_parquet_stats,
                                               node_may_match)
     # stats per base root: the live manifest's map first (the common
@@ -1905,7 +1926,7 @@ def _cdc_base_state(engine, consumed, tail_keys, pin=None):
             surviving.add(_norm_path(seg))
     engine._last_cdc_prune = (len(surviving), len(segs))
     if len(surviving) == len(segs):
-        return _ops_frame(engine, consumed, pin=pin)
+        return _ops_frame(engine, consumed)
     # fold the recipe with pruned-out segments skipped; anti-joins
     # still apply in epoch order to whatever survives
     df = None
@@ -1918,8 +1939,6 @@ def _cdc_base_state(engine, consumed, tail_keys, pin=None):
                                      engine._read_parquet(path).schema)
                 continue
             part = engine._read_parquet(path, schema=pin)
-            if pin is not None:
-                part = part.select(*[f.name for f in pin.fields])
             df = part if df is None else df.unionByName(part)
         elif df is not None:
             keys = read_delete_keys(engine, path)
@@ -1967,23 +1986,11 @@ class SnapshotView:
     def df(self, table: str, space: str = "default"):
         for ent in self._manifest.get("tables", {}).values():
             if ent["name"] == table and ent["space"] == space:
-                pin = None
-                if ent.get("partition_by") and ent.get("spark_schema"):
-                    from pyspark.sql.types import StructType
-                    pin = StructType.fromJson(
-                        json.loads(ent["spark_schema"]))
-                ops = ent.get("ops")
-                if ops and any(k == "del" for k, _p in ops):
-                    # merge-on-read recipe: a pure-delete version dir
-                    # holds NO data files — the segment list alone
-                    # would crash (or resurrect deleted rows); fold
-                    # the recipe exactly like the registry read does
-                    out = _ops_frame(self._engine, ops, pin=pin)
-                else:
-                    segs = ent.get("segments") or [ent["path"]]
-                    out = self._engine._read_parquet(
-                        segs if len(segs) > 1 else ent["path"],
-                        schema=pin)
+                # merge-on-read recipes fold exactly like the registry
+                # read does (a pure-delete version dir holds NO data
+                # files — the segment list alone would crash or
+                # resurrect deleted rows)
+                out = _ops_frame(self._engine, _entry_ops(ent))
                 sch = _schema_from_dict(ent["schema"])
                 if (sch.ttl is not None and sch.ttl.ttl_ms
                         and sch.ttl.source_field):

@@ -544,6 +544,87 @@ class _MutationBuilder:
                          how="left")
         return marked, F.col("__sel_pk").isNotNull(), ["__sel_pk"]
 
+    def _keyed_pk(self, df: DataFrame) -> Optional[str]:
+        """The PK a mutation's epoch deltas key on, or None when the
+        mutation must take the rewrite path: no PK, or
+        ``engine.delete_vectors = False`` (the whole-path kill switch)."""
+        pk = self._engine.primary_key(self._table)
+        if (not getattr(self._engine, "delete_vectors", True)
+                or pk is None or pk not in df.columns):
+            return None
+        return pk
+
+    def _reads_pk_only(self, pk: str) -> bool:
+        """Whether the condition reads the PK alone, with no order/limit
+        window: rows sharing a PK then share the predicate's outcome, so
+        no untouched row can share a matched PK."""
+        if self._limit is not None or self._offset:
+            return False
+        names = (pk, f"{self._table}.{pk}")
+
+        def pk_only(node) -> bool:
+            if node.kind == "leaf":
+                return node.field in names
+            return all(pk_only(c) for c in node.children)
+        return pk_only(self._cond.root())
+
+    def _one_pass(self, df: DataFrame, pred: Column, touched: DataFrame,
+                  pk: str):
+        """Pin a PK-keyed mutation's touched rows once and probe them
+        with ONE collect.  ``touched`` is ``df.filter(pred)`` (update
+        adds ``__fail``, the unique-collision flag, and its new values):
+        one eager localCheckpoint pins it, and one collect returns the
+        matched count, the failed count, the null-PK count among the
+        applied rows, and how many survivors share an applied PK
+        (survivors semi-joined with the broadcast applied keys; a
+        condition on the PK alone needs no survivor scan, see
+        ``_reads_pk_only``).  The epoch deltas derive from the pin, so
+        ``set_df`` pins nothing more (``deltas_pinned``).
+
+        Returns ``(applied_rows, n, n_failed, keyed)`` — ``applied_rows``
+        are the pinned rows the mutation changes; ``keyed`` False vetoes
+        the deletion vector (a null applied PK never anti-joins, a
+        survivor sharing an applied PK would be over-deleted, an empty
+        key set has nothing to commit: all take the rewrite path) — or
+        None when the pass raised (the caller then falls back to the
+        lazy rewrite path, which surfaces any real error)."""
+        q = f"`{pk}`"
+        try:
+            pinned = touched.localCheckpoint(eager=True)
+            has_fail = "__fail" in pinned.columns
+            fail = "__fail" if has_fail else "false"
+            applied = f"coalesce(NOT {fail}, false)"
+            survivors = (None if self._reads_pk_only(pk) else
+                         df.filter(~F.coalesce(pred, F.lit(False)))
+                         .select(pk))
+            if has_fail:
+                failed = pinned.filter(f"NOT {applied}").select(pk)
+                survivors = (failed if survivors is None
+                             else survivors.unionAll(failed))
+            # one aggregate over the touched rows (tagged __t) and the
+            # survivors sharing an applied PK: no limit or join exchange
+            # (SQL text: one py4j call per projection, not per column)
+            tagged = pinned.selectExpr("true AS __t", f"{fail} AS __f",
+                                       f"{applied} AS __a",
+                                       f"{q} IS NULL AS __null")
+            if survivors is not None:
+                tagged = tagged.unionAll(survivors.join(
+                    F.broadcast(pinned.filter(applied).select(pk)),
+                    on=[pk], how="left_semi")
+                    .selectExpr(*["false"] * 4))
+            row = (tagged.selectExpr("count_if(__t) AS n",
+                               "count_if(__f) AS failed",
+                               "count_if(__a) AS applied",
+                               "count_if(__a AND __null) AS nulls",
+                               "count_if(NOT __t) AS shared")
+                   .collect()[0])
+        except Exception:
+            return None
+        n, n_failed = int(row["n"]), int(row["failed"])
+        keyed = (row["applied"] > 0 and not row["nulls"]
+                 and not row["shared"])
+        return pinned.filter(applied), n, n_failed, keyed
+
 
 class UpdateBuilder(_MutationBuilder):
     """update(t).where(...).set({...}) — refuses a conditionless update
@@ -585,15 +666,24 @@ class UpdateBuilder(_MutationBuilder):
 
     # sugar (update_builder.dart:63-209)
     def set(self, values: dict[str, Any]) -> int:
-        """Returns the matched-row count.  Counting is ONE combined driver
-        job (matched + unique-collision counts from the same aggregate);
-        set ``engine.eager_mutation_counts = False`` to skip it (returns
-        -1) when issuing many updates — the rewrite itself stays lazy
-        either way.  Exception: a STRICT update touching a declared-unique
-        field must know the collision count to decide the raise, so that
-        one job still runs (and the real matched count is returned for
-        free); ``continue_on_partial_errors()`` restores the zero-job path
-        by skipping colliding rows lazily."""
+        """Returns the updated-row count (matched minus unique-skipped).
+
+        A PK-keyed update (the table has a primary key the update does
+        not change, ``engine.delete_vectors`` on) runs two Spark
+        actions: one eager localCheckpoint of the touched rows and ONE
+        collect returning the matched, collision and null-PK counts and
+        the duplicate-PK veto (``_one_pass``).  The flush commits the
+        touched rows as a replace epoch, so the new table frame itself
+        stays lazy.  An update matching no row changes nothing.
+
+        Other updates take the rewrite path: one aggregate job counts
+        matched + unique-collision rows, and runs only when a number is
+        needed.  ``engine.eager_mutation_counts = False`` returns -1 on
+        both paths; there it saves the count job, except for a STRICT
+        update touching a declared-unique field, which must know the
+        collision count to decide the raise (and so returns the real
+        count).  ``continue_on_partial_errors()`` skips colliding rows
+        lazily instead."""
         if self._cond.is_empty() and not self._allow_all:
             raise ValueError("conditionless update requires allow_update_all()")
         if self._pending:
@@ -662,27 +752,45 @@ class UpdateBuilder(_MutationBuilder):
                           & ~self_only)
                 fail = fail | fail_a | fail_b
         staged = staged.withColumn("__fail", fail)
-        # ONE combined job for matched + collision counts (not one each),
-        # and ONLY when someone needs a number: eager callers want n;
-        # strict unique enforcement needs n_failed to decide the raise.
-        # eager=False + continue_on_partial_errors = zero driver jobs —
-        # colliding rows are skipped lazily by apply_c below (the ADVICE
-        # bulk-update-loop case).
         strict = not getattr(self, "_continue_partial", False)
-        n = -1
-        if eager or (uniq and strict):
+        # a count is returned to eager callers, and strict unique
+        # enforcement needs n_failed to decide the raise
+        counted = eager or bool(uniq and strict)
+        # merge-on-read replace epoch: R = the applied rows with their
+        # new values, K = their PKs, both from ONE pin of the touched
+        # rows (_one_pass, which also vetoes unsound key sets).  A
+        # PK-mutating update is never eligible (K must be the OLD
+        # identity; new rows carry the new one).
+        pk = self._keyed_pk(df)
+        one = None
+        cols = [c for c in df.columns if c not in temp_cols]
+        if pk is not None and pk not in new_cols:
+            touched = staged.filter(F.col("__upd")).select(
+                *cols, "__fail",
+                *[v.alias(f"__v_{f}") for f, v in new_cols.items()])
+            one = self._one_pass(df, pred, touched, pk)
+        n = n_failed = 0
+        if one is not None:
+            applied_rows, n, n_failed, keyed = one
+        elif counted:
+            # rewrite path: matched + collision counts in one job, run
+            # only when someone needs a number (eager=False +
+            # continue_on_partial_errors runs none: colliding rows are
+            # skipped lazily by apply_c below)
             row = staged.agg(
                 F.sum(F.col("__upd").cast("long")).alias("__n"),
                 F.sum(F.col("__fail").cast("long")).alias("__nf")).collect()[0]
             n = int(row["__n"] or 0)
             n_failed = int(row["__nf"] or 0)
-            if n_failed:
-                if strict:
-                    raise ValueError(
-                        f"update would violate unique constraint on "
-                        f"{uniq} for {n_failed} record(s); use "
-                        "continue_on_partial_errors() to skip them")
-                n -= n_failed
+        if n_failed and strict:
+            raise ValueError(
+                f"update would violate unique constraint on "
+                f"{uniq} for {n_failed} record(s); use "
+                "continue_on_partial_errors() to skip them")
+        if one is not None and n == 0:
+            # zero matches: a no-op — the frame, its generation and the
+            # epoch deltas stay as they are
+            return 0 if counted else -1
         apply_c = F.col("__upd") & ~F.col("__fail")
         out = staged
         for fld, newv in new_cols.items():
@@ -693,48 +801,19 @@ class UpdateBuilder(_MutationBuilder):
                    for c in (f"__new_{f}", f"__rn_{f}", f"__oldv_{f}",
                              f"__oldn_{f}", f"__oldpk_{f}")])
         out = out.drop(*drop)
-        # merge-on-read replace epoch: R = the applied rows with their
-        # new values (same staged frame — faithful), K = their PKs.
-        # Probed like the delete vector: a surviving row sharing a
-        # touched PK (duplicate-PK table, pred hit one copy) or a null
-        # touched PK would make the anti-join over/under-delete — veto
-        # to the rewrite.  A PK-mutating update is never eligible (K
-        # must be the OLD identity; new rows carry the new one).
-        touched = keys_df = None
-        pk = self._engine.primary_key(self._table)
-        if (getattr(self._engine, "delete_vectors", True)
-                and pk is not None and pk in df.columns
-                and pk not in new_cols):
-            try:
-                tf = staged.filter(apply_c)
-                for fld, newv in new_cols.items():
-                    tf = tf.withColumn(fld, newv)
-                tf = tf.drop(*drop)
-                keys_df = tf.select(pk)
-                survivors = staged.filter(~apply_c).select(pk)
-                bad = (keys_df.filter(F.col(pk).isNull())
-                       .unionAll(survivors.join(F.broadcast(keys_df),
-                                                on=[pk],
-                                                how="left_semi")))
-                probe = (keys_df.limit(1)
-                         .select(F.lit("k").alias("t"))
-                         .unionAll(bad.limit(1)
-                                   .select(F.lit("b").alias("t")))
-                         .collect())
-                tags = {r["t"] for r in probe}
-                touched = (tf if "b" not in tags and "k" in tags
-                           else None)
-            except Exception:
-                touched = None
         # a unique-checked rewrite carries a window + aggregate-join in its
         # lineage — weight it so the localCheckpoint barrier arrives sooner
-        if touched is not None:
-            self._engine.set_df(self._table, out, weight=4 if uniq else 1,
-                                append_delta=touched,
-                                delete_delta=keys_df)
+        weight = 4 if uniq else 1
+        if one is not None and keyed:
+            self._engine.set_df(
+                self._table, out, weight=weight,
+                append_delta=applied_rows.select(
+                    *[F.col(f"__v_{c}").alias(c) if c in new_cols
+                      else F.col(c) for c in cols]),
+                delete_delta=applied_rows.select(pk), deltas_pinned=True)
         else:
-            self._engine.set_df(self._table, out, weight=4 if uniq else 1)
-        return n
+            self._engine.set_df(self._table, out, weight=weight)
+        return n - n_failed if counted else -1
 
     def increment(self, field: str, by: Any = 1) -> int:
         return self.set({field: Expr.field(field) + by})
@@ -764,53 +843,33 @@ class DeleteBuilder(_MutationBuilder):
         return self
 
     def execute(self) -> int:
+        """Delete the matching rows; returns the deleted count (-1 under
+        ``engine.eager_mutation_counts = False``).  A PK-keyed delete
+        pins the doomed rows once and probes them in one job
+        (``_one_pass``): the flush then commits their PKs as a deletion
+        vector instead of rewriting the table.  A delete matching no
+        row changes nothing."""
         if self._cond.is_empty() and not self._allow_all:
             raise ValueError("conditionless delete requires allow_delete_all()")
         df, pred, temp_cols = self._limited_predicate()
-        doomed = df.filter(pred)
-        n = (doomed.count()
-             if getattr(self._engine, "eager_mutation_counts", True) else -1)
-        self._cascade(doomed.drop(*temp_cols) if temp_cols else doomed)
-        out = df.filter(~F.coalesce(pred, F.lit(False)))
-        for c in temp_cols:
-            out = out.drop(c)
-        self._engine.set_df(self._table, out,
-                            delete_delta=self._delete_keys(doomed, out))
-        return n
-
-    def _delete_keys(self, doomed: DataFrame, out: DataFrame):
-        """The deletion-vector key frame (store.flush_tables fast_del),
-        or None to fall back to the rewrite flush.  Sound only when the
-        PK uniquely identifies the doomed rows AGAINST THE SURVIVORS:
-        one bounded probe checks that no surviving row shares a doomed
-        PK (duplicate PKs can exist via unvalidated bulk paths) and
-        that no doomed PK is null (a null key never anti-joins, which
-        would resurrect the row on read-back).  The probe costs one
-        tiny job per delete; ``engine.delete_vectors = False`` turns
-        the whole path off."""
-        eng = self._engine
-        if not getattr(eng, "delete_vectors", True):
-            return None
-        pk = eng.primary_key(self._table)
-        if pk is None or pk not in doomed.columns:
-            return None
-        try:
-            keys = doomed.select(pk)
-            bad = (keys.filter(F.col(pk).isNull())
-                   .unionAll(out.join(F.broadcast(keys), on=[pk],
-                                      how="left_semi").select(pk)))
-            # ONE action: 'k' proves the key set non-empty (an empty
-            # delete must not write an empty-vector dir), 'b' vetoes
-            probe = (keys.limit(1).select(F.lit("k").alias("t"))
-                     .unionAll(bad.limit(1)
-                               .select(F.lit("b").alias("t")))
-                     .collect())
-            tags = {r["t"] for r in probe}
-            if "b" in tags or "k" not in tags:
-                return None
-            return keys
-        except Exception:
-            return None
+        eager = getattr(self._engine, "eager_mutation_counts", True)
+        doomed = df.filter(pred).drop(*temp_cols)
+        out = df.filter(~F.coalesce(pred, F.lit(False))).drop(*temp_cols)
+        pk = self._keyed_pk(df)
+        one = self._one_pass(df, pred, doomed, pk) if pk else None
+        if one is None:
+            n = doomed.count() if eager else -1
+            self._cascade(doomed)
+            self._engine.set_df(self._table, out)
+            return n
+        doomed, n, _failed, keyed = one
+        if n:
+            self._cascade(doomed)
+            self._engine.set_df(
+                self._table, out,
+                delete_delta=doomed.select(pk) if keyed else None,
+                deltas_pinned=True)
+        return n if eager else -1
 
     def _cascade(self, doomed: DataFrame) -> None:
         from tostore_spark.schema import ForeignKeyAction
