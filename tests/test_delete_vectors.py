@@ -816,3 +816,60 @@ class TestOnePassMutations:
         calls.clear()
         assert db.delete("notes").where("n", ">", 15).execute() == 3
         assert calls == ["localCheckpoint", "collect"], calls
+
+    def test_upsert_batch_update_and_append_rows_pin_once(
+            self, spark, tmp_path, monkeypatch):
+        """Writers pin their own epoch delta once; the epoch fold in
+        ``set_df`` pins nothing again.  Key frames come from the
+        driver-local payload and need no pin."""
+        from pyspark.sql.classic.dataframe import DataFrame as CDF
+        db = _mk(spark, str(tmp_path / "wh"), rows=20)
+        calls = []
+        orig = CDF.localCheckpoint
+
+        def wrapper(self, *a, **kw):
+            calls.append("localCheckpoint")
+            return orig(self, *a, **kw)
+
+        monkeypatch.setattr(CDF, "localCheckpoint", wrapper)
+        db.upsert("notes", {"id": "k003", "body": "U", "n": 3})
+        assert len(calls) == 1, calls
+        assert self._pending(db)[1] is not None     # replace epoch kept
+        db.flush()
+        calls.clear()
+        assert db.batch_update("notes", [{"id": "k004", "body": "V"}]) == 1
+        assert len(calls) == 1, calls
+        db.flush()
+        calls.clear()
+        db.append_rows("notes", spark.createDataFrame(
+            [("k100", "x", 100)], "id string, body string, n int"))
+        assert len(calls) == 1, calls
+        assert self._pending(db)[0] is not None
+        db.flush()
+        got = {r["id"]: r["body"] for r in db.df("notes").collect()}
+        assert (got["k003"], got["k004"], got["k100"]) == ("U", "V", "x")
+        assert len(got) == 21
+
+    def test_failed_delta_pin_takes_rewrite_path(self, spark, tmp_path,
+                                                 monkeypatch):
+        """A pin that raises poisons the epoch: the flush rewrites.  Once
+        poisoned, later writers in the epoch pin nothing."""
+        from pyspark.sql.classic.dataframe import DataFrame as CDF
+        db = _mk(spark, str(tmp_path / "wh"), rows=20)
+        calls = []
+
+        def boom(self, *a, **kw):
+            calls.append("localCheckpoint")
+            raise RuntimeError("pin failed")
+
+        monkeypatch.setattr(CDF, "localCheckpoint", boom)
+        db.upsert("notes", {"id": "k003", "body": "U", "n": 3})
+        assert self._pending(db) == (None, None)
+        db.batch_update("notes", [{"id": "k004", "body": "V"}])
+        assert calls == ["localCheckpoint"], calls
+        monkeypatch.undo()
+        db.flush()
+        assert [k for k, _ in db._tables[("default", "notes")]["ops"]
+                ] == ["seg"]
+        got = {r["id"]: r["body"] for r in db.df("notes").collect()}
+        assert (got["k003"], got["k004"]) == ("U", "V")

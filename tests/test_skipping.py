@@ -713,3 +713,98 @@ class TestRowGroupGrain:
         # file grain dropped part-a; row-group grain kept 1 of 4 groups
         assert db._last_prune_files == (1, 2)
         assert scan_output_rows(out) == 5_000
+
+
+class TestPrunedFoldOverDeletionVectors:
+    """``pruned_df`` and ``store._cdc_base_state`` fold a
+    ``seg, del, seg, del`` recipe through ``store._ops_frame`` over their
+    survivors: file-grain file lists, every anti-join in epoch order,
+    and an empty frame of the table schema when nothing survives."""
+
+    @pytest.fixture(scope="class", params=[False, True],
+                    ids=["flat", "hive"])
+    def mor(self, request, spark, tmp_path_factory):
+        from tostore_spark.engine import ToStoreSpark
+        from tostore_spark.schema import (DataType, FieldSchema,
+                                          PrimaryKeyConfig, TableSchema)
+        hive = request.param
+        db = ToStoreSpark(spark, warehouse=str(
+            tmp_path_factory.mktemp("fold") / "wh"))
+        sch = TableSchema(
+            name="t", primary_key=PrimaryKeyConfig(name="id"),
+            fields=[FieldSchema(name="pcol", type=DataType.text),
+                    FieldSchema(name="n", type=DataType.integer)])
+
+        def rows(lo, hi):
+            # range-partitioned on n: every file covers a narrow n range
+            return spark.createDataFrame(
+                [(f"k{i:04d}", f"0{i % 2}", i) for i in range(lo, hi)],
+                "id string, pcol string, n int").repartitionByRange(4, "n")
+
+        db.register_table("t", df=rows(0, 200), schema=sch,
+                          partition_by=["pcol"] if hive else None)
+        db.flush()                                          # seg
+        db.delete("t").where("n", "IN", [15, 150]).execute()
+        db.flush()                                          # del
+        db.append_rows("t", rows(1000, 1200))
+        db.flush()                                          # seg
+        # deletes rows of BOTH segments: the second vector must apply
+        # to the first segment's survivors too
+        db.delete("t").where("n", "IN", [12, 1010]).execute()
+        db.flush()                                          # del
+        ops = db._tables[("default", "t")]["ops"]
+        assert [k for k, _p in ops] == ["seg", "del", "seg", "del"]
+        return db
+
+    def _check(self, db, build, sql):
+        got = build(db.query("t")).df()
+        exp = db.df("t").filter(sql)
+        assert got.columns == exp.columns
+        assert sorted(map(tuple, got.collect())) == \
+            sorted(map(tuple, exp.collect()))
+        return got
+
+    def test_file_grain_prunes_within_surviving_segment(self, mor):
+        got = self._check(
+            mor, lambda q: q.where("n", "BETWEEN",
+                                   {"start": 10, "end": 20}),
+            "n BETWEEN 10 AND 20")
+        assert got.count() == 9                 # 15 and 12 deleted
+        assert mor._last_prune == (1, 2, "t")
+        kept, total = mor._last_prune_files
+        assert kept < total
+        # hive: the file-list read keeps the path-encoded partition column
+        assert all(r["pcol"] == f"0{r['n'] % 2}" for r in got.collect())
+
+    def test_range_across_both_segments(self, mor):
+        self._check(mor, lambda q: q.where("n", ">=", 140)
+                    .where("n", "<", 1020), "n >= 140 AND n < 1020")
+
+    def test_predicate_pruning_every_segment_is_empty(self, mor):
+        got = self._check(mor, lambda q: q.where("n", ">", 10_000),
+                          "n > 10000")
+        assert got.count() == 0
+        assert mor._last_prune == (0, 2, "t")
+
+    def test_cdc_base_state_pruned_equals_unpruned(self, mor):
+        """The pre-image state for the last vector, built over only the
+        base segments its keys can live in, keeps exactly the rows of the
+        full fold that the vector's keys select."""
+        from tostore_spark import store as S
+        ops = mor._tables[("default", "t")]["ops"]
+        consumed, last = ops[:-1], ops[-1][1]
+        keys = S.read_delete_keys(mor, last)
+        pruned = S._cdc_base_state(mor, consumed, [keys])
+        assert mor._last_cdc_prune == (2, 2)    # keys hit both segments
+        full = S._ops_frame(mor, consumed)
+
+        def rows(df):
+            return sorted(map(tuple, df.select(*full.columns).collect()))
+        assert rows(pruned) == rows(full)
+        # a key set living in the second segment only prunes the first
+        only = mor.spark.createDataFrame([("k1010",)], "id string")
+        pruned = S._cdc_base_state(mor, consumed, [only])
+        assert mor._last_cdc_prune == (1, 2)
+        assert rows(pruned.join(only, "id", "left_semi")) == \
+            rows(full.join(only, "id", "left_semi"))
+        assert set(rows(pruned)) <= set(rows(full))

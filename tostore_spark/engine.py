@@ -27,6 +27,10 @@ from tostore_spark.query import QueryBuilder
 from tostore_spark.schema import TableSchema
 from tostore_spark.localdf import local_df
 
+#: mutations between the lineage-cutting localCheckpoint barriers
+#: (``ToStoreSpark._maybe_compact``)
+_COMPACT_EVERY = 32
+
 
 def _cast_to_table_schema(df: DataFrame, schema) -> DataFrame:
     """Cast ``df``'s columns to a table's stored types where they differ.
@@ -627,7 +631,7 @@ class ToStoreSpark:
         ``_filestats.json`` sidecar, only the FILES) whose min/max
         ranges admit the NORMALIZED condition ``node``.  Tables with
         pending deletion-vector epochs stay skippable: the recipe is
-        re-folded with pruning applied per segment step and every
+        re-folded (``store._ops_frame``) over the survivors with every
         anti-join re-applied in order — pruning only ever drops
         segments no predicate row can live in, which deletions only
         shrink.  Returns None when skipping does not apply or prunes
@@ -649,116 +653,61 @@ class ToStoreSpark:
             return None
         from tostore_spark.plans.skipping import (node_may_match,
                                                   prune_segments)
-        from tostore_spark.store import _norm_path
-        ops = ent.get("ops")
-        has_del = bool(ops and any(k == "del" for k, _p in ops))
+        from tostore_spark.store import _norm_path, _ops_frame
         if ent.get("bloom_cols"):
-            # inject each segment's decoded bloom sidecar so =/IN
-            # leaves can prove a point value absent where the min/max
-            # range cannot (enable_bloom_skip)
-            aug = {}
-            for seg in segs:
-                st = stats.get(_norm_path(seg))
-                if st is None:
-                    continue
-                bl = self._bloom_stats(seg)
-                aug[_norm_path(seg)] = {**st, "bloom": bl} if bl else st
-            stats = aug
+            stats = self._with_blooms(segs, stats)
         surviving = prune_segments(segs, stats, node, key[1],
                                    norm=_norm_path)
-        surv = {_norm_path(s) for s in surviving}
         self._last_prune = (len(surviving), len(segs), key[1])
         self._last_prune_files = None
-        base = ent["df"]
+        keep = {_norm_path(s): None for s in surviving}
         # file-grain refinement (the _filestats.json sidecar): prune
         # individual files WITHIN the surviving roots — after an
         # OPTIMIZE/z-order rewrite every file covers a narrow key
-        # range, so this is where clustering pays off.  Unpartitioned
-        # tables only (hive roots keep Spark's own partition pruning);
-        # engaged only when every surviving root has a sidecar AND a
-        # file was actually dropped.
+        # range, so this is where clustering pays off.  Engaged only
+        # when every surviving root has a sidecar AND a file was
+        # actually dropped.
         file_sel: dict = {}
         kept_f = total_f = 0
-        file_ok = bool(surviving)
-        if file_ok:
-            for seg in surviving:
-                fstats = self._file_stats(seg)
-                if not fstats:
-                    file_ok = False
-                    break
-                total_f += len(fstats)
-                root = seg[:-1] if seg.endswith("/") else seg
-                # per-FILE blooms (build_bloom_payload's files map):
-                # a point value provably absent from a file skips it
-                # even inside a surviving segment
-                fbloom = (self._bloom_stats(seg) or {}
-                          if ent.get("bloom_cols") else {})
-                fb_files = fbloom.get("files") or {}
-                kept = []
-                for rel, summ in fstats.items():
-                    if rel in fb_files:
-                        summ = {**summ,
-                                "bloom": {"m": fbloom["m"],
-                                          "k": fbloom["k"],
-                                          "h": fbloom.get("h"),
-                                          "cols": fb_files[rel]}}
-                    if node_may_match(node, summ, key[1]):
-                        kept.append(f"{root}/{rel}")
-                kept_f += len(kept)
-                file_sel[_norm_path(seg)] = kept
-        use_files = file_ok and kept_f < total_f
-        if use_files:
+        for seg in surviving:
+            fstats = self._file_stats(seg)
+            if not fstats:
+                file_sel = {}
+                break
+            total_f += len(fstats)
+            root = seg[:-1] if seg.endswith("/") else seg
+            # per-FILE blooms (build_bloom_payload's files map):
+            # a point value provably absent from a file skips it
+            # even inside a surviving segment
+            fbloom = (self._bloom_stats(seg) or {}
+                      if ent.get("bloom_cols") else {})
+            fb_files = fbloom.get("files") or {}
+            kept = []
+            for rel, summ in fstats.items():
+                if rel in fb_files:
+                    summ = {**summ,
+                            "bloom": {"m": fbloom["m"],
+                                      "k": fbloom["k"],
+                                      "h": fbloom.get("h"),
+                                      "cols": fb_files[rel]}}
+                if node_may_match(node, summ, key[1]):
+                    kept.append(f"{root}/{rel}")
+            kept_f += len(kept)
+            file_sel[_norm_path(seg)] = kept
+        if file_sel and kept_f < total_f:
+            keep.update(file_sel)
             self._last_prune_files = (kept_f, total_f)
-        if len(surviving) == len(segs) and not use_files:
+        elif len(surviving) == len(segs):
             return None
+        base = ent["df"]
         # every rebuilt read pins the registry frame's schema: no
         # schema-inference job per root, and exact partition-value
         # types for hive roots (the frame itself was read pinned to the
         # recorded schemas, or inferred for unrecorded versions)
-        pin = base.schema
-        pby = bool(ent.get("partition_by"))
-        if not has_del and not pby:
-            # pure-segment table: keep the single multi-root scan
-            files = ([f for seg in surviving
-                      for f in file_sel[_norm_path(seg)]]
-                     if use_files else list(surviving))
-            df = (self._pruned_read(files, pin) if files
-                  else local_df(self.spark, [], base.schema))
-            return self._ttl_filtered(df.select(*base.columns), ent)
-        # deletion vectors pending or hive roots: fold the recipe one
-        # root at a time, pruning each seg step and re-applying every
-        # anti-join in epoch order.  Hive-partitioned segments read
-        # file-grain under their basePath so the path-encoded partition
-        # columns survive.
-        from pyspark.sql import functions as F
-        df = None
-        for kind, path in ops or [("seg", s) for s in segs]:
-            np_ = _norm_path(path)
-            if kind == "seg":
-                if np_ not in surv:
-                    continue
-                if use_files:
-                    files = file_sel[np_]
-                    if not files:
-                        continue
-                    if pby:
-                        root = path[:-1] if path.endswith("/") else path
-                        part = self._pruned_read_part(root, files, pin)
-                    else:
-                        part = self._pruned_read(files, pin)
-                else:
-                    part = self._pruned_read(path, pin)
-                part = part.select(*base.columns)
-                df = part if df is None else df.unionByName(part)
-            elif df is not None:
-                from tostore_spark.store import read_delete_keys
-                keys = read_delete_keys(
-                    self, path[:-1] if path.endswith("/") else path)
-                df = df.join(F.broadcast(keys), on=list(keys.columns),
-                             how="left_anti")
-        if df is None:
-            df = local_df(self.spark, [], base.schema)
-        return self._ttl_filtered(df, ent)
+        df = _ops_frame(self, ent.get("ops") or [["seg", s] for s in segs],
+                        pin=(base.schema, bool(ent.get("partition_by"))),
+                        keep=keep)
+        return self._ttl_filtered(df.select(*base.columns), ent)
 
     def _ttl_filtered(self, df: DataFrame, ent: dict) -> DataFrame:
         """Read-boundary finisher for frames rebuilt from raw segment
@@ -886,45 +835,43 @@ class ToStoreSpark:
                 "delete_epochs": sum(1 for k, _p in ops if k == "del"),
                 "bloom_cols": list(bl["cols"]) if bl else None}
 
-    def _pruned_read(self, paths, schema) -> DataFrame:
-        """Memoized ``_read_parquet`` for skipping's rebuilt scans:
-        a pruned read lists files when its plan is built, and the SAME
-        predicate re-run would otherwise pay that driver-side cost
-        every call.  Version dirs are immutable, so a plan keyed by its
-        exact path set and read schema stays valid; the cache is
-        cleared with the sidecar caches at flush/refresh."""
-        cache = getattr(self, "_prune_plan_cache", None)
-        if cache is None:
-            cache = self._prune_plan_cache = {}
-        key = (tuple(paths) if isinstance(paths, list) else paths,
-               schema.json())
+    def _pruned_read(self, paths: list, schema, base=None) -> DataFrame:
+        """Memoized segment read for skipping's rebuilt scans
+        (``store._ops_frame`` over a survivor set): a pruned read lists
+        files when its plan is built, and the SAME predicate re-run
+        would otherwise pay that driver-side cost every call.  ``base``
+        is the hive root a file list lives under: the list reads under
+        ``basePath`` so the path-encoded partition columns survive,
+        pinned so their value types stay exact.  Version dirs are
+        immutable, so a plan keyed by its exact path set and read
+        schema stays valid; the cache is cleared with the sidecar
+        caches at flush/refresh."""
+        cache = self.__dict__.setdefault("_prune_plan_cache", {})
+        key = (tuple(paths),
+               schema.json() if schema is not None else None, base)
         df = cache.get(key)
         if df is None:
-            df = self._read_parquet(paths, schema=schema)
+            df = (self._read_parquet(paths, schema=schema) if base is None
+                  else self.spark.read.option("basePath", base)
+                  .schema(schema).parquet(*paths))
             if len(cache) >= 256:
                 cache.clear()
             cache[key] = df
         return df
 
-    def _pruned_read_part(self, root: str, files: list,
-                          pin) -> DataFrame:
-        """File-level read of a hive-partitioned segment: the explicit
-        file list under ``basePath=root`` keeps the path-encoded
-        partition columns, the pinned schema keeps partition-value
-        typing exact (same pin discipline as the full read).  Memoized
-        like ``_pruned_read``."""
-        cache = getattr(self, "_prune_plan_cache", None)
-        if cache is None:
-            cache = self._prune_plan_cache = {}
-        key = (root, tuple(files))
-        df = cache.get(key)
-        if df is None:
-            df = (self.spark.read.option("basePath", root)
-                  .schema(pin).parquet(*files))
-            if len(cache) >= 256:
-                cache.clear()
-            cache[key] = df
-        return df
+    def _with_blooms(self, segs: list, stats: dict) -> dict:
+        """``stats`` (keyed by ``store._norm_path``) restricted to the
+        segments that have some, each with its decoded bloom sidecar
+        injected so =/IN leaves can prove a point value absent where
+        the min/max range cannot (``enable_bloom_skip``)."""
+        from tostore_spark.store import _norm_path
+        out = {}
+        for seg in segs:
+            st = stats.get(_norm_path(seg))
+            if st:
+                bl = self._bloom_stats(seg)
+                out[_norm_path(seg)] = {**st, "bloom": bl} if bl else st
+        return out
 
     def _file_stats(self, seg: str) -> Optional[dict]:
         """Lazy, cached read of a segment's ``_filestats.json`` sidecar
@@ -960,8 +907,7 @@ class ToStoreSpark:
 
     def set_df(self, name: str, df: DataFrame, weight: int = 1,
                append_delta: Optional[DataFrame] = None,
-               delete_delta: Optional[DataFrame] = None,
-               deltas_pinned: bool = False) -> None:
+               delete_delta: Optional[DataFrame] = None) -> None:
         """``weight`` counts toward the compaction budget: plan-heavy
         rewrites (e.g. unique-checked updates, whose olds-join would
         otherwise compound in lineage between barriers) pass >1 so the
@@ -979,22 +925,20 @@ class ToStoreSpark:
         without a delta (or mixing the two kinds in one epoch) poisons
         both fast paths until the next flush.
 
-        ``deltas_pinned``: the caller vouches that both deltas are
-        already self-contained — a driver-resident batch (insert) or
-        frames derived from an eager localCheckpoint (the one-pass
-        update/delete, ``write._MutationBuilder._one_pass``) — so the
-        epoch fold pins nothing again."""
+        Both deltas must be self-contained: a driver-resident batch or
+        a frame derived from an eager localCheckpoint.  Their lineage
+        must not reference frames a later mutation replaces before the
+        flush, so writers pin their deltas themselves; the epoch fold
+        pins nothing."""
         self._set_df_at_key(self._resolve(name), df, weight=weight,
                             append_delta=append_delta,
-                            delete_delta=delete_delta,
-                            deltas_pinned=deltas_pinned)
+                            delete_delta=delete_delta)
 
     def _set_df_at_key(self, key: tuple, df: DataFrame,
                        weight: int = 1,
                        append_delta: Optional[DataFrame] = None,
                        delete_delta: Optional[DataFrame] = None,
-                       pre_encrypted: bool = False,
-                       deltas_pinned: bool = False) -> None:
+                       pre_encrypted: bool = False) -> None:
         """Key-addressed write — see ``_df_at_key`` for why cross-space
         callers must not go through active-space name resolution.
 
@@ -1037,11 +981,9 @@ class ToStoreSpark:
             adeltas[key] = None
             ddeltas[key] = None
 
-        poisoned = (key in adeltas and adeltas[key] is None
-                    and key in ddeltas and ddeltas[key] is None)
         if append_delta is None and delete_delta is None:
             _poison()                     # rewrite-dirty: no fast path
-        elif not poisoned:
+        elif not self._epoch_poisoned(key):
             # The fold must NEVER leave a stale (K, R) pair behind: the
             # in-memory frame was already replaced above, so a fold that
             # raises (e.g. a delete delta keyed on a different column
@@ -1063,41 +1005,28 @@ class ToStoreSpark:
             if not compatible:
                 _poison()
             else:
-                def _pin(delta):
-                    # pin the delta's rows now: its lineage may reference
-                    # frames a later mutation invalidates pre-flush.
-                    # Callers whose deltas are already self-contained
-                    # vouch via ``deltas_pinned``: insert's parallelized
-                    # driver batch, and update/delete deltas selected
-                    # from their own eager checkpoint — a second pin
-                    # would hold nothing new (one Spark job per delta).
-                    if deltas_pinned:
-                        return delta
-                    return delta.localCheckpoint(eager=True)
-
+                # the deltas arrive pinned (set_df), so the fold stays
+                # lazy: the flush computes it once
                 try:
                     if delete_delta is not None:
-                        pinned_d = _pin(delete_delta)
                         if cur_a is not None:
-                            # R ∖ D — deleting rows this epoch appended.
-                            # Both sides are already pinned, so the fold
-                            # stays lazy: the flush computes it once
-                            cur_a = cur_a.join(F.broadcast(pinned_d),
-                                               on=list(pinned_d.columns),
-                                               how="left_anti")
-                        new_d = (cur_d.unionByName(pinned_d)
-                                 if cur_d is not None else pinned_d)
+                            # R ∖ D — deleting rows this epoch appended
+                            cur_a = cur_a.join(
+                                F.broadcast(delete_delta),
+                                on=list(delete_delta.columns),
+                                how="left_anti")
+                        new_d = (cur_d.unionByName(delete_delta)
+                                 if cur_d is not None else delete_delta)
                         if append_delta is not None:
-                            pinned_a = _pin(append_delta)
-                            cur_a = (cur_a.unionByName(pinned_a)
-                                     if cur_a is not None else pinned_a)
+                            cur_a = (cur_a.unionByName(append_delta)
+                                     if cur_a is not None else append_delta)
                         # commit both maps only after every step succeeded
                         ddeltas[key] = new_d
                         adeltas[key] = cur_a
                     elif append_delta is not None:
-                        pinned_a = _pin(append_delta)
-                        adeltas[key] = (cur_a.unionByName(pinned_a)
-                                        if cur_a is not None else pinned_a)
+                        adeltas[key] = (cur_a.unionByName(append_delta)
+                                        if cur_a is not None
+                                        else append_delta)
                 except Exception:
                     _poison()
         self._maybe_compact(key, weight=weight)
@@ -1114,6 +1043,12 @@ class ToStoreSpark:
         if not hasattr(self, "_txn_rpreds"):
             self._txn_rpreds = {}
         return self._txn_rpreds
+
+    def _epoch_poisoned(self, key: tuple) -> bool:
+        """True once a write this epoch turned both flush fast paths
+        off: further deltas are dropped, so writers need not pin any."""
+        a, d = self._append_deltas, self._delete_deltas
+        return key in a and a[key] is None and key in d and d[key] is None
 
     @property
     def _append_deltas(self) -> dict:
@@ -1188,19 +1123,15 @@ class ToStoreSpark:
 
     # ---- lineage bounding (the batch analog of WAL+buffer compaction,
     # data_store_impl.dart write-buffer flush) -------------------------
-    #: mutations between localCheckpoint barriers; 0 disables
-    compact_every: int = 32
-
     def _maybe_compact(self, key: tuple[str, str], weight: int = 1) -> None:
-        """Every N mutations, cut the logical plan with an eager
-        localCheckpoint: iterative writes otherwise chain a new plan on the
-        old one and analysis time / driver memory grow without bound."""
-        if not self.compact_every:
-            return
+        """Every ``_COMPACT_EVERY`` mutations, cut the logical plan with
+        an eager localCheckpoint: iterative writes otherwise chain a new
+        plan on the old one and analysis time / driver memory grow
+        without bound."""
         if not hasattr(self, "_mutations"):
             self._mutations: dict[tuple[str, str], int] = {}
         n = self._mutations.get(key, 0) + max(1, weight)
-        if n >= self.compact_every:
+        if n >= _COMPACT_EVERY:
             self._tables[key]["df"] = self._tables[key]["df"].localCheckpoint(eager=True)
             n = 0
         self._mutations[key] = n
@@ -2097,7 +2028,6 @@ class ToStoreSpark:
             "default_query_limit": self.default_query_limit,
             "max_query_offset": self.max_query_offset,
             "eager_mutation_counts": self.eager_mutation_counts,
-            "compact_every": self.compact_every,
             "space": self._space,
         }
 

@@ -16,7 +16,7 @@ Determinism across engines: per-edge contributions round to
 cannot perturb the float; each round's rank is itself rounded, making
 round t+1 a pure function of round t's exact values.
 
-Lineage control: ``checkpoint_every`` truncates the plan with an eager
+Lineage control: ``checkpoint_every`` truncates the plan with a lazy
 ``localCheckpoint`` — an unbounded loop otherwise doubles the DAG per
 round (driver-side planning blowup long before any executor limit).
 

@@ -126,28 +126,6 @@ def _minhash_ab(n: int) -> list[tuple[int, int]]:
     return out
 
 
-def minhash_signature(text_col: Column, num_hashes: int = 16, k: int = 5) -> Column:
-    """MinHash signature (array<long>): per hash i, min over shingles of
-    (a_i·u + b_i) mod p where u = first-32-bits(md5(shingle)).  Shingle
-    array and base digests are let-bound so each is computed exactly once
-    per row; a_i·u < 2^63 so the arithmetic stays in exact long range."""
-    ab = _minhash_ab(num_hashes)
-
-    def _mins(sh):
-        bases = F.transform(
-            sh, lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long"))
-
-        def _from_bases(bs):
-            return F.array(*[
-                F.array_min(F.transform(
-                    bs, (lambda a, b: lambda u: (F.lit(a) * u + F.lit(b)) % F.lit(MINHASH_P))(a, b)))
-                for a, b in ab])
-
-        return _let(bases, _from_bases)
-
-    return _let(shingles(text_col, k), _mins)
-
-
 def minhash_bands(sig: Column, bands: int, rows_per_band: int) -> Column:
     """Band digests for LSH: md5 over each contiguous row group (signature
     let-bound so it is computed once, not once per band)."""
@@ -216,9 +194,10 @@ def minhash_lsh_pairs(df: DataFrame, text_field: str = "text",
     stage entirely.
     """
     if index is None:
-        # eager localCheckpoint barrier so both self-join branches read the
-        # materialized index instead of recomputing the signatures; unlike
-        # .persist() the blocks are released by the ContextCleaner once the
+        # lazy localCheckpoint barrier (materialized by the first action)
+        # so both self-join branches read the materialized index instead
+        # of recomputing the signatures; unlike .persist() the blocks are
+        # released by the ContextCleaner once the
         # frame is unreferenced, so repeated calls don't pin executor
         # memory.  Trade-off: checkpoint blocks have no lineage, so losing
         # an executor mid-job fails the JOB (retryable) instead of

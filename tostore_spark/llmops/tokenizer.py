@@ -14,7 +14,7 @@ explode + groupBy on uniform (a, b) keys), a deterministic argmax
 (count desc, then pair lexicographic — a bounded 1-row collect, the
 same shape as the reference's index-stat reads), and a column-side
 left-to-right greedy merge over the symbol lists (a fold — no Python
-in the loop).  Lineage is cut with a periodic eager localCheckpoint.
+in the loop).  Lineage is cut with a periodic lazy localCheckpoint.
 
 Tokenization with the learned vocab is the scale-correct join form:
 the training frame already holds every known word's final symbol

@@ -415,30 +415,63 @@ def _version_refs(fs, vdir: str) -> list[str]:
     return [p for _k, p in _version_ops(fs, vdir)]
 
 
-def _ops_frame(engine, ops):
+def _ops_frame(engine, ops, pin=None, keep=None):
     """Fold a version recipe into one lazy frame: segments union in
     order, each deletion vector anti-joins on its PK column (the frame
     is broadcast — delete sets are small relative to data).  Every read
     pins the schemas the flush recorded (``_recipe_pin``,
     ``read_delete_keys``), so building the frame runs no schema-
-    inference job.  Unpartitioned pure-seg recipes keep the single
+    inference job; a caller that already knows the recipe's
+    ``(schema, partitioned)`` passes it as ``pin`` and skips the
+    sidecar reads.  Unpartitioned pure-seg recipes keep the single
     multi-root scan; hive-partitioned roots read one scan per root
-    (partition discovery cannot share a scan across roots)."""
+    (partition discovery cannot share a scan across roots).
+
+    ``keep`` folds only a data-skipping survivor set (``engine.pruned_df``,
+    ``_cdc_base_state``): ``_norm_path(segment)`` → the files to read
+    from that segment, None for the whole root; a segment missing from
+    the map is pruned, and every anti-join still applies in epoch order
+    to whatever survives.  Pruned reads go through the engine's memoized
+    ``_pruned_read`` (a hive file list reads under its root as
+    ``basePath``); when nothing survives the frame is empty, of the
+    recipe's schema."""
     from pyspark.sql import functions as F
-    pin, partitioned = _recipe_pin(_fs(engine), ops)
+    schema, partitioned = pin or _recipe_pin(_fs(engine), ops)
+
+    def paths(seg):
+        if keep is None:
+            return [seg]
+        files = keep.get(_norm_path(seg), [])
+        return [seg] if files is None else files
+
+    def read(files, root=None):
+        if keep is None:
+            return engine._read_parquet(files, schema=schema)
+        return engine._pruned_read(files, schema, base=root)
+
     segs = [p for k, p in ops if k == "seg"]
-    if len(segs) == len(ops) and (len(segs) == 1 or not partitioned):
-        return engine._read_parquet(segs if len(segs) > 1 else segs[0],
-                                    schema=pin)
     df = None
-    for kind, path in ops:
-        if kind == "seg":
-            part = engine._read_parquet(path, schema=pin)
-            df = part if df is None else df.unionByName(part)
-        elif df is not None:
-            keys = read_delete_keys(engine, path)
-            df = df.join(F.broadcast(keys), on=list(keys.columns),
-                         how="left_anti")
+    if len(segs) == len(ops) and not partitioned:
+        files = [f for s in segs for f in paths(s)]
+        df = read(files) if files else None
+    else:
+        for kind, path in ops:
+            if kind == "seg":
+                files = paths(path)
+                if not files:
+                    continue
+                root = (path.rstrip("/") if partitioned and files != [path]
+                        else None)
+                part = read(files, root)
+                df = part if df is None else df.unionByName(part)
+            elif df is not None:
+                keys = read_delete_keys(engine, path)
+                df = df.join(F.broadcast(keys), on=list(keys.columns),
+                             how="left_anti")
+    if df is None:
+        if schema is None:
+            schema = engine._read_parquet(segs[0]).schema
+        return local_df(engine.spark, [], schema)
     return df
 
 
@@ -1761,9 +1794,9 @@ def _diff_from_recipe(engine, table: str, from_version: int,
     engine._pinned_versions.add((space, table, from_version))
     engine._pinned_versions.add((space, table, to_version))
     tail = ops_to[len(ops_from):]
-    # every read pins the to-version's recorded schema (exact
-    # partition-value types, no inference job per root); extending
-    # chains share one schema, so it covers base and tail alike
+    # tail reads pin the to-version's recorded schema (exact
+    # partition-value types, no inference job per root); the base
+    # state folds through _ops_frame, which pins its own recipe
     pin = _version_pin(fs, vt)
     # TTL tables: raw segment reads would resurrect expired-but-
     # unswept rows that the exceptAll fallback (read_version, TTL-
@@ -1811,8 +1844,7 @@ def _diff_from_recipe(engine, table: str, from_version: int,
                 # differ across writes
                 state = _decrypt_for(
                     engine, space, table,
-                    _ttlf(_cdc_base_state(engine, consumed, tail_keys,
-                                          pin=pin)))
+                    _ttlf(_cdc_base_state(engine, consumed, tail_keys)))
             pre = state.join(F.broadcast(keys), on=list(keys.columns),
                              how="left_semi")
             if cols is None:
@@ -1847,7 +1879,7 @@ def _diff_from_recipe(engine, table: str, from_version: int,
 _CDC_PRUNE_KEY_CAP = 10_000
 
 
-def _cdc_base_state(engine, consumed, tail_keys, pin=None):
+def _cdc_base_state(engine, consumed, tail_keys):
     """The pre-image state frame for a CDC tail's FIRST deletion
     vector: fold(``consumed``), with base SEGMENTS the manifest stats /
     footer stats / bloom sidecars prove disjoint from EVERY tail key
@@ -1869,8 +1901,6 @@ def _cdc_base_state(engine, consumed, tail_keys, pin=None):
     — absence of the optimization, never of rows.  The count of
     pruned base roots lands in ``engine._last_cdc_prune``
     (kept, total) for tests/bench."""
-    from pyspark.sql import functions as F
-
     engine._last_cdc_prune = None
     segs = [p for k, p in consumed if k == "seg"]
     node = None
@@ -1902,52 +1932,27 @@ def _cdc_base_state(engine, consumed, tail_keys, pin=None):
     if node is None:
         return _ops_frame(engine, consumed)
     from tostore_spark.plans.skipping import (collect_parquet_stats,
-                                              node_may_match)
+                                              prune_segments)
     # stats per base root: the live manifest's map first (the common
     # case — an extending recipe keeps base segments live), a direct
     # footer read otherwise (metadata-only, no data pages)
     live_stats = {}
     for ent in getattr(engine, "_tables", {}).values():
         live_stats.update(ent.get("segment_stats") or {})
-    surviving = set()
-    table_name = ""     # bare leaf fields — no table prefix to strip
+    stats = {}
     for seg in segs:
         summ = live_stats.get(_norm_path(seg))
-        if summ is None:
-            summ = collect_parquet_stats(seg)
-        if not summ:
-            surviving.add(_norm_path(seg))      # statless: keep
-            continue
-        bl = engine._bloom_stats(seg) if hasattr(engine,
-                                                 "_bloom_stats") else None
-        if bl:
-            summ = {**summ, "bloom": bl}
-        if node_may_match(node, summ, table_name):
-            surviving.add(_norm_path(seg))
+        stats[_norm_path(seg)] = (summ if summ is not None
+                                  else collect_parquet_stats(seg))
+    # bare leaf fields — no table prefix to strip
+    surviving = prune_segments(segs, engine._with_blooms(segs, stats),
+                               node, "", norm=_norm_path)
     engine._last_cdc_prune = (len(surviving), len(segs))
     if len(surviving) == len(segs):
         return _ops_frame(engine, consumed)
-    # fold the recipe with pruned-out segments skipped; anti-joins
-    # still apply in epoch order to whatever survives
-    df = None
-    pruned_schema = None
-    for kind, path in consumed:
-        if kind == "seg":
-            if _norm_path(path) not in surviving:
-                if pruned_schema is None:
-                    pruned_schema = (pin if pin is not None else
-                                     engine._read_parquet(path).schema)
-                continue
-            part = engine._read_parquet(path, schema=pin)
-            df = part if df is None else df.unionByName(part)
-        elif df is not None:
-            keys = read_delete_keys(engine, path)
-            df = df.join(F.broadcast(keys), on=list(keys.columns),
-                         how="left_anti")
-    if df is None:
-        # every base segment pruned: no row can pre-image any tail key
-        return local_df(engine.spark, [], pruned_schema)
-    return df
+    # every pruned-out segment simply drops from the fold
+    return _ops_frame(engine, consumed,
+                      keep={_norm_path(s): None for s in surviving})
 
 
 class SnapshotView:

@@ -294,9 +294,8 @@ def insert(engine, table: str, rows: list[dict],
     # exact appended rows so it can commit a delta segment instead of
     # rewriting the table (store.flush_tables)
     # the delta is a parallelized driver-resident batch — self-contained
-    # lineage, no pre-flush pin needed (engine._set_df_at_key _pin)
-    engine.set_df(table, cur.unionByName(new_df), append_delta=new_df,
-                  deltas_pinned=True)
+    # lineage, no pin needed (set_df)
+    engine.set_df(table, cur.unionByName(new_df), append_delta=new_df)
     if schema.primary_key is not None \
             and schema.primary_key.type == PrimaryKeyType.sequential:
         # keep the cached counter valid across our own write: advance it
@@ -315,6 +314,21 @@ def insert(engine, table: str, rows: list[dict],
     success = ([r[schema.primary_key.name] for r in rows]
                if schema.primary_key else list(range(len(rows))))
     return BatchResult(success, failed)
+
+
+def _pin_touched(engine, table: str,
+                 touched: DataFrame) -> Optional[DataFrame]:
+    """A replace epoch's merged rows, pinned once so the flush delta
+    survives later mutations of the frames it was derived from.  None
+    (the caller then takes the rewrite path) when the pin raises, or
+    when the epoch already lost its fast path and the pin would buy
+    nothing."""
+    if engine._epoch_poisoned(engine._resolve(table)):
+        return None
+    try:
+        return touched.localCheckpoint(eager=True)
+    except Exception:
+        return None
 
 
 def upsert(engine, table: str, rows: list[dict],
@@ -390,13 +404,17 @@ def upsert(engine, table: str, rows: list[dict],
     # engine.delete_vectors=False is the documented whole-path kill
     # switch (DeleteBuilder honors it); the replace-epoch fast path is
     # the same merge-on-read machinery, so it must honor it too.
+    touched = None
     if (getattr(engine, "delete_vectors", True) and rows
             and not any(r.get(k) is None for r in rows for k in keyset)):
+        touched = _pin_touched(
+            engine, table,
+            joined.filter(F.col(f"__src_{keyset[0]}").isNotNull())
+            .select(*out_cols))
+    if touched is not None:
+        # the key frame derives from the driver-local payload: no pin
         keys_df = src.select(*[F.col(f"__src_{k}").alias(k)
                                for k in keyset]).dropDuplicates()
-        touched = (joined
-                   .filter(F.col(f"__src_{keyset[0]}").isNotNull())
-                   .select(*out_cols))
         engine.set_df(table, out, append_delta=touched,
                       delete_delta=keys_df)
     else:
@@ -456,15 +474,18 @@ def batch_update(engine, table: str, rows: list[dict],
     # merge-on-read replace epoch: K = payload PKs (unmatched keys
     # anti-join nothing — harmless), R = the matched rows of this same
     # join with their updates applied — faithful by construction
-    if getattr(engine, "delete_vectors", True):
+    # (delete_vectors=False, the documented kill switch, turns the
+    # whole merge-on-read path off — commit as a plain rewrite)
+    touched = (_pin_touched(engine, table,
+                            joined.filter(F.col("__pk").isNotNull())
+                            .select(*out_cols))
+               if getattr(engine, "delete_vectors", True) else None)
+    if touched is not None:
+        # the key frame derives from the driver-local payload: no pin
         keys_df = src.select(F.col("__pk").alias(pk)).dropDuplicates()
-        touched = (joined.filter(F.col("__pk").isNotNull())
-                   .select(*out_cols))
         engine.set_df(table, joined.select(*out_cols),
                       append_delta=touched, delete_delta=keys_df)
     else:
-        # delete_vectors=False: the documented kill switch turns the
-        # whole merge-on-read path off — commit as a plain rewrite
         engine.set_df(table, joined.select(*out_cols))
     return n
 
@@ -579,7 +600,7 @@ class _MutationBuilder:
         (survivors semi-joined with the broadcast applied keys; a
         condition on the PK alone needs no survivor scan, see
         ``_reads_pk_only``).  The epoch deltas derive from the pin, so
-        ``set_df`` pins nothing more (``deltas_pinned``).
+        ``set_df`` needs no other pin.
 
         Returns ``(applied_rows, n, n_failed, keyed)`` — ``applied_rows``
         are the pinned rows the mutation changes; ``keyed`` False vetoes
@@ -810,7 +831,7 @@ class UpdateBuilder(_MutationBuilder):
                 append_delta=applied_rows.select(
                     *[F.col(f"__v_{c}").alias(c) if c in new_cols
                       else F.col(c) for c in cols]),
-                delete_delta=applied_rows.select(pk), deltas_pinned=True)
+                delete_delta=applied_rows.select(pk))
         else:
             self._engine.set_df(self._table, out, weight=weight)
         return n - n_failed if counted else -1
@@ -867,8 +888,7 @@ class DeleteBuilder(_MutationBuilder):
             self._cascade(doomed)
             self._engine.set_df(
                 self._table, out,
-                delete_delta=doomed.select(pk) if keyed else None,
-                deltas_pinned=True)
+                delete_delta=doomed.select(pk) if keyed else None)
         return n if eager else -1
 
     def _cascade(self, doomed: DataFrame) -> None:
