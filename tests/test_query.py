@@ -320,6 +320,29 @@ def test_pagerank_fixed_points_and_star(spark):
     assert abs(got["b"] - 0.405) < 1e-9
 
 
+def test_pagerank_broadcast_matches_shuffle(spark, tmp_path_factory,
+                                            monkeypatch):
+    """A/B: pagerank's broadcast node-frame joins (file-backed edges
+    under the broadcast threshold) and its shuffled joins give
+    bit-identical ranks."""
+    from tostore_spark.functions.graph import pagerank
+    from tostore_spark.llmops import similarity as S
+
+    path = str(tmp_path_factory.mktemp("pr") / "edges.parquet")
+    spark.createDataFrame(
+        [(i, (i * 7 + 3) % 50) for i in range(50)]
+        + [(i, (i + 1) % 50) for i in range(0, 50, 3)],
+        "src long, dst long").write.parquet(path)
+    edges = spark.read.parquet(path)
+    assert S._fits_broadcast(edges) is True
+    bc = {r.node: r.rank
+          for r in pagerank(edges, n_iter=8, checkpoint_every=3).collect()}
+    monkeypatch.setattr(S, "_fits_broadcast", lambda df: False)
+    sh = {r.node: r.rank
+          for r in pagerank(edges, n_iter=8, checkpoint_every=3).collect()}
+    assert len(bc) == 50 and bc == sh
+
+
 def test_ewma_weights_and_window(spark):
     from tostore_spark.functions.timeseries import ewma
     rows = [("a", 1, 10.0), ("a", 2, 20.0), ("b", 1, 7.0)]

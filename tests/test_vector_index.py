@@ -966,3 +966,35 @@ def test_robust_prune_invariants_random(spark):
             g = greedy(cands, vecs, 1.2)
             mine_uncapped = {v for (x, v) in uncapped if x == u}
             assert g <= mine_uncapped, (u, g - mine_uncapped)
+
+
+def test_graph_search_many_small_mode_matches_large_mode(
+        spark, tmp_path_factory, monkeypatch):
+    """A/B: the broadcast small-corpus hop shape and the shuffled hop
+    shape return the same neighbors, distances and probed count."""
+    from bench import _clustered_embeddings
+    from tostore_spark.llmops import similarity as S
+
+    path = str(tmp_path_factory.mktemp("gsm") / "emb.parquet")
+    (_clustered_embeddings(spark, n=300, dim=8, n_clusters=12)
+        .select("vec_id", "embedding").write.parquet(path))
+    emb = spark.read.parquet(path)
+    graph, hubs = S.build_knn_graph(emb, n_neighbors=4, n_cells=6,
+                                    centroids=S.fixed_centroids(8, 6),
+                                    ring_skips=(1, 7))
+    graph = graph.localCheckpoint(eager=True)
+    hubs = hubs.localCheckpoint(eager=True)
+    queries = emb.filter("vec_id % 37 = 0")
+
+    def run():
+        out, probed = S.graph_search_many(graph, emb, queries, hubs, k=5,
+                                          ef=8, max_hops=3,
+                                          return_probed=True)
+        return sorted(tuple(r) for r in out.collect()), probed
+
+    assert S._fits_broadcast(emb) is True          # small mode
+    small = run()
+    monkeypatch.setattr(S, "_fits_broadcast", lambda df: False)
+    large = run()
+    assert small == large
+    assert len(small[0]) == 5 * queries.count()

@@ -26,8 +26,9 @@ from pyspark.sql import DataFrame, SparkSession
 from tostore_spark.query import QueryBuilder
 from tostore_spark.schema import TableSchema
 from tostore_spark.localdf import local_df
+from tostore_spark.pin import pin
 
-#: mutations between the lineage-cutting localCheckpoint barriers
+#: mutations between the lineage-cutting pins
 #: (``ToStoreSpark._maybe_compact``)
 _COMPACT_EVERY = 32
 
@@ -705,7 +706,8 @@ class ToStoreSpark:
         # types for hive roots (the frame itself was read pinned to the
         # recorded schemas, or inferred for unrecorded versions)
         df = _ops_frame(self, ent.get("ops") or [["seg", s] for s in segs],
-                        pin=(base.schema, bool(ent.get("partition_by"))),
+                        schema=(base.schema,
+                                bool(ent.get("partition_by"))),
                         keep=keep)
         return self._ttl_filtered(df.select(*base.columns), ent)
 
@@ -911,7 +913,7 @@ class ToStoreSpark:
         """``weight`` counts toward the compaction budget: plan-heavy
         rewrites (e.g. unique-checked updates, whose olds-join would
         otherwise compound in lineage between barriers) pass >1 so the
-        localCheckpoint cut arrives proportionally sooner.
+        lineage-cutting pin arrives proportionally sooner.
 
         ``append_delta``: when the new frame is PROVABLY the old frame
         plus exactly these rows (insert paths), pass the appended rows —
@@ -926,7 +928,7 @@ class ToStoreSpark:
         both fast paths until the next flush.
 
         Both deltas must be self-contained: a driver-resident batch or
-        a frame derived from an eager localCheckpoint.  Their lineage
+        a frame derived from an eager pin.  Their lineage
         must not reference frames a later mutation replaces before the
         flush, so writers pin their deltas themselves; the epoch fold
         pins nothing."""
@@ -1099,7 +1101,7 @@ class ToStoreSpark:
         # commit — cast to the stored schema now so a lossy/impossible
         # cast fails loud here instead
         rows_df = _cast_to_table_schema(rows_df, cur.schema)
-        delta = rows_df.select(*cur.columns).localCheckpoint(eager=True)
+        delta = pin(rows_df.select(*cur.columns), eager=True)
         self._set_df_at_key(key, cur.unionByName(delta),
                             append_delta=delta, pre_encrypted=True)
         return delta.count()
@@ -1124,15 +1126,16 @@ class ToStoreSpark:
     # ---- lineage bounding (the batch analog of WAL+buffer compaction,
     # data_store_impl.dart write-buffer flush) -------------------------
     def _maybe_compact(self, key: tuple[str, str], weight: int = 1) -> None:
-        """Every ``_COMPACT_EVERY`` mutations, cut the logical plan with
-        an eager localCheckpoint: iterative writes otherwise chain a new
+        """Every ``_COMPACT_EVERY`` mutations, cut the logical plan
+        (``store.pin_table``): iterative writes otherwise chain a new
         plan on the old one and analysis time / driver memory grow
         without bound."""
+        from tostore_spark.store import pin_table
         if not hasattr(self, "_mutations"):
             self._mutations: dict[tuple[str, str], int] = {}
         n = self._mutations.get(key, 0) + max(1, weight)
         if n >= _COMPACT_EVERY:
-            self._tables[key]["df"] = self._tables[key]["df"].localCheckpoint(eager=True)
+            pin_table(self, key)
             n = 0
         self._mutations[key] = n
 
@@ -1192,7 +1195,7 @@ class ToStoreSpark:
         released + durable — reopening ``ToStoreSpark(spark, data_dir,
         warehouse=...)`` resumes from exactly this state).  Without a
         warehouse (or flush_storage=False), dirty tables are only
-        localCheckpoint-ed: a memory barrier, NOT durable — mutations die
+        pinned: a memory barrier, NOT durable — mutations die
         with the session, as README limitations document.
 
         ``on_conflict`` picks the reaction to a concurrent writer having
@@ -2425,7 +2428,7 @@ class ToStoreSpark:
             centroids=centroids, prune_alpha=prune_alpha)
         if refine:
             graph = sim.graph_refine(
-                graph.localCheckpoint(eager=True), corpus, hubs,
+                pin(graph, eager=True), corpus, hubs,
                 n_neighbors=n_neighbors,
                 alpha=prune_alpha if prune_alpha is not None else 1.2,
                 vec_field=field_name, id_field=id_field)
@@ -2446,8 +2449,8 @@ class ToStoreSpark:
             self._vector_indexes = {}
         self._vector_indexes[("graph", self._space, table, field_name)] = {
             "kind": "graph", "path": path,
-            "graph": edges.localCheckpoint(eager=True),
-            "hubs": hubs.localCheckpoint(eager=True),
+            "graph": pin(edges, eager=True),
+            "hubs": pin(hubs, eager=True),
             "id_field": id_field or meta.get("id_field")
             or self.primary_key(table) or self.df(table).columns[0],
             "n_rows": meta.get("n_rows"),

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from tostore_spark.pin import pin
 
 DEFAULT_M_BITS = 1 << 20
 DEFAULT_K_HASHES = 5
@@ -96,11 +97,10 @@ def bloom_prune(probe: DataFrame, bloom: DataFrame, key_field: str,
     over one probe scan: the bitmap rides in as a broadcast 1-row map,
     and the membership test is a conjunction over the k bit positions —
     the probe side is never exploded, shuffled, or collected."""
-    # lazy barrier (the minhash_band_index precedent): the compact
-    # 1-row bitmap materializes once, at the first action, so every
-    # later action pays the probe scan only — without it each action
-    # re-runs the build side's scan + the gap-fill join
-    compact = _bloom_compact(bloom, m_bits).localCheckpoint(eager=False)
+    # pinned: the compact 1-row bitmap evaluates once, so every action
+    # pays the probe scan only — without it each action re-runs the
+    # build side's scan + the gap-fill join
+    compact = pin(_bloom_compact(bloom, m_bits))
     # membership = conjunction over the k bit tests; each conjunct is
     # scalar column math (O(1) dense-array index + shift + mask — no
     # higher-order function, see _positions), so the predicate survives

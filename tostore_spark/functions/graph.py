@@ -16,9 +16,9 @@ Determinism across engines: per-edge contributions round to
 cannot perturb the float; each round's rank is itself rounded, making
 round t+1 a pure function of round t's exact values.
 
-Lineage control: ``checkpoint_every`` truncates the plan with a lazy
-``localCheckpoint`` — an unbounded loop otherwise doubles the DAG per
-round (driver-side planning blowup long before any executor limit).
+Lineage control: ``checkpoint_every`` truncates the plan with a
+``pin`` — an unbounded loop otherwise doubles the DAG per round
+(driver-side planning blowup long before any executor limit).
 
 Reference scope: the reference has no graph operators; parity-plus.
 """
@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from tostore_spark.pin import pin
 
 
 def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
@@ -38,28 +39,19 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     destination.  Duplicate edges count once (the edge list is
     de-duplicated first — pass a weighted variant explicitly if
     multi-edges should add mass)."""
-    # edges feed every round (contrib join) — materialize once instead
-    # of re-evaluating the scan+distinct subtree per iteration (the
-    # dedup_clusters precedent).  All the pins here are LAZY local
-    # checkpoints (the graph-loop discipline, r17/r18): lineage still
-    # truncates and each frame still evaluates exactly once (one shared
-    # checkpoint RDD), but the result stage materializes inside the
-    # caller's action instead of a dedicated driver job per pin.
-    e = (edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
-              .filter(F.col("__s").isNotNull() & F.col("__d").isNotNull())
-              .distinct()
-              .localCheckpoint(eager=False))
+    # edges feed every round (contrib join): pin once instead of
+    # re-evaluating the scan+distinct subtree per iteration
+    e = pin(edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
+                 .filter(F.col("__s").isNotNull() & F.col("__d").isNotNull())
+                 .distinct())
     # nodes and deg feed EVERY iteration's plan (ranks_i references
-    # nodes both directly and through ranks_{i-1}) — without a barrier
-    # the final DAG embeds one union+distinct and one degree aggregate
-    # PER ITERATION LEVEL.  Both frames are node-count-sized;
-    # materialize them once (r17; values identical).
-    nodes = (e.select(F.col("__s").alias("node"))
-              .union(e.select(F.col("__d")))
-              .distinct()
-              .localCheckpoint(eager=False))
-    deg = (e.groupBy("__s").agg(F.count(F.lit(1)).alias("__deg"))
-            .localCheckpoint(eager=False))
+    # nodes both directly and through ranks_{i-1}) — without a pin the
+    # final DAG embeds one union+distinct and one degree aggregate PER
+    # ITERATION LEVEL.  Both frames are node-count-sized.
+    nodes = pin(e.select(F.col("__s").alias("node"))
+                 .union(e.select(F.col("__d")))
+                 .distinct())
+    deg = pin(e.groupBy("__s").agg(F.count(F.lit(1)).alias("__deg")))
     ranks = nodes.withColumn("rank", F.lit(1.0))
     d = float(damping)
     # scale-adaptive join shape (the _fits_broadcast discipline): the
@@ -92,7 +84,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
                       .selectExpr("node", rank_sql))
         if checkpoint_every and (it + 1) % checkpoint_every == 0 \
                 and it + 1 < n_iter:
-            ranks = ranks.localCheckpoint(eager=False)
+            ranks = pin(ranks)
     return ranks
 
 

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from tostore_spark.functions.colutil import epoch_us
+from tostore_spark.pin import pin
 
 
 def resample(df: DataFrame, partition: str, ts_field: str, value: str,
@@ -53,21 +54,19 @@ def resample(df: DataFrame, partition: str, ts_field: str, value: str,
     # zero, so pre-1970 (negative-epoch) timestamps would land one bucket
     # high and diverge from the oracle's `//` semantics
     idx = F.floor(epoch_us(F.col(ts_field)) / F.lit(iv_us)).cast("bigint")
-    # within-bucket exact aggregate
-    buckets = (df.groupBy(F.col(partition).alias("__ent"),
-                          idx.alias("__idx"))
-                 .agg(F.sum(F.round(F.col(value), 6)
-                            .cast("decimal(28,6)")).alias("__vsum"),
-                      F.count(value).alias("n_obs"))
-                 .withColumn("avg_value",
-                             F.col("__vsum").cast("double") / F.col("n_obs"))
-                 .drop("__vsum")
-                 # both the grid derivation and the grid join consume
-                 # this aggregate; the barrier keeps the SOURCE at one
-                 # scan (the minhash-index eager-checkpoint idiom) and
-                 # the materialized frame is bucket-granular, not
-                 # row-granular
-                 .localCheckpoint(eager=False))
+    # within-bucket exact aggregate.  Both the grid derivation and the
+    # grid join read it, and unpinned the plan scans the SOURCE once per
+    # reader (no ReusedExchange); the pin is bucket-granular, not
+    # row-granular
+    buckets = pin(df.groupBy(F.col(partition).alias("__ent"),
+                             idx.alias("__idx"))
+                    .agg(F.sum(F.round(F.col(value), 6)
+                               .cast("decimal(28,6)")).alias("__vsum"),
+                         F.count(value).alias("n_obs"))
+                    .withColumn("avg_value",
+                                F.col("__vsum").cast("double")
+                                / F.col("n_obs"))
+                    .drop("__vsum"))
     # per-entity grid: one row per step between first and last bucket
     grid = (buckets.groupBy("__ent")
                    .agg(F.min("__idx").alias("__lo"), F.max("__idx").alias("__hi"))
@@ -279,11 +278,10 @@ def rolling_distinct(df: DataFrame, ts_field: str, entity: str,
         # materialize the |days|-row sketch frame ONCE: `days` re-derives
         # from it for the broadcast side, so without this the per-day
         # HLL aggregate (and its corpus scan) would execute twice
-        per_day = (df.select(day.alias("__day"),
-                             F.col(entity).alias("__ent"))
-                     .groupBy("__day")
-                     .agg(F.hll_sketch_agg("__ent").alias("__sk"))
-                     .localCheckpoint(eager=False))
+        per_day = pin(df.select(day.alias("__day"),
+                                F.col(entity).alias("__ent"))
+                        .groupBy("__day")
+                        .agg(F.hll_sketch_agg("__ent").alias("__sk")))
         days = per_day.select(F.col("__day").alias("day"))
         return (per_day.join(F.broadcast(days), cond)
                        .groupBy("day")

@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from tostore_spark.llmops.text import normalized_text
+from tostore_spark.pin import pin
 from tostore_spark.vector import distance_column
 
 
@@ -194,18 +195,15 @@ def minhash_lsh_pairs(df: DataFrame, text_field: str = "text",
     stage entirely.
     """
     if index is None:
-        # lazy localCheckpoint barrier (materialized by the first action)
-        # so both self-join branches read the materialized index instead
-        # of recomputing the signatures; unlike .persist() the blocks are
-        # released by the ContextCleaner once the
-        # frame is unreferenced, so repeated calls don't pin executor
-        # memory.  Trade-off: checkpoint blocks have no lineage, so losing
-        # an executor mid-job fails the JOB (retryable) instead of
-        # recomputing the lost partitions.  The production path at scale is
-        # the WRITTEN index — minhash_band_index persisted to storage and
-        # passed back in via ``index=`` — which has neither problem.
-        index = minhash_band_index(df, text_field, id_field, num_hashes,
-                                   bands, shingle_k).localCheckpoint(eager=False)
+        # pinned so both self-join branches read one index instead of
+        # recomputing the signatures (load-bearing: the unpinned
+        # self-join plan gets no ReusedExchange).  Pin blocks have no
+        # lineage, so losing an executor mid-job fails the JOB
+        # (retryable).  The production path at scale is the WRITTEN
+        # index — minhash_band_index persisted to storage and passed
+        # back in via ``index=`` — which has neither cost.
+        index = pin(minhash_band_index(df, text_field, id_field,
+                                       num_hashes, bands, shingle_k))
     a, b = index.alias("a"), index.alias("b")
     return (a.join(b, (F.col("a.band") == F.col("b.band"))
                    & (F.col("a.id") < F.col("b.id")))
@@ -740,28 +738,27 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     then contracts ``label <- label(label)``.  The contraction halves the
     remaining tree height, so a chain of N near-dups converges in
     O(log N) rounds, not O(N); each round is two key shuffles.  Lineage
-    is cut with a lazy localCheckpoint per round (only ``edges`` is
-    pinned eagerly), and the loop exits on the first round with no
-    label change.  Raises ``RuntimeError`` if ``max_iterations`` rounds
+    is cut with a lazy pin per round (only ``edges`` is pinned
+    eagerly), and the loop exits on the first round with no label
+    change.  Raises ``RuntimeError`` if ``max_iterations`` rounds
     pass without such a round: the labels would be partial.
     """
-    edges = (pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-             .unionByName(
-                 pairs.select(F.col(id_b).alias("src"),
-                              F.col(id_a).alias("dst")))
-             .distinct()
-             .localCheckpoint(eager=True))
+    edges = pin(pairs.select(F.col(id_a).alias("src"),
+                             F.col(id_b).alias("dst"))
+                     .unionByName(
+                         pairs.select(F.col(id_b).alias("src"),
+                                      F.col(id_a).alias("dst")))
+                     .distinct(), eager=True)
     labels = (edges.select(F.col("src").alias("id")).distinct()
               .withColumn("label", F.col("id")))
     for _ in range(max_iterations):
         nbr_min = (edges.join(labels, edges["dst"] == labels["id"])
                    .groupBy("src").agg(F.min("label").alias("nbr")))
         # __old rides along so the convergence check below is a plain
-        # FILTER over the round's checkpoint instead of a join back
-        # onto the previous labels (which cost two more exchanges and
-        # a dedicated job per round); the checkpoint is lazy, so the
-        # isEmpty() action materializes the round AND answers the check
-        # in ONE job (was: eager checkpoint job + join-check job).
+        # FILTER over the round's pin instead of a join back onto the
+        # previous labels (which cost two more exchanges and a
+        # dedicated job per round); the isEmpty() action materializes
+        # the round's final stage AND answers the check.
         stepped = (labels.join(nbr_min, labels["id"] == nbr_min["src"], "left")
                    .select(labels["id"],
                            F.least(labels["label"],
@@ -769,12 +766,11 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
                                    ).alias("label"),
                            labels["label"].alias("__old")))
         l1, l2 = stepped.alias("l1"), stepped.alias("l2")
-        jumped = (l1.join(l2, F.col("l1.label") == F.col("l2.id"), "left")
-                  .select(F.col("l1.id").alias("id"),
-                          F.coalesce(F.col("l2.label"),
-                                     F.col("l1.label")).alias("label"),
-                          F.col("l1.__old").alias("__old"))
-                  .localCheckpoint(eager=False))
+        jumped = pin(l1.join(l2, F.col("l1.label") == F.col("l2.id"), "left")
+                       .select(F.col("l1.id").alias("id"),
+                               F.coalesce(F.col("l2.label"),
+                                          F.col("l1.label")).alias("label"),
+                               F.col("l1.__old").alias("__old")))
         done = jumped.filter(F.col("label") != F.col("__old")).isEmpty()
         labels = jumped.select("id", "label")
         if done:

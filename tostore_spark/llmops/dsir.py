@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from tostore_spark.llmops.pipeline import weighted_sample
 from tostore_spark.llmops.text import tokens as _tokens
+from tostore_spark.pin import pin
 
 
 def _feat(tok):
@@ -113,9 +114,8 @@ def dsir_resample(raw: DataFrame, target: DataFrame,
     # join); materialize it once so the two corpus-count scans behind it
     # don't re-run per branch (persisting it to parquet — the normal
     # artifact flow — has the same effect)
-    ratio = dsir_ratio_table(raw, target, text_field=text_field,
-                             n_buckets=n_buckets, add_k=add_k) \
-        .localCheckpoint(eager=False)
+    ratio = pin(dsir_ratio_table(raw, target, text_field=text_field,
+                                 n_buckets=n_buckets, add_k=add_k))
     w = dsir_weights(raw, ratio, text_field=text_field,
                      id_field=id_field, n_buckets=n_buckets)
     joined = raw.join(

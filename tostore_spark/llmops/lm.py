@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tostore_spark.llmops import text as TX
+from tostore_spark.pin import pin
 
 #: beginning-of-document context sentinel.  ``text.tokens`` emits only
 #: [a-z0-9]+ runs, so the sentinel can never collide with a real token.
@@ -107,12 +108,11 @@ def train_ngram_lm(df: DataFrame, n: int = 2, add_k: float = 0.5,
 
     ONE corpus pass — enforced, not just claimed: the (prev, token)
     count frame is aggregated from a single bigram explode and (by
-    default) MATERIALIZED with an eager ``localCheckpoint`` (the
-    ``plans.stats._bucketize`` discipline); every other frame —
-    context counts, unigram counts (exact: each corpus token emits
-    exactly one bigram row as the ``token`` member, BOS only ever
-    appears as ``prev``), and the (T, V) constants — is a
-    re-aggregation of that vocab-sized frame.  Without the checkpoint
+    default) PINNED (the ``plans.stats._bucketize`` discipline); every
+    other frame — context counts, unigram counts (exact: each corpus
+    token emits exactly one bigram row as the ``token`` member, BOS
+    only ever appears as ``prev``), and the (T, V) constants — is a
+    re-aggregation of that vocab-sized frame.  Without the pin
     Catalyst does NOT dedupe the common subplan across the scorer's
     join inputs and the corpus is re-tokenized once per joined frame
     (the 6x re-derivation the round-7 bench caught on the trigram).
@@ -129,7 +129,7 @@ def train_ngram_lm(df: DataFrame, n: int = 2, add_k: float = 0.5,
     bigrams = (bg.groupBy("prev", "token")
                  .agg(F.count(F.lit(1)).alias("tf2")))
     if materialize:
-        bigrams = bigrams.localCheckpoint(eager=False)
+        bigrams = pin(bigrams)
     contexts = (bigrams.groupBy("prev")
                        .agg(F.sum("tf2").alias("ctf")))
     unigrams = (bigrams.groupBy("token")
@@ -196,7 +196,7 @@ def ngram_perplexity_filter(df: DataFrame, lm: NGramLM,
     # the scored frame feeds BOTH the threshold selection and the output
     # join — materialize it once (doc-count rows, 3 columns) so the
     # explode+join scoring lineage is never executed twice
-    scored = scored.localCheckpoint(eager=False)
+    scored = pin(scored)
     # distributed order-statistic threshold, not the percentile
     # value-map aggregate (repo-wide rule; see plans/stats)
     from tostore_spark.plans.stats import exact_percentiles_frame
@@ -245,15 +245,15 @@ def ppl_buckets(scored: DataFrame, bits_field: str = "bits_per_token",
     ungrouped on its own.
 
     ``scored`` feeds BOTH the threshold derivation and the labeled
-    output — ``materialize`` (default on) pins it with one eager
-    ``localCheckpoint`` so an expensive scoring lineage (the n-gram
-    explode + joins) executes once, not once per reference.  The
+    output — ``materialize`` (default on) pins it so an expensive
+    scoring lineage (the n-gram explode + joins) executes once, not
+    once per reference.  The
     grouped-exact path skips the pin regardless: it references
     ``scored`` exactly once (null scores ride the SAME rank window
     with NULLS LAST — their row numbers sit past every threshold
     index, so they can never be picked as an order statistic), and a
-    checkpoint would only add block-store overhead to a
-    single-execution plan.
+    pin would only add block-store overhead to a single-execution
+    plan.
 
     ``exact=False`` (grouped mode only) swaps the spillable per-group
     sort window for ONE per-group ``approx_percentile`` sketch
@@ -267,7 +267,7 @@ def ppl_buckets(scored: DataFrame, bits_field: str = "bits_per_token",
         raise ValueError("cuts must be ascending")
     if materialize and not (by is not None and exact):
         # grouped-exact is single-reference (see docstring) — never pin
-        scored = scored.localCheckpoint(eager=False)
+        scored = pin(scored)
     if by is None:
         from tostore_spark.plans.stats import exact_percentiles_frame
         bounds = exact_percentiles_frame(scored, bits_field, list(cuts))
@@ -383,17 +383,17 @@ def train_trigram_lm(df: DataFrame, add_k: float = 0.5,
 
     ONE corpus pass — enforced in the executed plan, not just the
     docstring: the (prev2, prev, token) count frame is aggregated from
-    a single trigram explode and (by default) MATERIALIZED with an
-    eager ``localCheckpoint``; EVERY other frame is a re-aggregation
-    of that vocab-sized frame.  The derivations are exact because each
-    corpus token emits exactly one trigram row as the ``token`` member
-    (BOS appears only in the context positions):
+    a single trigram explode and (by default) PINNED; EVERY other
+    frame is a re-aggregation of that vocab-sized frame.  The
+    derivations are exact because each corpus token emits exactly one
+    trigram row as the ``token`` member (BOS appears only in the
+    context positions):
 
         bigrams  = trigrams.groupBy(prev, token).sum(tf3)
         unigrams = trigrams.groupBy(token).sum(tf3)
         contexts / contexts2 / (T, V) likewise.
 
-    Without the checkpoint, Catalyst does not dedupe the shared
+    Without the pin, Catalyst does not dedupe the shared
     explode subplan across the scorer's five join inputs and the
     corpus is re-tokenized ~6x (the 20s-at-sf0.1 wall the round-7
     bench caught; at 100 TB that is six corpus scans for one).
@@ -408,7 +408,7 @@ def train_trigram_lm(df: DataFrame, add_k: float = 0.5,
     trigrams = (tg.groupBy("prev2", "prev", "token")
                   .agg(F.count(F.lit(1)).alias("tf3")))
     if materialize:
-        trigrams = trigrams.localCheckpoint(eager=False)
+        trigrams = pin(trigrams)
     contexts2 = (trigrams.groupBy("prev2", "prev")
                          .agg(F.sum("tf3").alias("ctf3")))
     bigrams = (trigrams.groupBy("prev", "token")

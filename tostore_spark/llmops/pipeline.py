@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from tostore_spark.llmops import text as TX
+from tostore_spark.pin import pin
 
 
 def hash_fraction(id_col: Column) -> Column:
@@ -211,12 +212,10 @@ def _stage_barrier(df: DataFrame, materialize, warehouse_dir,
                    stage: str, eager: bool = False) -> DataFrame:
     """Materialization barrier between curate_corpus stages.
 
-    ``"localCheckpoint"``: local checkpoint — downstream stages read the
-    computed partitions, not the upstream DAG (same barrier the minhash
-    index uses at ``dedup.minhash_lsh_pairs``).  Lazy by default (the
-    caller's first action materializes it — one fewer job per stage);
-    ``eager=True`` when the materialization itself must be the action
-    (the report path's Observation counts fill on it).  ``"warehouse"``:
+    ``"localCheckpoint"``: a ``pin`` — downstream stages read the
+    pinned partitions, not the upstream DAG.  ``eager=True`` when the
+    materialization itself must be the action (the report path's
+    Observation counts fill on it).  ``"warehouse"``:
     write the stage to ``<warehouse_dir>/<stage>/`` as parquet and read
     it back — restartable and inspectable, the form a multi-day 100 TB
     run wants.  ``None``: no barrier (the pure-DAG composition; upstream
@@ -224,7 +223,7 @@ def _stage_barrier(df: DataFrame, materialize, warehouse_dir,
     if not materialize:
         return df
     if materialize == "localCheckpoint":
-        return df.localCheckpoint(eager=eager)
+        return pin(df, eager=eager)
     if materialize == "warehouse":
         if not warehouse_dir:
             raise ValueError(
@@ -413,9 +412,8 @@ def curate_corpus(docs: DataFrame, bench: DataFrame | None = None,
                                              id_field=id_field)
                 # scored feeds the percentile selection AND the filter
                 # join — pin it once so the explode+joins never rerun
-                scored = NLM.trigram_bits_per_token(
-                    out, model, text_field=text_field, id_field=id_field
-                ).localCheckpoint(eager=False)
+                scored = pin(NLM.trigram_bits_per_token(
+                    out, model, text_field=text_field, id_field=id_field))
                 from tostore_spark.plans.stats import \
                     exact_percentiles_frame
                 thr = (exact_percentiles_frame(

@@ -31,9 +31,7 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def _sqld(x: float) -> str:
-    return repr(float(x)) + "D"
+from tostore_spark.vector import _sqld
 
 
 def _sub_dist_sql(vec_field: str, start: int, code: Sequence[float]) -> str:

@@ -33,6 +33,7 @@ from tostore_spark.llmops.text import WORD_RE, tokens
 # one core (no-op when the scan already splits >= cores wide);
 # downstream frames are count/DECIMAL aggregates, partition-independent
 from tostore_spark.llmops.dedup import _spread
+from tostore_spark.pin import pin
 
 
 def query_terms(query: str) -> list[str]:
@@ -248,21 +249,21 @@ def tfidf_similar_pairs(docs: DataFrame, k: int = 20,
     v = tfidf_vectors(docs, text_field=text_field, id_field=id_field,
                       max_df_frac=max_df_frac)
     nw = Window.partitionBy("id")
-    v = (v.withColumn(
-            "nrm",
-            F.sqrt(F.sum(F.round(F.col("w") * F.col("w"), 9)
-                         .cast("decimal(28,9)")).over(nw).cast("double")))
-         # pin a WIDE tok-partitioned layout before the checkpoint: AQE
-         # coalesces the tiny norm-window exchange (measured: 1
-         # partition at sf0.1) and the checkpoint would pin that — the
-         # pair explosion below (the quadratic-ish stage) then runs on
-         # 1-2 cores.  Hash-partitioning on the JOIN key at the
-         # session's shuffle-partition count keeps the layout
-         # cluster-sized AND lets the self-join reuse the partitioning
-         # instead of re-exchanging both branches (guide §2.4).
-         .repartition(int(docs.sparkSession.conf.get(
-             "spark.sql.shuffle.partitions")), "tok")
-         .localCheckpoint(eager=True))   # both join branches: one build
+    # pin a WIDE tok-partitioned layout: AQE coalesces the tiny
+    # norm-window exchange (measured: 1 partition at sf0.1) and the pin
+    # would keep that — the pair explosion below (the quadratic-ish
+    # stage) then runs on 1-2 cores.  Hash-partitioning on the JOIN key
+    # at the session's shuffle-partition count keeps the layout
+    # cluster-sized AND lets the self-join reuse the partitioning
+    # instead of re-exchanging both branches (guide §2.4).  Both join
+    # branches read the one pin.
+    v = pin(v.withColumn(
+              "nrm",
+              F.sqrt(F.sum(F.round(F.col("w") * F.col("w"), 9)
+                           .cast("decimal(28,9)")).over(nw)
+                      .cast("double")))
+             .repartition(int(docs.sparkSession.conf.get(
+                 "spark.sql.shuffle.partitions")), "tok"), eager=True)
     a, b = v.alias("a"), v.alias("b")
     pairs = (a.join(b, (F.col("a.tok") == F.col("b.tok"))
                     & (F.col("a.id") < F.col("b.id")))

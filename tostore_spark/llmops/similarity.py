@@ -19,15 +19,13 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from tostore_spark.localdf import local_df
+from tostore_spark.pin import pin
+from tostore_spark.vector import _sqld
 
 
 def _dot_cols(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
                        F.lit(0.0), lambda acc, x: acc + x)
-
-
-def _sqld(x: float) -> str:
-    return repr(float(x)) + "D"
 
 
 def _dot_const_sql(field: str, vals) -> str:
@@ -542,9 +540,9 @@ def ivf_compact(spark, path: str) -> int:
     prev = conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        # localCheckpoint: the overwrite must not read the directories it
-        # is replacing through a lazy self-referencing plan
-        pinned = survivors.localCheckpoint(eager=True)
+        # eager: the overwrite must not read the directories it is
+        # replacing (pin module docstring, "Source files")
+        pinned = pin(survivors, eager=True)
         pinned.write.mode("overwrite") \
               .partitionBy("cell_id").parquet(os.path.join(path, "cells"))
         # dynamic overwrite only replaces partitions PRESENT in the write:
@@ -711,14 +709,11 @@ def robust_prune(edges: DataFrame, vectors: DataFrame,
     w = Window.partitionBy("node_id").orderBy(F.col("distance").asc(),
                                               F.col("neighbor_id").asc())
     ranked = edges.withColumn("__rk", F.row_number().over(w))
-    v_side = (ranked.join(vecs, ranked["neighbor_id"] == vecs["__vid"])
-                    .select("node_id", "neighbor_id", "distance", "__rk",
-                            F.col("__vv").alias("__nbv"))
-                    .withColumn("__nbn", _norm(F.col("__nbv")))
-                    # lazy: truncates lineage and shares ONE checkpoint
-                    # RDD across both rounds without paying a separate
-                    # materialization job up front
-                    .localCheckpoint(eager=False))  # reused by both rounds
+    # reused by both rounds
+    v_side = pin(ranked.join(vecs, ranked["neighbor_id"] == vecs["__vid"])
+                       .select("node_id", "neighbor_id", "distance", "__rk",
+                               F.col("__vv").alias("__nbv"))
+                       .withColumn("__nbn", _norm(F.col("__nbv"))))
     w_side = v_side.select(F.col("node_id").alias("__wn"),
                            F.col("neighbor_id").alias("__wid"),
                            F.col("__rk").alias("__wrk"),
@@ -727,16 +722,15 @@ def robust_prune(edges: DataFrame, vectors: DataFrame,
     # covering pairs (computed ONCE, filtered per round): w closer than
     # v and alpha * d(w, v) <= d(u, v); norms precomputed per edge row
     # (cosine_distance_prenorm doc), never per degree^2 pair
-    covers = (v_side.join(w_side,
-                          (v_side["node_id"] == w_side["__wn"])
-                          & (w_side["__wrk"] < v_side["__rk"]))
+    covers = pin(v_side.join(w_side,
+                             (v_side["node_id"] == w_side["__wn"])
+                             & (w_side["__wrk"] < v_side["__rk"]))
               .filter(F.lit(float(alpha))
                       * cosine_distance_prenorm(
                           F.col("__wv"), F.col("__nbv"),
                           F.col("__wn2"), F.col("__nbn"))
                       <= F.col("distance"))
-              .select("node_id", "neighbor_id", "__wid")
-              .localCheckpoint(eager=False))
+              .select("node_id", "neighbor_id", "__wid"))
     veto1 = covers.select("node_id", "neighbor_id").distinct()
     kept1 = (v_side.join(veto1, on=["node_id", "neighbor_id"],
                          how="left_anti")
@@ -813,20 +807,16 @@ def build_knn_graph(corpus: DataFrame, n_neighbors: int = 8,
     indexed, cents = ivf_build(corpus, n_cells=n_cells,
                                vec_field=vec_field, id_field=id_field,
                                centroids=centroids)
-    # spread BEFORE the checkpoint: a small corpus arrives as one file
-    # partition and the checkpoint pins that layout, so the |cell|^2
+    # spread BEFORE the pin: a small corpus arrives as one file
+    # partition and the pin keeps that layout, so the |cell|^2
     # kNN scoring below would run on ONE core (measured 3.0s -> 0.3s
     # at sf0.1).  No-op when the scan already splits >= cores wide.
     from tostore_spark.llmops.dedup import _spread
-    base = (_spread(indexed)
-                   .select(F.col(id_field).alias("node_id"),
-                           F.col(vec_field).alias("__v"), "cell_id")
-                   .withColumn("__nv", F.expr(_norm_sql("__v")))
-                   # lazy: the checkpoint RDD is shared by all 3
-                   # consumers below (RDD-level reuse) and materializes
-                   # inside the caller's first action instead of in a
-                   # dedicated up-front job
-                   .localCheckpoint(eager=False))  # reused 3x below
+    # reused 3x below
+    base = pin(_spread(indexed)
+               .select(F.col(id_field).alias("node_id"),
+                       F.col(vec_field).alias("__v"), "cell_id")
+               .withColumn("__nv", F.expr(_norm_sql("__v"))))
 
     # (a) blocked exact kNN inside each cell — norms precomputed per
     # ROW (base.__nv), never per pair (cosine_distance_prenorm doc)
@@ -987,7 +977,7 @@ def graph_search_many(graph: DataFrame, corpus: DataFrame,
     exact cosine distances throughout, so the "re-rank" stage is just
     the final window.
 
-    Each hop localCheckpoints the beam (the PageRank loop discipline)
+    Each hop pins the beam (the PageRank loop discipline)
     so lineage stays O(1) in hops.  ``seeds`` is the entry node set
     (``build_knn_graph``'s hubs — one per cell — unless the caller
     supplies a custom frame with the same id column as ``hub_id`` or
@@ -998,18 +988,9 @@ def graph_search_many(graph: DataFrame, corpus: DataFrame,
     """
     query_vec = query_vec or vec_field
     query_id = query_id or id_field
-    # lazy local checkpoints throughout the hop loop: each one still
-    # truncates lineage (the plan becomes a LogicalRDD, keeping the
-    # per-hop plan O(1)) and still computes exactly once (one shared
-    # checkpoint RDD per hop, reused by every downstream reference in
-    # the same DAG), but materialization happens inside the CALLER's
-    # first action — the old eager form paid one full scheduler+codegen
-    # job per hop, which dominated small-query searches (measured ~2.4s
-    # of q_similarity_graph's 6s at sf0.1 in 4 eager jobs)
-    q = (queries.select(F.col(query_id).alias("query_id"),
-                        F.col(query_vec).alias("__qv"))
-         .withColumn("__qn", F.expr(_norm_sql("__qv")))
-         .localCheckpoint(eager=False))
+    q = pin(queries.select(F.col(query_id).alias("query_id"),
+                           F.col(query_vec).alias("__qv"))
+                   .withColumn("__qn", F.expr(_norm_sql("__qv"))))
     c = corpus.select(F.col(id_field).alias("node_id"),
                       F.col(vec_field).alias("__cv"))
     # scale-adaptive hop-join shape (the _fits_broadcast discipline):
@@ -1020,8 +1001,8 @@ def graph_search_many(graph: DataFrame, corpus: DataFrame,
     # Spark could never choose this itself; bigger corpora keep the
     # shuffled joins (spillable, the safe path at scale).
     small_mode = _fits_broadcast(corpus)
-    c_normed = (c.withColumn("__cn", F.expr(_norm_sql("__cv")))
-                 .localCheckpoint(eager=False)) if small_mode else None
+    c_normed = (pin(c.withColumn("__cn", F.expr(_norm_sql("__cv"))))
+                if small_mode else None)
     seed_col = "hub_id" if "hub_id" in seeds.columns else "node_id"
     seed_nodes = seeds.select(F.col(seed_col).alias("node_id")).distinct()
 
@@ -1072,10 +1053,9 @@ def graph_search_many(graph: DataFrame, corpus: DataFrame,
     w = Window.partitionBy("query_id").orderBy(F.col("distance").asc(),
                                                F.col("node_id").asc())
     cand = q.select("query_id").crossJoin(F.broadcast(seed_nodes))
-    probed = cand.localCheckpoint(eager=False) if return_probed else None
-    beam = (_score(cand).withColumn("__r", F.row_number().over(w))
-            .filter(F.col("__r") <= ef).drop("__r")
-            .localCheckpoint(eager=False))
+    probed = cand if return_probed else None   # pinned once per hop
+    beam = pin(_score(cand).withColumn("__r", F.row_number().over(w))
+               .filter(F.col("__r") <= ef).drop("__r"))
     for _hop in range(int(max_hops)):
         expanded = (beam.select("query_id", "node_id")
                         .join(hop_graph,
@@ -1085,11 +1065,9 @@ def graph_search_many(graph: DataFrame, corpus: DataFrame,
         cand = _dedup(beam.select("query_id", "node_id")
                           .unionByName(expanded))
         if return_probed:
-            probed = (probed.unionByName(cand).distinct()
-                            .localCheckpoint(eager=False))
-        beam = (_score(cand).withColumn("__r", F.row_number().over(w))
-                .filter(F.col("__r") <= ef).drop("__r")
-                .localCheckpoint(eager=False))
+            probed = pin(probed.unionByName(cand).distinct())
+        beam = pin(_score(cand).withColumn("__r", F.row_number().over(w))
+                   .filter(F.col("__r") <= ef).drop("__r"))
     out = (beam.withColumn("rank", F.row_number().over(w))
                .filter(F.col("rank") <= k)
                .select("query_id", F.col("node_id").alias("neighbor_id"),
@@ -1110,12 +1088,11 @@ def graph_measure_recall(graph: DataFrame, corpus: DataFrame,
     distinct (query, node) pairs scored / (n_queries * corpus), the
     same meaning as IVF's nprobe/n_cells.  Compare graph vs IVF AT
     EQUAL probed fraction to see which index earns its build cost."""
-    queries = (corpus
-               .orderBy(F.md5(F.col(id_field).cast("string")).asc(),
-                        F.col(id_field).asc())
-               .limit(n_queries)
-               .select(id_field, vec_field)
-               .localCheckpoint(eager=False))
+    queries = pin(corpus
+                  .orderBy(F.md5(F.col(id_field).cast("string")).asc(),
+                           F.col(id_field).asc())
+                  .limit(n_queries)
+                  .select(id_field, vec_field))
     nq = queries.count()
     n_corpus = corpus.count()
     approx, probed = graph_search_many(
@@ -1246,9 +1223,8 @@ def graph_append(spark, path: str, corpus: DataFrame,
     id_field = id_field or meta.get("id_field", "vec_id")
     edges, hubs, _ = graph_read_index(spark, path)
     tomb = _graph_tombstones(spark, path)
-    batch = (new_nodes.select(F.col(id_field).alias("node_id"),
-                              F.col(vec_field).alias("__v"))
-             .localCheckpoint(eager=False))
+    batch = pin(new_nodes.select(F.col(id_field).alias("node_id"),
+                                 F.col(vec_field).alias("__v")))
     n = batch.count()
     if n == 0:
         return 0
@@ -1328,8 +1304,8 @@ def graph_compact(spark, path: str) -> int:
     edges = spark.read.parquet(os.path.join(path, "edges"))
     before = edges.count()
     live_e, live_h, _ = graph_read_index(spark, path)
-    pinned_e = live_e.localCheckpoint(eager=True)
-    pinned_h = live_h.localCheckpoint(eager=True)
+    pinned_e = pin(live_e, eager=True)
+    pinned_h = pin(live_h, eager=True)
     pinned_e.write.mode("overwrite").parquet(os.path.join(path, "edges"))
     pinned_h.write.mode("overwrite").parquet(os.path.join(path, "hubs"))
     shutil.rmtree(os.path.join(path, "tombstones"))
@@ -1394,15 +1370,14 @@ def hard_negatives(corpus: DataFrame, anchors: Optional[DataFrame] = None,
         indexed, cents = ivf_build(corpus, n_cells=n_cells,
                                    vec_field=vec_field,
                                    id_field=id_field, centroids=centroids)
-        # spread before the checkpoint pins the layout (build_knn_graph
+        # spread before the pin keeps the layout (build_knn_graph
         # doc): the probed-cell pair scoring below inherits this
         # parallelism on both sides
-        base = (_spread(indexed)
-                       .select(F.col(id_field).alias("__id"),
-                               F.col(label_field).alias("__lb"),
-                               F.col(vec_field).alias("__v"), "cell_id")
-                       .withColumn("__nv", F.expr(_norm_sql("__v")))
-                       .localCheckpoint(eager=False))  # anchor + corpus side
+        base = pin(_spread(indexed)
+                   .select(F.col(id_field).alias("__id"),
+                           F.col(label_field).alias("__lb"),
+                           F.col(vec_field).alias("__v"), "cell_id")
+                   .withColumn("__nv", F.expr(_norm_sql("__v"))))
         a = (base.select(F.col("__id").alias("query_id"),
                          F.col("__lb").alias("query_label"),
                          F.col("__v").alias("__qv"),

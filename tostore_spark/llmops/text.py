@@ -10,6 +10,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from tostore_spark.pin import pin
 
 WORD_RE = r"[a-z0-9]+"
 # BPE-ish: letter runs, single digits, or single punctuation marks
@@ -229,13 +230,13 @@ def unigram_drift(ref: DataFrame, cur: DataFrame,
     top slice) on every row.
 
     Scale shape: one explode + one hash-aggregate per side, a
-    vocab-keyed full outer join materialized ONCE (eager
-    localCheckpoint — the single-scan-totals discipline of the PSI
-    reports), one constants aggregate broadcast back, map-side
-    divergence math, a DECIMAL total, and a bounded top-k.  Per-token
-    contributions round to 12dp before the total (log2 is not
-    correctly rounded; 1-ulp engine differences are absorbed, the
-    ``drift_report`` precedent), so the report is engine-exact."""
+    vocab-keyed full outer join materialized ONCE (eager pin — the
+    single-scan-totals discipline of the PSI reports), one constants
+    aggregate broadcast back, map-side divergence math, a DECIMAL
+    total, and a bounded top-k.  Per-token contributions round to 12dp
+    before the total (log2 is not correctly rounded; 1-ulp engine
+    differences are absorbed, the ``drift_report`` precedent), so the
+    report is engine-exact."""
     if smooth <= 0:
         raise ValueError(f"smooth must be > 0, got {smooth}")
     t = F.col(text_field)
@@ -244,12 +245,13 @@ def unigram_drift(ref: DataFrame, cur: DataFrame,
         return (df.select(F.explode(tokens(t)).alias("token"))
                   .groupBy("token")
                   .agg(F.count(F.lit(1)).alias(name)))
-    joined = (counts(ref, "n_ref")
-              .join(counts(cur, "n_cur"), on="token", how="full_outer")
-              .select("token",
-                      F.coalesce("n_ref", F.lit(0)).alias("n_ref"),
-                      F.coalesce("n_cur", F.lit(0)).alias("n_cur"))
-              .localCheckpoint(eager=True))      # totals + report: one scan
+    # totals + report: one scan
+    joined = pin(counts(ref, "n_ref")
+                 .join(counts(cur, "n_cur"), on="token", how="full_outer")
+                 .select("token",
+                         F.coalesce("n_ref", F.lit(0)).alias("n_ref"),
+                         F.coalesce("n_cur", F.lit(0)).alias("n_cur")),
+                 eager=True)
     consts = joined.agg(F.sum("n_ref").cast("double").alias("__tr"),
                         F.sum("n_cur").cast("double").alias("__tc"),
                         F.count(F.lit(1)).cast("double").alias("__v"))

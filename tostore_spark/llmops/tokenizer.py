@@ -14,7 +14,7 @@ explode + groupBy on uniform (a, b) keys), a deterministic argmax
 (count desc, then pair lexicographic — a bounded 1-row collect, the
 same shape as the reference's index-stat reads), and a column-side
 left-to-right greedy merge over the symbol lists (a fold — no Python
-in the loop).  Lineage is cut with a periodic lazy localCheckpoint.
+in the loop).  Lineage is cut with a periodic lazy pin.
 
 Tokenization with the learned vocab is the scale-correct join form:
 the training frame already holds every known word's final symbol
@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from tostore_spark.llmops import text as TX
 from tostore_spark.localdf import local_df
+from tostore_spark.pin import pin
 
 
 def chars(word: Column) -> Column:
@@ -127,7 +128,7 @@ def train_bpe(df: DataFrame, num_merges: int = 50, min_count: int = 2,
     dominate the pairs their merges newly create (the typical Zipfian
     corpus case — and exactly the regime where batching pays).  B=1 IS
     the serial algorithm."""
-    sym = word_symbols(df, text_field=text_field).localCheckpoint(eager=False)
+    sym = pin(word_symbols(df, text_field=text_field))
     merges: list[tuple[int, str, str, int]] = []
     since_ckpt = 0
     while len(merges) < num_merges:
@@ -157,10 +158,11 @@ def train_bpe(df: DataFrame, num_merges: int = 50, min_count: int = 2,
         sym = sym.withColumn("sym", col)
         since_ckpt += len(chosen)
         if since_ckpt >= checkpoint_every:
-            sym = sym.localCheckpoint(eager=False)
+            sym = pin(sym)
             since_ckpt = 0
+    # sym is already a pin unless merges ran since the last one
     return BPEModel(merges=merges,
-                    word_tokens=sym.localCheckpoint(eager=False))
+                    word_tokens=pin(sym) if since_ckpt else sym)
 
 
 def tokenize_bpe(df: DataFrame, model: BPEModel,

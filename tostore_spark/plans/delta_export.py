@@ -1149,13 +1149,13 @@ def _export_update(engine, table: str, path: str,
                     "version": live["version"], "commit": "noop"}
         # pure-append extension: export ONLY the new segments' rows
         pby = list(ent.get("partition_by") or [])
-        pin = ent["df"].schema if pby else None
+        seg_schema = ent["df"].schema if pby else None
         df = None
         for seg in new_segs:
             part = _decrypt_for(engine, key[0], key[1],
-                                engine._read_parquet(seg, schema=pin))
-            if pin is not None:
-                part = part.select(*[f.name for f in pin.fields])
+                                engine._read_parquet(seg, schema=seg_schema))
+            if seg_schema is not None:
+                part = part.select(*[f.name for f in seg_schema.fields])
             df = part if df is None else df.unionByName(part)
         sch = ent["schema"]
         if (sch.ttl is not None and sch.ttl.ttl_ms > 0
@@ -1298,10 +1298,10 @@ def _export_update_dv(engine, key, ent, table: str, path: str,
     try:
         for kind, op_path in new_ops:
             if kind == "seg":
-                pin = ent["df"].schema if pby else None
+                seg_schema = ent["df"].schema if pby else None
                 part = _decrypt_for(engine, key[0], key[1],
                                     engine._read_parquet(op_path,
-                                                         schema=pin))
+                                                         schema=seg_schema))
                 part = part.select(*[f.name for f in exp_schema.fields])
                 staged = _stage_data_files(part, path, next_v, None,
                                            partition_by=pby)

@@ -52,6 +52,7 @@ from contextlib import contextmanager
 from urllib.parse import unquote
 
 from tostore_spark.localdf import local_df
+from tostore_spark.pin import pin
 from tostore_spark.plans.avro_io import (read_container_file,
                                          write_container_file)
 
@@ -1839,9 +1840,9 @@ def _export_iceberg_update(engine, table: str, path: str,
 
     def _seg_frame(op_path):
         pby = list(ent.get("partition_by") or [])
-        pin = ent["df"].schema if pby else None
+        seg_schema = ent["df"].schema if pby else None
         part = _decrypt_for(engine, key[0], key[1],
-                            engine._read_parquet(op_path, schema=pin))
+                            engine._read_parquet(op_path, schema=seg_schema))
         part = part.select(*[f.name for f in ent["df"].schema.fields])
         if has_ttl:
             from tostore_spark.ttl import ttl_filter
@@ -3446,7 +3447,7 @@ def remove_orphan_files(path: str, older_than_ms: int | None = None,
 
 # ------------------------------------------------------------- changelog
 
-_CHANGES_BARRIER = 16           # chain parts per localCheckpoint
+_CHANGES_BARRIER = 16           # chain parts per pin
                                 # barrier in the changelog fold — a
                                 # bootstrap over N snapshots analyzes
                                 # ≤16-way unions, never an N-way plan
@@ -3561,7 +3562,7 @@ def read_iceberg_changes(spark, path: str,
     driver-side metadata ∝ file count, exactly like the Delta log
     fold.
 
-    The returned feed is EAGERLY MATERIALIZED (``localCheckpoint``
+    The returned feed is EAGERLY MATERIALIZED (an eager ``pin``
     inside the fold, r16): per-snapshot schema binding pins session
     confs that must be restored before returning, and the barriered
     fold caps plan depth across long histories.  Consequences callers
@@ -3921,7 +3922,7 @@ def read_iceberg_changes(spark, path: str,
     def _add_part(part):
         """Accumulate one snapshot's change frame; every
         ``_CHANGES_BARRIER`` parts the running union folds into a
-        materialized ``localCheckpoint`` segment, so a long-history
+        materialized (eagerly pinned) segment, so a long-history
         bootstrap never builds an O(history)-way union plan and
         earlier segments are never re-derived while later ones
         fold."""
@@ -3929,7 +3930,7 @@ def read_iceberg_changes(spark, path: str,
         cur = part if cur is None else cur.unionByName(part)
         cur_n += 1
         if cur_n >= _CHANGES_BARRIER:
-            segs.append(cur.localCheckpoint(eager=True))
+            segs.append(pin(cur, eager=True))
             cur = None
             cur_n = 0
 
@@ -4037,7 +4038,7 @@ def read_iceberg_changes(spark, path: str,
         if node is not None:
             from tostore_spark.compile import where_filter_column
             out = out.filter(where_filter_column(node, out.schema))
-        out = out.select(*out_cols).localCheckpoint(eager=True)
+        out = pin(out.select(*out_cols), eager=True)
     return out
 
 

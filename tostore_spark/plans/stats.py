@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from tostore_spark.localdf import local_df
+from tostore_spark.pin import pin
 
 
 def column_stats(df: DataFrame, cols: Optional[Sequence[str]] = None,
@@ -101,7 +102,7 @@ def exact_percentiles_frame(df: DataFrame, col: str,
     ambiguous but the VALUE at any rank is well-defined, so the result
     is deterministic.
 
-    The bucketed frame is MATERIALIZED (eager localCheckpoint) before
+    The bucketed frame is PINNED (``tostore_spark.pin``) before
     the counting pass, so the exact counts and the rank-selection pass
     read the same rows even when the input lineage is non-deterministic
     (rand()/unseeded sample upstream) — without it, stage-3 ranks could
@@ -199,7 +200,7 @@ def _exact_onepass_bounds(spark, vals: DataFrame, fracs, round_dp):
     gate), rank + whole-frame count in the same pass, bracketing rows
     filtered in-plan.  Because ranks, n, and values all come from ONE
     evaluation, non-deterministic upstream lineage cannot desynchronize
-    them — the property the big tier buys with its localCheckpoint.
+    them — the property the big tier buys with its pin.
     Interpolation stays driver-side with arithmetic identical to the
     bucketed path (same doubles, same Python round)."""
     w = Window.orderBy("__v")
@@ -231,7 +232,7 @@ def _exact_onepass_bounds(spark, vals: DataFrame, fracs, round_dp):
 def _bucketize(spark, vals: DataFrame, nb: int, edges=None):
     """Sketch-propose bucket edges (unless the caller already ran the
     sketch and passes ``edges``), materialize the bucketed frame
-    (eager localCheckpoint — the ONE materialization of the selection),
+    (a pin — the ONE materialization of the selection),
     and count each bucket exactly with its min/max.  Returns
     (bucketed frame, counts, (min,max) spans, cumulative offsets)."""
     if edges is None:
@@ -249,12 +250,9 @@ def _bucketize(spark, vals: DataFrame, nb: int, edges=None):
     for e in edges:
         term = (F.col("__v") >= F.lit(float(e))).cast("int")
         bucket_id = term if bucket_id is None else bucket_id + term
-    # lazy: the counting collect below is the first action, so it
-    # materializes the checkpoint in the SAME job (one evaluation —
-    # the determinism guarantee is the single checkpoint RDD, not the
-    # eagerness) instead of paying a dedicated pin job first
-    bucketed = (vals.withColumn("__b", bucket_id)
-                    .localCheckpoint(eager=False))
+    # pinned: the counting collect and the selection below read ONE
+    # evaluation of the bucketed frame
+    bucketed = pin(vals.withColumn("__b", bucket_id))
     # stage 2: exact per-bucket counts + min/max -> offsets (<= nb rows)
     cnt_rows = bucketed.groupBy("__b").agg(
         F.count(F.lit(1)).alias("c"),
@@ -511,9 +509,8 @@ def analyze_table(engine, table: str,
         for k in list(cache):
             if k[0] == key[0] and k[1] != key[1]:
                 del cache[k]
-        cache[key] = column_stats(engine.df(table), cols,
-                                  exact_ndv=exact_ndv) \
-            .localCheckpoint(eager=True)
+        cache[key] = pin(column_stats(engine.df(table), cols,
+                                      exact_ndv=exact_ndv), eager=True)
     return cache[key]
 
 
@@ -812,12 +809,11 @@ def drift_report(ref: DataFrame, cur: DataFrame, col: str,
     # materialize the <= n_buckets+2-row bucket frame ONCE before the
     # psi_total aggregate re-reads it — otherwise the total's lineage
     # re-executes both side scans a second time
-    out = (out.withColumn("lo", F.col("__mn") + F.col("bucket") * w)
-              .withColumn("hi", F.col("__mn")
-                                + (F.col("bucket") + 1) * w)
-              .select("bucket", "lo", "hi", "n_ref", "n_cur",
-                      "p_ref", "p_cur", "psi")
-              .localCheckpoint(eager=False))
+    out = pin(out.withColumn("lo", F.col("__mn") + F.col("bucket") * w)
+                 .withColumn("hi", F.col("__mn")
+                                   + (F.col("bucket") + 1) * w)
+                 .select("bucket", "lo", "hi", "n_ref", "n_cur",
+                         "p_ref", "p_cur", "psi"))
     psi_total = out.agg(F.sum(
         F.round(F.col("psi"), 9).cast("decimal(28,9)")).cast("double")
         .alias("psi_total"))
@@ -869,9 +865,8 @@ def drift_report_categorical(ref: DataFrame, cur: DataFrame, col: str,
                 * F.log(F.col("p_cur") / F.col("p_ref")), 12)))
     # materialize the |categories|-row frame ONCE before psi_total
     # re-reads it (else both side scans execute a second time)
-    out = (out.select("category", "n_ref", "n_cur", "p_ref", "p_cur",
-                      "psi")
-              .localCheckpoint(eager=False))
+    out = pin(out.select("category", "n_ref", "n_cur", "p_ref", "p_cur",
+                         "psi"))
     psi_total = out.agg(F.sum(
         F.round(F.col("psi"), 9).cast("decimal(28,9)")).cast("double")
         .alias("psi_total"))
@@ -963,13 +958,12 @@ def drift_report_quantile(ref: DataFrame, cur: DataFrame, col: str,
     hi_map = F.array(*[F.lit(float(e)) for e in edges + [edges[-1]]])
     # materialize the n_buckets-row frame ONCE before psi_total
     # re-reads it (else both side counting scans execute twice)
-    out = (out.withColumn("edge_lo",
-                          F.element_at(lo_map, F.col("bucket") + 1))
-              .withColumn("edge_hi",
-                          F.element_at(hi_map, F.col("bucket") + 1))
-              .select("bucket", "edge_lo", "edge_hi", "n_ref",
-                      "n_cur", "p_ref", "p_cur", "psi")
-              .localCheckpoint(eager=False))
+    out = pin(out.withColumn("edge_lo",
+                             F.element_at(lo_map, F.col("bucket") + 1))
+                 .withColumn("edge_hi",
+                             F.element_at(hi_map, F.col("bucket") + 1))
+                 .select("bucket", "edge_lo", "edge_hi", "n_ref",
+                         "n_cur", "p_ref", "p_cur", "psi"))
     psi_total = out.agg(F.sum(
         F.round(F.col("psi"), 9).cast("decimal(28,9)")).cast("double")
         .alias("psi_total"))

@@ -51,6 +51,7 @@ from typing import Optional
 from tostore_spark import fs as _fsmod
 from tostore_spark.backup import _schema_from_dict, _schema_to_dict
 from tostore_spark.localdf import local_df
+from tostore_spark.pin import pin
 
 MANIFEST = "manifest.json"
 
@@ -190,6 +191,10 @@ def table_version_dir(warehouse: str, space: str, table: str,
 
 _LOCK = ".flush.lock"
 _LOCK_STALE_S = 600
+#: how long a flush waits out another engine's live claim on the same
+#: (table, version), polling every ``_CLAIM_POLL_S`` (``_claim_version``)
+_CLAIM_WAIT_S = 120
+_CLAIM_POLL_S = 0.1
 
 
 class FlushLock:
@@ -338,14 +343,14 @@ def _read_back_form(schema_json: str) -> str:
     return json.dumps(walk(json.loads(schema_json)), sort_keys=True)
 
 
-def _recipe_pin(fs, ops):
-    """``(pin, partitioned)`` for reading a recipe's data segments.
+def _recipe_schema(fs, ops):
+    """``(schema, partitioned)`` for reading a recipe's data segments.
 
-    ``pin`` is the recorded schema when every segment root recorded the
+    ``schema`` is the recorded schema when every segment root recorded the
     same one (newest root's record), else None: the read infers, as for
     versions written before schemas were recorded or tables whose
-    roots disagree.  Hive-partitioned recipes always pin (the newest
-    record): an inferred read would retype partition values that live
+    roots disagree.  Hive-partitioned recipes always carry one (the
+    newest record): an inferred read would retype partition values that live
     in directory names ('001' -> 1)."""
     recs = [_schema_record(fs, p) for k, p in ops if k == "seg"]
     partitioned = any(r.get("partitioned") for r in recs)
@@ -366,15 +371,15 @@ def read_delete_keys(engine, vdir: str):
     support) — correct either way."""
     ddir = _fsmod.join(vdir, _DELETES_SUBDIR)
     fs = _fs(engine)
-    pin = _struct(_schema_record(fs, vdir).get("key_schema"))
+    schema = _struct(_schema_record(fs, vdir).get("key_schema"))
     try:
         files = [f for f in fs.listdir(ddir) if f.endswith(".parquet")]
         if files:
             return engine._read_parquet(
-                [_fsmod.join(ddir, f) for f in files], schema=pin)
+                [_fsmod.join(ddir, f) for f in files], schema=schema)
     except Exception:
         pass
-    return engine._read_parquet(ddir, schema=pin)
+    return engine._read_parquet(ddir, schema=schema)
 
 
 def _version_ops(fs, vdir: str) -> list:
@@ -396,8 +401,8 @@ def _version_ops(fs, vdir: str) -> list:
         return [["seg", vdir]]
 
 
-def _version_pin(fs, vdir: str):
-    """The Spark schema a version's reads pin: the ``spark_schema`` of
+def _version_schema(fs, vdir: str):
+    """The Spark schema a version's reads use: the ``spark_schema`` of
     its schema record, written by every flush (``_SCHEMA_SIDECAR``).
     Partitioned versions depend on it — partition-column values live in
     directory names, and an unpinned read would re-INFER their types (a
@@ -415,14 +420,14 @@ def _version_refs(fs, vdir: str) -> list[str]:
     return [p for _k, p in _version_ops(fs, vdir)]
 
 
-def _ops_frame(engine, ops, pin=None, keep=None):
+def _ops_frame(engine, ops, schema=None, keep=None):
     """Fold a version recipe into one lazy frame: segments union in
     order, each deletion vector anti-joins on its PK column (the frame
     is broadcast — delete sets are small relative to data).  Every read
-    pins the schemas the flush recorded (``_recipe_pin``,
+    uses the schemas the flush recorded (``_recipe_schema``,
     ``read_delete_keys``), so building the frame runs no schema-
     inference job; a caller that already knows the recipe's
-    ``(schema, partitioned)`` passes it as ``pin`` and skips the
+    ``(schema, partitioned)`` passes it as ``schema`` and skips the
     sidecar reads.  Unpartitioned pure-seg recipes keep the single
     multi-root scan; hive-partitioned roots read one scan per root
     (partition discovery cannot share a scan across roots).
@@ -436,7 +441,7 @@ def _ops_frame(engine, ops, pin=None, keep=None):
     ``basePath``); when nothing survives the frame is empty, of the
     recipe's schema."""
     from pyspark.sql import functions as F
-    schema, partitioned = pin or _recipe_pin(_fs(engine), ops)
+    schema, partitioned = schema or _recipe_schema(_fs(engine), ops)
 
     def paths(seg):
         if keep is None:
@@ -498,46 +503,66 @@ def _claim_version(fs, wh: str, space: str, table: str, version: int,
     whose version committed is kept FOREVER (it shields the committed
     directory from any later same-numbered writer; vacuum prunes it
     with the version dir).  A stale claim (old mtime AND version not in
-    the manifest — a crashed writer's orphan) can be broken."""
+    the manifest — a crashed writer's orphan) can be broken.
+
+    A LIVE claim is waited out (up to ``_CLAIM_WAIT_S``), not raised
+    at once: the loser returns when the winner commits (raising
+    "already committed", so it refreshes onto the winner's version) or
+    aborts (its claim vanishes and the loser takes it).  Every lost
+    race then costs the loser exactly one commit by someone else.
+    Raising at once let a loser burn its retries re-claiming a version
+    whose winner was still writing: under load a slow writer lost
+    every race.  Flushes claim tables in sorted order, so two waiting
+    multi-table flushes cannot wait on each other."""
     import time
     fs.mkdirs(_fsmod.join(wh, space, table, _TABLE_LOG))
     path = _claim_path(wh, space, table, version)
-    for _ in range(2):
+    deadline = time.time() + _CLAIM_WAIT_S
+    while True:
         try:
             fs.create_exclusive(path, token)
             return path
         except FileExistsError:
-            if committed_ver is not None and committed_ver >= version:
-                raise ConcurrentWriteError(
-                    f"{space}/{table} already committed at v{committed_ver} "
-                    f">= v{version}; engine.refresh() and retry") from None
+            pass
+        if committed_ver is not None and committed_ver >= version:
+            raise ConcurrentWriteError(
+                f"{space}/{table} already committed at v{committed_ver} "
+                f">= v{version}; engine.refresh() and retry") from None
+        try:
+            age = time.time() - fs.getmtime(path)
+        except OSError:
+            age = None    # released between the create and the stat
+        # re-read the manifest: the winner may have committed (then
+        # this claim is kept forever — it shields the committed
+        # directory — and must never be broken)
+        man = read_manifest(wh, fs=fs) or {}
+        cv = next((e.get("version", 0)
+                   for e in man.get("tables", {}).values()
+                   if (e["space"], e["name"]) == (space, table)), None)
+        if cv is not None and cv >= version:
+            raise ConcurrentWriteError(
+                f"{space}/{table} already committed at v{cv} >= "
+                f"v{version}; engine.refresh() and retry") from None
+        if age is not None and age > _LOCK_STALE_S:
             try:
-                if time.time() - fs.getmtime(path) > _LOCK_STALE_S:
-                    # re-read the manifest before breaking: a claim
-                    # whose version COMMITTED is kept forever (it
-                    # shields the committed directory); only a claim
-                    # that is both old AND uncommitted is an orphan
-                    man = read_manifest(wh, fs=fs) or {}
-                    cv = next(
-                        (e.get("version", 0)
-                         for e in man.get("tables", {}).values()
-                         if (e["space"], e["name"]) == (space, table)),
-                        None)
-                    if cv is not None and cv >= version:
-                        raise ConcurrentWriteError(
-                            f"{space}/{table} already committed at "
-                            f"v{cv} >= v{version}; engine.refresh() "
-                            "and retry") from None
-                    fs.delete(path)   # crashed writer's orphan claim
-                    continue
+                fs.delete(path)   # crashed writer's orphan claim
             except OSError:
-                continue
+                pass
+            continue
+        if time.time() >= deadline:
             raise ConcurrentWriteError(
                 f"version v{version} of {space}/{table} is being written "
-                "by another engine (live claim); retry after it commits"
-            ) from None
-    raise ConcurrentWriteError(
-        f"could not claim v{version} of {space}/{table}")
+                "by another engine (live claim); retry after it commits")
+        time.sleep(_CLAIM_POLL_S)
+
+
+def pin_table(engine, key: tuple) -> None:
+    """Cut a registered table's lineage in memory: its registry frame
+    becomes an eager pin of itself (the batch analog of tostore's
+    write-buffer compaction).  Eager, because the frame must stop
+    referencing whatever the mutations chained on it; not durable."""
+    ent = engine._tables[key]
+    ent["df"] = pin(ent["df"], eager=True)
 
 
 def flush_tables(engine, flush_storage: bool = True,
@@ -546,7 +571,7 @@ def flush_tables(engine, flush_storage: bool = True,
     generation) to the warehouse and re-register it from the written
     parquet — one pass that both bounds lineage and makes the mutation
     durable.  Without a warehouse (or with flush_storage=False) dirty
-    tables are only localCheckpoint-ed (memory barrier, NOT durable).
+    tables are only pinned (``pin_table``: memory barrier, NOT durable).
     Returns the list of flushed table names.
 
     Concurrency — three phases, data written OUTSIDE the lock:
@@ -596,7 +621,7 @@ def flush_tables(engine, flush_storage: bool = True,
     if not durable:
         for key, ent in list(engine._tables.items()):
             if _dirty(key, ent) and engine._generations.get(key, 0) > 0:
-                ent["df"] = ent["df"].localCheckpoint(eager=True)
+                pin_table(engine, key)
         return flushed
 
     fs = _fs(engine)
@@ -637,8 +662,10 @@ def flush_tables(engine, flush_storage: bool = True,
                 raise WriteSkewError(f"{k[0]}/{k[1]}", rs[k], cv)
 
     # ---- phase 1: optimistic CAS (no lock) -------------------------
-    dirty_keys = [k for k, ent in list(engine._tables.items())
-                  if _dirty(k, ent)]
+    # sorted: every flush claims versions in one global order
+    # (_claim_version waits on live claims)
+    dirty_keys = sorted(k for k, ent in list(engine._tables.items())
+                        if _dirty(k, ent))
     cur = read_manifest(wh, fs=fs)
     theirs, conflicts = _cas_conflicts(cur, dirty_keys)
     if conflicts:
@@ -1403,7 +1430,7 @@ def _extract_local_feeds(engine, conflicts, old_flushed) -> dict:
     """Row-merge step 1 (before the registry swap): for each conflicted
     table, materialize THIS engine's local changes as a change feed —
     diff(the version this engine last flushed, its current local state).
-    The eager checkpoint pins the feed's rows so the replay needs
+    The eager pin holds the feed's rows so the replay needs
     neither the old version directory nor the local lineage again.
 
     Only tables with a readable local base qualify: a table this engine
@@ -1428,7 +1455,7 @@ def _extract_local_feeds(engine, conflicts, old_flushed) -> dict:
                     .withColumn("change", F.lit("insert")))
         dele = (base.select(*cols).exceptAll(local.select(*cols))
                      .withColumn("change", F.lit("delete")))
-        feeds[k] = ins.unionByName(dele).localCheckpoint(eager=True)
+        feeds[k] = pin(ins.unionByName(dele), eager=True)
     return feeds
 
 
@@ -1441,7 +1468,7 @@ def _apply_local_feed(engine, k, feed,
     the refreshed state means BOTH writers changed/deleted that row.
 
     Every distributed step is bounded: the overlap test is one
-    exceptAll, conflict keys materialize once (eager checkpoint,
+    exceptAll, conflict keys materialize once (eager pin,
     |conflicts| rows), and driver traffic is capped at the report's
     ``_REPORT_KEY_CAP`` sample — never data-sized."""
     from pyspark.sql import functions as F
@@ -1487,7 +1514,7 @@ def _apply_local_feed(engine, k, feed,
             f"on_row_conflict={on_row_conflict!r} needs a primary key "
             f"on {space}/{table} to pair overlapping rows; the table "
             "has none — only 'error' is available")
-    conf = missing.select(pk).distinct().localCheckpoint(eager=True)
+    conf = pin(missing.select(pk).distinct(), eager=True)
     n_conf = conf.count()
     keys = sorted(r[pk] for r in conf.limit(_REPORT_KEY_CAP).collect())
     if on_row_conflict == "first_wins":
@@ -1512,9 +1539,8 @@ def _apply_local_feed(engine, k, feed,
 
     b3, o3, t3 = (_side(dele, "b"), _side(ins, "o"),
                   _side(remote.select(*cols), "t"))
-    j = (b3.join(o3, on=pk, how="full")
-           .join(t3, on=pk, how="full")
-           .localCheckpoint(eager=True))
+    j = pin(b3.join(o3, on=pk, how="full")
+              .join(t3, on=pk, how="full"), eager=True)
     if j.count() != n_conf or any(
             cnt != n_conf for cnt in
             (b3.count(), o3.count(), t3.count())):
@@ -1794,10 +1820,10 @@ def _diff_from_recipe(engine, table: str, from_version: int,
     engine._pinned_versions.add((space, table, from_version))
     engine._pinned_versions.add((space, table, to_version))
     tail = ops_to[len(ops_from):]
-    # tail reads pin the to-version's recorded schema (exact
+    # tail reads use the to-version's recorded schema (exact
     # partition-value types, no inference job per root); the base
-    # state folds through _ops_frame, which pins its own recipe
-    pin = _version_pin(fs, vt)
+    # state folds through _ops_frame, which reads its own recipe's
+    tail_schema = _version_schema(fs, vt)
     # TTL tables: raw segment reads would resurrect expired-but-
     # unswept rows that the exceptAll fallback (read_version, TTL-
     # filtered) never sees — filter every raw read the same way so
@@ -1828,7 +1854,7 @@ def _diff_from_recipe(engine, table: str, from_version: int,
                  for k, p in tail if k != "seg"]
     for kind, path in tail:
         if kind == "seg":
-            rows = _ttlf(engine._read_parquet(path, schema=pin))
+            rows = _ttlf(engine._read_parquet(path, schema=tail_schema))
             rows = _decrypt_for(engine, space, table, rows)
             if cols is None:
                 cols = sorted(rows.columns)
@@ -1980,9 +2006,9 @@ class SnapshotView:
         if not hasattr(engine, "_pinned_versions"):
             engine._pinned_versions = set()
         for ent in manifest.get("tables", {}).values():
-            pin = (ent["space"], ent["name"], ent.get("version", 0))
-            engine._pinned_versions.add(pin)
-            self._pins.append(pin)
+            ver = (ent["space"], ent["name"], ent.get("version", 0))
+            engine._pinned_versions.add(ver)
+            self._pins.append(ver)
 
     def tables(self) -> list[str]:
         return sorted(e["name"] for e in
@@ -2010,8 +2036,8 @@ class SnapshotView:
         """Unpin this snapshot's versions (vacuum may then prune them;
         any still-live frame from this snapshot fails on its next
         action once pruned)."""
-        for pin in self._pins:
-            self._engine._pinned_versions.discard(pin)
+        for ver in self._pins:
+            self._engine._pinned_versions.discard(ver)
         self._pins = []
 
 

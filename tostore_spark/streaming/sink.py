@@ -16,6 +16,7 @@ from __future__ import annotations
 from typing import Optional
 
 from pyspark.sql import DataFrame
+from tostore_spark.pin import pin
 
 
 def merge_batch(engine, table: str, batch_df: DataFrame,
@@ -24,10 +25,15 @@ def merge_batch(engine, table: str, batch_df: DataFrame,
 
     ``upsert``: rows whose primary key already exists replace the stored
     row (PK left-anti join + union — one distributed merge, no row loop);
-    ``append``: plain union.  The batch is pinned with an eager
-    localCheckpoint first: a foreachBatch frame is only valid during its
-    call, while the registry needs a plan that outlives it."""
-    pinned = batch_df.localCheckpoint(eager=True)
+    ``append``: plain union.  The batch is pinned eagerly first: a
+    foreachBatch frame is only valid during its call, while the
+    registry needs a plan that outlives it."""
+    return _merge_pinned(engine, table, pin(batch_df, eager=True), mode)
+
+
+def _merge_pinned(engine, table: str, pinned: DataFrame,
+                  mode: str) -> int:
+    """``merge_batch`` over a frame that is already an eager pin."""
     n = pinned.count()
     if n == 0:
         return 0
@@ -167,12 +173,14 @@ def exactly_once_multi_processor(engine, sinks: list,
         last = engine.get_value(key)
         if last is not None and int(batch_id) <= int(last):
             return                      # durably committed already
-        pinned = batch_df.localCheckpoint(eager=True)
+        pinned = pin(batch_df, eager=True)
         merged = 0
         for s in sinks:
-            frame = s["transform"](pinned) if s.get("transform") else pinned
-            merged += merge_batch(engine, s["table"], frame,
-                                  mode=s.get("mode", "upsert"))
+            t = s.get("transform")
+            # an identity sink merges the batch pin itself
+            frame = pin(t(pinned), eager=True) if t else pinned
+            merged += _merge_pinned(engine, s["table"], frame,
+                                    s.get("mode", "upsert"))
         engine.set_value(key, int(batch_id))
         if getattr(engine, "_warehouse", None):
             engine.flush()              # N tables + ledger: ONE CAS
@@ -228,13 +236,13 @@ def neardup_ingest_processor(engine, table: str, index_table: str,
         if (exactly_once and last is not None
                 and int(batch_id) <= int(last)):
             return 0                    # durably committed already
-        pinned = batch_df.localCheckpoint(eager=True)
+        pinned = pin(batch_df, eager=True)
         if pinned.isEmpty():
             return 0
-        new_idx = minhash_band_index(
+        new_idx = pin(minhash_band_index(
             pinned, text_field=text_field, id_field=id_field,
             num_hashes=num_hashes, bands=bands,
-            shingle_k=shingle_k).localCheckpoint(eager=True)
+            shingle_k=shingle_k), eager=True)
         corpus_idx = engine.df(index_table)
         vs_corpus = (new_idx.join(
             corpus_idx.select(F.col("band").alias("band")),
@@ -243,8 +251,8 @@ def neardup_ingest_processor(engine, table: str, index_table: str,
         vs_smaller = (a.join(b, (F.col("a.band") == F.col("b.band"))
                              & (F.col("b.id") < F.col("a.id")), "semi")
                        .select("id"))
-        drop_ids = (vs_corpus.unionByName(vs_smaller).distinct()
-                    .localCheckpoint(eager=True))
+        drop_ids = pin(vs_corpus.unionByName(vs_smaller).distinct(),
+                       eager=True)
         survivors = pinned.join(
             drop_ids.withColumnRenamed("id", id_field),
             on=id_field, how="left_anti")
@@ -323,7 +331,7 @@ def write_stream_to_mv(engine, stream_df: DataFrame, mv_table: str,
     from tostore_spark.plans.mv import mv_delta, mv_merge
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        pinned = batch_df.localCheckpoint(eager=True)
+        pinned = pin(batch_df, eager=True)
         if pinned.isEmpty():
             return
         deltas = []
@@ -345,7 +353,7 @@ def write_stream_to_mv(engine, stream_df: DataFrame, mv_table: str,
         else:
             merged = mv_merge(deltas[0], *deltas[1:], keys=keys)
         # pin: the MV is |distinct keys| rows and must outlive the batch
-        pinned_mv = merged.localCheckpoint(eager=True)
+        pinned_mv = pin(merged, eager=True)
         if engine.table_exists(mv_table):
             engine.set_df(mv_table, pinned_mv)
         else:

@@ -32,6 +32,7 @@ from tostore_spark.expr import Expr
 from tostore_spark.query import _Frame
 from tostore_spark.schema import PrimaryKeyType, TableSchema
 from tostore_spark.localdf import local_df
+from tostore_spark.pin import pin
 
 _B62 = "0123456789ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz"
 
@@ -326,7 +327,7 @@ def _pin_touched(engine, table: str,
     if engine._epoch_poisoned(engine._resolve(table)):
         return None
     try:
-        return touched.localCheckpoint(eager=True)
+        return pin(touched, eager=True)
     except Exception:
         return None
 
@@ -594,7 +595,7 @@ class _MutationBuilder:
         """Pin a PK-keyed mutation's touched rows once and probe them
         with ONE collect.  ``touched`` is ``df.filter(pred)`` (update
         adds ``__fail``, the unique-collision flag, and its new values):
-        one eager localCheckpoint pins it, and one collect returns the
+        one eager pin holds it, and one collect returns the
         matched count, the failed count, the null-PK count among the
         applied rows, and how many survivors share an applied PK
         (survivors semi-joined with the broadcast applied keys; a
@@ -611,7 +612,7 @@ class _MutationBuilder:
         lazy rewrite path, which surfaces any real error)."""
         q = f"`{pk}`"
         try:
-            pinned = touched.localCheckpoint(eager=True)
+            pinned = pin(touched, eager=True)
             has_fail = "__fail" in pinned.columns
             fail = "__fail" if has_fail else "false"
             applied = f"coalesce(NOT {fail}, false)"
@@ -691,7 +692,7 @@ class UpdateBuilder(_MutationBuilder):
 
         A PK-keyed update (the table has a primary key the update does
         not change, ``engine.delete_vectors`` on) runs two Spark
-        actions: one eager localCheckpoint of the touched rows and ONE
+        actions: one eager pin of the touched rows and ONE
         collect returning the matched, collision and null-PK counts and
         the duplicate-PK veto (``_one_pass``).  The flush commits the
         touched rows as a replace epoch, so the new table frame itself
