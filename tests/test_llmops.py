@@ -610,14 +610,10 @@ def test_dedup_clusters_raises_when_not_converged(spark):
     """A long chain cannot settle in one round: max_iterations=1 must
     raise instead of returning partial labels."""
     from tostore_spark.llmops.dedup import dedup_clusters
-    from tostore_spark.functions.graph import connected_components
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], ["id_a", "id_b"])
     with pytest.raises(RuntimeError, match="did not converge"):
         dedup_clusters(pairs, max_iterations=1)
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, src="id_a", dst="id_b",
-                             max_iterations=1)
 
 
 def test_dedup_apply_keeps_one_per_cluster(spark):

@@ -24,27 +24,22 @@ class TestOnePassPercentiles:
     job replaces sketch + checkpoint + counts + selection, values
     bit-identical by construction."""
 
-    def test_tiers_bit_identical(self, spark, events):
+    def test_tiers_bit_identical(self, spark, events, monkeypatch):
         fracs = [0.0, 0.1, 0.25, 0.5, 0.9, 0.99, 1.0]
         small = S.exact_percentiles_frame(
             events, "value", fracs, round_dp=6).first()["__bounds"]
-        spark.conf.set("spark.tostore.percentile.onepass.maxRows", "1")
-        try:
-            big = S.exact_percentiles_frame(
-                events, "value", fracs, round_dp=6).first()["__bounds"]
-        finally:
-            spark.conf.unset("spark.tostore.percentile.onepass.maxRows")
+        monkeypatch.setattr(S, "_ONEPASS_MAX_ROWS", 1)
+        big = S.exact_percentiles_frame(
+            events, "value", fracs, round_dp=6).first()["__bounds"]
         assert small == big
 
-    def test_tiers_bit_identical_unrounded(self, spark, events):
+    def test_tiers_bit_identical_unrounded(self, spark, events,
+                                           monkeypatch):
         small = S.exact_percentiles_frame(
             events, "value", [0.5]).first()["__bounds"]
-        spark.conf.set("spark.tostore.percentile.onepass.maxRows", "1")
-        try:
-            big = S.exact_percentiles_frame(
-                events, "value", [0.5]).first()["__bounds"]
-        finally:
-            spark.conf.unset("spark.tostore.percentile.onepass.maxRows")
+        monkeypatch.setattr(S, "_ONEPASS_MAX_ROWS", 1)
+        big = S.exact_percentiles_frame(
+            events, "value", [0.5]).first()["__bounds"]
         assert small == big
 
     def test_empty_input(self, spark, events):
@@ -53,8 +48,8 @@ class TestOnePassPercentiles:
         assert out["__bounds"] == []
 
     def test_checkpointed_input_routes_and_matches(self, spark, events):
-        """Plan-size-unknown lineage (checkpointed RDD) still resolves
-        exactly — the sketch-job count adjudicates the tier."""
+        """A checkpointed input (the pin keeps its origin's size
+        estimate) resolves exactly like its origin."""
         ck = events.select("value").localCheckpoint(eager=True)
         got = S.exact_percentiles_frame(ck, "value", [0.5],
                                         round_dp=6).first()["__bounds"]
@@ -62,7 +57,7 @@ class TestOnePassPercentiles:
                                         round_dp=6).first()["__bounds"]
         assert got == ref
 
-    def test_onepass_runs_fewer_jobs(self, spark, events):
+    def test_onepass_runs_fewer_jobs(self, spark, events, monkeypatch):
         """The small tier schedules strictly fewer Spark jobs than the
         bucketed tier (the point of the rewrite).  Counted per job
         group; AQE may split one query into a couple of stage-jobs, so
@@ -80,12 +75,9 @@ class TestOnePassPercentiles:
 
         n_small = jobs_for("onepass-small", lambda: S.exact_percentiles_frame(
             events, "value", [0.5], round_dp=6))
-        spark.conf.set("spark.tostore.percentile.onepass.maxRows", "1")
-        try:
-            n_big = jobs_for("onepass-big", lambda: S.exact_percentiles_frame(
-                events, "value", [0.5], round_dp=6))
-        finally:
-            spark.conf.unset("spark.tostore.percentile.onepass.maxRows")
+        monkeypatch.setattr(S, "_ONEPASS_MAX_ROWS", 1)
+        n_big = jobs_for("onepass-big", lambda: S.exact_percentiles_frame(
+            events, "value", [0.5], round_dp=6))
         assert n_small < n_big, (n_small, n_big)
         assert n_small <= 2, f"one-pass tier scheduled {n_small} jobs"
 
@@ -282,11 +274,11 @@ class TestLocalDfFidelity:
 
 class TestWidePairScoringLayouts:
     """r17 follow-up commit: tfidf_similar_pairs pins a wide
-    tok-partitioned layout before its checkpoint, and build_knn_graph
-    broadcasts the cell self-join's build side when the corpus' FILES
-    fit the session broadcast threshold.  Both are layout/strategy-only
+    tok-partitioned layout before its checkpoint, and build_knn_graph's
+    cell self-join broadcasts when the planner's estimate of the pinned
+    corpus is under the session threshold.  Both are layout/strategy-only
     changes — pin that values are identical either way, and pin the
-    _fits_broadcast decision rule itself."""
+    ``broadcast.fits`` decision rule itself."""
 
     @pytest.fixture(scope="class")
     def emb_files(self, spark, tmp_path_factory):
@@ -301,38 +293,50 @@ class TestWidePairScoringLayouts:
         return spark.read.parquet(path)
 
     def test_fits_broadcast_decision(self, spark, emb_files):
-        from tostore_spark.llmops.similarity import _fits_broadcast
+        from tostore_spark.broadcast import fits
         # tiny file-backed frame under the 64MB session threshold
-        assert _fits_broadcast(emb_files) is True
+        assert fits(emb_files) is True
         # non-file-backed frame: unknown size -> safe False
-        assert _fits_broadcast(
-            spark.createDataFrame([(1,)], "a int")) is False
+        assert fits(spark.createDataFrame([(1,)], "a int")) is False
         # disabled threshold -> False even for tiny file-backed frames
         key = "spark.sql.autoBroadcastJoinThreshold"
         old = spark.conf.get(key)
         try:
             spark.conf.set(key, "-1")
-            assert _fits_broadcast(emb_files) is False
+            assert fits(emb_files) is False
         finally:
             spark.conf.set(key, old)
 
-    def test_graph_build_broadcast_matches_shuffle(self, spark, emb_files,
-                                                   monkeypatch):
+    def test_graph_build_broadcast_matches_shuffle(self, spark, emb_files):
+        from tostore_spark.broadcast import fits
         from tostore_spark.llmops import similarity as S
         cents = S.fixed_centroids(8, 4)
         emb = emb_files.select("vec_id", "embedding")
-        assert S._fits_broadcast(emb_files) is True   # default = broadcast
-        g1, h1 = S.build_knn_graph(emb, n_neighbors=3, n_cells=4,
-                                   centroids=cents, bridge_cells=1,
-                                   ring_skips=(1,))
-        monkeypatch.setattr(S, "_fits_broadcast", lambda df: False)
-        g2, h2 = S.build_knn_graph(emb, n_neighbors=3, n_cells=4,
-                                   centroids=cents, bridge_cells=1,
-                                   ring_skips=(1,))
+        assert fits(emb_files) is True   # default = broadcast
+
+        def build():
+            """Both frames, computed under the current threshold."""
+            g, h = S.build_knn_graph(emb, n_neighbors=3, n_cells=4,
+                                     centroids=cents, bridge_cells=1,
+                                     ring_skips=(1,))
+            plan = g._jdf.queryExecution().executedPlan().toString()
+            return (g.localCheckpoint(eager=True),
+                    h.localCheckpoint(eager=True), plan)
+
+        g1, h1, plan1 = build()
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        old = spark.conf.get(key)
+        try:
+            spark.conf.set(key, "-1")
+            g2, h2, plan2 = build()
+        finally:
+            spark.conf.set(key, old)
         assert g1.exceptAll(g2).count() == 0
         assert g2.exceptAll(g1).count() == 0
         assert h1.exceptAll(h2).count() == 0
         assert h2.exceptAll(h1).count() == 0
+        assert "SortMergeJoin" not in plan1
+        assert "SortMergeJoin" in plan2
 
     def test_tfidf_pairs_partitioning_independent(self, spark):
         from tostore_spark.llmops.search import tfidf_similar_pairs

@@ -150,7 +150,7 @@ def test_graph_search_probed_set_pinned_per_hop(spark, count_pins):
     out, probed = S.graph_search_many(graph, emb, queries, hubs, k=3,
                                       ef=4, max_hops=2,
                                       return_probed=True)
-    # q, the seed beam, then (probed, beam) per hop; emb is not
-    # file-backed, so there is no small-mode corpus pin
+    # q, the seed beam, then (probed, beam) per hop; emb is built from
+    # Python rows and reports no size, so there is no small-mode pin
     assert len(count_pins) == 2 + 2 * 2, count_pins
     assert out.count() == 9 and probed >= 3

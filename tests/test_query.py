@@ -320,13 +320,12 @@ def test_pagerank_fixed_points_and_star(spark):
     assert abs(got["b"] - 0.405) < 1e-9
 
 
-def test_pagerank_broadcast_matches_shuffle(spark, tmp_path_factory,
-                                            monkeypatch):
-    """A/B: pagerank's broadcast node-frame joins (file-backed edges
-    under the broadcast threshold) and its shuffled joins give
-    bit-identical ranks."""
+def test_pagerank_broadcast_matches_shuffle(spark, tmp_path_factory):
+    """A/B: pagerank's node-frame joins broadcast (file-backed edges
+    under the planner's threshold) and shuffle (threshold off), and
+    give bit-identical ranks."""
+    from tostore_spark.broadcast import fits
     from tostore_spark.functions.graph import pagerank
-    from tostore_spark.llmops import similarity as S
 
     path = str(tmp_path_factory.mktemp("pr") / "edges.parquet")
     spark.createDataFrame(
@@ -334,13 +333,24 @@ def test_pagerank_broadcast_matches_shuffle(spark, tmp_path_factory,
         + [(i, (i + 1) % 50) for i in range(0, 50, 3)],
         "src long, dst long").write.parquet(path)
     edges = spark.read.parquet(path)
-    assert S._fits_broadcast(edges) is True
-    bc = {r.node: r.rank
-          for r in pagerank(edges, n_iter=8, checkpoint_every=3).collect()}
-    monkeypatch.setattr(S, "_fits_broadcast", lambda df: False)
-    sh = {r.node: r.rank
-          for r in pagerank(edges, n_iter=8, checkpoint_every=3).collect()}
+    assert fits(edges) is True
+
+    def run():
+        ranks = pagerank(edges, n_iter=8, checkpoint_every=3)
+        got = {r.node: r.rank for r in ranks.collect()}
+        return got, ranks._jdf.queryExecution().executedPlan().toString()
+
+    bc, bc_plan = run()
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "-1")
+        sh, sh_plan = run()
+    finally:
+        spark.conf.set(key, old)
     assert len(bc) == 50 and bc == sh
+    assert "BroadcastHashJoin" in bc_plan
+    assert "BroadcastHashJoin" not in sh_plan and "SortMergeJoin" in sh_plan
 
 
 def test_ewma_weights_and_window(spark):

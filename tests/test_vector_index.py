@@ -7,6 +7,7 @@ a centroid sidecar.
 """
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -973,6 +974,7 @@ def test_graph_search_many_small_mode_matches_large_mode(
     """A/B: the broadcast small-corpus hop shape and the shuffled hop
     shape return the same neighbors, distances and probed count."""
     from bench import _clustered_embeddings
+    from tostore_spark.broadcast import fits
     from tostore_spark.llmops import similarity as S
 
     path = str(tmp_path_factory.mktemp("gsm") / "emb.parquet")
@@ -986,15 +988,43 @@ def test_graph_search_many_small_mode_matches_large_mode(
     hubs = hubs.localCheckpoint(eager=True)
     queries = emb.filter("vec_id % 37 = 0")
 
+    # every hop's beam is a pin: record the plans the pins execute
+    plans = []
+    cls = type(emb)
+    real = cls.localCheckpoint
+
+    def recording(self, *a, **kw):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(cls, "localCheckpoint", recording)
+
     def run():
+        del plans[:]
         out, probed = S.graph_search_many(graph, emb, queries, hubs, k=5,
                                           ef=8, max_hops=3,
                                           return_probed=True)
-        return sorted(tuple(r) for r in out.collect()), probed
+        got = sorted(tuple(r) for r in out.collect()), probed
+        return got, "\n".join(plans)
 
-    assert S._fits_broadcast(emb) is True          # small mode
-    small = run()
-    monkeypatch.setattr(S, "_fits_broadcast", lambda df: False)
-    large = run()
+    def hop_join(plan, strategy):
+        return re.search(strategy + r" \[node_id#\w+\], \[__gn#\w+\]",
+                         plan)
+
+    assert fits(emb) is True          # small mode
+    small, small_plan = run()
+    monkeypatch.setattr(S, "fits", lambda df: False)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "-1")
+        large, large_plan = run()
+    finally:
+        spark.conf.set(key, old)
     assert small == large
     assert len(small[0]) == 5 * queries.count()
+    # the hop join broadcasts the graph in small mode and shuffles it
+    # in large mode
+    assert hop_join(small_plan, "BroadcastHashJoin")
+    assert not hop_join(large_plan, "BroadcastHashJoin")
+    assert hop_join(large_plan, "SortMergeJoin")

@@ -1014,8 +1014,7 @@ class ToStoreSpark:
                         if cur_a is not None:
                             # R ∖ D — deleting rows this epoch appended
                             cur_a = cur_a.join(
-                                F.broadcast(delete_delta),
-                                on=list(delete_delta.columns),
+                                delete_delta, on=list(delete_delta.columns),
                                 how="left_anti")
                         new_d = (cur_d.unionByName(delete_delta)
                                  if cur_d is not None else delete_delta)

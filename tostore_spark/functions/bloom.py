@@ -113,7 +113,7 @@ def bloom_prune(probe: DataFrame, bloom: DataFrame, key_field: str,
             f"(shiftright(element_at(__bloom_arr, int(({p}) div 64) + 1),"
             f" int(({p}) % 64)) & 1) = 1")
     return (probe.filter(F.col(key_field).isNotNull())
-            .crossJoin(F.broadcast(compact))
+            .crossJoin(compact)
             .filter(F.expr(" AND ".join(conjuncts)))
             .drop("__bloom_arr"))
 

@@ -54,18 +54,6 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     deg = pin(e.groupBy("__s").agg(F.count(F.lit(1)).alias("__deg")))
     ranks = nodes.withColumn("rank", F.lit(1.0))
     d = float(damping)
-    # scale-adaptive join shape (the _fits_broadcast discipline): the
-    # checkpointed rank/degree frames report no size, so Spark can
-    # never auto-broadcast them and every iteration pays sort-merge
-    # exchanges on BOTH join sides.  When the edge list's own backing
-    # files fit the session broadcast threshold, the node-sized frames
-    # certainly do — broadcast them, leaving the dst hash-aggregate as
-    # the iteration's only exchange.  Unknown/large inputs keep the
-    # spillable shuffle joins (the safe path at scale).  Join strategy
-    # never changes values.
-    from tostore_spark.llmops.similarity import _fits_broadcast
-    small = _fits_broadcast(edges)
-    _bc = F.broadcast if small else (lambda x: x)
     # single-parse SQL twins of the per-iteration expressions (same
     # Catalyst trees; repr() round-trips the damping floats exactly, so
     # the literals match the old F.lit values bit-for-bit)
@@ -74,31 +62,14 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     rank_sql = (f"round({1.0 - d!r}D + {d!r}D * coalesce(__in, 0.0D),"
                 f" {int(round_dp)}) AS rank")
     for it in range(int(n_iter)):
-        contrib = (e.join(_bc(ranks.withColumnRenamed("node", "__s")),
-                          "__s")
-                    .join(_bc(deg), "__s")
+        contrib = (e.join(ranks.withColumnRenamed("node", "__s"), "__s")
+                    .join(deg, "__s")
                     .selectExpr("__d AS node", contrib_sql))
         summed = contrib.groupBy("node").agg(
             F.sum("__c").cast("double").alias("__in"))
-        ranks = (nodes.join(_bc(summed), "node", "left")
+        ranks = (nodes.join(summed, "node", "left")
                       .selectExpr("node", rank_sql))
         if checkpoint_every and (it + 1) % checkpoint_every == 0 \
                 and it + 1 < n_iter:
             ranks = pin(ranks)
     return ranks
-
-
-def connected_components(edges: DataFrame, src: str = "src",
-                         dst: str = "dst",
-                         max_iterations: int = 25) -> DataFrame:
-    """Connected components over an undirected edge list: (id,
-    cluster_id, cluster_size), cluster_id = smallest reachable id.
-
-    Thin graph-facing alias of ``llmops.dedup.dedup_clusters`` (min-label
-    propagation with pointer jumping, O(log chain) rounds, two key
-    shuffles per round, lineage-checkpointed) — the same oracle-verified
-    implementation (q_dedup_clusters), reusable for any graph.  Raises
-    ``RuntimeError`` when ``max_iterations`` rounds do not converge."""
-    from tostore_spark.llmops.dedup import dedup_clusters
-    return dedup_clusters(edges, id_a=src, id_b=dst,
-                          max_iterations=max_iterations)

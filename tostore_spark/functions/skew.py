@@ -100,7 +100,7 @@ def heavy_hitters(df: DataFrame, keys: list[str],
     """
     counts = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("n"))
     total = df.agg(F.count(F.lit(1)).alias("__total"))
-    out = (counts.crossJoin(F.broadcast(total))
+    out = (counts.crossJoin(total)
            .withColumn("share", F.col("n") / F.col("__total"))
            .filter(F.col("share") >= min_share)
            .drop("__total"))

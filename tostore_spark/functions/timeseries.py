@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from tostore_spark.broadcast import broadcast
 from tostore_spark.functions.colutil import epoch_us
 from tostore_spark.pin import pin
 
@@ -283,7 +284,8 @@ def rolling_distinct(df: DataFrame, ts_field: str, entity: str,
                         .groupBy("__day")
                         .agg(F.hll_sketch_agg("__ent").alias("__sk")))
         days = per_day.select(F.col("__day").alias("day"))
-        return (per_day.join(F.broadcast(days), cond)
+        # |days| rows, sized by the planner as the whole input
+        return (per_day.join(broadcast(days), cond)
                        .groupBy("day")
                        .agg(F.hll_sketch_estimate(
                                 F.hll_union_agg("__sk"))
@@ -291,7 +293,8 @@ def rolling_distinct(df: DataFrame, ts_field: str, entity: str,
     de = (df.select(day.alias("__day"), F.col(entity).alias("__ent"))
             .distinct())
     days = de.select(F.col("__day").alias("day")).distinct()
-    return (de.join(F.broadcast(days), cond)
+    # |days| rows: the planner sizes the distinct as the whole input
+    return (de.join(broadcast(days), cond)
               .groupBy("day")
               .agg(F.count_distinct(F.col("__ent")).alias("n_active")))
 
@@ -354,7 +357,8 @@ def seasonal_decompose(df: DataFrame, partition: str, order: str,
     seas = (ph.join(cent, on=partition)
               .select(partition, "__phase",
                       (F.col("__sraw") - F.col("__c")).alias("seasonal")))
-    return (base.join(F.broadcast(seas), on=[partition, "__phase"],
+    # |entities| × period rows, sized by the planner as a join product
+    return (base.join(broadcast(seas), on=[partition, "__phase"],
                       how="left")
                 .withColumn(
                     "resid",

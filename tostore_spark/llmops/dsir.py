@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tostore_spark.broadcast import broadcast
 from tostore_spark.llmops.pipeline import weighted_sample
 from tostore_spark.llmops.text import tokens as _tokens
 from tostore_spark.pin import pin
@@ -60,7 +61,7 @@ def dsir_ratio_table(raw: DataFrame, target: DataFrame,
     tot = (joined.agg(F.sum("cr").alias("Tr"), F.sum("ct").alias("Tt"))
                  .withColumn("k", F.lit(float(add_k)))
                  .withColumn("B", F.lit(float(n_buckets))))
-    lam = (joined.crossJoin(F.broadcast(tot))
+    lam = (joined.crossJoin(tot)
            .select("feat", F.round(
                F.log2(((F.coalesce(F.col("ct").cast("double"), F.lit(0.0))
                         + F.col("k"))
@@ -91,8 +92,9 @@ def dsir_weights(df: DataFrame, ratio: DataFrame,
     feats = (df.select(F.col(id_field).alias("id"),
                        F.explode(_tokens(F.col(text_field))).alias("__t"))
                .select("id", (_feat(F.col("__t")) % n_buckets).alias("feat")))
+    # floor is one row, sized by the planner as the ratio table
     scored = (feats.join(ratio.filter(F.col("feat") >= 0), "feat", "left")
-                   .crossJoin(F.broadcast(floor))
+                   .crossJoin(broadcast(floor))
                    .withColumn("__l", F.coalesce("lam", "__lam0")))
     return (scored.groupBy("id")
             .agg(F.count(F.lit(1)).alias("n_tokens"),

@@ -165,7 +165,7 @@ def ngram_bits_per_token(df: DataFrame, lm: NGramLM,
     joined = (bg.join(lm.bigrams, on=["prev", "token"], how="left")
                 .join(lm.contexts, on="prev", how="left")
                 .join(lm.unigrams, on="token", how="left")
-                .crossJoin(F.broadcast(lm.consts)))
+                .crossJoin(lm.consts))
     k = F.col("add_k")
     v = F.col("V").cast("double")
     p_bi = ((F.coalesce(F.col("tf2").cast("double"), F.lit(0.0)) + k)
@@ -206,7 +206,7 @@ def ngram_perplexity_filter(df: DataFrame, lm: NGramLM,
     return (df.join(scored.select(F.col("id").alias(id_field),
                                   "bits_per_token"),
                     on=id_field, how="left")
-              .crossJoin(F.broadcast(thr))
+              .crossJoin(thr)
               .filter(F.col("bits_per_token").isNull()
                       | (F.col("bits_per_token") <= F.col("__thr")))
               .drop("__thr"))
@@ -274,7 +274,7 @@ def ppl_buckets(scored: DataFrame, bits_field: str = "bits_per_token",
         thr = bounds.select(*[
             F.col("__bounds").getItem(i).alias(f"__t{i}")
             for i in range(len(cuts))])
-        out = scored.crossJoin(F.broadcast(thr))
+        out = scored.crossJoin(thr)
     elif exact:
         # single-exchange exact path: classification by the interpolated
         # threshold t = v_lo + gf·(v_hi − v_lo) is EQUAL to classification
@@ -447,7 +447,7 @@ def trigram_bits_per_token(df: DataFrame, lm: TrigramLM,
                 .join(lm.bigrams, on=["prev", "token"], how="left")
                 .join(lm.contexts, on="prev", how="left")
                 .join(lm.unigrams, on="token", how="left")
-                .crossJoin(F.broadcast(lm.consts)))
+                .crossJoin(lm.consts))
     k = F.col("add_k")
     v = F.col("V").cast("double")
     p_tri = ((F.coalesce(F.col("tf3").cast("double"), F.lit(0.0)) + k)

@@ -234,6 +234,6 @@ def quality_percentile_filter(df: DataFrame, pct: float = 0.1,
     from tostore_spark.plans.stats import exact_percentiles_frame
     thr = (exact_percentiles_frame(df, score_field, [float(pct)])
            .select(F.col("__bounds").getItem(0).alias("__thr")))
-    return (df.crossJoin(F.broadcast(thr))
+    return (df.crossJoin(thr)
               .filter(F.col(score_field) >= F.col("__thr"))
               .drop("__thr"))

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from tostore_spark.broadcast import broadcast
 from tostore_spark.llmops import text as TX
 from tostore_spark.pin import pin
 
@@ -425,7 +426,7 @@ def curate_corpus(docs: DataFrame, bench: DataFrame | None = None,
                                     F.col("id").alias(id_field),
                                     "bits_per_token"),
                                 on=id_field, how="left")
-                          .crossJoin(F.broadcast(thr))
+                          .crossJoin(thr)
                           .filter(F.col("bits_per_token").isNull()
                                   | (F.col("bits_per_token")
                                      <= F.col("__thr")))
@@ -547,7 +548,7 @@ def temperature_sample(df: DataFrame, alpha: float = 0.3,
     # rename the group-size column before the crossJoin: tot derives
     # from sizes, and the shared lineage makes a bare __n ambiguous
     gsz = sizes.select(F.col(by), F.col("__n").alias("__gn"))
-    keep = (gsz.crossJoin(F.broadcast(tot))
+    keep = (gsz.crossJoin(tot)
             .withColumn("__p", F.pow(F.col("__gn").cast("double"),
                                      float(alpha)) / F.col("__z"))
             .withColumn("__budget",
@@ -559,7 +560,8 @@ def temperature_sample(df: DataFrame, alpha: float = 0.3,
                         / F.col("__gn").cast("double")), 6))
             .select(by, "__keep"))
     coin = hash_fraction(F.col(id_field))
-    return (df.join(F.broadcast(keep), on=by)
+    # |groups| rows: the planner sizes it by the input it came from
+    return (df.join(broadcast(keep), on=by)
               .filter(coin < F.floor(F.col("__keep") * 10000)
                       .cast("long"))
               .drop("__keep"))

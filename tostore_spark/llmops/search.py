@@ -27,6 +27,7 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tostore_spark.broadcast import broadcast
 from tostore_spark.llmops.text import WORD_RE, tokens
 # spread: tokenize+explode is the CPU-heavy per-row stage of every
 # builder in this module, and a one-file corpus would serialize it on
@@ -69,9 +70,10 @@ def bm25_search(docs: DataFrame, query: str, k: int = 10,
                      F.size(toks).cast("long").alias("dl"))
     stats = docs.agg(F.count(F.lit(1)).cast("double").alias("n_docs"),
                      F.avg(F.size(toks).cast("long")).alias("avgdl"))
-    scored = (tf.join(F.broadcast(dfreq), "tok")
+    # |vocabulary| rows: the planner sizes the aggregate by the corpus
+    scored = (tf.join(broadcast(dfreq), "tok")
                 .join(dl, "id")
-                .crossJoin(F.broadcast(stats)))
+                .crossJoin(stats))
     idf = F.log(F.lit(1.0) + (F.col("n_docs") - F.col("term_df") + 0.5)
                 / (F.col("term_df") + 0.5))
     part = (idf * (F.col("tf").cast("double") * (k1 + 1.0))
@@ -142,7 +144,7 @@ def bm25_search_indexed(spark, path: str, query: str, k: int = 10,
             .filter(F.col("tok").isin(terms)))
     dl = spark.read.parquet(os.path.join(path, "doclens"))
     dfreq = hits.groupBy("tok").agg(F.countDistinct("id").alias("term_df"))
-    scored = (hits.join(F.broadcast(dfreq), "tok").join(dl, "id"))
+    scored = (hits.join(dfreq, "tok").join(dl, "id"))
     n_docs = F.lit(float(meta["n_docs"]))
     avgdl = F.lit(float(meta["avgdl"]))
     idf = F.log(F.lit(1.0) + (n_docs - F.col("term_df") + 0.5)
@@ -188,7 +190,7 @@ def tfidf_vectors(docs: DataFrame, text_field: str = "text",
     dfreq = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     n_docs = docs.select(F.count(F.lit(1)).alias("__n"))
     return (tf.join(dfreq, on="tok")
-              .crossJoin(F.broadcast(n_docs))
+              .crossJoin(n_docs)
               .filter(F.col("df") <= F.col("__n") * F.lit(float(max_df_frac)))
               .withColumn(
                   "w",

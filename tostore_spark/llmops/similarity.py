@@ -18,6 +18,7 @@ from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from tostore_spark.broadcast import broadcast, fits
 from tostore_spark.localdf import local_df
 from tostore_spark.pin import pin
 from tostore_spark.vector import _sqld
@@ -63,26 +64,6 @@ def _cos_prenorm_sql(a: str, b: str, an: str, bn: str) -> str:
 def _cos_sql(a: str, b: str) -> str:
     """SQL-text twin of ``cosine_distance_cols`` over plain field names."""
     return f"1.0D - {_dot_sql(a, b)} / ({_norm_sql(a)} * {_norm_sql(b)})"
-
-
-def _fits_broadcast(df: DataFrame) -> bool:
-    """True when ``df``'s backing FILES fit the session's
-    autoBroadcastJoinThreshold — the scale-adaptive broadcast decision
-    for frames whose lineage passes through a checkpoint (a LogicalRDD
-    reports no size, so Spark itself can never choose the broadcast).
-    Unknown sizes return False (the safe, spillable shuffle path)."""
-    spark = df.sparkSession
-    try:
-        thresh = int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-        if thresh <= 0:
-            return False
-        files = df.inputFiles()
-        if not files:
-            return False
-        from tostore_spark.fs import file_size
-        return sum(file_size(spark, f) for f in files) <= thresh
-    except Exception:
-        return False
 
 
 def _norm(a: Column) -> Column:
@@ -142,7 +123,8 @@ def knn_join(queries: DataFrame, corpus: DataFrame, k: int = 10,
         # twins — one parse instead of per-lambda py4j chains
         q = q.withColumn("__qn", F.expr(_norm_sql("__qv")))
         c = c.withColumn("__cn", F.expr(_norm_sql("__cv")))
-    joined = c.crossJoin(F.broadcast(q))
+    # the query side: Python-row queries have no estimate
+    joined = c.crossJoin(broadcast(q))
     if exclude_self:
         joined = joined.filter(F.col("query_id") != F.col("neighbor_id"))
     if metric == "cosine":
@@ -372,7 +354,8 @@ def ivf_search_many(indexed: DataFrame,
         F.collect_list(F.struct("query_id", "__qv", "__qn")).alias("__qs"))
     c = indexed.select(F.col(id_field).alias("neighbor_id"),
                        F.col(vec_field).alias("__cv"), "cell_id")
-    probed = (c.join(F.broadcast(qb), on="cell_id")
+    # the query side: unhinted, the planner builds the smaller corpus
+    probed = (c.join(broadcast(qb), on="cell_id")
                .withColumn("__cn", _norm(F.col("__cv"))))
     pairs = probed.select("neighbor_id", "__cv", "__cn",
                           F.explode("__qs").alias("__q"))
@@ -826,16 +809,6 @@ def build_knn_graph(corpus: DataFrame, n_neighbors: int = 8,
     b = base.select(F.col("node_id").alias("neighbor_id"),
                     F.col("__v").alias("__bv"),
                     F.col("__nv").alias("__bn"), "cell_id")
-    # scale-adaptive build side for the cell self-join: the checkpoint
-    # erases size stats (a LogicalRDD reports "unknown", so Spark never
-    # auto-broadcasts it) AND the shuffle form caps the |cell|^2
-    # scoring at n_cells reducer tasks.  When the CORPUS' own file
-    # bytes fit the session broadcast threshold, broadcast b so the
-    # scoring runs at scan width; bigger corpora keep the cell shuffle
-    # (and have >= cores cells at scale).  Values are partitioning-
-    # independent (topk_per_query is exact by construction).
-    if _fits_broadcast(corpus):
-        b = F.broadcast(b)
     scored = (a.join(b, on="cell_id")
                .filter(F.col("query_id") != F.col("neighbor_id"))
                .selectExpr("query_id", "neighbor_id",
@@ -885,7 +858,8 @@ def build_knn_graph(corpus: DataFrame, n_neighbors: int = 8,
                           on="hub_id")
                     .select(F.col("cell_id").alias("__bc"), "hub_id",
                             "__hv"))
-    bridges = (foreign.join(F.broadcast(hub_vecs), on="__bc")
+    # n_cells rows, sized by the planner as a join product
+    bridges = (foreign.join(broadcast(hub_vecs), on="__bc")
                       .selectExpr("node_id",
                                   "hub_id AS neighbor_id",
                                   f"{_cos_sql('__v', '__hv')} AS distance"))
@@ -993,14 +967,12 @@ def graph_search_many(graph: DataFrame, corpus: DataFrame,
                    .withColumn("__qn", F.expr(_norm_sql("__qv"))))
     c = corpus.select(F.col(id_field).alias("node_id"),
                       F.col(vec_field).alias("__cv"))
-    # scale-adaptive hop-join shape (the _fits_broadcast discipline):
-    # when the corpus' OWN file bytes fit the session broadcast
-    # threshold, the graph (3 narrow columns over the same ids) and the
-    # normed corpus fit too — broadcast both, so a hop's only shuffle
-    # is the frontier dedup.  Checkpointed graphs report no size, so
-    # Spark could never choose this itself; bigger corpora keep the
-    # shuffled joins (spillable, the safe path at scale).
-    small_mode = _fits_broadcast(corpus)
+    # scale-adaptive hop-join shape: when the planner would broadcast
+    # the corpus, the graph (3 narrow columns over the same ids) and the
+    # normed corpus fit too, so the corpus is normed once and a hop's
+    # only shuffle is the frontier dedup; bigger corpora keep the
+    # per-hop frontier fetch (spillable, the safe path at scale).
+    small_mode = fits(corpus)
     c_normed = (pin(c.withColumn("__cn", F.expr(_norm_sql("__cv"))))
                 if small_mode else None)
     seed_col = "hub_id" if "hub_id" in seeds.columns else "node_id"
@@ -1013,18 +985,20 @@ def graph_search_many(graph: DataFrame, corpus: DataFrame,
         # runs once per frontier NODE per hop (bounded by ef × (1 +
         # degree) × |queries|, deduped across queries), never per
         # corpus row and never per (query, node) pair.  In small_mode
-        # the pre-normed corpus checkpoint broadcasts instead (norms
-        # computed once for the whole run), skipping the per-hop
-        # frontier-distinct job.  Same expression → bit-identical
-        # distances.
+        # the pre-normed corpus checkpoint joins instead (norms
+        # computed once for the whole run; the planner broadcasts it),
+        # skipping the per-hop frontier-distinct job.  Same expression
+        # → bit-identical distances.
         if small_mode:
-            nv = F.broadcast(c_normed)
+            nv = c_normed
         else:
             nodes = pairs.select("node_id").distinct()
-            nv = (c.join(F.broadcast(nodes), on="node_id")
+            # the frontier: ≤ ef × (1 + degree) × |queries| rows
+            nv = (c.join(broadcast(nodes), on="node_id")
                    .withColumn("__cn", F.expr(_norm_sql("__cv"))))
+        # the query side, bounded like knn_join's
         out = (pairs.join(nv, on="node_id")
-                    .join(F.broadcast(q), on="query_id")
+                    .join(broadcast(q), on="query_id")
                     .selectExpr("query_id", "node_id",
                                 _cos_prenorm_sql("__qv", "__cv",
                                                  "__qn", "__cn")
@@ -1049,10 +1023,12 @@ def graph_search_many(graph: DataFrame, corpus: DataFrame,
 
     hop_graph = graph.withColumnRenamed("node_id", "__gn")
     if small_mode:
-        hop_graph = F.broadcast(hop_graph)
+        # fits(corpus) bounds the graph; its estimate is a join product
+        hop_graph = broadcast(hop_graph)
     w = Window.partitionBy("query_id").orderBy(F.col("distance").asc(),
                                                F.col("node_id").asc())
-    cand = q.select("query_id").crossJoin(F.broadcast(seed_nodes))
+    # |hubs| rows; unhinted, Python-row seeds make a cartesian product
+    cand = q.select("query_id").crossJoin(broadcast(seed_nodes))
     probed = cand if return_probed else None   # pinned once per hop
     beam = pin(_score(cand).withColumn("__r", F.row_number().over(w))
                .filter(F.col("__r") <= ef).drop("__r"))
@@ -1358,7 +1334,8 @@ def hard_negatives(corpus: DataFrame, anchors: Optional[DataFrame] = None,
                                     .alias("neighbor_label"),
                                    F.col(vec_field).alias("__cv")))
                    .withColumn("__cn", F.expr(_norm_sql("__cv"))))
-        scored = (c.crossJoin(F.broadcast(q))
+        # the anchor side, bounded like knn_join's queries
+        scored = (c.crossJoin(broadcast(q))
                    .filter(F.col("query_id") != F.col("neighbor_id"))
                    .filter(F.col("query_label") != F.col("neighbor_label"))
                    .selectExpr("query_id", "query_label", "neighbor_id",

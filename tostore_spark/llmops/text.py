@@ -264,7 +264,7 @@ def unigram_drift(ref: DataFrame, cur: DataFrame,
     contrib = F.round(
         F.lit(0.5) * p_ref * F.log2(p_ref / m)
         + F.lit(0.5) * p_cur * F.log2(p_cur / m), 12)
-    scored = (joined.crossJoin(F.broadcast(consts))
+    scored = (joined.crossJoin(consts)
                     .select("token", "n_ref", "n_cur",
                             contrib.alias("jsd_r")))
     total = scored.agg(
@@ -272,7 +272,7 @@ def unigram_drift(ref: DataFrame, cur: DataFrame,
          .cast("double").alias("jsd_total_r"))
     return (scored.orderBy(F.col("jsd_r").desc(), F.col("token").asc())
                   .limit(int(top_k))
-                  .crossJoin(F.broadcast(total)))
+                  .crossJoin(total))
 
 
 def vocab_stats(df: DataFrame, text_field: str = "text",
@@ -442,7 +442,7 @@ def train_unigram_lm(df: DataFrame, text_field: str = "text",
               .groupBy("token").agg(F.count(F.lit(1)).alias("tf")))
     totals = toks.agg(F.sum("tf").alias("T"),
                       F.count(F.lit(1)).alias("V"))
-    return toks.crossJoin(F.broadcast(totals)) \
+    return toks.crossJoin(totals) \
                .withColumn("add_k", F.lit(float(add_k)))
 
 
@@ -468,7 +468,7 @@ def lm_bits_per_token(df: DataFrame, lm: DataFrame,
     # carry them as a 1-row broadcast instead
     consts = lm.select("T", "V", "add_k").limit(1)
     joined = ex.join(lm.select("token", "tf"), on="token",
-                     how="left").crossJoin(F.broadcast(consts))
+                     how="left").crossJoin(consts)
     denom = F.col("T").cast("double") + F.col("add_k") * F.col("V").cast("double")
     p = (F.coalesce(F.col("tf").cast("double"), F.lit(0.0))
          + F.col("add_k")) / denom
@@ -506,7 +506,7 @@ def perplexity_filter(df: DataFrame, lm: DataFrame, drop_pct: float = 0.1,
     return (df.join(scored.select(F.col("id").alias(id_field),
                                   "bits_per_token"),
                     on=id_field, how="left")
-              .crossJoin(F.broadcast(thr))
+              .crossJoin(thr)
               .filter(F.col("bits_per_token").isNull()
                       | (F.col("bits_per_token") <= F.col("__thr")))
               .drop("__thr"))

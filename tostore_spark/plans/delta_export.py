@@ -1397,7 +1397,7 @@ def _export_update_dv(engine, key, ent, table: str, path: str,
                 # trip the bound, not flood the driver first
                 have = sum(len(v) for v in new_pos.values())
                 room = MAX_TOTAL_POSITIONS - have
-                hits = (frame.join(F.broadcast(keys.distinct()),
+                hits = (frame.join(keys.distinct(),
                                    on=kcols)
                         .select("__f", "__p")
                         .limit(room + 1).collect())
@@ -1448,7 +1448,7 @@ def _export_update_dv(engine, key, ent, table: str, path: str,
         if old_touched and pos_df is not None:
             parts.append(
                 _keyed_scan(old_touched)
-                .join(F.broadcast(pos_df), on=["__f", "__p"])
+                .join(pos_df, on=["__f", "__p"])
                 .select(*data_cols)
                 .withColumn("_change_type", F.lit("delete")))
         # inserts: staged rows net of same-commit deletes
@@ -1456,7 +1456,7 @@ def _export_update_dv(engine, key, ent, table: str, path: str,
         if staged_rels:
             ins = _keyed_scan(staged_rels)
             if pos_df is not None:
-                ins = ins.join(F.broadcast(pos_df),
+                ins = ins.join(pos_df,
                                on=["__f", "__p"], how="left_anti")
             parts.append(ins.select(*data_cols)
                          .withColumn("_change_type", F.lit("insert")))
@@ -1715,7 +1715,7 @@ def optimize_delta(spark, path: str,
                   .withColumn("__dv_file", F.element_at(
                       F.split(F.col("_metadata.file_path"), "/"), -1))
                   .withColumn("__dv_pos", F.col("_metadata.row_index"))
-                  .join(F.broadcast(dvf),
+                  .join(dvf,
                         on=["__dv_file", "__dv_pos"], how="left_anti")
                   .select(*keep))
         total_bytes = sum(int(a.get("size") or 0) for _r, a in cand)
@@ -2446,7 +2446,7 @@ def read_delta(spark, path: str, version: int | None = None,
                                  F.split(F.col("_metadata.file_path"),
                                          "/"), -1))
                  .withColumn("__dv_pos", F.col("_metadata.row_index")))
-        return (keyed.join(F.broadcast(dv_pos),
+        return (keyed.join(dv_pos,
                            on=["__dv_file", "__dv_pos"],
                            how="left_anti")
                 .select(*keep))

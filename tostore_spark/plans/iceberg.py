@@ -1072,8 +1072,7 @@ def read_iceberg(spark, path: str, snapshot_id: int | None = None,
     if not pos_del and not eq_del:
         return _refilter(df)
 
-    # delete application needs each row's (file, position, data_seq);
-    # the (file, seq) frame is manifest-scale — broadcast it
+    # delete application needs each row's (file, position, data_seq)
     seq_rows = [(fp, int(seq)) for fp, seq in data]
     seq_df = local_df(spark, seq_rows,
                                    "__ice_file string, __ice_dseq long")
@@ -1081,7 +1080,7 @@ def read_iceberg(spark, path: str, snapshot_id: int | None = None,
         "__ice_file",
         F.regexp_replace(F.col("_metadata.file_path"), "^file:/*", "/")
     ).withColumn("__ice_pos", F.col("_metadata.row_index"))
-    df = df.join(F.broadcast(seq_df), on="__ice_file", how="left")
+    df = df.join(seq_df, on="__ice_file", how="left")
 
     def _group_by_seq(files):
         grouped: dict[int, list] = {}
@@ -2020,7 +2019,7 @@ def _export_iceberg_update(engine, table: str, path: str,
                     # limit BEFORE collect: an oversized delete must
                     # trip the bound, not flood the driver first
                     room = MAX_TOTAL_POSITIONS - len(hits)
-                    got = (frame.join(F.broadcast(keys.distinct()),
+                    got = (frame.join(keys.distinct(),
                                       on=kcols)
                            .select("__f", "__p")
                            .limit(room + 1).collect())
@@ -3785,7 +3784,7 @@ def read_iceberg_changes(spark, path: str,
                         if fp in set(tgt)]
             seq_df = local_df(spark, 
                 seq_rows, "__f string, __dseq long")
-            pre = pre.join(F.broadcast(seq_df), on="__f", how="left")
+            pre = pre.join(seq_df, on="__f", how="left")
             id_to_name = {f["id"]: f["name"]
                           for f in end_schema_json["fields"]}
             sfields = {f.name: f for f in sschema.fields}
@@ -3905,7 +3904,7 @@ def read_iceberg_changes(spark, path: str,
                                  for pc in pcols_])
             cond = [parent_rows[pc].eqNullSafe(kren[f"__k_{pc}"])
                     for pc in pcols_]
-            part = parent_rows.join(F.broadcast(kren), on=cond,
+            part = parent_rows.join(kren, on=cond,
                                     how="leftsemi")
             if renamed:
                 for f in end_schema_json["fields"]:

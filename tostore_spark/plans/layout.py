@@ -46,7 +46,7 @@ def zvalue(df: DataFrame, cols: Sequence[str],
                      for c in cols],
                    *[F.max(c).cast("double").alias(f"__mx_{c}")
                      for c in cols])
-    out = df.crossJoin(F.broadcast(stats))
+    out = df.crossJoin(stats)
     qs: list[Column] = []
     for c in cols:
         mn, mx = F.col(f"__mn_{c}"), F.col(f"__mx_{c}")

@@ -24,8 +24,12 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from tostore_spark.broadcast import broadcast, size_bytes
 from tostore_spark.localdf import local_df
 from tostore_spark.pin import pin
+
+#: row ceiling for the single-pass percentile tier (one-reducer sort)
+_ONEPASS_MAX_ROWS = 4_000_000
 
 
 def column_stats(df: DataFrame, cols: Optional[Sequence[str]] = None,
@@ -113,28 +117,26 @@ def exact_percentiles_frame(df: DataFrame, col: str,
     counts (≤ n_parts rows per level), and the ≤ 2·|fracs| bracketing
     values.
 
-    SMALL-INPUT tier (r17): inputs at or below
-    ``spark.tostore.percentile.onepass.maxRows`` (default 4M — a
-    ~32 MB single-reducer sort, spillable) resolve in ONE single-pass
-    job: a global sort window ranks the rows, a whole-frame count
+    SMALL-INPUT tier (r17): inputs at or below ``_ONEPASS_MAX_ROWS``
+    (4M — a ~32 MB single-reducer sort, spillable) resolve in ONE
+    single-pass job: a global sort window ranks the rows, a whole-frame count
     window carries n, and the ≤ 2·|fracs| bracketing rows are filtered
     in the SAME pass — no sketch job, no checkpoint, no counts
     round-trip (4 Spark jobs → 1).  The tier choice never affects the
     VALUES (exact order statistics either way, interpolated by the
     same driver arithmetic); it only trades job count against bounded
     reducer state, so mis-estimated plan sizes cost time, not
-    correctness.  Inputs whose plan-size estimate is unknown (e.g.
-    checkpointed RDDs) piggyback an exact count on the sketch job and
-    branch on that instead (4 jobs → 2)."""
+    correctness.  Inputs estimated over the ceiling (e.g. frames built
+    from Python rows, which report no size) piggyback an exact count on
+    the sketch job and branch on that instead (4 jobs → 2)."""
     spark = df.sparkSession
     vals = df.select(F.col(col).alias("__v")).filter(F.col("__v").isNotNull())
     nb = n_parts or max(32, 4 * len(fracs))
-    max_rows = _onepass_max_rows(spark)
-    est = _plan_size_bytes(vals)
+    est = size_bytes(vals)
     # pre-check on the optimizer's size estimate: ~8 payload bytes per
     # row of a single double column (over-estimates route to the big
     # tier — the safe direction)
-    if est is not None and 0 <= est <= max_rows * 8:
+    if est is not None and 0 <= est <= _ONEPASS_MAX_ROWS * 8:
         return _exact_onepass_bounds(spark, vals, fracs, round_dp)
     # sketch job (needed by the big tier anyway) + an exact count to
     # adjudicate the tier when the plan estimate was unusable
@@ -142,7 +144,7 @@ def exact_percentiles_frame(df: DataFrame, col: str,
     srow = vals.agg(
         F.expr(f"approx_percentile(__v, array({probe}), 1000)").alias("e"),
         F.count(F.lit(1)).alias("n")).first()
-    if int(srow["n"]) <= max_rows:
+    if int(srow["n"]) <= _ONEPASS_MAX_ROWS:
         return _exact_onepass_bounds(spark, vals, fracs, round_dp)
     edges = sorted(set(srow["e"] or []))
     # ONE materialization total: the bucketed frame.  The sketch ran
@@ -173,30 +175,9 @@ def exact_percentiles_frame(df: DataFrame, col: str,
     return local_df(spark, [(bounds,)], "`__bounds` array<double>")
 
 
-def _onepass_max_rows(spark) -> int:
-    """Row ceiling for the single-pass percentile tier (one-reducer
-    sort).  Conf-tunable for clusters where a bigger or smaller
-    single-task sort is the right trade."""
-    try:
-        return int(spark.conf.get("spark.tostore.percentile.onepass.maxRows",
-                                  "4000000"))
-    except Exception:
-        return 4_000_000
-
-
-def _plan_size_bytes(df: DataFrame):
-    """Optimizer size estimate for a frame (bytes), or None when
-    unavailable.  Used ONLY for tier choices — never correctness."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan()
-                   .stats().sizeInBytes())
-    except Exception:
-        return None
-
-
 def _exact_onepass_bounds(spark, vals: DataFrame, fracs, round_dp):
     """Single-pass exact interpolated percentiles for SMALL inputs: one
-    global sort window (one reducer — bounded by the onepass.maxRows
+    global sort window (one reducer — bounded by the _ONEPASS_MAX_ROWS
     gate), rank + whole-frame count in the same pass, bracketing rows
     filtered in-plan.  Because ranks, n, and values all come from ONE
     evaluation, non-deterministic upstream lineage cannot desynchronize
@@ -302,7 +283,7 @@ def _select_from_buckets(spark, bucketed, counts, span, offs,
         w_rn = Window.partitionBy("__b").orderBy("__v")
         got = (bucketed.filter(F.col("__b").isin(hit_b))
                        .withColumn("__lrn", F.row_number().over(w_rn) - 1)
-                       .join(F.broadcast(need_df),
+                       .join(need_df,
                              (F.col("__b") == F.col("__nb"))
                              & (F.col("__lrn") == F.col("__lrank")))
                        .select("__key", "__v").collect())
@@ -356,7 +337,7 @@ def column_histogram(df: DataFrame, col: str, n_buckets: int = 10,
         sum((F.col(col) >= F.element_at("__bounds", i)).cast("int")
             for i in range(2, n_buckets + 1))).cast("int")
     return (df.filter(F.col(col).isNotNull())
-              .crossJoin(F.broadcast(bounds))
+              .crossJoin(bounds)
               .withColumn("bucket", bucket)
               .groupBy("bucket")
               .agg(F.first(F.expr("element_at(__bounds, bucket + 1)"))
@@ -590,7 +571,7 @@ def clip_outliers(df: DataFrame, col: str,
             f"transform(approx_percentile(`{col}`,"
             f" array({lower!r}, {upper!r})),"
             f" b -> round(b, {round_dp}))").alias("__bounds"))
-    out = df.crossJoin(F.broadcast(bounds))
+    out = df.crossJoin(bounds)
     lo = F.element_at("__bounds", 1)
     hi = F.element_at("__bounds", 2)
     c = F.col(col)
@@ -696,7 +677,7 @@ def clip_outliers_grouped(df: DataFrame, by: str, col: str,
 
     Bounds come from ``grouped_percentiles_frame`` (one spillable
     group-partitioned sort window, no percentile value-map) and join
-    back on the group key — a tiny |groups|×2 frame, broadcast by AQE.
+    back on the group key — a tiny |groups|×2 frame, broadcast (hinted).
     Nulls pass through unclipped.  Adds ``{col}_clipped`` in clip
     mode."""
     if mode not in ("clip", "filter"):
@@ -710,7 +691,8 @@ def clip_outliers_grouped(df: DataFrame, by: str, col: str,
          .alias("__lo"),
         F.max(F.when(F.col("p") == float(upper), F.col("value")))
          .alias("__hi"))
-    out = df.join(F.broadcast(bounds), on=by, how="left")
+    # |groups| rows: the planner sizes a grouped aggregate by its input
+    out = df.join(broadcast(bounds), on=by, how="left")
     c = F.col(col)
     if mode == "filter":
         return (out.filter(c.isNull() | c.between(F.col("__lo"),
@@ -779,7 +761,7 @@ def drift_report(ref: DataFrame, cur: DataFrame, col: str,
                            .cast("int"),
                           F.lit(n_buckets - 1))))
         return (df.filter(c.isNotNull())
-                  .crossJoin(F.broadcast(bounds))
+                  .crossJoin(bounds)
                   .groupBy(b.alias("bucket"))
                   .agg(F.count(F.lit(1)).alias(name)))
 
@@ -788,13 +770,13 @@ def drift_report(ref: DataFrame, cur: DataFrame, col: str,
                .select(F.col("id").cast("int").alias("bucket")))
     j = (grid.join(counts(ref, "n_ref"), on="bucket", how="left")
              .join(counts(cur, "n_cur"), on="bucket", how="left")
-             .crossJoin(F.broadcast(bounds))
+             .crossJoin(bounds)
              .withColumn("n_ref", F.coalesce("n_ref", F.lit(0)))
              .withColumn("n_cur", F.coalesce("n_cur", F.lit(0))))
     tot = j.agg(F.sum("n_ref").alias("__tr"),
                 F.sum("n_cur").alias("__tc"))
     sm = F.lit(float(smooth))
-    out = (j.crossJoin(F.broadcast(tot))
+    out = (j.crossJoin(tot)
             .withColumn("p_ref", (F.col("n_ref") + sm)
                         / (F.col("__tr") + sm * F.lit(float(nb_all))))
             .withColumn("p_cur", (F.col("n_cur") + sm)
@@ -817,7 +799,7 @@ def drift_report(ref: DataFrame, cur: DataFrame, col: str,
     psi_total = out.agg(F.sum(
         F.round(F.col("psi"), 9).cast("decimal(28,9)")).cast("double")
         .alias("psi_total"))
-    return (out.crossJoin(F.broadcast(psi_total))
+    return (out.crossJoin(psi_total)
                .select("bucket", "lo", "hi", "n_ref", "n_cur",
                        "p_ref", "p_cur", "psi", "psi_total")
                .orderBy("bucket"))
@@ -855,7 +837,7 @@ def drift_report_categorical(ref: DataFrame, cur: DataFrame, col: str,
                 F.sum("n_cur").alias("__tc"),
                 F.count(F.lit(1)).alias("__k"))
     sm = F.lit(float(smooth))
-    out = (j.crossJoin(F.broadcast(tot))
+    out = (j.crossJoin(tot)
             .withColumn("p_ref", (F.col("n_ref") + sm)
                         / (F.col("__tr") + sm * F.col("__k")))
             .withColumn("p_cur", (F.col("n_cur") + sm)
@@ -870,7 +852,7 @@ def drift_report_categorical(ref: DataFrame, cur: DataFrame, col: str,
     psi_total = out.agg(F.sum(
         F.round(F.col("psi"), 9).cast("decimal(28,9)")).cast("double")
         .alias("psi_total"))
-    return (out.crossJoin(F.broadcast(psi_total))
+    return (out.crossJoin(psi_total)
                .select("category", "n_ref", "n_cur", "p_ref", "p_cur",
                        "psi", "psi_total")
                .orderBy("category"))
@@ -944,7 +926,7 @@ def drift_report_quantile(ref: DataFrame, cur: DataFrame, col: str,
                 F.sum("n_cur").alias("__tc"))
     sm = F.lit(float(smooth))
     nb = float(n_buckets)
-    out = (j.crossJoin(F.broadcast(tot))
+    out = (j.crossJoin(tot)
             .withColumn("p_ref", (F.col("n_ref") + sm)
                         / (F.col("__tr") + sm * F.lit(nb)))
             .withColumn("p_cur", (F.col("n_cur") + sm)
@@ -967,7 +949,7 @@ def drift_report_quantile(ref: DataFrame, cur: DataFrame, col: str,
     psi_total = out.agg(F.sum(
         F.round(F.col("psi"), 9).cast("decimal(28,9)")).cast("double")
         .alias("psi_total"))
-    return (out.crossJoin(F.broadcast(psi_total))
+    return (out.crossJoin(psi_total)
                .select("bucket", "edge_lo", "edge_hi", "n_ref",
                        "n_cur", "p_ref", "p_cur", "psi", "psi_total")
                .orderBy("bucket"))
@@ -1016,7 +998,8 @@ def robust_outliers(df: DataFrame, col: str, k: float = 3.5,
         med = (grouped_percentiles_frame(vals, by, col, [0.5],
                                          round_dp=6, exact=exact)
                .select(by, F.col("value").alias("__med")))
-        dev = (vals.join(F.broadcast(med), on=by)
+        # |groups| rows: the planner sizes a grouped aggregate by its input
+        dev = (vals.join(broadcast(med), on=by)
                    .select(by, F.round(F.abs(c - F.col("__med")), 6)
                                .alias("__d")))
         mad = (grouped_percentiles_frame(dev, by, "__d", [0.5],
@@ -1026,7 +1009,8 @@ def robust_outliers(df: DataFrame, col: str, k: float = 3.5,
         rz = F.round(F.abs(c - F.col("__med"))
                      / (F.lit(1.4826) * F.col("__mad")), 9)
         ok = c.isNotNull() & (F.col("__mad") > 0)
-        return (df.join(F.broadcast(consts), on=by, how="left")
+        # |groups| rows; the planner sizes a join by its inputs' product
+        return (df.join(broadcast(consts), on=by, how="left")
                   .withColumn(rz_col, F.when(ok, rz))
                   .withColumn(fl_col,
                               F.when(ok, rz > F.lit(float(k)))

@@ -471,7 +471,7 @@ def _ops_frame(engine, ops, schema=None, keep=None):
                 df = part if df is None else df.unionByName(part)
             elif df is not None:
                 keys = read_delete_keys(engine, path)
-                df = df.join(F.broadcast(keys), on=list(keys.columns),
+                df = df.join(keys, on=list(keys.columns),
                              how="left_anti")
     if df is None:
         if schema is None:
@@ -1871,12 +1871,12 @@ def _diff_from_recipe(engine, table: str, from_version: int,
                 state = _decrypt_for(
                     engine, space, table,
                     _ttlf(_cdc_base_state(engine, consumed, tail_keys)))
-            pre = state.join(F.broadcast(keys), on=list(keys.columns),
+            pre = state.join(keys, on=list(keys.columns),
                              how="left_semi")
             if cols is None:
                 cols = sorted(pre.columns)
             part = pre.select(*cols).withColumn("__sign", F.lit(-1))
-            state = state.join(F.broadcast(keys), on=list(keys.columns),
+            state = state.join(keys, on=list(keys.columns),
                                how="left_anti")
         signed = part if signed is None else signed.unionByName(part)
         consumed.append([kind, path])

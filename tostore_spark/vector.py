@@ -31,6 +31,8 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tostore_spark.broadcast import broadcast
+
 
 def _dot(vec_col: Column, q: Sequence[float]) -> Column:
     qcol = F.array(*[F.lit(float(x)) for x in q])
@@ -235,7 +237,8 @@ def quantized_knn_join(queries_q: DataFrame, corpus_q: DataFrame,
                          F.col("codes").alias("__qc"))
     c = corpus_q.select(F.col("vec_id").alias("neighbor_id"),
                         F.col("codes").alias("__cc"))
-    joined = c.crossJoin(F.broadcast(q)) \
+    # the query side, bounded like similarity.knn_join's
+    joined = c.crossJoin(broadcast(q)) \
               .filter(F.col("query_id") != F.col("neighbor_id"))
     # cosine over codes: scales cancel, int math stays cheap
     dist = cosine_distance_cols(F.col("__qc"), F.col("__cc"))
@@ -251,7 +254,8 @@ def quantized_knn_join(queries_q: DataFrame, corpus_q: DataFrame,
                         F.col("embedding").alias("__qv"))
     cv = corpus.select(F.col("vec_id").alias("neighbor_id"),
                        F.col("embedding").alias("__cv"))
-    exact = (cand.join(F.broadcast(qv), "query_id")
+    # the query side again: unhinted, Python-row queries would shuffle
+    exact = (cand.join(broadcast(qv), "query_id")
              .join(cv, "neighbor_id")
              .select("query_id", "neighbor_id",
                      cosine_distance_cols(F.col("__qv"), F.col("__cv"))

@@ -165,7 +165,7 @@ def _check_unique(engine, table: str, schema: TableSchema, new_df: DataFrame,
         if not all(k in new_df.columns and k in cur.columns for k in keyset):
             continue
         clash = cur.join(
-            F.broadcast(new_df.select(*keyset).dropDuplicates(list(keyset))),
+            new_df.select(*keyset).dropDuplicates(list(keyset)),
             on=list(keyset), how="left_semi")
         if clash.take(1):
             raise ValueError(f"unique constraint violation on {keyset} in {table}")
@@ -229,7 +229,7 @@ def _unique_violations(engine, table: str, schema: TableSchema,
         keydf = local_df(engine.spark, 
             [t for _, t in keyed], cur.select(*keyset).schema)
         clashes = {tuple(r) for r in cur.join(
-            F.broadcast(keydf.dropDuplicates()), on=list(keyset), how="left_semi")
+            keydf.dropDuplicates(), on=list(keyset), how="left_semi")
             .select(*keyset).collect()}
         seen: set = set()
         for i, t in keyed:
@@ -374,7 +374,7 @@ def upsert(engine, table: str, rows: list[dict],
     cond = on[0]
     for extra in on[1:]:
         cond = cond & extra
-    joined = cur.join(F.broadcast(src), on=cond, how="full_outer")
+    joined = cur.join(src, on=cond, how="full_outer")
     matched = F.col(keyset[0]).isNotNull() & F.col(f"__src_{keyset[0]}").isNotNull()
     is_update = matched
 
@@ -450,18 +450,17 @@ def batch_update(engine, table: str, rows: list[dict],
     cur = engine.df(table)
     payload_cols = [c for c in cur.columns
                     if c != pk and any(c in r for r in rows)]
-    src_schema = cur.select(pk, *payload_cols).schema
-    src = local_df(engine.spark, 
-        [tuple([str(r[pk])] + [r.get(c) for c in payload_cols]) for r in rows],
-        src_schema)
     # presence flags: only fields present in THAT row overwrite
-    flags = local_df(engine.spark, 
-        [tuple([str(r[pk])] + [c in r for c in payload_cols]) for r in rows],
-        ["__pk"] + [f"__has_{c}" for c in payload_cols])
-    src = src.withColumnRenamed(pk, "__pk") \
-             .select("__pk", *[F.col(c).alias(f"__new_{c}") for c in payload_cols])
-    src = src.join(flags, on="__pk")
-    joined = cur.join(F.broadcast(src), on=F.col(pk) == F.col("__pk"), how="left")
+    vals = cur.select(F.col(pk).alias("__pk"),
+                      *[F.col(c).alias(f"__new_{c}") for c in payload_cols])
+    src_schema = T.StructType(vals.schema.fields + [
+        T.StructField(f"__has_{c}", T.BooleanType(), False)
+        for c in payload_cols])
+    src = local_df(engine.spark,
+        [tuple([str(r[pk])] + [r.get(c) for c in payload_cols]
+               + [c in r for c in payload_cols]) for r in rows],
+        src_schema)
+    joined = cur.join(src, on=F.col(pk) == F.col("__pk"), how="left")
     n = (joined.filter(F.col("__pk").isNotNull()).count()
          if getattr(engine, "eager_mutation_counts", True) else -1)
     out_cols = []
@@ -562,7 +561,7 @@ class _MutationBuilder:
         if self._limit is not None:
             ordered = ordered.limit(self._limit)
         keys = ordered.select(F.col(pk).alias("__sel_pk"))
-        marked = df.join(F.broadcast(keys), on=F.col(pk) == F.col("__sel_pk"),
+        marked = df.join(keys, on=F.col(pk) == F.col("__sel_pk"),
                          how="left")
         return marked, F.col("__sel_pk").isNotNull(), ["__sel_pk"]
 
@@ -631,7 +630,7 @@ class _MutationBuilder:
                                        f"{q} IS NULL AS __null")
             if survivors is not None:
                 tagged = tagged.unionAll(survivors.join(
-                    F.broadcast(pinned.filter(applied).select(pk)),
+                    pinned.filter(applied).select(pk),
                     on=[pk], how="left_semi")
                     .selectExpr(*["false"] * 4))
             row = (tagged.selectExpr("count_if(__t) AS n",
@@ -905,19 +904,19 @@ class DeleteBuilder(_MutationBuilder):
                 cdf = self._engine.df(child)
                 keys = doomed.select(*[F.col(rf).alias(f)
                                        for f, rf in zip(fk.fields, fk.referenced_fields)])
-                hit = cdf.join(F.broadcast(keys.dropDuplicates()), on=list(fk.fields),
+                hit = cdf.join(keys.dropDuplicates(), on=list(fk.fields),
                                how="left_semi")
                 if fk.on_delete == ForeignKeyAction.restrict:
                     if hit.take(1):
                         raise ValueError(
                             f"delete restricted: {child} references {self._table}")
                 elif fk.on_delete == ForeignKeyAction.cascade:
-                    remaining = cdf.join(F.broadcast(keys.dropDuplicates()),
+                    remaining = cdf.join(keys.dropDuplicates(),
                                          on=list(fk.fields), how="left_anti")
                     self._engine.set_df(child, remaining)
                 elif fk.on_delete == ForeignKeyAction.setNull:
-                    marked = cdf.join(F.broadcast(keys.dropDuplicates()
-                                                  .withColumn("__hit", F.lit(1))),
+                    marked = cdf.join(keys.dropDuplicates()
+                                      .withColumn("__hit", F.lit(1)),
                                       on=list(fk.fields), how="left")
                     out = marked
                     for f in fk.fields:
