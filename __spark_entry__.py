@@ -1044,8 +1044,10 @@ def q_dedup_clusters(spark, sf_dir):
     """Connected-components dedup clustering over MinHash-LSH pairs:
     pairwise keep-one under-dedups transitive chains (A~B, B~C leaves A,C
     both kept); the reference keeps ONE canonical record per duplicate
-    group, and the distributed analog is min-label connected components
-    (pointer-jumping, O(log chain) rounds)."""
+    group.  ``dedup_clusters`` sizes the work to the edge set: a few
+    thousand pairs (this corpus) run union-find on the driver, more run
+    the distributed min-label loop (pointer jumping, O(log chain)
+    rounds); both give the same rows."""
     db = _db(spark, sf_dir)
     pairs = D.minhash_lsh_pairs(db.df("documents"))
     return D.dedup_clusters(pairs)
@@ -10130,7 +10132,7 @@ def _dedup_clusters_oracle() -> str:
     """Connected components over the minhash-LSH pairs in DuckDB: a
     recursive CTE propagates every label through the symmetric edge set,
     then min(label) per node = the component's smallest id — the same
-    fixpoint dedup_clusters' pointer-jumping reaches."""
+    components dedup_clusters' union-find or pointer jumping reaches."""
     base = _minhash_oracle()
     return f"""
         WITH RECURSIVE pairs AS (SELECT id_a, id_b FROM ({base}) mo),

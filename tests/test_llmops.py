@@ -305,6 +305,38 @@ def test_repetition_stats_flags_boilerplate(spark):
     assert out[2]["top_token_frac"] == 1 / 10   # all tokens distinct
 
 
+def test_minhash_index_position_shingles_match_distinct_shingles(
+        spark, db, monkeypatch):
+    """The band index from position-exploded shingles (repeats kept)
+    equals the one from per-document distinct shingle arrays: repeats
+    never change a minimum.  Texts: empty, null, shorter than k,
+    repeated shingles, punctuation only, and the fixture documents."""
+    from tostore_spark.llmops.text import norm_sql
+
+    def distinct_shingle_rows(df, text_field, id_field, k):
+        norm = norm_sql(f"`{text_field}`")
+        sql = (f"flatten(transform(array({norm}), t -> array_distinct("
+               f"transform(sequence(1, greatest(length(t) - {k - 1}, 1)),"
+               f" i -> substring(t, i, {k})))))")
+        return df.selectExpr(f"`{id_field}` AS id", f"explode({sql}) AS s")
+
+    edge = spark.createDataFrame(
+        [(1, ""), (2, None), (3, "abc"), (4, "aaaaaaaaaaaa"),
+         (5, "abcabcabcabcabc"), (6, "!!! ,,, ..."), (7, "Ab-Ab ab ab AB"),
+         (8, "the quick brown fox jumps over the lazy dog")],
+        "doc_id long, text string")
+    docs = db.df("documents").select("doc_id", "text")
+    for corpus in (edge, docs.unionByName(edge.withColumn(
+            "doc_id", F.col("doc_id") + 10**9))):
+        new = D.minhash_band_index(corpus)
+        with monkeypatch.context() as m:
+            m.setattr(D, "_shingle_rows", distinct_shingle_rows)
+            old = D.minhash_band_index(corpus)
+        assert new.count() == old.count() > 0
+        assert new.exceptAll(old).count() == 0
+        assert old.exceptAll(new).count() == 0
+
+
 def test_minhash_index_roundtrip_and_incremental(spark, db, tmp_path):
     from pyspark.sql import functions as F
     from tostore_spark.llmops.dedup import (minhash_band_index,
@@ -594,11 +626,12 @@ def test_dedup_clusters_connected_components(spark):
                    20: (20, 3), 21: (20, 3), 22: (20, 3)}
 
 
-def test_dedup_clusters_chain_converges_in_log_rounds(spark):
+def test_dedup_clusters_chain_converges_in_log_rounds(spark, monkeypatch):
     """A 40-node chain needs ~log2(40) pointer-jumping rounds, not 40:
     max_iterations=8 must fully converge (naive min-neighbor propagation
-    would still be mid-chain)."""
+    would still be mid-chain).  Large mode: the label loop."""
     from tostore_spark.llmops.dedup import dedup_clusters
+    monkeypatch.setattr(D, "SMALL_GRAPH_EDGES", 0)
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], ["id_a", "id_b"])
     rows = dedup_clusters(pairs, max_iterations=8).collect()
@@ -606,14 +639,111 @@ def test_dedup_clusters_chain_converges_in_log_rounds(spark):
     assert all(r["cluster_size"] == 41 for r in rows)
 
 
-def test_dedup_clusters_raises_when_not_converged(spark):
+def test_dedup_clusters_raises_when_not_converged(spark, monkeypatch):
     """A long chain cannot settle in one round: max_iterations=1 must
-    raise instead of returning partial labels."""
+    raise instead of returning partial labels.  Large mode: small mode's
+    union-find is exact and has no rounds."""
     from tostore_spark.llmops.dedup import dedup_clusters
+    monkeypatch.setattr(D, "SMALL_GRAPH_EDGES", 0)
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], ["id_a", "id_b"])
     with pytest.raises(RuntimeError, match="did not converge"):
         dedup_clusters(pairs, max_iterations=1)
+
+
+def _cluster_modes(pairs, monkeypatch):
+    """``dedup_clusters`` in small mode (driver union-find) and in large
+    mode (the label loop, forced by a negative edge bound: at 0 an empty
+    edge set still fits small mode)."""
+    calls = []
+    union_find = D._local_components
+    with monkeypatch.context() as m:
+        m.setattr(D, "_local_components",
+                  lambda rows: calls.append(1) or union_find(rows))
+        small = D.dedup_clusters(pairs)
+        assert len(calls) == 1
+        m.setattr(D, "SMALL_GRAPH_EDGES", -1)
+        large = D.dedup_clusters(pairs)
+        assert len(calls) == 1
+    return small, large
+
+
+def _sorted_rows(df):
+    return sorted((tuple(r) for r in df.collect()),
+                  key=lambda t: tuple((v is None, v) for v in t))
+
+
+def _clique(ids):
+    return [(a, b) for i, a in enumerate(ids) for b in ids[i + 1:]]
+
+
+@pytest.mark.parametrize("rows,schema", [
+    ([(i, i + 1) for i in range(40)], "id_a long, id_b long"),
+    ([(0, i) for i in range(1, 30)], "id_a long, id_b long"),
+    (_clique([3, 1, 4, 15]) + _clique([9, 2, 6]) + _clique([50, 51]),
+     "id_a long, id_b long"),
+    ([(1, 1), (2, 3), (3, 2), (2, 3), (4, 4), (4, 5), (5, 4)],
+     "id_a int, id_b int"),
+    ([("b", "a"), ("c", "b"), ("é", "z"), ("Z", "a"), ("aa", "a")],
+     "id_a string, id_b string"),
+    ([], "id_a long, id_b long"),
+    ([(1, None), (None, 2), (3, 4), (None, None), (4, None)],
+     "id_a long, id_b long"),
+], ids=["chain40", "star", "cliques", "self_and_duplicate_pairs",
+        "string_ids", "empty", "null_ids"])
+def test_dedup_clusters_small_mode_matches_large_mode(spark, monkeypatch,
+                                                      rows, schema):
+    """A/B: driver union-find gives the label loop's rows, null ids
+    included (the loop joins no pair through a null id and labels the
+    null id null)."""
+    small, large = _cluster_modes(spark.createDataFrame(rows, schema),
+                                  monkeypatch)
+    assert _sorted_rows(small) == _sorted_rows(large)
+    assert small.exceptAll(large).count() == 0
+    assert large.exceptAll(small).count() == 0
+    assert [f.dataType for f in small.schema] == \
+        [f.dataType for f in large.schema]
+
+
+def test_dedup_clusters_small_mode_matches_large_mode_minhash(
+        spark, db, monkeypatch):
+    """A/B on the fixture documents' MinHash-LSH pairs."""
+    pairs = D.minhash_lsh_pairs(db.df("documents"))
+    assert pairs.count() > 0
+    small, large = _cluster_modes(pairs, monkeypatch)
+    assert _sorted_rows(small) == _sorted_rows(large)
+
+
+def test_dedup_clusters_large_mode_computes_pairs_once(spark, monkeypatch):
+    """Large mode reads the pairs through one pin: the probe and the loop
+    share it, so the pair frame is evaluated once per row (counted by a
+    Python UDF), not once per probe and once per edge direction."""
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def counted(x):
+        seen.add(1)
+        return x
+
+    rows = [(i, i + 1) for i in range(40)]
+    pairs = spark.createDataFrame(rows, "id_a long, id_b long").select(
+        counted("id_a").alias("id_a"), "id_b")
+    monkeypatch.setattr(D, "SMALL_GRAPH_EDGES", 0)
+    out = D.dedup_clusters(pairs).collect()
+    assert {r["cluster_id"] for r in out} == {0} and len(out) == 41
+    assert seen.value == len(rows)
+
+
+def test_dedup_apply_small_mode_broadcasts_unhinted(spark):
+    """Small mode's clusters are a local relation the planner sizes, so
+    ``dedup_apply``'s anti-join plans a broadcast with no hint."""
+    docs = spark.createDataFrame(
+        [(i, f"text {i}") for i in range(8)], ["doc_id", "text"])
+    pairs = spark.createDataFrame([(1, 2), (2, 5), (6, 7)], ["id_a", "id_b"])
+    plan = D.dedup_apply(docs, pairs)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
+    assert "SortMergeJoin" not in plan
 
 
 def test_dedup_apply_keeps_one_per_cluster(spark):

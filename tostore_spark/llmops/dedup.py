@@ -14,10 +14,15 @@ taken over hex strings, which preserves numeric order for fixed-width hex.
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (IntegralType, LongType, StringType,
+                               StructField, StructType)
 
 from tostore_spark.llmops.text import normalized_text
+from tostore_spark.localdf import local_df
 from tostore_spark.pin import pin
 from tostore_spark.vector import distance_column
 
@@ -142,6 +147,20 @@ def minhash_bands(sig: Column, bands: int, rows_per_band: int) -> Column:
     return _let(sig, lambda s: _bands(s))
 
 
+def _shingle_rows(df: DataFrame, text_field: str, id_field: str,
+                  k: int) -> DataFrame:
+    """``(id, s)``: one row per character k-shingle position of the
+    normalized text, bound once per document.  A shingle that repeats
+    gives repeated rows; the MinHash minima ignore them.  A text shorter
+    than ``k`` (empty and null included) is one shingle: itself."""
+    from tostore_spark.llmops.text import norm_sql
+    return (df.selectExpr(f"`{id_field}` AS id",
+                          f"{norm_sql(f'`{text_field}`')} AS t")
+              .selectExpr("id", "t", "explode(sequence(1, greatest("
+                          f"length(t) - {k - 1}, 1))) AS pos")
+              .selectExpr("id", f"substring(t, pos, {k}) AS s"))
+
+
 def minhash_band_index(df: DataFrame, text_field: str = "text",
                        id_field: str = "doc_id", num_hashes: int = 16,
                        bands: int = 4, shingle_k: int = 5) -> DataFrame:
@@ -160,15 +179,7 @@ def minhash_band_index(df: DataFrame, text_field: str = "text",
     # chain, one parser call per select instead of hundreds of py4j round
     # trips — cold plan construction drops from ~1.5s to ~0.2s of serial
     # driver time, the same technique vector.py uses for distance exprs).
-    k = int(shingle_k)
-    from tostore_spark.llmops.text import norm_sql
-    norm = norm_sql(f"`{text_field}`")
-    shingle_sql = (
-        f"flatten(transform(array({norm}), t -> array_distinct("
-        f"transform(sequence(1, greatest(length(t) - {k - 1}, 1)),"
-        f" i -> substring(t, i, {k})))))")
-    sh_rows = df.selectExpr(f"`{id_field}` AS id",
-                            f"explode({shingle_sql}) AS s")
+    sh_rows = _shingle_rows(df, text_field, id_field, int(shingle_k))
     based = sh_rows.selectExpr(
         "id", "CAST(conv(substring(md5(s), 1, 8), 16, 10) AS BIGINT) AS u")
     mins = based.groupBy("id").agg(*[
@@ -721,6 +732,54 @@ def embedding_neardup_pairs(df: DataFrame, vec_field: str = "embedding",
 
 
 # ------------------------------------------------- dedup clustering
+#: Most pair rows ``dedup_clusters`` clusters on the driver (small mode).
+#: ``tools/dedup_crossover.py`` (4 vCPU, local[4], parquet edge sets of
+#: 2-21-node families, median of 3), small vs large mode in seconds:
+#:
+#:   edges    10^3       10^4       10^5       3*10^5      10^6
+#:   clique   0.33/1.54  0.30/1.75  0.93/2.25  2.21/2.60   5.28/5.05
+#:   tree     0.21/2.69  0.24/2.91  1.34/8.27  3.48/15.45  12.68/53.81
+#:
+#: Small mode wins below the clique crossover near 10^6 edges.  The bound
+#: sits under it because a larger edge set pays the probe's collect of
+#: ``SMALL_GRAPH_EDGES + 1`` rows on top of the loop (under 2 s here).
+SMALL_GRAPH_EDGES = 300_000
+
+
+def _local_components(rows) -> list[tuple]:
+    """Union-find over ``(a, b)`` pair rows (path halving, the smaller
+    id as root): one ``(id, cluster_id, cluster_size)`` row per id, as
+    the label loop gives them.  A pair with a null id joins nothing in
+    the loop: its other id stays a node, and the null id is one row
+    labelled null."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    has_null = False
+    for a, b in rows:
+        if a is None or b is None:
+            has_null = True
+            for x in (a, b):
+                if x is not None:
+                    find(x)
+            continue
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    root = {x: find(x) for x in parent}
+    size = Counter(root.values())
+    out = [(x, r, size[r]) for x, r in root.items()]
+    if has_null:
+        out.append((None, None, 1))
+    return out
+
+
 def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
                    max_iterations: int = 25) -> DataFrame:
     """Connected components over near-dup pairs: one ``(id, cluster_id,
@@ -733,22 +792,41 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     pair row.  The reference's dedup keeps one canonical record per
     duplicate group; the distributed analog is connected components.
 
-    Algorithm: min-label propagation with pointer jumping — each round
-    every node adopts the minimum label among itself and its neighbors,
-    then contracts ``label <- label(label)``.  The contraction halves the
-    remaining tree height, so a chain of N near-dups converges in
-    O(log N) rounds, not O(N); each round is two key shuffles.  Lineage
-    is cut with a lazy pin per round (only ``edges`` is pinned
-    eagerly), and the loop exits on the first round with no label
-    change.  Raises ``RuntimeError`` if ``max_iterations`` rounds
-    pass without such a round: the labels would be partial.
+    Two modes, one answer.  The pairs are pinned once (lazily) and
+    probed with one bounded action that collects at most
+    ``SMALL_GRAPH_EDGES + 1`` rows.
+
+    - Small mode (at most ``SMALL_GRAPH_EDGES`` pairs, integer or string
+      ids): union-find on the driver, returned as one local frame the
+      planner sizes, so a join against it broadcasts unhinted.
+    - Large mode (more pairs, or ids of another type): min-label
+      propagation with pointer jumping over the pinned pairs.  Each
+      round every node adopts the minimum label among itself and its
+      neighbors, then contracts ``label <- label(label)``.  The
+      contraction halves the remaining tree height, so a chain of N
+      near-dups converges in O(log N) rounds, not O(N); each round is
+      two key shuffles.  Lineage is cut with a lazy pin per round (only
+      ``edges`` is pinned eagerly), and the loop exits on the first
+      round with no label change.  Raises ``RuntimeError`` if
+      ``max_iterations`` rounds pass without such a round: the labels
+      would be partial.  Small mode is exact and ignores
+      ``max_iterations``.
     """
-    edges = pin(pairs.select(F.col(id_a).alias("src"),
-                             F.col(id_b).alias("dst"))
-                     .unionByName(
-                         pairs.select(F.col(id_b).alias("src"),
-                                      F.col(id_a).alias("dst")))
-                     .distinct(), eager=True)
+    pairs = pin(pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b")))
+    edges = (pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+             .unionByName(pairs.select(F.col("b").alias("src"),
+                                       F.col("a").alias("dst")))
+             .distinct())
+    id_type = edges.schema["src"].dataType
+    if isinstance(id_type, IntegralType) or id_type == StringType():
+        rows = pairs.limit(SMALL_GRAPH_EDGES + 1).collect()
+        if len(rows) <= SMALL_GRAPH_EDGES:
+            return local_df(pairs.sparkSession, _local_components(rows),
+                            StructType([StructField("id", id_type),
+                                        StructField("cluster_id", id_type),
+                                        StructField("cluster_size",
+                                                    LongType())]))
+    edges = pin(edges, eager=True)
     labels = (edges.select(F.col("src").alias("id")).distinct()
               .withColumn("label", F.col("id")))
     for _ in range(max_iterations):
