@@ -181,3 +181,24 @@ class TestTtlFastPath:
         assert sorted(map(k, fast.select("id", "n", "change").collect())) \
             == sorted(map(k, slow.collect()))
         db.unpin_versions()
+
+    @pytest.mark.parametrize("ttl_ms", [0, -3_600_000])
+    def test_nonpositive_ttl_keeps_rows_through_flush(self, spark, tmp_path,
+                                                      ttl_ms):
+        """A zero or negative ``ttl_ms`` turns TTL off everywhere: the
+        flush sweep keeps every row the reads show."""
+        wh = str(tmp_path / "wh")
+        db = _mk(spark, wh, ttl_ms=ttl_ms)
+        now = datetime.datetime.now()
+        db.batch_insert("t", [
+            {"id": f"r{i}", "n": i,
+             "created": now - datetime.timedelta(hours=i)}
+            for i in range(4)])
+        want = ["r0", "r1", "r2", "r3"]
+        assert _ids(db.df("t")) == want
+        db.flush()
+        assert _ids(db.df("t")) == want
+        assert _ids(db.df_at("t", db._generations[("default", "t")])) \
+            == want
+        db.unpin_versions()
+        assert _ids(ToStoreSpark(spark, warehouse=wh).df("t")) == want

@@ -11,8 +11,9 @@ primitive Spark ships — ``aes_encrypt``; the reference's xor/chacha
 tiers are deliberately NOT re-implemented, xor because it is
 obfuscation not encryption, chacha because no built-in expression
 exists and a Python-side cipher would put a row-at-a-time UDF in every
-scan) at the ENGINE WRITE BOUNDARY (``engine._set_df_at_key``) and
-decrypted at the READ boundary (``engine._df_at_key``).  Everything
+scan) at the WRITE boundary (``to_stored``) and decrypted at the READ
+boundary (``to_visible``, after the TTL live filter).  Every engine
+read and write crosses through these two functions.  Everything
 between the boundaries — flushed parquet segments, append deltas,
 replace epochs, version history, backups — holds ciphertext; everything
 user-facing — ``df()``, query builders, CDC feeds, ``df_at`` — sees
@@ -56,7 +57,10 @@ import os
 import secrets
 from dataclasses import dataclass
 
-__all__ = ["EncryptionConfig", "encrypt_frame", "decrypt_frame",
+from tostore_spark.ttl import ttl_filter
+
+__all__ = ["EncryptionConfig", "encrypted_spec", "to_stored",
+           "to_visible", "encrypt_frame", "decrypt_frame",
            "write_key_check", "verify_key_check"]
 
 _CRYPTO_SIDECAR = "_crypto.json"
@@ -86,6 +90,41 @@ class EncryptionConfig:
             raise ValueError(
                 f"unsupported at-rest algorithm {self.algorithm!r}; "
                 "only 'aes_gcm' is offered (module doc)")
+
+
+def encrypted_spec(schema, config: EncryptionConfig | None) -> dict:
+    """column → canonical PLAINTEXT Spark type for every field the
+    ``schema`` marks encrypted — the typed-envelope spec both
+    ``encrypt_frame`` and ``decrypt_frame`` need to round-trip non-text
+    values losslessly.  Empty without a config (the feature is
+    entirely opt-in)."""
+    if config is None or schema is None:
+        return {}
+    from tostore_spark.schema import spark_type_for
+    return {f.name: spark_type_for(f.type) for f in schema.fields
+            if getattr(f, "encrypted", False)}
+
+
+def to_stored(df, schema, config: EncryptionConfig | None):
+    """The visible→stored boundary: encrypt the columns ``schema``
+    marks encrypted.  A table without any returns ``df`` itself."""
+    spec = encrypted_spec(schema, config)
+    if not spec:
+        return df
+    return encrypt_frame(df, list(spec), config.key, types=spec)
+
+
+def to_visible(df, schema, config: EncryptionConfig | None = None):
+    """The stored→visible boundary: the TTL live filter, then
+    decryption of the columns ``schema`` marks encrypted.  Without a
+    ``config`` only the TTL half applies and the frame stays at rest
+    (backups, the flush sweep).  A table with neither returns ``df``
+    itself — no plan node, no py4j call."""
+    df = ttl_filter(df, schema.ttl)
+    spec = encrypted_spec(schema, config)
+    if not spec:
+        return df
+    return decrypt_frame(df, list(spec), config.key, types=spec)
 
 
 def _key_col(key: str):

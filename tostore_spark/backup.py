@@ -15,6 +15,7 @@ import json
 import os
 from typing import Optional
 
+from tostore_spark.at_rest import to_visible
 from tostore_spark.schema import (DataType, FieldSchema, ForeignKeyAction,
                                   ForeignKeySchema, IndexSchema, IndexType,
                                   PrimaryKeyConfig, PrimaryKeyType,
@@ -101,19 +102,11 @@ def backup(engine, backup_dir: str, include_global: bool = True) -> str:
         if sch.is_global and not include_global:
             continue
         path = os.path.join(backup_dir, f"{name}.parquet")
-        key = engine._resolve(name)
-        if getattr(engine, "_enc_cols", lambda _k: [])(key):
-            # at-rest contract: a backup of an encrypted table stays
-            # CIPHERTEXT (df() would decrypt — a silent declassify);
-            # the TTL read-filter still applies (plaintext source col)
-            frame = engine._tables[key]["df"]
-            tsch = engine._tables[key]["schema"]
-            if tsch.ttl is not None and tsch.ttl.ttl_ms > 0 \
-                    and tsch.ttl.source_field:
-                from tostore_spark.ttl import ttl_filter
-                frame = ttl_filter(frame, tsch.ttl)
-        else:
-            frame = engine.df(name)
+        ent = engine._tables[engine._resolve(name)]
+        # at-rest contract: a backup of an encrypted table stays
+        # CIPHERTEXT (df() would decrypt — a silent declassify), so
+        # only the TTL half of the read boundary applies
+        frame = to_visible(ent["df"], ent["schema"])
         frame.write.mode("overwrite").parquet(path)
         manifest["tables"].append(_schema_to_dict(sch))
     # KV state rides in the manifest (driver-resident dict; the reference's

@@ -18,15 +18,28 @@ managed Parquet directories under a warehouse for the write path).  A
 
 from __future__ import annotations
 
+import base64
 import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from tostore_spark.at_rest import encrypted_spec, to_stored, to_visible
 from tostore_spark.query import QueryBuilder
 from tostore_spark.schema import TableSchema
 from tostore_spark.localdf import local_df
 from tostore_spark.pin import pin
+from tostore_spark.ttl import ttl_active
+
+
+def _decode_bloom(raw: dict) -> dict:
+    """``_bloom.json`` as written by the flush, bitmaps base64-decoded."""
+    return {"m": int(raw["m"]), "k": int(raw["k"]), "h": raw.get("h"),
+            "cols": {c: base64.b64decode(b)
+                     for c, b in raw["cols"].items()},
+            "files": {rel: {c: base64.b64decode(b) for c, b in fm.items()}
+                      for rel, fm in (raw.get("files") or {}).items()}}
+
 
 #: mutations between the lineage-cutting pins
 #: (``ToStoreSpark._maybe_compact``)
@@ -103,6 +116,12 @@ class ToStoreSpark:
         # (space, name) -> {"df": DataFrame|None, "path": str|None,
         #                   "schema": TableSchema, "global": bool}
         self._tables: dict[tuple[str, str], dict] = {}
+        #: (space, name) -> generation of the last flush (or load);
+        #: equal to the in-memory generation means clean (``_is_clean``)
+        self._flushed_gen: dict[tuple[str, str], int] = {}
+        #: (space, table, version) dirs handed out by time travel,
+        #: CDC and snapshots — vacuum keeps them until unpinned
+        self._pinned_versions: set[tuple[str, str, int]] = set()
         if data_dir:
             self.register_dir(data_dir)
         # durable store: overlay the last flushed state (versioned parquet
@@ -156,16 +175,11 @@ class ToStoreSpark:
         if schema is None:
             schema = TableSchema.from_struct_type(name, df.schema, is_global=is_global)
         self._validate_encrypted_fields(schema)
-        enc = ([f.name for f in schema.fields
-                if getattr(f, "encrypted", False)]
-               if self.encryption is not None else [])
-        if enc and not pre_encrypted:
+        if not pre_encrypted:
             # user-supplied content arrives plaintext; the registry
             # holds ciphertext (``pre_encrypted=True`` — the restore
             # path — registers already-at-rest bytes verbatim)
-            from tostore_spark.at_rest import encrypt_frame
-            df = encrypt_frame(df, enc, self.encryption.key,
-                               types=self._spec_for_schema(schema))
+            df = to_stored(df, schema, self.encryption)
         space = "global" if is_global else self._space
         if (space, name) in self._tables:
             # re-registering replaces the data: advance the generation so
@@ -258,17 +272,12 @@ class ToStoreSpark:
     def create_table(self, schema: TableSchema) -> None:
         """Create an empty managed table from a declared TableSchema."""
         self._validate_encrypted_fields(schema)
-        df = local_df(self.spark, [], schema.to_struct_type())
-        enc = [f.name for f in schema.fields
-               if getattr(f, "encrypted", False)]
-        if enc and self.encryption is not None:
-            # shape the EMPTY registry frame like every later ciphertext
-            # frame: encrypted columns are stored as string regardless
-            # of their declared type (the typed-envelope layout), so
-            # the first union/decrypt must already see string here
-            from tostore_spark.at_rest import encrypt_frame
-            df = encrypt_frame(df, enc, self.encryption.key,
-                               types=self._spec_for_schema(schema))
+        # shape the EMPTY registry frame like every later ciphertext
+        # frame: encrypted columns are stored as string regardless of
+        # their declared type (the typed-envelope layout), so the first
+        # union/decrypt must already see string here
+        df = to_stored(local_df(self.spark, [], schema.to_struct_type()),
+                       schema, self.encryption)
         space = "global" if schema.is_global else self._space
         self._tables[(space, schema.name)] = {
             "df": df, "path": None, "schema": schema, "global": schema.is_global,
@@ -311,33 +320,9 @@ class ToStoreSpark:
     def _enc_cols(self, key: tuple) -> list:
         """Names of at-rest-encrypted columns for a registry entry
         ([] without config — the feature is entirely opt-in)."""
-        if self.encryption is None:
-            return []
         ent = self._tables.get(key)
-        sch = ent.get("schema") if ent else None
-        if sch is None:
-            return []
-        return [f.name for f in sch.fields
-                if getattr(f, "encrypted", False)]
-
-    @staticmethod
-    def _spec_for_schema(sch) -> dict:
-        """column → canonical PLAINTEXT Spark type for every encrypted
-        field — the typed-envelope spec both encrypt_frame and
-        decrypt_frame need to round-trip non-text values losslessly."""
-        from tostore_spark.schema import spark_type_for
-        return {f.name: spark_type_for(f.type) for f in sch.fields
-                if getattr(f, "encrypted", False)}
-
-    def _enc_spec(self, key: tuple) -> dict:
-        """``_enc_cols`` with types: {name: plaintext Spark type}."""
-        if self.encryption is None:
-            return {}
-        ent = self._tables.get(key)
-        sch = ent.get("schema") if ent else None
-        if sch is None:
-            return {}
-        return self._spec_for_schema(sch)
+        return list(encrypted_spec(ent and ent.get("schema"),
+                                   self.encryption))
 
     def create_tables(self, schemas: list[TableSchema]) -> None:
         """Create several tables at once (tostore.dart:356)."""
@@ -479,7 +464,7 @@ class ToStoreSpark:
                 # serializable transaction scope: record the manifest
                 # version this table was READ at (first read wins — the
                 # transaction's snapshot); flush re-validates the set
-                rs[key] = getattr(self, "_flushed_gen", {}).get(key, 0)
+                rs[key] = self._flushed_gen.get(key, 0)
             # read GRANULARITY: a raw frame read demands whole-table
             # validation (the caller can do anything with the plan); a
             # QueryBuilder read flags itself via _txn_pred_scope and
@@ -493,19 +478,14 @@ class ToStoreSpark:
             else:
                 preds[key] = None
         ent = self._tables[key]
-        df = ent["df"]
-        sch: TableSchema = ent["schema"]
-        if sch.ttl is not None and sch.ttl.ttl_ms > 0 and sch.ttl.source_field:
-            from tostore_spark.ttl import ttl_filter
-            df = ttl_filter(df, sch.ttl)
-        enc = self._enc_cols(key)
-        if enc:
-            # at-rest boundary: the registry frame is ciphertext;
-            # every consumer above this line sees plaintext
-            from tostore_spark.at_rest import decrypt_frame
-            df = decrypt_frame(df, enc, self.encryption.key,
-                               types=self._enc_spec(key))
-        return df
+        # the registry frame is STORED (TTL-unswept rows, ciphertext);
+        # every consumer above this line sees the visible frame
+        return to_visible(ent["df"], ent["schema"], self.encryption)
+
+    def _is_clean(self, key: tuple) -> bool:
+        """No unflushed mutation: the in-memory generation equals the
+        last flushed one, so the manifest recipe IS the table."""
+        return self._generations.get(key, 0) == self._flushed_gen.get(key)
 
     def _stats_summaries(self, name: str,
                          counted_dels: bool = False):
@@ -549,11 +529,7 @@ class ToStoreSpark:
                 if np_ in seg_paths or np_ not in dcounts:
                     return None
                 del_total += int(dcounts[np_])
-        if (self._generations.get(key, 0)
-                != getattr(self, "_flushed_gen", {}).get(key)):
-            return None
-        sch: TableSchema = ent["schema"]
-        if sch.ttl is not None and sch.ttl.ttl_ms > 0 and sch.ttl.source_field:
+        if not self._is_clean(key) or ttl_active(ent["schema"].ttl):
             return None
         out = []
         for seg in segs:
@@ -645,10 +621,7 @@ class ToStoreSpark:
         ent = self._tables[key]
         stats = ent.get("segment_stats")
         segs = ent.get("segments")
-        clean = (self._generations.get(key, 0)
-                 == getattr(self, "_flushed_gen", {}).get(key))
-        if not getattr(self, "data_skipping", True):
-            clean = False
+        clean = self._is_clean(key) and getattr(self, "data_skipping", True)
         if not stats or not segs or not clean:
             self._last_prune = None
             return None
@@ -709,26 +682,11 @@ class ToStoreSpark:
                         schema=(base.schema,
                                 bool(ent.get("partition_by"))),
                         keep=keep)
-        return self._ttl_filtered(df.select(*base.columns), ent)
-
-    def _ttl_filtered(self, df: DataFrame, ent: dict) -> DataFrame:
-        """Read-boundary finisher for frames rebuilt from raw segment
-        files (pruned_df and friends): applies the TTL read filter AND
-        decrypts at-rest-encrypted columns, exactly mirroring the
-        standard ``_df_at_key`` read path — a skipping-rebuilt scan
-        must be indistinguishable from the registry frame."""
-        sch: TableSchema = ent["schema"]
-        if sch.ttl is not None and sch.ttl.ttl_ms > 0 and sch.ttl.source_field:
-            from tostore_spark.ttl import ttl_filter
-            df = ttl_filter(df, sch.ttl)
-        if self.encryption is not None:
-            enc = [f.name for f in sch.fields
-                   if getattr(f, "encrypted", False)]
-            if enc:
-                from tostore_spark.at_rest import decrypt_frame
-                df = decrypt_frame(df, enc, self.encryption.key,
-                                   types=self._spec_for_schema(sch))
-        return df
+        # the same stored→visible boundary as ``_df_at_key``: a
+        # skipping-rebuilt scan is indistinguishable from the registry
+        # frame
+        return to_visible(df.select(*base.columns), ent["schema"],
+                          self.encryption)
 
     def enable_bloom_skip(self, name: str, cols: list,
                           bits: int = 65536, k: int = 4) -> None:
@@ -764,35 +722,33 @@ class ToStoreSpark:
         ent["bloom_cols"] = {"cols": list(cols), "m": int(bits),
                              "k": int(k)}
 
-    def _bloom_stats(self, seg: str) -> Optional[dict]:
-        """Lazy, cached, base64-decoded read of a segment's
-        ``_bloom.json`` sidecar — {"m", "k", "cols": {col: bytes}}."""
-        cache = getattr(self, "_bloom_cache", None)
-        if cache is None:
-            cache = self._bloom_cache = {}
-        if seg in cache:
-            return cache[seg]
+    def _sidecar(self, seg: str, fname: str, cache: str, decode):
+        """Lazy, cached read of a segment's JSON sidecar ``fname``,
+        decoded by ``decode``.  Version dirs are immutable, so the
+        cache (attribute ``cache``, dropped at flush/refresh) is keyed
+        by the segment path alone.  None when absent or unreadable."""
+        memo = self.__dict__.setdefault(cache, {})
+        if seg in memo:
+            return memo[seg]
         out = None
         try:
-            import base64
             import json as _json
             from tostore_spark import fs as _fsmod
             fs = _fsmod.get_fs(self._warehouse, self.spark)
-            p = _fsmod.join(seg, "_bloom.json")
+            p = _fsmod.join(seg, fname)
             if fs.exists(p):
-                raw = _json.loads(fs.read_text(p))
-                out = {"m": int(raw["m"]), "k": int(raw["k"]),
-                       "h": raw.get("h"),
-                       "cols": {c: base64.b64decode(b)
-                                for c, b in raw["cols"].items()},
-                       "files": {rel: {c: base64.b64decode(b)
-                                       for c, b in fm.items()}
-                                 for rel, fm in
-                                 (raw.get("files") or {}).items()}}
+                out = decode(_json.loads(fs.read_text(p)))
         except Exception:
             out = None
-        cache[seg] = out
+        memo[seg] = out
         return out
+
+    def _bloom_stats(self, seg: str) -> Optional[dict]:
+        """A segment's base64-decoded ``_bloom.json`` sidecar —
+        {"m", "k", "h", "cols": {col: bytes}, "files": {rel: {col:
+        bytes}}}."""
+        return self._sidecar(seg, "_bloom.json", "_bloom_cache",
+                             _decode_bloom)
 
     def table_stats(self, name: str) -> dict:
         """Metadata-only observability for a warehouse table: the
@@ -876,26 +832,10 @@ class ToStoreSpark:
         return out
 
     def _file_stats(self, seg: str) -> Optional[dict]:
-        """Lazy, cached read of a segment's ``_filestats.json`` sidecar
-        ({relpath: per-file summary}) — version dirs are immutable, so
-        the cache key is just the segment path.  None when absent."""
-        cache = getattr(self, "_filestats_cache", None)
-        if cache is None:
-            cache = self._filestats_cache = {}
-        if seg in cache:
-            return cache[seg]
-        out = None
-        try:
-            import json as _json
-            from tostore_spark import fs as _fsmod
-            fs = _fsmod.get_fs(self._warehouse, self.spark)
-            p = _fsmod.join(seg, "_filestats.json")
-            if fs.exists(p):
-                out = _json.loads(fs.read_text(p)).get("files") or None
-        except Exception:
-            out = None
-        cache[seg] = out
-        return out
+        """A segment's ``_filestats.json`` sidecar ({relpath: per-file
+        summary}); None when absent."""
+        return self._sidecar(seg, "_filestats.json", "_filestats_cache",
+                             lambda raw: raw.get("files") or None)
 
     def schema(self, name: str) -> TableSchema:
         return self._tables[self._resolve(name)]["schema"]
@@ -959,8 +899,7 @@ class ToStoreSpark:
         pure-append epochs as plain segments, pure-delete epochs as
         deletion vectors, and mixed epochs as a del+seg pair in one
         version dir (store.flush_tables)."""
-        enc = self._enc_cols(key)
-        if enc and not pre_encrypted:
+        if not pre_encrypted:
             # at-rest boundary: writers hand PLAINTEXT frames (they
             # derive from df()); the registry and every flushed byte
             # hold ciphertext.  Key frames carry only never-encrypted
@@ -968,13 +907,11 @@ class ToStoreSpark:
             # ``pre_encrypted``: the caller already holds ciphertext
             # (append_rows unions onto the RAW registry frame) — a
             # second pass would double-encrypt the base.
-            from tostore_spark.at_rest import encrypt_frame
-            kkey = self.encryption.key
-            spec = self._enc_spec(key)
-            df = encrypt_frame(df, enc, kkey, types=spec)
+            sch = self._tables[key]["schema"]
+            df = to_stored(df, sch, self.encryption)
             if append_delta is not None:
-                append_delta = encrypt_frame(append_delta, enc, kkey,
-                                             types=spec)
+                append_delta = to_stored(append_delta, sch,
+                                         self.encryption)
         self._tables[key]["df"] = df
         self._generations[key] = self._generations.get(key, 0) + 1
         adeltas, ddeltas = self._append_deltas, self._delete_deltas
@@ -1085,15 +1022,12 @@ class ToStoreSpark:
             raise ValueError(
                 f"append_rows into {name}: columns {sorted(rows_df.columns)}"
                 f" != table columns {sorted(cur.columns)}")
-        enc = self._enc_cols(key)
-        if enc:
-            # the caller hands PLAINTEXT rows but ``cur`` is the RAW
-            # ciphertext registry frame: encrypt the delta here (O(delta)
-            # work) and tell _set_df_at_key the union is already at
-            # rest — re-encrypting would double-encrypt the base
-            from tostore_spark.at_rest import encrypt_frame
-            rows_df = encrypt_frame(rows_df, enc, self.encryption.key,
-                                    types=self._enc_spec(key))
+        # the caller hands PLAINTEXT rows but ``cur`` is the RAW
+        # ciphertext registry frame: encrypt the delta here (O(delta)
+        # work) and tell _set_df_at_key the union is already at rest —
+        # re-encrypting would double-encrypt the base
+        rows_df = to_stored(rows_df, self._tables[key]["schema"],
+                            self.encryption)
         # conform TYPES, not just names: a delta segment whose parquet
         # physical type diverges from the base segments breaks (or
         # silently retypes) the multi-root read-back AFTER the manifest
@@ -1956,8 +1890,8 @@ class ToStoreSpark:
         """Release every version pinned by ``df_at`` so vacuum may prune
         them; any still-live time-travel frame over a pruned version will
         fail on its next action.  Returns the number of pins released."""
-        n = len(getattr(self, "_pinned_versions", ()))
-        self._pinned_versions = set()
+        n = len(self._pinned_versions)
+        self._pinned_versions.clear()
         return n
 
     def table_versions(self, table: str) -> list[int]:

@@ -105,17 +105,6 @@ def _byte_size(spark, raw: str) -> int:
         return int(s)
 
 
-def shingles(text_col: Column, k: int = 5) -> Column:
-    """Distinct character k-shingles of the normalized text (normalization
-    evaluated once per row via the let-binding)."""
-
-    def _inner(t):
-        idx = F.sequence(F.lit(1), F.greatest(F.length(t) - (k - 1), F.lit(1)))
-        return F.array_distinct(F.transform(idx, lambda i: t.substr(i, F.lit(k))))
-
-    return _let(normalized_text(text_col), _inner)
-
-
 # Affine minhash family over one base digest: h_i(s) = (a_i*u + b_i) mod p
 # with u = first 32 bits of md5(s).  One md5 per shingle instead of
 # num_hashes — the md5 is the dominant cost in the signature stage.

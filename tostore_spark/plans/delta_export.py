@@ -1071,8 +1071,7 @@ def _write_state(engine, table: str, path: str, version: int,
              # extension and re-export them.  _export_update's append
              # fast path therefore requires clean=True (falls back to a
              # full refresh otherwise — correct, just not incremental).
-             "clean": (engine._generations.get(key, 0)
-                       == getattr(engine, "_flushed_gen", {}).get(key))}
+             "clean": engine._is_clean(key)}
     tmp = os.path.join(path, _STATE_SIDECAR + ".tmp")
     with open(tmp, "w") as fh:
         json.dump(state, fh)
@@ -1084,7 +1083,8 @@ def _export_update(engine, table: str, path: str,
                    change_data: bool = False,
                    cluster_by: list | None = None,
                    checkpoint_format: str | None = None) -> dict:
-    from tostore_spark.store import _decrypt_for
+    from tostore_spark.at_rest import to_visible
+    from tostore_spark.ttl import ttl_active
     key = engine._resolve(table)
     ent = engine._tables[key]
     cur_ops = _norm_ops(ent)
@@ -1130,12 +1130,7 @@ def _export_update(engine, table: str, path: str,
         # already folds the CDF writer feature in
         cdf_upgrade = ck_upgrade + [a for a in cdf_upgrade
                                     if "protocol" not in a]
-    clean = (engine._generations.get(key, 0)
-             == getattr(engine, "_flushed_gen", {}).get(key))
-    sch_ttl = getattr(ent["schema"], "ttl", None)
-    has_ttl = bool(sch_ttl is not None and sch_ttl.ttl_ms
-                   and sch_ttl.source_field)
-    extends = (state is not None and clean
+    extends = (state is not None and engine._is_clean(key)
                and state.get("clean") is True
                and state.get("space") == key[0]
                and state.get("table") == key[1]
@@ -1152,19 +1147,13 @@ def _export_update(engine, table: str, path: str,
         seg_schema = ent["df"].schema if pby else None
         df = None
         for seg in new_segs:
-            part = _decrypt_for(engine, key[0], key[1],
-                                engine._read_parquet(seg, schema=seg_schema))
+            part = engine._read_parquet(seg, schema=seg_schema)
             if seg_schema is not None:
                 part = part.select(*[f.name for f in seg_schema.fields])
             df = part if df is None else df.unionByName(part)
-        sch = ent["schema"]
-        if (sch.ttl is not None and sch.ttl.ttl_ms > 0
-                and sch.ttl.source_field):
-            # raw segment reads bypass engine.df()'s TTL read filter;
-            # an append commit must not export rows the store itself
-            # would never surface
-            from tostore_spark.ttl import ttl_filter
-            df = ttl_filter(df, sch.ttl)
+        # raw segment reads are STORED frames: an append commit must
+        # export exactly what engine.df() would surface
+        df = to_visible(df, ent["schema"], engine.encryption)
         staged = _stage_data_files(df, path, next_v, None,
                                    partition_by=pby)
         adds, total = _add_actions(path, staged)
@@ -1179,7 +1168,8 @@ def _export_update(engine, table: str, path: str,
     # tails too; the DV path below handles hive layout throughout —
     # basePath probes, partition-aware staging, basename-keyed
     # positions — so partitioned extends commit as DVs like any other)
-    if (deletion_vectors and extends and new_ops and not has_ttl
+    if (deletion_vectors and extends and new_ops
+            and not ttl_active(ent["schema"].ttl)
             and all(k in ("seg", "del") for k, _p in new_ops)):
         res = _export_update_dv(engine, key, ent, table, path, live,
                                 new_ops, next_v, cdf=cdf,
@@ -1279,7 +1269,8 @@ def _export_update_dv(engine, key, ent, table: str, path: str,
     from tostore_spark.plans.delta_dv import (MAX_TOTAL_POSITIONS,
                                               decode_deletion_vector,
                                               make_descriptor)
-    from tostore_spark.store import _decrypt_for, read_delete_keys
+    from tostore_spark.at_rest import to_visible
+    from tostore_spark.store import read_delete_keys
     spark = engine.spark
     live_files = dict(live["files"])
     exp_schema = StructType.fromJson(
@@ -1299,9 +1290,9 @@ def _export_update_dv(engine, key, ent, table: str, path: str,
         for kind, op_path in new_ops:
             if kind == "seg":
                 seg_schema = ent["df"].schema if pby else None
-                part = _decrypt_for(engine, key[0], key[1],
-                                    engine._read_parquet(op_path,
-                                                         schema=seg_schema))
+                part = to_visible(engine._read_parquet(op_path,
+                                                       schema=seg_schema),
+                                  ent["schema"], engine.encryption)
                 part = part.select(*[f.name for f in exp_schema.fields])
                 staged = _stage_data_files(part, path, next_v, None,
                                            partition_by=pby)

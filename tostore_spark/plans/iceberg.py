@@ -1766,9 +1766,7 @@ def _write_iceberg_state(engine, table: str, path: str,
              "ops": _norm_ops(ent),
              "snapshot_id": rep["snapshot_id"],
              "store_generation": engine._generations.get(key, 0),
-             "clean": (engine._generations.get(key, 0)
-                       == getattr(engine, "_flushed_gen", {})
-                       .get(key))}
+             "clean": engine._is_clean(key)}
     tmp = os.path.join(path, _ICE_STATE + ".tmp")
     with open(tmp, "w") as fh:
         json.dump(state, fh)
@@ -1812,7 +1810,9 @@ def _export_iceberg_update(engine, table: str, path: str,
 
     from tostore_spark.plans.delta_dv import MAX_TOTAL_POSITIONS
     from tostore_spark.plans.delta_export import _norm_ops
-    from tostore_spark.store import _decrypt_for, read_delete_keys
+    from tostore_spark.at_rest import to_visible
+    from tostore_spark.store import read_delete_keys
+    from tostore_spark.ttl import ttl_active
 
     spark = engine.spark
     key = engine._resolve(table)
@@ -1824,12 +1824,8 @@ def _export_iceberg_update(engine, table: str, path: str,
         with open(spath) as fh:
             state = json.load(fh)
     meta = _load_metadata(path)
-    clean = (engine._generations.get(key, 0)
-             == getattr(engine, "_flushed_gen", {}).get(key))
-    sch_ttl = getattr(ent["schema"], "ttl", None)
-    has_ttl = bool(sch_ttl is not None and sch_ttl.ttl_ms
-                   and sch_ttl.source_field)
-    extends = (state is not None and clean
+    has_ttl = ttl_active(ent["schema"].ttl)
+    extends = (state is not None and engine._is_clean(key)
                and state.get("clean") is True
                and state.get("space") == key[0]
                and state.get("table") == key[1]
@@ -1840,13 +1836,10 @@ def _export_iceberg_update(engine, table: str, path: str,
     def _seg_frame(op_path):
         pby = list(ent.get("partition_by") or [])
         seg_schema = ent["df"].schema if pby else None
-        part = _decrypt_for(engine, key[0], key[1],
-                            engine._read_parquet(op_path, schema=seg_schema))
-        part = part.select(*[f.name for f in ent["df"].schema.fields])
-        if has_ttl:
-            from tostore_spark.ttl import ttl_filter
-            part = ttl_filter(part, ent["schema"].ttl)
-        return part
+        part = engine._read_parquet(op_path, schema=seg_schema)
+        return to_visible(
+            part.select(*[f.name for f in ent["df"].schema.fields]),
+            ent["schema"], engine.encryption)
 
     pby = list(ent.get("partition_by") or [])
     if extends and new_ops and all(k == "seg" for k, _p in new_ops):

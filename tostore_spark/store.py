@@ -49,6 +49,7 @@ import uuid
 from typing import Optional
 
 from tostore_spark import fs as _fsmod
+from tostore_spark.at_rest import to_visible
 from tostore_spark.backup import _schema_from_dict, _schema_to_dict
 from tostore_spark.localdf import local_df
 from tostore_spark.pin import pin
@@ -600,8 +601,6 @@ def flush_tables(engine, flush_storage: bool = True,
     only_keys = ({engine._resolve(t) for t in only}
                  if only is not None else None)
     wh = engine._warehouse
-    if not hasattr(engine, "_flushed_gen"):
-        engine._flushed_gen = {}
     durable = bool(flush_storage and wh)
 
     def _dirty(key, ent):
@@ -682,8 +681,7 @@ def flush_tables(engine, flush_storage: bool = True,
         for key in dirty_keys:
             ent = engine._tables[key]
             gen = engine._generations.get(key, 0)
-            sch = ent.get("schema")
-            ttl_cfg = getattr(sch, "ttl", None) if sch else None
+            sch = ent["schema"]
             claims.append(_claim_version(fs, wh, key[0], key[1], gen,
                                          lock.token, theirs.get(key)))
             vdir = table_version_dir(wh, key[0], key[1], gen)
@@ -702,19 +700,18 @@ def flush_tables(engine, flush_storage: bool = True,
             # what's-wrong #1: a high-ingest retention table must not
             # pay a full rewrite per flush).  The TTL filter applies to
             # the DELTA at flush (expired new rows never land); expired
-            # BASE rows stay on disk but invisible — every read path
-            # filters (engine._df_at_key, _ttl_filtered on rebuilt
-            # scans) and metadata aggregates refuse TTL tables outright
+            # BASE rows stay on disk but invisible — every read crosses
+            # at_rest.to_visible, which applies the same filter, and
+            # metadata aggregates refuse TTL tables outright
             # (_stats_summaries) — until the amortized _MAX_SEGMENTS
             # rewrite (or any rewrite-dirty epoch) physically sweeps
             # them: the batch form of the reference's periodic cleanup
-            # cron (ttl_cleanup_manager.dart:40+).
+            # cron (ttl_cleanup_manager.dart:40+).  The sweep is
+            # to_visible's TTL half alone: written bytes stay at rest.
             delta = engine._append_deltas.get(key)
             ddelta = engine._delete_deltas.get(key)
-            if (ttl_cfg is not None and ttl_cfg.ttl_ms
-                    and delta is not None):
-                from tostore_spark.ttl import cleanup
-                delta = cleanup(delta, ttl_cfg)
+            if delta is not None:
+                delta = to_visible(delta, sch)
             base_segs = ent.get("segments") or \
                 ([ent["path"]] if ent.get("path") else None)
             base_ops = ent.get("ops") or \
@@ -782,13 +779,9 @@ def flush_tables(engine, flush_storage: bool = True,
                 ops = base_ops + [["del", vdir], ["seg", vdir]]
                 segments = base_segs + [vdir]
             else:
-                frame = delta if fast else ent["df"]
-                if (not fast and ttl_cfg is not None
-                        and ttl_cfg.ttl_ms):
-                    # the rewrite IS the physical TTL sweep (delta
-                    # frames were cleaned above)
-                    from tostore_spark.ttl import cleanup
-                    frame = cleanup(frame, ttl_cfg)
+                # the rewrite IS the physical TTL sweep (delta
+                # frames were swept above)
+                frame = delta if fast else to_visible(ent["df"], sch)
                 writer = frame.write.mode("overwrite")
                 if pby:
                     # hive-style directory partitioning: reopened
@@ -837,8 +830,7 @@ def flush_tables(engine, flush_storage: bool = True,
                           if (fast or fast_del or fast_replace) else {})
             if fast_del and del_count is not None:
                 del_counts[_norm_path(vdir)] = del_count
-            enc_cols = set(engine._enc_cols(key)) \
-                if hasattr(engine, "_enc_cols") else set()
+            enc_cols = set(engine._enc_cols(key))
             if enc_cols:
                 # first encrypted flush writes the warehouse key
                 # verifier; later opens with a wrong/missing key fail
@@ -1130,7 +1122,7 @@ def _merge_manifests(engine, ours: dict, theirs: dict) -> dict:
       the snapshot it loaded (``_kv_baseline``) — adds/changes overlay,
       local deletes remove; untouched keys keep the other writer's
       values."""
-    fgen = getattr(engine, "_flushed_gen", {})
+    fgen = engine._flushed_gen
     tables: dict = {}
     for name, ent in theirs.get("tables", {}).items():
         k = (ent["space"], ent["name"])
@@ -1281,8 +1273,6 @@ def load_warehouse(engine) -> list[str]:
             "del_counts": ent.get("del_counts"),
         }
         engine._generations[key] = ent.get("version", 0)
-        if not hasattr(engine, "_flushed_gen"):
-            engine._flushed_gen = {}
         engine._flushed_gen[key] = ent.get("version", 0)
         loaded.append(ent["name"])
     for sp in man.get("spaces", []):
@@ -1351,7 +1341,7 @@ def refresh(engine, row_merge: bool = False,
     man = read_manifest(wh, fs=_fs(engine)) or {"seq": 0, "tables": {}}
     new_flushed = {(e["space"], e["name"]): e.get("version", 0)
                    for e in man.get("tables", {}).values()}
-    old_flushed = dict(getattr(engine, "_flushed_gen", {}))
+    old_flushed = dict(engine._flushed_gen)
     # this engine's unflushed work: generation past what IT last flushed
     dirty = {key: ent for key, ent in engine._tables.items()
              if engine._generations.get(key, 0) > old_flushed.get(key, 0)
@@ -1617,7 +1607,7 @@ def check_remote_changes(engine) -> list[str]:
     man = read_manifest(wh, fs=_fs(engine))
     if (man or {}).get("seq", 0) == getattr(engine, "_store_seq", 0):
         return []
-    old = dict(getattr(engine, "_flushed_gen", {}))
+    old = dict(engine._flushed_gen)
     new_flushed = {(e["space"], e["name"]): e.get("version", 0)
                    for e in (man or {}).get("tables", {}).values()}
     changed = sorted(k for k in set(new_flushed) | set(old)
@@ -1652,38 +1642,18 @@ def read_version(engine, table: str, version: int,
         raise FileNotFoundError(
             f"no flushed version v{version} for {space}/{table}; "
             f"available: {list_versions(engine, table, space)}")
-    if not hasattr(engine, "_pinned_versions"):
-        engine._pinned_versions = set()
     engine._pinned_versions.add((space, table, version))
     # an append-commit version dir holds only its delta; the sidecar
     # names the version's FULL recipe (vacuum resolves pins through
     # the same sidecar, so base AND deletion-vector dirs stay
     # protected); a deletion-vector version folds its anti-joins
     out = _ops_frame(engine, _version_ops(fs, vdir))
+    # TTL tables keep expired base rows on disk between compactions
+    # (flush fast paths): time travel crosses the same stored→visible
+    # boundary as every other read
     ent = engine._tables.get((space, table))
-    sch_ttl = getattr(ent["schema"], "ttl", None) if ent else None
-    if sch_ttl is not None and sch_ttl.ttl_ms and sch_ttl.source_field:
-        # TTL tables keep expired base rows on disk between compactions
-        # (flush fast paths); no engine read — time travel included —
-        # may surface them
-        from tostore_spark.ttl import ttl_filter
-        out = ttl_filter(out, sch_ttl)
-    return _decrypt_for(engine, space, table, out)
-
-
-def _decrypt_for(engine, space: str, table: str, df):
-    """Version/CDC reads bypass the engine's df() boundary and hand
-    back STORED frames — decrypt at-rest columns here so time travel
-    and change feeds surface plaintext like every other read."""
-    try:
-        cols = engine._enc_cols((space, table))
-    except Exception:
-        cols = []
-    if not cols:
-        return df
-    from tostore_spark.at_rest import decrypt_frame
-    return decrypt_frame(df, cols, engine.encryption.key,
-                         types=engine._enc_spec((space, table)))
+    return (to_visible(out, ent["schema"], engine.encryption)
+            if ent else out)
 
 
 def vacuum(engine, keep: int = 1) -> int:
@@ -1697,7 +1667,7 @@ def vacuum(engine, keep: int = 1) -> int:
     man = read_manifest(engine._warehouse, fs=fs) or {"tables": {}}
     current = {(e["space"], e["name"]): e["path"]
                for e in man["tables"].values()}
-    pinned = getattr(engine, "_pinned_versions", set())
+    pinned = engine._pinned_versions
     # append-commit protection: a dir referenced as a SEGMENT of the
     # current entry, of a kept version, or of a pinned version is live
     # data even when its own version number is old — resolve segment
@@ -1815,8 +1785,6 @@ def _diff_from_recipe(engine, table: str, from_version: int,
             or ops_to[:len(ops_from)] != ops_from):
         return None
     # pin both versions against vacuum exactly like read_version
-    if not hasattr(engine, "_pinned_versions"):
-        engine._pinned_versions = set()
     engine._pinned_versions.add((space, table, from_version))
     engine._pinned_versions.add((space, table, to_version))
     tail = ops_to[len(ops_from):]
@@ -1824,20 +1792,15 @@ def _diff_from_recipe(engine, table: str, from_version: int,
     # partition-value types, no inference job per root); the base
     # state folds through _ops_frame, which reads its own recipe's
     tail_schema = _version_schema(fs, vt)
-    # TTL tables: raw segment reads would resurrect expired-but-
-    # unswept rows that the exceptAll fallback (read_version, TTL-
-    # filtered) never sees — filter every raw read the same way so
-    # the recipe walk returns exactly the exceptAll answer
-    _tent = engine._tables.get((space, table))
-    _ttl = getattr(_tent["schema"], "ttl", None) if _tent else None
-    if not (_ttl is not None and _ttl.ttl_ms and _ttl.source_field):
-        _ttl = None
+    # every raw read crosses the stored→visible boundary exactly as
+    # read_version does: TTL tables would otherwise resurrect expired-
+    # but-unswept rows the exceptAll fallback never sees, and equal
+    # plaintexts must net out although their GCM ciphertexts differ
+    ent = engine._tables.get((space, table))
 
-    def _ttlf(df):
-        if _ttl is None:
-            return df
-        from tostore_spark.ttl import ttl_filter
-        return ttl_filter(df, _ttl)
+    def _visible(df):
+        return (to_visible(df, ent["schema"], engine.encryption)
+                if ent else df)
 
     state = None         # built lazily, only if a del step needs it
     consumed = list(ops_from)
@@ -1854,8 +1817,7 @@ def _diff_from_recipe(engine, table: str, from_version: int,
                  for k, p in tail if k != "seg"]
     for kind, path in tail:
         if kind == "seg":
-            rows = _ttlf(engine._read_parquet(path, schema=tail_schema))
-            rows = _decrypt_for(engine, space, table, rows)
+            rows = _visible(engine._read_parquet(path, schema=tail_schema))
             if cols is None:
                 cols = sorted(rows.columns)
             rows = rows.select(*cols)
@@ -1865,12 +1827,9 @@ def _diff_from_recipe(engine, table: str, from_version: int,
         else:
             keys = read_delete_keys(engine, path)
             if state is None:
-                # decrypt BEFORE netting: same-plaintext replace pairs
-                # must net out, and GCM ciphertexts of equal plaintexts
-                # differ across writes
-                state = _decrypt_for(
-                    engine, space, table,
-                    _ttlf(_cdc_base_state(engine, consumed, tail_keys)))
+                # visible BEFORE netting (see _visible)
+                state = _visible(
+                    _cdc_base_state(engine, consumed, tail_keys))
             pre = state.join(keys, on=list(keys.columns),
                              how="left_semi")
             if cols is None:
@@ -2003,8 +1962,6 @@ class SnapshotView:
         self._manifest = manifest
         self.seq = manifest.get("seq", 0)
         self._pins = []
-        if not hasattr(engine, "_pinned_versions"):
-            engine._pinned_versions = set()
         for ent in manifest.get("tables", {}).values():
             ver = (ent["space"], ent["name"], ent.get("version", 0))
             engine._pinned_versions.add(ver)
@@ -2021,15 +1978,13 @@ class SnapshotView:
                 # read does (a pure-delete version dir holds NO data
                 # files — the segment list alone would crash or
                 # resurrect deleted rows)
-                out = _ops_frame(self._engine, _entry_ops(ent))
-                sch = _schema_from_dict(ent["schema"])
-                if (sch.ttl is not None and sch.ttl.ttl_ms
-                        and sch.ttl.source_field):
-                    # expired-but-unswept base rows (TTL flush fast
-                    # path) stay invisible through snapshots too
-                    from tostore_spark.ttl import ttl_filter
-                    out = ttl_filter(out, sch.ttl)
-                return _decrypt_for(self._engine, space, table, out)
+                # the snapshot's own schema governs both halves:
+                # expired-but-unswept rows stay hidden and encrypted
+                # fields decrypt as of this manifest
+                return to_visible(
+                    _ops_frame(self._engine, _entry_ops(ent)),
+                    _schema_from_dict(ent["schema"]),
+                    self._engine.encryption)
         raise KeyError(f"table {space}/{table} not in snapshot seq={self.seq}")
 
     def release(self) -> None:
@@ -2190,7 +2145,7 @@ def fsck(engine):
             if not fs.is_dir(ddir):
                 rows.append(("missing_version", ent["space"],
                              ent["name"], ddir))
-    pinned = getattr(engine, "_pinned_versions", set())
+    pinned = engine._pinned_versions
     wh = engine._warehouse
     for space, name in current:
         tdir = _fsmod.join(wh, space, name)

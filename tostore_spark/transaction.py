@@ -123,7 +123,7 @@ def run_transaction_with_retry(engine, action, retries: int = 3,
     while True:
         snapshot = {k: dict(v) for k, v in engine._tables.items()}
         gen_snap = dict(engine._generations)
-        fgen_snap = dict(getattr(engine, "_flushed_gen", {}))
+        fgen_snap = dict(engine._flushed_gen)
         adeltas_snap = dict(engine._append_deltas)
         ddeltas_snap = dict(engine._delete_deltas)
         kv_snap = engine._kv.snapshot() if hasattr(engine, "_kv") else None
