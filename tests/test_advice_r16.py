@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tostore_spark.engine import ToStoreSpark
-from tostore_spark.plans.delta_export import _key_bounds_where
+from tostore_spark.plans.export_tail import key_bounds_where as _key_bounds_where
 from tostore_spark.schema import (DataType, FieldSchema,
                                   PrimaryKeyConfig, TableSchema)
 from tostore_spark.plans.iceberg import export_iceberg

@@ -47,7 +47,9 @@ construction), never on disk.  The warehouse keeps a ``_crypto.json``
 verifier (random salt + sha256(salt ‖ key)) so a reopen with a wrong
 or missing key fails LOUDLY at load instead of surfacing garbage; the
 digest does not reveal the key.  Exports that would declassify
-(``export_delta``) refuse unless explicitly allowed.
+(``export_delta``, ``export_iceberg`` and ``export_table``) refuse
+unless explicitly allowed (``allow_decrypted=True``;
+``plans/export_tail.refuse_declassify``).
 """
 from __future__ import annotations
 

@@ -20,11 +20,12 @@ from __future__ import annotations
 
 import base64
 import os
-from typing import Optional
+from typing import Callable, NamedTuple, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
 from tostore_spark.at_rest import encrypted_spec, to_stored, to_visible
+from tostore_spark.fs import local_path
 from tostore_spark.query import QueryBuilder
 from tostore_spark.schema import TableSchema
 from tostore_spark.localdf import local_df
@@ -66,10 +67,70 @@ def _cast_to_table_schema(df: DataFrame, schema) -> DataFrame:
         for c in df.columns])
 
 
-def _abs_local(path: str) -> str:
-    """Absolute local form of a path or ``file:`` URI."""
-    return os.path.abspath(path[len("file:"):] if path.startswith("file:")
-                           else path)
+class _Feed(NamedTuple):
+    """The facts of one format's change feed that
+    ``ToStoreSpark._subscribe`` reads; everything else is shared."""
+
+    prefix: str         # KV cursor-key prefix
+    #: the cursor names the last applied commit; Delta's next pull
+    #: starts at cursor + 1 (inclusive, ordered versions), Iceberg's
+    #: after the cursor (exclusive ``from_snapshot``; ids are unordered,
+    #: so caught up means frm == to)
+    inclusive: bool
+    #: report keys (range start, range end); the start also names the
+    #: seed parameter
+    keys: tuple
+    head: int           # the current commit
+    origin: Callable    # to -> first commit a bootstrap up to ``to`` covers
+    snapshot: Callable  # (to, explicit, where) -> the table at ``to``
+    changes: Callable   # (frm, to, where) -> the change rows after frm
+
+
+def _delta_feed(spark, p: str) -> _Feed:
+    from tostore_spark.plans.delta_export import read_delta, read_delta_cdf
+    log_dir = os.path.join(p, "_delta_log")
+    versions = sorted(int(f[:-5]) for f in os.listdir(log_dir)
+                      if f.endswith(".json") and f[:-5].isdigit())
+    if not versions:
+        raise FileNotFoundError(f"no delta commits under {p}")
+    return _Feed(
+        prefix="__cdf_cursor__", inclusive=True,
+        keys=("from_version", "to_version"),
+        head=versions[-1], origin=lambda to: versions[0],
+        snapshot=lambda to, explicit, where: read_delta(
+            spark, p, version=to, where=where),
+        changes=lambda frm, to, where: read_delta_cdf(
+            spark, p, frm, to, where=where))
+
+
+def _iceberg_feed(spark, p: str) -> _Feed:
+    from tostore_spark.plans.iceberg import (_load_metadata, read_iceberg,
+                                             read_iceberg_changes)
+    meta = _load_metadata(p)
+    cur = meta.get("current-snapshot-id")
+    if cur is None:
+        raise ValueError(f"{p} has no current snapshot")
+    snaps = {s["snapshot-id"]: s for s in meta.get("snapshots") or []}
+
+    def origin(to):
+        # a bootstrap folds everything from the ancestry ROOT up to to
+        frm, node = to, snaps.get(to)
+        while node is not None:
+            frm = node["snapshot-id"]
+            node = snaps.get(node.get("parent-snapshot-id"))
+        return frm
+
+    # snapshot_id=None for a current-head read binds the CURRENT
+    # schema, so a metadata-only rename after the last snapshot
+    # surfaces (an explicit to_snapshot keeps that snapshot's schema)
+    return _Feed(
+        prefix="__ice_cdf_cursor__", inclusive=False,
+        keys=("from_snapshot", "to_snapshot"),
+        head=int(cur), origin=origin,
+        snapshot=lambda to, explicit, where: read_iceberg(
+            spark, p, snapshot_id=to if explicit else None, where=where),
+        changes=lambda frm, to, where: read_iceberg_changes(
+            spark, p, from_snapshot=frm, to_snapshot=to, where=where))
 
 
 class DbResult:
@@ -122,6 +183,16 @@ class ToStoreSpark:
         #: (space, table, version) dirs handed out by time travel,
         #: CDC and snapshots — vacuum keeps them until unpinned
         self._pinned_versions: set[tuple[str, str, int]] = set()
+        #: ("delta" | "iceberg", (space, name)) -> mirror config; every
+        #: flush of the table runs ``_mirror_flush`` on it
+        self._mirrors: dict[tuple[str, tuple[str, str]], dict] = {}
+        #: (kind, (space, name), local path) -> (stop event, thread) of
+        #: each changelog sync daemon
+        self._syncs: dict = {}
+        #: (table, message) of the last failed mirror export / sync poll
+        self.last_mirror_error = None
+        self.last_cdf_sync_error = None
+        self.last_iceberg_sync_error = None
         if data_dir:
             self.register_dir(data_dir)
         # durable store: overlay the last flushed state (versioned parquet
@@ -1305,12 +1376,15 @@ class ToStoreSpark:
 
     def export_table(self, table: str, path: str,
                      format: str = "parquet", partition_by=None,
-                     mode: str = "error", **options) -> str:
+                     mode: str = "error", allow_decrypted: bool = False,
+                     **options) -> str:
         """Export the table's current state to parquet/csv/json/orc via
-        the distributed writer (no driver collect)."""
+        the distributed writer (no driver collect).  At-rest-encrypted
+        fields refuse unless ``allow_decrypted=True``."""
         from tostore_spark import store as _store
         return _store.export_table(self, table, path, format=format,
                                    partition_by=partition_by, mode=mode,
+                                   allow_decrypted=allow_decrypted,
                                    **options)
 
     def mirror_delta(self, table: str, dest: str,
@@ -1342,45 +1416,18 @@ class ToStoreSpark:
         commits O(deleted rows) on the Delta side and folds as an
         Iceberg merge-on-read position-delete snapshot on the other —
         no file rewrite on either rung.  Returns the initial export
-        report."""
-        key = self._resolve(table)
-        if not hasattr(self, "_delta_mirrors"):
-            self._delta_mirrors = {}
-        self._delta_mirrors[key] = {
+        report; when that export raises, no mirror is registered."""
+        return self._mirror("delta", table, {
             "dest": dest, "dv": bool(deletion_vectors),
             "allow_decrypted": bool(allow_decrypted),
-            "bridge": bool(bridge_iceberg)}
-        from tostore_spark.plans.delta_export import export_delta as _ed
-        # change_data only needs the initial commit: once the table
-        # property is set, every later update commit auto-maintains
-        # the feed (the Delta writer contract)
-        rep = _ed(self, table, dest, mode="update",
-                  deletion_vectors=deletion_vectors,
-                  allow_decrypted=allow_decrypted,
-                  change_data=change_data)
-        if bridge_iceberg:
-            from tostore_spark.plans.iceberg import (
-                _BRIDGE_PROP, _load_metadata, convert_delta_to_iceberg,
-                sync_delta_to_iceberg)
-            p = dest[len("file:"):] if dest.startswith("file:") \
-                else dest
-            try:
-                has_bridge = _BRIDGE_PROP in (
-                    _load_metadata(p).get("properties") or {})
-            except Exception:
-                has_bridge = False
-            if has_bridge:
-                rep["bridge"] = sync_delta_to_iceberg(self.spark, p)
-            else:
-                rep["bridge"] = convert_delta_to_iceberg(self.spark, p)
-        return rep
+            "change_data": bool(change_data),
+            "bridge": bool(bridge_iceberg)})
 
     def unmirror_delta(self, table: str) -> bool:
         """Stop auto-exporting ``table`` (the destination keeps its
         committed versions).  True if a mirror was registered."""
-        key = self._resolve(table)
-        return (getattr(self, "_delta_mirrors", {}) or {}) \
-            .pop(key, None) is not None
+        return self._mirrors.pop(("delta", self._resolve(table)),
+                                 None) is not None
 
     def apply_cdf(self, table: str, path: str,
                   to_version: Optional[int] = None,
@@ -1428,72 +1475,111 @@ class ToStoreSpark:
         Returns ``{"applied", "from_version", "to_version"}`` —
         ``from_version`` is the range start actually folded (the
         first log version on bootstrap)."""
-        import os as _os
+        return self._subscribe(_delta_feed, table, path, to_version,
+                               from_version, cursor, where, on_refuse)
 
+    def _subscribe(self, feed_of, table: str, path: str, to, seed,
+                   cursor: bool, where, on_refuse: str) -> dict:
+        """The one subscription body behind ``apply_cdf`` and
+        ``apply_iceberg_changes``; ``feed_of(spark, path)`` gives the
+        format's facts (``_Feed``)."""
         from pyspark.sql import functions as F
-
-        from tostore_spark.plans.delta_export import read_delta_cdf
         if on_refuse not in ("raise", "rebootstrap"):
             raise ValueError(
                 f"on_refuse must be 'raise'|'rebootstrap', "
                 f"got {on_refuse!r}")
-        p = path[len("file:"):] if path.startswith("file:") else path
-        log_dir = _os.path.join(p, "_delta_log")
-        versions = sorted(
-            int(f[:-5]) for f in _os.listdir(log_dir)
-            if f.endswith(".json") and f[:-5].isdigit())
-        if not versions:
-            raise FileNotFoundError(f"no delta commits under {p}")
-        latest = versions[-1]
-        to = latest if to_version is None else int(to_version)
-        ckey = (f"__cdf_cursor__:{self._space}:{table}:"
-                f"{_os.path.abspath(p)}")
+        p = local_path(path)
+        feed = feed_of(self.spark, p)
+        explicit = to is not None
+        to = int(to) if explicit else feed.head
+        ckey = (f"{feed.prefix}:{self._space}:{table}:"
+                f"{os.path.abspath(p)}")
         wsig = self._where_sig(where)
         last = self._cursor_read(ckey, wsig) if cursor else None
         if last is not None:
-            frm = int(last) + 1
-        elif from_version is not None:
-            frm = int(from_version)
+            frm = int(last) + 1 if feed.inclusive else int(last)
         else:
-            frm = None                       # bootstrap
-        if frm is not None and frm > to:
-            return {"applied": 0, "from_version": frm, "to_version": to}
+            frm = None if seed is None else int(seed)      # None: bootstrap
+        if frm is not None and (frm > to if feed.inclusive else frm == to):
+            return {"applied": 0, feed.keys[0]: frm, feed.keys[1]: to}
         if frm is None:
-            # BOOTSTRAP fast path: the netted replay of every commit
-            # up to ``to`` IS the snapshot's live state — read it
-            # directly as inserts.  O(current state) instead of
-            # O(history), correct even when the early log was
-            # checkpoint-truncated or predates CDF enablement, and
-            # ``where=`` prunes files through the same log stats.
-            # Pure-insert bootstrap equals the netted full replay ONLY
-            # when the consumer starts EMPTY (a replay would also
-            # delete historically-removed rows already present in a
-            # non-empty target) — the precondition is CHECKED, not
-            # assumed.
-            from pyspark.sql import functions as _F
-
-            from tostore_spark.plans.delta_export import read_delta
-            self._require_empty_bootstrap_target(table, "from_version")
-            feed = (read_delta(self.spark, p, version=to, where=where)
-                    .withColumn("_change_type", _F.lit("insert")))
-            frm_rep = versions[0]
+            # BOOTSTRAP fast path: the netted replay of every commit up
+            # to ``to`` IS the snapshot's live state — read it directly
+            # as inserts.  O(current state) instead of O(history),
+            # correct across truncated logs, expired parents and
+            # rewrites the feed refuses to derive, and ``where=``
+            # prunes files through the same stats.  Pure-insert
+            # bootstrap equals the netted full replay ONLY when the
+            # consumer starts EMPTY (a replay would also delete
+            # historically-removed rows already present in a non-empty
+            # target) — the precondition is CHECKED, not assumed.
+            self._require_empty_bootstrap_target(table, feed.keys[0])
+            rows = (feed.snapshot(to, explicit, where)
+                    .withColumn("_change_type", F.lit("insert")))
+            frm = feed.origin(to)
         else:
             try:
-                feed = read_delta_cdf(self.spark, p, frm, to,
-                                      where=where)
+                rows = feed.changes(frm, to, where)
             except ValueError:
                 if on_refuse != "rebootstrap":
                     raise
-                from tostore_spark.plans.delta_export import read_delta
-                feed = self._rebootstrap_diff_feed(
-                    table, read_delta(self.spark, p, version=to,
-                                      where=where))
-            frm_rep = frm
-        n = self._apply_net_feed(table, feed)
+                rows = self._rebootstrap_diff_feed(
+                    table, feed.snapshot(to, explicit, where))
+        n = self._apply_net_feed(table, rows)
         if cursor:
             self._cursor_write(ckey, int(to), wsig)
-        return {"applied": int(n), "from_version": frm_rep,
-                "to_version": to}
+        return {"applied": int(n), feed.keys[0]: frm, feed.keys[1]: to}
+
+    def _mirror(self, fmt: str, table: str, cfg: dict) -> dict:
+        """Register a ``fmt`` mirror of ``table`` once its first export
+        ran — the same hook every later flush runs — so a mirror whose
+        first export fails is never registered."""
+        cfg = {"fmt": fmt, **cfg}
+        rep = self._mirror_flush(table, cfg)
+        self._mirrors[(fmt, self._resolve(table))] = cfg
+        return rep
+
+    def _mirror_flush(self, table: str, cfg: dict) -> dict:
+        """The one mirror hook: the next incremental commit of
+        ``table`` to ``cfg["dest"]``, then (``bridge``) the fold of that
+        commit into the other format's metadata in the same directory,
+        converting it on the first run."""
+        if cfg["fmt"] == "delta":
+            from tostore_spark.plans.delta_export import export_delta
+            # change_data only matters on the first commit: once the
+            # table property is set every update maintains the feed
+            rep = export_delta(self, table, cfg["dest"], mode="update",
+                               deletion_vectors=cfg["dv"],
+                               allow_decrypted=cfg["allow_decrypted"],
+                               change_data=cfg["change_data"])
+        else:
+            from tostore_spark.plans.iceberg import export_iceberg
+            # a Delta-bridged mirror needs position deletes, the only
+            # kind Delta deletion vectors can express
+            rep = export_iceberg(self, table, cfg["dest"], mode="update",
+                                 allow_decrypted=cfg["allow_decrypted"],
+                                 delete_route="position" if cfg["bridge"]
+                                 else "auto")
+        if not cfg["bridge"]:
+            return rep
+        p = local_path(cfg["dest"])
+        if cfg["fmt"] == "delta":
+            from tostore_spark.plans import iceberg as ice
+            try:
+                bridged = ice._BRIDGE_PROP in (
+                    ice._load_metadata(p).get("properties") or {})
+            except Exception:
+                bridged = False
+            step = (ice.sync_delta_to_iceberg if bridged
+                    else ice.convert_delta_to_iceberg)
+        else:
+            from tostore_spark.plans import xtable
+            log_dir = os.path.join(p, "_delta_log")
+            step = (xtable.sync_iceberg_to_delta
+                    if os.path.isdir(log_dir) and os.listdir(log_dir)
+                    else xtable.convert_iceberg_to_delta)
+        rep["bridge"] = step(self.spark, p)
+        return rep
 
     def _rebootstrap_diff_feed(self, table: str, target_df):
         """Recovery feed for ``on_refuse="rebootstrap"``: NET the
@@ -1669,35 +1755,18 @@ class ToStoreSpark:
         ``mirror_delta(bridge_iceberg=True)``.  Pure-delete flushes
         then take the POSITION-delete route (not equality deletes —
         the only kind Delta deletion vectors can express), trading
-        the eqdel tier's zero-probe write for bridgeability."""
-        key = self._resolve(table)
-        if not hasattr(self, "_iceberg_mirrors"):
-            self._iceberg_mirrors = {}
-        self._iceberg_mirrors[key] = {
+        the eqdel tier's zero-probe write for bridgeability.  Returns
+        the initial export report; when that export raises, no mirror
+        is registered."""
+        return self._mirror("iceberg", table, {
             "dest": dest, "allow_decrypted": bool(allow_decrypted),
-            "bridge": bool(bridge_delta)}
-        from tostore_spark.plans.iceberg import export_iceberg as _ei
-        rep = _ei(self, table, dest, mode="update",
-                  allow_decrypted=allow_decrypted,
-                  delete_route="position" if bridge_delta else "auto")
-        if bridge_delta:
-            from tostore_spark.plans.xtable import (
-                convert_iceberg_to_delta, sync_iceberg_to_delta)
-            p = dest[len("file:"):] if dest.startswith("file:") \
-                else dest
-            log_dir = os.path.join(p, "_delta_log")
-            if os.path.isdir(log_dir) and os.listdir(log_dir):
-                rep["bridge"] = sync_iceberg_to_delta(self.spark, p)
-            else:
-                rep["bridge"] = convert_iceberg_to_delta(self.spark, p)
-        return rep
+            "bridge": bool(bridge_delta)})
 
     def unmirror_iceberg(self, table: str) -> bool:
         """Stop auto-exporting ``table`` to its Iceberg mirror (the
         destination keeps its snapshots)."""
-        key = self._resolve(table)
-        return (getattr(self, "_iceberg_mirrors", {}) or {}) \
-            .pop(key, None) is not None
+        return self._mirrors.pop(("iceberg", self._resolve(table)),
+                                 None) is not None
 
     def apply_iceberg_changes(self, table: str, path: str,
                               to_snapshot: Optional[int] = None,
@@ -1735,87 +1804,8 @@ class ToStoreSpark:
         ``from_snapshot`` is the range start actually folded (the
         ancestry-root snapshot on bootstrap, matching the Delta
         twin's ``versions[0]``)."""
-        import os as _os
-
-        from tostore_spark.plans.iceberg import (_load_metadata,
-                                                 _norm_path,
-                                                 read_iceberg_changes)
-        if on_refuse not in ("raise", "rebootstrap"):
-            raise ValueError(
-                f"on_refuse must be 'raise'|'rebootstrap', "
-                f"got {on_refuse!r}")
-        p = _norm_path(path)
-        meta = _load_metadata(p)
-        cur = meta.get("current-snapshot-id")
-        if cur is None:
-            raise ValueError(f"{p} has no current snapshot")
-        to = int(cur) if to_snapshot is None else int(to_snapshot)
-        ckey = (f"__ice_cdf_cursor__:{self._space}:{table}:"
-                f"{_os.path.abspath(p)}")
-        wsig = self._where_sig(where)
-        last = self._cursor_read(ckey, wsig) if cursor else None
-        if last is not None:
-            frm = int(last)
-        elif from_snapshot is not None:
-            frm = int(from_snapshot)
-        else:
-            frm = None
-        if frm is not None and frm == to:
-            return {"applied": 0, "from_snapshot": frm,
-                    "to_snapshot": to}
-        if frm is None:
-            # BOOTSTRAP fast path: the netted full-history changelog
-            # fold IS the target snapshot's live state — read it
-            # directly as inserts.  O(current state) instead of
-            # O(history): no pre-image probes, no long-chain fold,
-            # and it works across rewrites/refreshes the changelog
-            # rightly refuses to derive; ``where=`` prunes at the
-            # manifest level.  Incremental pulls (a cursor or
-            # from_snapshot) stay on the exact changelog.
-            from pyspark.sql import functions as _F
-
-            from tostore_spark.plans.iceberg import read_iceberg
-            self._require_empty_bootstrap_target(table,
-                                                 "from_snapshot")
-            # snapshot_id=None for a current-head bootstrap: the read
-            # then binds the CURRENT schema, so a metadata-only rename
-            # after the last snapshot surfaces (an explicit
-            # to_snapshot keeps that snapshot's own schema)
-            feed = (read_iceberg(
-                self.spark, p,
-                snapshot_id=None if to_snapshot is None else to,
-                where=where)
-                .withColumn("_change_type", _F.lit("insert")))
-            # report the range actually covered (the Delta twin
-            # reports versions[0]): the bootstrap folds everything
-            # from the ancestry ROOT up to ``to``
-            snaps = {s["snapshot-id"]: s
-                     for s in meta.get("snapshots") or []}
-            frm_rep, node = to, snaps.get(to)
-            while node is not None:
-                frm_rep = node["snapshot-id"]
-                node = snaps.get(node.get("parent-snapshot-id"))
-        else:
-            try:
-                feed = read_iceberg_changes(self.spark, p,
-                                            from_snapshot=frm,
-                                            to_snapshot=to,
-                                            where=where)
-            except ValueError:
-                if on_refuse != "rebootstrap":
-                    raise
-                from tostore_spark.plans.iceberg import read_iceberg
-                feed = self._rebootstrap_diff_feed(
-                    table, read_iceberg(
-                        self.spark, p,
-                        snapshot_id=None if to_snapshot is None
-                        else to, where=where))
-            frm_rep = frm
-        n = self._apply_net_feed(table, feed)
-        if cursor:
-            self._cursor_write(ckey, int(to), wsig)
-        return {"applied": int(n), "from_snapshot": frm_rep,
-                "to_snapshot": to}
+        return self._subscribe(_iceberg_feed, table, path, to_snapshot,
+                               from_snapshot, cursor, where, on_refuse)
 
     def start_iceberg_sync(self, table: str, path: str,
                            interval_s: float = 5.0,
@@ -1853,7 +1843,8 @@ class ToStoreSpark:
         self._stop_sync(kind, table, path)
         err = f"last_{kind}_sync_error"
         setattr(self, err, None)
-        key = (kind, self._resolve(table), _abs_local(path))
+        key = (kind, self._resolve(table),
+               os.path.abspath(local_path(path)))
         stop = threading.Event()
 
         def _loop():
@@ -1866,8 +1857,6 @@ class ToStoreSpark:
 
         t = threading.Thread(target=_loop, daemon=True,
                              name=f"{kind}-sync-{key[1][1]}")
-        if not hasattr(self, "_syncs"):
-            self._syncs = {}
         self._syncs[key] = (stop, t)
         t.start()
 
@@ -1876,14 +1865,13 @@ class ToStoreSpark:
         """Shared body of stop_cdf_sync / stop_iceberg_sync: stop the
         ``kind`` daemons for (table, path), all for ``table``, or all.
         Returns the number stopped."""
-        syncs = getattr(self, "_syncs", {}) or {}
         tkey = None if table is None else self._resolve(table)
         pabs = None if table is None or path is None \
-            else _abs_local(path)
-        doomed = [k for k in syncs if k[0] == kind
+            else os.path.abspath(local_path(path))
+        doomed = [k for k in self._syncs if k[0] == kind
                   and tkey in (None, k[1]) and pabs in (None, k[2])]
         for k in doomed:
-            syncs.pop(k)[0].set()
+            self._syncs.pop(k)[0].set()
         return len(doomed)
 
     def unpin_versions(self) -> int:

@@ -41,6 +41,19 @@ def _scheme(path: str) -> str:
     return s if len(s) > 1 else ""
 
 
+def local_path(p: str) -> str:
+    """The local filesystem form of a path or ``file:`` URI, as the
+    Delta/Iceberg interop modules open it: ``file:///x``, ``file:/x``
+    and ``/x`` all give ``/x`` (equality joins against
+    ``_metadata.file_path``, which Spark reports as ``file:///...``,
+    compare in this form)."""
+    if p.startswith("file:"):
+        p = p[len("file:"):]
+        while p.startswith("//"):
+            p = p[1:]
+    return p
+
+
 class LocalFS:
     """POSIX implementation — the scheme-less fast path."""
 

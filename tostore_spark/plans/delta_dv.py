@@ -45,6 +45,8 @@ import struct
 import uuid as _uuid
 import zlib
 
+from tostore_spark.fs import local_path
+
 __all__ = ["decode_deletion_vector", "dv_file_name",
            "encode_bitmap_array", "inline_descriptor",
            "make_descriptor", "write_dv_file"]
@@ -246,10 +248,9 @@ def decode_deletion_vector(table_path: str, dv: dict) -> list[int]:
                 f"inline deletion vector is {len(data)} bytes, "
                 f"descriptor says {size}")
     elif st in ("u", "p"):
-        fpath = (dv["pathOrInlineDv"] if st == "p"
-                 else dv_file_name(table_path, dv["pathOrInlineDv"]))
-        if fpath.startswith("file:"):
-            fpath = fpath[len("file:"):]
+        fpath = local_path(dv["pathOrInlineDv"] if st == "p"
+                           else dv_file_name(table_path,
+                                             dv["pathOrInlineDv"]))
         off = int(dv.get("offset") or 0)
         with open(fpath, "rb") as fh:
             fh.seek(off)

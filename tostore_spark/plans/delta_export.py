@@ -65,7 +65,13 @@ import shutil
 import time
 import uuid
 from urllib.parse import quote, unquote
+from tostore_spark.fs import local_path
 from tostore_spark.localdf import local_df
+from tostore_spark.plans.export_tail import (appended_frame,
+                                             delete_positions, read_state,
+                                             recipe_tail,
+                                             refuse_declassify,
+                                             write_state)
 
 __all__ = ["export_delta", "read_delta", "read_delta_cdf",
            "vacuum_delta"]
@@ -290,67 +296,6 @@ def _coerce_where_values(node, schema):
     return coerce_where_values(node, schema)
 
 
-def _key_bounds_where(keys, fields: dict,
-                      skip_tz: bool = False) -> dict | None:
-    """Per-column conjunctive BETWEEN bounds of a delete-key frame —
-    the sound file-refutation predicate for a key probe: a file can
-    only hold a matching row if EVERY key column's range overlaps
-    that column's key range (composite keys AND their per-column
-    bounds; the store-CDC composite rule).  Bounds are computed
-    TIMEZONE-INDEPENDENTLY: PySpark renders TimestampType in the
-    driver's OS zone on collect, while log/manifest stats compare
-    naive-UTC — so tz-aware columns aggregate ``unix_micros`` and
-    rebuild naive-UTC datetimes driver-side (sound when the result
-    feeds DRIVER-side stats refutation only).  ``skip_tz=True``
-    excludes tz-aware columns from the conjunction entirely — for
-    call sites whose predicate ALSO becomes a Spark row filter, where
-    a naive literal's interpretation rides the session timezone and a
-    rebuilt-UTC bound could over-filter true rows on a non-UTC
-    driver.  A column with any NULL key contributes no bound (a null
-    never satisfies BETWEEN, so the conjunct would wrongly refute);
-    returns None when no column yields bounds.  ``fields`` maps
-    column name → StructField."""
-    from datetime import datetime, timedelta
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    cols = [c for c in keys.columns if c in fields]
-    if skip_tz:
-        cols = [c for c in cols
-                if not isinstance(fields[c].dataType,
-                                  T.TimestampType)]
-    if not cols:
-        return None
-    aggs = []
-    tz_cols = set()
-    for c in cols:
-        if isinstance(fields[c].dataType, T.TimestampType):
-            tz_cols.add(c)
-            lo_c = F.min(F.unix_micros(F.col(c)))
-            hi_c = F.max(F.unix_micros(F.col(c)))
-        else:
-            lo_c, hi_c = F.min(F.col(c)), F.max(F.col(c))
-        aggs += [lo_c.alias(f"__lo_{c}"), hi_c.alias(f"__hi_{c}"),
-                 F.sum(F.when(F.col(c).isNull(), 1).otherwise(0))
-                 .alias(f"__nn_{c}")]
-    b = keys.agg(*aggs).first()
-
-    def _utc(micros):
-        return datetime(1970, 1, 1) + timedelta(
-            microseconds=int(micros))
-
-    conj = {}
-    for c in cols:
-        lo, hi = b[f"__lo_{c}"], b[f"__hi_{c}"]
-        if lo is None or hi is None or b[f"__nn_{c}"]:
-            continue
-        if c in tz_cols:
-            lo, hi = _utc(lo), _utc(hi)
-        conj[c] = {"BETWEEN": {"start": lo, "end": hi}}
-    return conj or None
-
-
 def _prune_adds(files: dict, node, schema, top_map: dict,
                 pcols: list) -> dict:
     """Keep only the adds whose stats/partitionValues admit the
@@ -368,7 +313,7 @@ def _prune_adds(files: dict, node, schema, top_map: dict,
 #: per-file key-bloom sidecar for the DV/position-delete export probes
 #: (round-17 verdict order #1): bounds (min/max) refutation is
 #: structurally wrong for SCATTERED point keys — 100 uniform-random
-#: deleted keys span every file's range, so `_key_bounds_where` refutes
+#: deleted keys span every file's range, so `key_bounds_where` refutes
 #: nothing and the probe scans the whole base.  The sidecar carries one
 #: bloom bitmap per (live file, key column) so the probe drops every
 #: file the bitmaps prove keyless: a 100-key delete then probes at most
@@ -907,24 +852,11 @@ def _maybe_checkpoint(path: str, version: int,
                       fmt: str | None = None) -> None:
     if version > 0 and version % _CHECKPOINT_INTERVAL == 0:
         if fmt is None:
-            try:
-                with open(os.path.join(path, _STATE_SIDECAR)) as fh:
-                    fmt = json.load(fh).get("ckfmt")
-            except (OSError, ValueError):
-                fmt = None
+            fmt = (read_state(path, _STATE_SIDECAR) or {}).get("ckfmt")
         if fmt == "v2":
             _write_checkpoint_v2(path, version)
         else:
             _write_checkpoint(path, version)
-
-
-def _norm_ops(ent) -> list[list[str]]:
-    ops = ent.get("ops")
-    if ops:
-        return [list(o) for o in ops]
-    segs = ent.get("segments") or ([ent["path"]] if ent.get("path")
-                                   else [])
-    return [["seg", s] for s in segs]
 
 
 def export_delta(engine, table: str, dest: str,
@@ -983,18 +915,8 @@ def export_delta(engine, table: str, dest: str,
         raise ValueError(
             f"checkpoint_format must be 'classic'|'v2', "
             f"got {checkpoint_format!r}")
-    try:
-        enc = engine._enc_cols(engine._resolve(table))
-    except Exception:
-        enc = []
-    if enc and not allow_decrypted:
-        # df() decrypts — exporting would silently declassify an
-        # at-rest-encrypted table into a world-readable format
-        raise ValueError(
-            f"table {table} has at-rest-encrypted fields {enc}; "
-            "export_delta would write them DECRYPTED — pass "
-            "allow_decrypted=True to do that deliberately")
-    path = dest[len("file:"):] if dest.startswith("file:") else dest
+    refuse_declassify(engine, table, "export_delta", allow_decrypted)
+    path = local_path(dest)
     log_dir = os.path.join(path, "_delta_log")
     has_log = os.path.isdir(log_dir) and any(
         f.endswith(".json") for f in os.listdir(log_dir))
@@ -1007,98 +929,67 @@ def export_delta(engine, table: str, dest: str,
         if mode == "overwrite":
             shutil.rmtree(path)
             has_log = False
+    # the checkpoint format is a TABLE-level choice: the state sidecar
+    # remembers it; an explicit "v2" on a classic export upgrades the
+    # protocol in the update commit
+    state = read_state(path, _STATE_SIDECAR)
+    ckfmt = checkpoint_format or (state or {}).get("ckfmt")
     if mode == "update" and has_log:
-        return _export_update(engine, table, path,
-                              deletion_vectors=deletion_vectors,
-                              change_data=change_data,
-                              cluster_by=cluster_by,
-                              checkpoint_format=checkpoint_format)
-    # ---- commit v0: full snapshot -----------------------------------
-    df = engine.df(table)
-    pby = list(engine._tables[engine._resolve(table)]
-               .get("partition_by") or [])
-    os.makedirs(path, exist_ok=True)
-    staged = _stage_data_files(df, path, 0, target_files,
-                               partition_by=pby, cluster_by=cluster_by)
-    adds, total = _add_actions(path, staged)
-    conf = {}
-    # CDF needs writer v4 (or the changeDataFeed writer feature); the
-    # v0 snapshot itself carries no cdc file — its adds ARE the
-    # initial inserts per spec
-    proto = ({"minReaderVersion": 1, "minWriterVersion": 4}
-             if change_data else
-             {"minReaderVersion": 1, "minWriterVersion": 2})
-    if checkpoint_format == "v2":
-        proto = _v2_checkpoint_protocol(proto, change_data=change_data)
-    if change_data:
-        conf["delta.enableChangeDataFeed"] = "true"
-    actions = [
-        {"protocol": proto},
-        {"metaData": {
-            "id": str(uuid.uuid4()),
-            "format": {"provider": "parquet", "options": {}},
-            "schemaString": df.schema.json(),
-            "partitionColumns": pby,
-            "configuration": conf,
-            "createdTime": int(time.time() * 1000),
-        }},
-    ] + adds
-    _write_commit(path, 0, actions)
-    _write_state(engine, table, path, 0, ckfmt=checkpoint_format)
-    return {"files": len(staged), "rows": total, "path": dest,
-            "version": 0, "commit": "snapshot"}
+        rep = _export_update(engine, table, path, state, ckfmt,
+                             deletion_vectors=deletion_vectors,
+                             change_data=change_data,
+                             cluster_by=cluster_by)
+    else:
+        # ---- commit v0: full snapshot -------------------------------
+        df = engine.df(table)
+        pby = list(engine._tables[engine._resolve(table)]
+                   .get("partition_by") or [])
+        os.makedirs(path, exist_ok=True)
+        staged = _stage_data_files(df, path, 0, target_files,
+                                   partition_by=pby,
+                                   cluster_by=cluster_by)
+        adds, total = _add_actions(path, staged)
+        conf = {}
+        # CDF needs writer v4 (or the changeDataFeed writer feature);
+        # the v0 snapshot itself carries no cdc file — its adds ARE
+        # the initial inserts per spec
+        proto = ({"minReaderVersion": 1, "minWriterVersion": 4}
+                 if change_data else
+                 {"minReaderVersion": 1, "minWriterVersion": 2})
+        if checkpoint_format == "v2":
+            proto = _v2_checkpoint_protocol(proto,
+                                            change_data=change_data)
+        if change_data:
+            conf["delta.enableChangeDataFeed"] = "true"
+        actions = [
+            {"protocol": proto},
+            {"metaData": {
+                "id": str(uuid.uuid4()),
+                "format": {"provider": "parquet", "options": {}},
+                "schemaString": df.schema.json(),
+                "partitionColumns": pby,
+                "configuration": conf,
+                "createdTime": int(time.time() * 1000),
+            }},
+        ] + adds
+        _write_commit(path, 0, actions)
+        rep = {"files": len(staged), "rows": total, "path": dest,
+               "version": 0, "commit": "snapshot"}
+    if rep["commit"] != "noop":
+        write_state(engine, table, path, _STATE_SIDECAR, ckfmt=ckfmt,
+                    delta_version=rep["version"])
+    return rep
 
 
-def _write_state(engine, table: str, path: str, version: int,
-                 ckfmt: str | None = None) -> None:
-    if ckfmt is None:
-        # preserve the export's persisted checkpoint-format choice
-        try:
-            with open(os.path.join(path, _STATE_SIDECAR)) as fh:
-                ckfmt = json.load(fh).get("ckfmt")
-        except (OSError, ValueError):
-            ckfmt = None
-    key = engine._resolve(table)
-    ent = engine._tables[key]
-    state = {"space": key[0], "table": key[1], "ckfmt": ckfmt,
-             "ops": _norm_ops(ent), "delta_version": version,
-             "store_generation": engine._generations.get(key, 0),
-             # whether THIS export was taken with zero unflushed
-             # mutations.  A dirty export snapshots engine.df() —
-             # which includes in-memory rows not yet in any recipe op —
-             # so its recorded ops UNDERSTATE the exported data; a later
-             # flush of those same rows would look like a pure-append
-             # extension and re-export them.  _export_update's append
-             # fast path therefore requires clean=True (falls back to a
-             # full refresh otherwise — correct, just not incremental).
-             "clean": engine._is_clean(key)}
-    tmp = os.path.join(path, _STATE_SIDECAR + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(state, fh)
-    os.replace(tmp, os.path.join(path, _STATE_SIDECAR))
-
-
-def _export_update(engine, table: str, path: str,
-                   deletion_vectors: bool = False,
+def _export_update(engine, table: str, path: str, state: dict | None,
+                   ckfmt: str | None, deletion_vectors: bool = False,
                    change_data: bool = False,
-                   cluster_by: list | None = None,
-                   checkpoint_format: str | None = None) -> dict:
-    from tostore_spark.at_rest import to_visible
+                   cluster_by: list | None = None) -> dict:
     from tostore_spark.ttl import ttl_active
     key = engine._resolve(table)
     ent = engine._tables[key]
-    cur_ops = _norm_ops(ent)
-    state = None
-    spath = os.path.join(path, _STATE_SIDECAR)
-    if os.path.exists(spath):
-        with open(spath) as fh:
-            state = json.load(fh)
     live = _replay(path)
     next_v = live["version"] + 1
-    # checkpoint format: like CDF, a TABLE-level choice — the state
-    # sidecar remembers it; an explicit "v2" on a classic export
-    # upgrades the protocol in THIS commit
-    ckfmt = checkpoint_format or (state or {}).get("ckfmt")
     if ckfmt == "v2" and "v2Checkpoint" not in set(
             (live.get("protocol") or {}).get("readerFeatures") or []):
         ck_upgrade = [{"protocol": _v2_checkpoint_protocol(
@@ -1130,38 +1021,23 @@ def _export_update(engine, table: str, path: str,
         # already folds the CDF writer feature in
         cdf_upgrade = ck_upgrade + [a for a in cdf_upgrade
                                     if "protocol" not in a]
-    extends = (state is not None and engine._is_clean(key)
-               and state.get("clean") is True
-               and state.get("space") == key[0]
-               and state.get("table") == key[1]
-               and len(cur_ops) >= len(state.get("ops") or [])
-               and cur_ops[:len(state["ops"])] == state["ops"])
-    new_ops = cur_ops[len(state["ops"]):] if extends else []
+    new_ops = recipe_tail(engine, key, state)
+    extends = new_ops is not None
+    new_ops = new_ops or []
     if extends and all(k == "seg" for k, _p in new_ops):
-        new_segs = [p for k, p in new_ops]
-        if not new_segs:
+        if not new_ops:
             return {"files": 0, "rows": 0, "path": path,
                     "version": live["version"], "commit": "noop"}
         # pure-append extension: export ONLY the new segments' rows
-        pby = list(ent.get("partition_by") or [])
-        seg_schema = ent["df"].schema if pby else None
-        df = None
-        for seg in new_segs:
-            part = engine._read_parquet(seg, schema=seg_schema)
-            if seg_schema is not None:
-                part = part.select(*[f.name for f in seg_schema.fields])
-            df = part if df is None else df.unionByName(part)
-        # raw segment reads are STORED frames: an append commit must
-        # export exactly what engine.df() would surface
-        df = to_visible(df, ent["schema"], engine.encryption)
-        staged = _stage_data_files(df, path, next_v, None,
-                                   partition_by=pby)
+        staged = _stage_data_files(
+            appended_frame(engine, ent, [p for _k, p in new_ops]),
+            path, next_v, None,
+            partition_by=list(ent.get("partition_by") or []))
         adds, total = _add_actions(path, staged)
         # CDF: an add-only commit needs NO cdc file — the spec derives
         # its inserts from the dataChange add actions themselves
         _write_commit(path, next_v, cdf_upgrade + adds)
         _maybe_checkpoint(path, next_v, fmt=ckfmt)
-        _write_state(engine, table, path, next_v, ckfmt=ckfmt)
         return {"files": len(staged), "rows": total, "path": path,
                 "version": next_v, "commit": "append"}
     # (since r13 the store's flush gives PARTITIONED tables seg/del
@@ -1171,8 +1047,8 @@ def _export_update(engine, table: str, path: str,
     if (deletion_vectors and extends and new_ops
             and not ttl_active(ent["schema"].ttl)
             and all(k in ("seg", "del") for k, _p in new_ops)):
-        res = _export_update_dv(engine, key, ent, table, path, live,
-                                new_ops, next_v, cdf=cdf,
+        res = _export_update_dv(engine, ent, path, live, new_ops,
+                                next_v, cdf=cdf,
                                 cdf_upgrade=cdf_upgrade, ckfmt=ckfmt)
         if res is not None:
             return res
@@ -1234,14 +1110,12 @@ def _export_update(engine, table: str, path: str,
     _write_commit(path, next_v, cdf_upgrade + cdc_actions
                   + removes + adds)
     _maybe_checkpoint(path, next_v, fmt=ckfmt)
-    _write_state(engine, table, path, next_v, ckfmt=ckfmt)
     return {"files": len(staged), "rows": total, "path": path,
             "version": next_v, "commit": "refresh"}
 
 
-def _export_update_dv(engine, key, ent, table: str, path: str,
-                      live: dict, new_ops, next_v: int,
-                      cdf: bool = False, cdf_upgrade=None,
+def _export_update_dv(engine, ent, path: str, live: dict, new_ops,
+                      next_v: int, cdf: bool = False, cdf_upgrade=None,
                       ckfmt: str | None = None):
     """Merge-on-read incremental commit (``deletion_vectors=True``):
     tail ``seg`` ops stage as fresh add actions, tail ``del`` ops
@@ -1266,16 +1140,12 @@ def _export_update_dv(engine, key, ent, table: str, path: str,
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
-    from tostore_spark.plans.delta_dv import (MAX_TOTAL_POSITIONS,
-                                              decode_deletion_vector,
+    from tostore_spark.plans.delta_dv import (decode_deletion_vector,
                                               make_descriptor)
-    from tostore_spark.at_rest import to_visible
-    from tostore_spark.store import read_delete_keys
     spark = engine.spark
     live_files = dict(live["files"])
     exp_schema = StructType.fromJson(
         json.loads(live["meta"]["schemaString"]))
-    field_names = {f.name for f in exp_schema.fields}
     pby = list(ent.get("partition_by") or [])
     # positions are keyed by file BASENAME (what _metadata.file_path
     # yields after the split), so basenames must be unique across the
@@ -1283,124 +1153,49 @@ def _export_update_dv(engine, key, ent, table: str, path: str,
     by_base = {rel.split("/")[-1]: rel for rel in live_files}
     if len(by_base) != len(live_files):
         return None
-    adds_new, appended_rows, staged_count = [], 0, 0
-    new_pos: dict = {}              # basename -> set(row positions)
-    probe_rels = sorted(live_files)
-    try:
-        for kind, op_path in new_ops:
-            if kind == "seg":
-                seg_schema = ent["df"].schema if pby else None
-                part = to_visible(engine._read_parquet(op_path,
-                                                       schema=seg_schema),
-                                  ent["schema"], engine.encryption)
-                part = part.select(*[f.name for f in exp_schema.fields])
-                staged = _stage_data_files(part, path, next_v, None,
-                                           partition_by=pby)
-                adds, n = _add_actions(path, staged)
-                adds_new += adds
-                appended_rows += n
-                staged_count += len(staged)
-                for rel, _pv in staged:
-                    base = rel.split("/")[-1]
-                    if base in by_base:
-                        return None
-                    by_base[base] = rel
-                    probe_rels.append(rel)
-            else:
-                keys = read_delete_keys(
-                    engine, op_path[:-1] if op_path.endswith("/")
-                    else op_path)
-                kcols = list(keys.columns)
-                if not set(kcols) <= field_names or not probe_rels:
-                    if not set(kcols) <= field_names:
-                        return None     # keys invisible in the export
-                    continue
-                reader = spark.read.schema(exp_schema)
-                if pby:
-                    # hive layout: partition columns come back via
-                    # discovery, so partition-keyed deletes probe too
-                    reader = reader.option("basePath", path)
-                # bounds-prune the probe: live files whose log stats
-                # refute key BETWEEN min..max never held a deleted key
-                # (conservative refutation — a clustered export probes
-                # the matching files, not the table); newly staged
-                # rels always probe (their deletes are same-commit)
-                live_probe = [r for r in probe_rels
-                              if r in live_files]
-                new_probe = [r for r in probe_rels
-                             if r not in live_files]
-                bw = _key_bounds_where(
-                    keys, {f.name: f for f in exp_schema.fields})
-                if bw is not None and live_probe:
-                    from tostore_spark.condition import \
-                        to_condition_node
-                    node = _coerce_where_values(
-                        to_condition_node(bw), exp_schema)
-                    ident = {f.name: f.name
-                             for f in exp_schema.fields}
-                    pcols = list(live["meta"]
-                                 .get("partitionColumns") or [])
-                    kept = _prune_adds(
-                        {r: live_files[r] for r in live_probe},
-                        node, exp_schema, ident, pcols)
-                    live_probe = sorted(kept)
-                if live_probe:
-                    # point-key bloom refutation: min/max can't refute
-                    # SCATTERED keys (their span covers every file) —
-                    # the per-file key blooms can, so the probe reads
-                    # only the files that actually hold deleted keys
+    staged_all = []
 
-                    def _bloom_reader(rels):
-                        rd = spark.read.schema(exp_schema)
-                        if pby:
-                            rd = rd.option("basePath", path)
-                        return (rd.parquet(*[os.path.join(path, r)
-                                             for r in rels])
-                                .select(*kcols,
-                                        F.col("_metadata.file_path")
-                                        .alias("__path")))
+    def _stage(seg):
+        part = appended_frame(engine, ent, [seg]).select(
+            *[f.name for f in exp_schema.fields])
+        staged = _stage_data_files(part, path, next_v, None,
+                                   partition_by=pby)
+        for rel, _pv in staged:
+            base = rel.split("/")[-1]
+            if base in by_base:
+                raise ValueError(f"staged basename {base} not unique")
+            by_base[base] = rel
+        staged_all.extend(staged)
+        return [rel for rel, _pv in staged]
 
-                    def _nrows(rel):
-                        try:
-                            return int(json.loads(
-                                live_files[rel].get("stats")
-                                or "{}")["numRecords"])
-                        except (ValueError, KeyError, TypeError):
-                            return None
-                    live_probe = _bloom_prune_probe(
-                        path, live_probe, keys, kcols,
-                        _bloom_reader, _nrows,
-                        live_rels=list(live_files))
-                probe = live_probe + new_probe
-                if not probe:
-                    continue        # every live file refuted the keys
-                frame = (reader
-                         .parquet(*[os.path.join(path, r)
-                                    for r in probe])
-                         .select(*kcols,
-                                 F.element_at(
-                                     F.split(
-                                         F.col("_metadata.file_path"),
-                                         "/"), -1).alias("__f"),
-                                 F.col("_metadata.row_index")
-                                 .alias("__p")))
-                # limit BEFORE collect: an oversized delete must
-                # trip the bound, not flood the driver first
-                have = sum(len(v) for v in new_pos.values())
-                room = MAX_TOTAL_POSITIONS - have
-                hits = (frame.join(keys.distinct(),
-                                   on=kcols)
-                        .select("__f", "__p")
-                        .limit(room + 1).collect())
-                if len(hits) > room:
-                    return None
-                for r in hits:
-                    new_pos.setdefault(r["__f"], set()).add(int(r["__p"]))
-    except Exception:
-        import os as _os, traceback as _tb
-        if _os.environ.get("TS_DELTA_DEBUG"):
-            _tb.print_exc()
+    def _read(rels):
+        reader = spark.read.schema(exp_schema)
+        if pby:
+            # hive layout: partition columns come back via discovery,
+            # so partition-keyed deletes probe too
+            reader = reader.option("basePath", path)
+        return reader.parquet(*[os.path.join(path, r) for r in rels])
+
+    def _nrows(rel):
+        try:
+            return int(json.loads(
+                live_files[rel].get("stats") or "{}")["numRecords"])
+        except (ValueError, KeyError, TypeError):
+            return None
+
+    ident = {f.name: f.name for f in exp_schema.fields}
+    pcols = list(live["meta"].get("partitionColumns") or [])
+    new_pos = delete_positions(
+        engine, new_ops, exp_schema, sorted(live_files), stage=_stage,
+        read=_read,
+        file_key=lambda fp: F.element_at(F.split(fp, "/"), -1),
+        bounds_prune=lambda rels, node: sorted(_prune_adds(
+            {r: live_files[r] for r in rels}, node, exp_schema, ident,
+            pcols)),
+        nrows_of=_nrows, bloom_dir=path)
+    if new_pos is None:
         return None                 # refresh is always correct
+    adds_new, appended_rows = _add_actions(path, staged_all)
     cdc_actions = []
     if cdf:
         staged_bases = {a["add"]["path"].split("/")[-1]
@@ -1422,11 +1217,7 @@ def _export_update_dv(engine, key, ent, table: str, path: str,
                   if pos_rows else None)
 
         def _keyed_scan(rels):
-            reader = spark.read.schema(exp_schema)
-            if pby:
-                reader = reader.option("basePath", path)
-            return (reader
-                    .parquet(*[os.path.join(path, r) for r in rels])
+            return (_read(rels)
                     .withColumn("__f", F.element_at(
                         F.split(F.col("_metadata.file_path"), "/"), -1))
                     .withColumn("__p",
@@ -1516,8 +1307,7 @@ def _export_update_dv(engine, key, ent, table: str, path: str,
     _write_commit(path, next_v, actions + cdc_actions + removes
                   + dv_adds + adds_new)
     _maybe_checkpoint(path, next_v, fmt=ckfmt)
-    _write_state(engine, table, path, next_v, ckfmt=ckfmt)
-    return {"files": staged_count, "rows": appended_rows,
+    return {"files": len(staged_all), "rows": appended_rows,
             "dv_files": len(new_pos), "dv_positions": dv_rows,
             "path": path, "version": next_v, "commit": "dv"}
 
@@ -1543,7 +1333,7 @@ def convert_to_delta(spark, path: str) -> dict:
     Scale: one footer read per file (driver-side metadata, ∝ file
     count — the same class as the log it writes) and zero row IO."""
     from pyspark.sql.types import StructType
-    p = path[len("file:"):] if path.startswith("file:") else path
+    p = local_path(path)
     log_dir = os.path.join(p, "_delta_log")
     if os.path.isdir(log_dir) and os.listdir(log_dir):
         raise ValueError(f"{p} already has a _delta_log — refusing "
@@ -1647,7 +1437,7 @@ def optimize_delta(spark, path: str,
     (version None = nothing to do)."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
-    p = path[len("file:"):] if path.startswith("file:") else path
+    p = local_path(path)
     state = _replay(p, None)
     meta = state["meta"]
     from tostore_spark.plans.xtable import REVERSE_BRIDGE_PROP
@@ -1775,7 +1565,7 @@ def vacuum_delta(path: str, keep_versions: int = 1,
     additionally skips any candidate younger than the window (Delta's
     own VACUUM retention model) — use it when foreign writers without
     the ``vN-`` convention may be staging concurrently."""
-    p = path[len("file:"):] if path.startswith("file:") else path
+    p = local_path(path)
     from tostore_spark.plans.xtable import REVERSE_BRIDGE_PROP
     try:
         _conf = (_replay(p)["meta"].get("configuration") or {})
@@ -1815,8 +1605,7 @@ def vacuum_delta(path: str, keep_versions: int = 1,
                     dv_file_name(p, dv["pathOrInlineDv"])))
             elif dv and dv.get("storageType") == "p":
                 fp = dv["pathOrInlineDv"]
-                keep.add(os.path.normpath(
-                    fp[len("file:"):] if fp.startswith("file:") else fp))
+                keep.add(os.path.normpath(local_path(fp)))
     # change-data-feed files are referenced by their COMMIT, not by
     # any version's live-file state: keep those of retained commits
     # (dead versions' cdc files reclaim like their data files)
@@ -2060,8 +1849,7 @@ def _apply_checkpoint_v2(state: dict, log_dir: str, ckv: int) -> None:
     for sc in sidecars:
         spath = sc["path"]
         if "://" in spath or os.path.isabs(spath):
-            full = spath[len("file:"):] if spath.startswith("file:") \
-                else spath
+            full = local_path(spath)
         else:
             full = os.path.join(log_dir, "_sidecars", spath)
         tbl = pq.read_table(full)
@@ -2156,7 +1944,7 @@ def version_at_timestamp(path: str, as_of_ms: int,
     adjustment); the pick is the LATEST version at or before the
     requested instant.  O(commit files in the log) — driver-side
     metadata, never data."""
-    p = path[len("file:"):] if path.startswith("file:") else path
+    p = local_path(path)
     log_dir = os.path.join(p, "_delta_log")
     versions = sorted(
         int(f[:-len(".json")]) for f in os.listdir(log_dir)
@@ -2219,7 +2007,7 @@ def describe_delta_history(spark, path: str,
     from pyspark.sql.types import (BooleanType, IntegerType, LongType,
                                    MapType, StringType, StructField,
                                    StructType, TimestampType)
-    p = path[len("file:"):] if path.startswith("file:") else path
+    p = local_path(path)
     log_dir = os.path.join(p, "_delta_log")
     versions = sorted(
         int(f[:-len(".json")]) for f in os.listdir(log_dir)
@@ -2278,7 +2066,7 @@ def describe_delta_detail(spark, path: str):
     from pyspark.sql.types import (ArrayType, IntegerType, LongType,
                                    MapType, StringType, StructField,
                                    StructType)
-    p = path[len("file:"):] if path.startswith("file:") else path
+    p = local_path(path)
     state = _replay(p, None)
     meta = state["meta"] or {}
     proto = state.get("protocol") or {}
@@ -2334,7 +2122,7 @@ def read_delta(spark, path: str, version: int | None = None,
     (``version_at_timestamp`` — the TIMESTAMP AS OF rule)."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
-    p = path[len("file:"):] if path.startswith("file:") else path
+    p = local_path(path)
     if as_of_ms is not None:
         if version is not None:
             raise ValueError("pass version OR as_of_ms, not both")
@@ -2572,7 +2360,7 @@ def read_delta_cdf(spark, path: str, from_version: int,
     from pyspark.sql import functions as F
     from pyspark.sql.types import (LongType, StringType, StructField,
                                    StructType)
-    p = path[len("file:"):] if path.startswith("file:") else path
+    p = local_path(path)
     log_dir = os.path.join(p, "_delta_log")
     versions = sorted(
         int(f[:-len(".json")]) for f in os.listdir(log_dir)

@@ -51,23 +51,20 @@ import uuid
 from contextlib import contextmanager
 from urllib.parse import unquote
 
+# the interop modules' one local-path helper, under this module's name
+from tostore_spark.fs import local_path as _norm_path
 from tostore_spark.localdf import local_df
 from tostore_spark.pin import pin
 from tostore_spark.plans.avro_io import (read_container_file,
                                          write_container_file)
+from tostore_spark.plans.export_tail import (appended_frame,
+                                             delete_positions,
+                                             key_bounds_where, read_state,
+                                             recipe_tail,
+                                             refuse_declassify,
+                                             write_state)
 
 _HINT = "version-hint.text"
-
-
-def _norm_path(p: str) -> str:
-    """Canonical local form of a file URI/path for equality joins
-    against ``_metadata.file_path`` (which Spark reports as
-    ``file:///...``)."""
-    if p.startswith("file:"):
-        p = p[len("file:"):]
-        while p.startswith("//"):
-            p = p[1:]
-    return p
 
 
 @contextmanager
@@ -1303,15 +1300,7 @@ def export_iceberg(engine, table: str, dest: str, mode: str = "error",
     "snapshot_id", "sequence_number", "files", "rows", "commit"}``."""
     if mode not in ("error", "overwrite", "append", "update"):
         raise ValueError(f"unknown export_iceberg mode {mode!r}")
-    try:
-        enc = engine._enc_cols(engine._resolve(table))
-    except Exception:
-        enc = []
-    if enc and not allow_decrypted:
-        raise ValueError(
-            f"table {table} has at-rest-encrypted fields {enc}; "
-            "export_iceberg would write them DECRYPTED — pass "
-            "allow_decrypted=True to do that deliberately")
+    refuse_declassify(engine, table, "export_iceberg", allow_decrypted)
     path = _norm_path(dest)
     mdir = os.path.join(path, "metadata")
     exists = os.path.isdir(mdir) and any(
@@ -1328,34 +1317,28 @@ def export_iceberg(engine, table: str, dest: str, mode: str = "error",
         rep = _export_iceberg_update(engine, table, path, target_files,
                                      cluster_by=cluster_by,
                                      delete_route=delete_route)
-        rep["path"] = dest
-        return rep
-    if mode in ("append", "update") and not exists:
-        mode = "overwrite"   # first export of a fresh dest
-
-    df = engine.df(table)
-    pby = list(engine._tables[engine._resolve(table)]
-               .get("partition_by") or [])
-    os.makedirs(path, exist_ok=True)
-    meta = (_load_metadata(path) if mode == "append"
-            else _fresh_meta(path, df.schema))
-    spec, _pval = _ensure_identity_spec(meta, pby, df.schema)
-    raw_pv: dict = {}
-    staged = _stage_iceberg_data(df, path, target_files,
-                                 cluster_by=cluster_by,
-                                 partition_by=pby, pvals_out=raw_pv)
-    pvals = _typed_pvals(raw_pv, spec, _pval)
-    if mode == "append":
-        rep = _commit_snapshot(path, meta, staged, None,
-                               keep_prior=True, operation="append",
-                               spec=spec, pvals_of=pvals)
-        rep["commit"] = "append-frame"
     else:
+        df = engine.df(table)
+        pby = list(engine._tables[engine._resolve(table)]
+                   .get("partition_by") or [])
+        os.makedirs(path, exist_ok=True)
+        # append and update on a fresh dest are its first export
+        append = mode == "append" and exists
+        meta = (_load_metadata(path) if append
+                else _fresh_meta(path, df.schema))
+        spec, _pval = _ensure_identity_spec(meta, pby, df.schema)
+        raw_pv: dict = {}
+        staged = _stage_iceberg_data(df, path, target_files,
+                                     cluster_by=cluster_by,
+                                     partition_by=pby, pvals_out=raw_pv)
         rep = _commit_snapshot(path, meta, staged, None,
-                               keep_prior=False, operation="append",
-                               spec=spec, pvals_of=pvals)
-        rep["commit"] = "snapshot"
-    _write_iceberg_state(engine, table, path, rep)
+                               keep_prior=append, operation="append",
+                               spec=spec,
+                               pvals_of=_typed_pvals(raw_pv, spec, _pval))
+        rep["commit"] = "append-frame" if append else "snapshot"
+    if rep["commit"] != "noop":
+        write_state(engine, table, path, _ICE_STATE,
+                    snapshot_id=rep["snapshot_id"])
     rep["path"] = dest
     return rep
 
@@ -1753,26 +1736,6 @@ def _commit_snapshot(path: str, meta: dict, data_files,
 _ICE_STATE = "_iceberg_export_state.json"
 
 
-def _write_iceberg_state(engine, table: str, path: str,
-                         rep: dict) -> None:
-    """Export-state sidecar, the Delta exporter's recipe-tracking
-    pattern (delta_export._write_state): records the store recipe this
-    snapshot exported so ``mode="update"`` can prove a pure-append /
-    append+delete extension and commit O(delta)."""
-    from tostore_spark.plans.delta_export import _norm_ops
-    key = engine._resolve(table)
-    ent = engine._tables[key]
-    state = {"space": key[0], "table": key[1],
-             "ops": _norm_ops(ent),
-             "snapshot_id": rep["snapshot_id"],
-             "store_generation": engine._generations.get(key, 0),
-             "clean": engine._is_clean(key)}
-    tmp = os.path.join(path, _ICE_STATE + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(state, fh)
-    os.replace(tmp, os.path.join(path, _ICE_STATE))
-
-
 def _write_position_deletes(path: str, hits: list) -> tuple:
     """Write one spec position-delete parquet (file_path id 2147483546,
     pos id 2147483545; rows sorted by file_path then pos, the spec's
@@ -1808,48 +1771,23 @@ def _export_iceberg_update(engine, table: str, path: str,
     snapshot.  Every prior snapshot keeps time-traveling."""
     from pyspark.sql import functions as F
 
-    from tostore_spark.plans.delta_dv import MAX_TOTAL_POSITIONS
-    from tostore_spark.plans.delta_export import _norm_ops
-    from tostore_spark.at_rest import to_visible
     from tostore_spark.store import read_delete_keys
     from tostore_spark.ttl import ttl_active
 
     spark = engine.spark
     key = engine._resolve(table)
     ent = engine._tables[key]
-    cur_ops = _norm_ops(ent)
-    state = None
-    spath = os.path.join(path, _ICE_STATE)
-    if os.path.exists(spath):
-        with open(spath) as fh:
-            state = json.load(fh)
     meta = _load_metadata(path)
     has_ttl = ttl_active(ent["schema"].ttl)
-    extends = (state is not None and engine._is_clean(key)
-               and state.get("clean") is True
-               and state.get("space") == key[0]
-               and state.get("table") == key[1]
-               and len(cur_ops) >= len(state.get("ops") or [])
-               and cur_ops[:len(state["ops"])] == state["ops"])
-    new_ops = cur_ops[len(state["ops"]):] if extends else []
-
-    def _seg_frame(op_path):
-        pby = list(ent.get("partition_by") or [])
-        seg_schema = ent["df"].schema if pby else None
-        part = engine._read_parquet(op_path, schema=seg_schema)
-        return to_visible(
-            part.select(*[f.name for f in ent["df"].schema.fields]),
-            ent["schema"], engine.encryption)
-
+    new_ops = recipe_tail(engine, key, read_state(path, _ICE_STATE))
+    extends = new_ops is not None
+    new_ops = new_ops or []
     pby = list(ent.get("partition_by") or [])
     if extends and new_ops and all(k == "seg" for k, _p in new_ops):
         # pure-append extension: stage only the delta rows (under the
         # current identity spec; a changed partition_by appends a new
         # spec-id here — metadata-only, prior manifests keep their own)
-        df = None
-        for _k, seg in new_ops:
-            part = _seg_frame(seg)
-            df = part if df is None else df.unionByName(part)
+        df = appended_frame(engine, ent, [p for _k, p in new_ops])
         spec, _pval = _ensure_identity_spec(meta, pby, df.schema)
         raw_pv: dict = {}
         staged = _stage_iceberg_data(df, path, target_files,
@@ -1861,7 +1799,6 @@ def _export_iceberg_update(engine, table: str, path: str,
                                pvals_of=_typed_pvals(raw_pv, spec,
                                                      _pval))
         rep["commit"] = "append"
-        _write_iceberg_state(engine, table, path, rep)
         return rep
     if extends and not new_ops:
         return {"snapshot_id": meta.get("current-snapshot-id"),
@@ -1907,22 +1844,16 @@ def _export_iceberg_update(engine, table: str, path: str,
                                    keep_prior=True, operation="delete")
             rep["commit"] = "eqdel"
             rep["delete_keys"] = sum(f[1] for f in delete_files)
-            _write_iceberg_state(engine, table, path, rep)
             return rep
         except Exception:
-            if os.environ.get("TS_ICEBERG_DEBUG"):
-                import traceback
-                traceback.print_exc()
             # fall through to the position route / refresh below
             meta = _load_metadata(path)
     if (extends and not has_ttl
             and all(k in ("seg", "del") for k, _p in new_ops)):
         # merge-on-read: stage segs, resolve dels to (file, pos) over
-        # the files live at that point in recipe order (a delete never
-        # touches a segment staged after it)
+        # the files live at that point in recipe order
         schema_json = _current_schema(meta)
         sschema = _schema_to_spark(schema_json)
-        field_names = {f.name for f in sschema.fields}
         snap = _pick_snapshot(meta)
         if snap is not None:
             live, _pd, _ed, live_parts, live_fstats = _scan_files(
@@ -1930,114 +1861,49 @@ def _export_iceberg_update(engine, table: str, path: str,
         else:
             live, live_parts, live_fstats = [], {}, {}
         live_seq = {fp: seq for fp, seq in live}
-        probe = [fp for fp, _seq in live]
-        staged_all, hits = [], []
+        staged_all = []
         mor_spec, mor_pval, mor_raw = None, None, {}
+
+        def _stage(seg):
+            nonlocal mor_spec, mor_pval
+            part = appended_frame(engine, ent, [seg])
+            if pby and mor_spec is None:
+                mor_spec, mor_pval = _ensure_identity_spec(
+                    meta, pby, part.schema)
+            staged = _stage_iceberg_data(part, path, target_files,
+                                         partition_by=pby,
+                                         pvals_out=mor_raw)
+            staged_all.extend(staged)
+            return [fp for fp, _r, _s in staged]
+
+        def _nrows(fp):
+            r = (live_fstats.get(fp) or {}).get("rows")
+            return int(r) if r else None
+
         spark.conf.set("spark.sql.parquet.fieldId.read.enabled",
                        "true")
-        try:
-            for kind, op_path in new_ops:
-                if kind == "seg":
-                    part = _seg_frame(op_path)
-                    if pby and mor_spec is None:
-                        mor_spec, mor_pval = _ensure_identity_spec(
-                            meta, pby, part.schema)
-                    staged = _stage_iceberg_data(part, path,
-                                                 target_files,
-                                                 partition_by=pby,
-                                                 pvals_out=mor_raw)
-                    staged_all += staged
-                    probe += [fp for fp, _r, _s in staged]
-                else:
-                    keys = read_delete_keys(
-                        engine, op_path[:-1] if op_path.endswith("/")
-                        else op_path)
-                    kcols = list(keys.columns)
-                    if not set(kcols) <= field_names:
-                        raise ValueError("delete keys invisible in "
-                                         "the exported schema")
-                    if not probe:
-                        continue
-                    # prune the probe's LIVE portion (files staged
-                    # this commit always probe — their deletes are
-                    # same-commit): manifest bounds first, then the
-                    # per-file key blooms that refute SCATTERED point
-                    # keys min/max cannot (shared with the Delta DV
-                    # probe; sidecar under metadata/)
-                    from tostore_spark.plans.delta_export import (
-                        _bloom_prune_probe, _key_bounds_where)
-                    live_cand = [p for p in probe if p in live_seq]
-                    new_cand = [p for p in probe if p not in live_seq]
-                    bw = _key_bounds_where(
-                        keys, {f.name: f for f in sschema.fields})
-                    if bw is not None and live_cand:
-                        from tostore_spark.compile import \
-                            coerce_where_values
-                        from tostore_spark.condition import \
-                            to_condition_node
-                        node = coerce_where_values(
-                            to_condition_node(bw), sschema)
-                        kept = _prune_by_stats(
-                            meta, schema_json,
-                            [(p, live_seq[p]) for p in live_cand],
-                            live_parts, live_fstats, node)
-                        live_cand = [p for p, _s in kept]
-                    if live_cand:
-                        def _bloom_reader(rels):
-                            return (spark.read.schema(sschema)
-                                    .parquet(*rels)
-                                    .select(*kcols,
-                                            F.col("_metadata.file_path")
-                                            .alias("__path")))
-
-                        def _nrows(rel):
-                            r = (live_fstats.get(rel)
-                                 or {}).get("rows")
-                            return int(r) if r else None
-                        live_cand = _bloom_prune_probe(
-                            os.path.join(path, "metadata"),
-                            live_cand, keys, kcols,
-                            _bloom_reader, _nrows,
-                            live_rels=list(live_seq))
-                    cand = live_cand + new_cand
-                    if not cand:
-                        continue
-                    frame = (spark.read.schema(sschema).parquet(*cand)
-                             .select(*kcols,
-                                     F.regexp_replace(
-                                         F.col("_metadata.file_path"),
-                                         "^file:/*", "/").alias("__f"),
-                                     F.col("_metadata.row_index")
-                                     .alias("__p")))
-                    # limit BEFORE collect: an oversized delete must
-                    # trip the bound, not flood the driver first
-                    room = MAX_TOTAL_POSITIONS - len(hits)
-                    got = (frame.join(keys.distinct(),
-                                      on=kcols)
-                           .select("__f", "__p")
-                           .limit(room + 1).collect())
-                    if len(got) > room:
-                        raise ValueError("delete positions over the "
-                                         "driver-side bound")
-                    hits += [(r["__f"], int(r["__p"])) for r in got]
-        except Exception:
-            if os.environ.get("TS_ICEBERG_DEBUG"):
-                import traceback
-                traceback.print_exc()
-            hits = None     # fall through to the refresh tier
-        if hits is not None:
-            delete_files = ([_write_position_deletes(path,
-                                                     set(hits))]
-                            if hits else None)
-            rep = _commit_snapshot(path, meta, staged_all or None,
-                                   delete_files, keep_prior=True,
-                                   operation="delete" if not staged_all
-                                   else "overwrite", spec=mor_spec,
-                                   pvals_of=_typed_pvals(
-                                       mor_raw, mor_spec, mor_pval))
+        pos = delete_positions(
+            engine, new_ops, sschema, [fp for fp, _seq in live],
+            stage=_stage,
+            read=lambda fps: spark.read.schema(sschema).parquet(*fps),
+            file_key=lambda fp: F.regexp_replace(fp, "^file:/*", "/"),
+            bounds_prune=lambda fps, node: [
+                fp for fp, _s in _prune_by_stats(
+                    meta, schema_json, [(fp, live_seq[fp]) for fp in fps],
+                    live_parts, live_fstats, node)],
+            nrows_of=_nrows,
+            bloom_dir=os.path.join(path, "metadata"))
+        if pos is not None:
+            hits = {(f, p) for f, ps in pos.items() for p in ps}
+            rep = _commit_snapshot(
+                path, meta, staged_all or None,
+                [_write_position_deletes(path, hits)] if hits else None,
+                keep_prior=True,
+                operation="overwrite" if staged_all else "delete",
+                spec=mor_spec,
+                pvals_of=_typed_pvals(mor_raw, mor_spec, mor_pval))
             rep["commit"] = "mor"
-            rep["delete_positions"] = len(set(hits))
-            _write_iceberg_state(engine, table, path, rep)
+            rep["delete_positions"] = len(hits)
             return rep
     # refresh: a fresh overwrite snapshot (prior snapshots keep
     # time-traveling; their files stay on disk).  SCHEMA EVOLUTION
@@ -2090,7 +1956,6 @@ def _export_iceberg_update(engine, table: str, path: str,
                            spec=spec,
                            pvals_of=_typed_pvals(raw_pv, spec, _pval))
     rep["commit"] = "refresh"
-    _write_iceberg_state(engine, table, path, rep)
     return rep
 
 
@@ -3871,10 +3736,8 @@ def read_iceberg_changes(spark, path: str,
             # session timezone — tz-aware key columns contribute no
             # conjunct (shared helper with the Delta DV probe, whose
             # stats-only use keeps them via unix_micros)
-            from tostore_spark.plans.delta_export import \
-                _key_bounds_where
-            probe_where = _key_bounds_where(keys, pfields,
-                                            skip_tz=True)
+            probe_where = key_bounds_where(keys, pfields,
+                                           skip_tz=True)
             if node is not None and not renamed:
                 # FILTERED feed: AND the caller's predicate into the
                 # parent probe — pre-images the final row filter

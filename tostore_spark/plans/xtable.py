@@ -65,6 +65,8 @@ import time
 import uuid
 from urllib.parse import quote
 
+from tostore_spark.fs import local_path
+
 __all__ = ["convert_iceberg_to_delta", "sync_iceberg_to_delta",
            "REVERSE_BRIDGE_PROP"]
 
@@ -174,7 +176,6 @@ def _dead_positions(pos_del: list, data: list, location: str) -> dict:
     import pyarrow.parquet as pq
 
     from tostore_spark.plans.delta_dv import MAX_TOTAL_POSITIONS
-    from tostore_spark.plans.iceberg import _norm_path
     if not pos_del:
         return {}
     seq_of = dict(data)
@@ -190,9 +191,9 @@ def _dead_positions(pos_del: list, data: list, location: str) -> dict:
                 "compact (rewrite_data_files) first")
         for raw, pos in zip(t.column("file_path").to_pylist(),
                             t.column("pos").to_pylist()):
-            dp = _norm_path(str(raw))
+            dp = local_path(str(raw))
             if not os.path.isabs(dp):
-                dp = os.path.join(_norm_path(location), dp)
+                dp = os.path.join(local_path(location), dp)
             if dp in seq_of and dseq >= seq_of[dp]:
                 dead.setdefault(dp, set()).add(int(pos))
     return dead
@@ -277,10 +278,9 @@ def convert_iceberg_to_delta(spark, path: str) -> dict:
     from tostore_spark.plans.delta_export import (_maybe_checkpoint,
                                                   _write_commit)
     from tostore_spark.plans.iceberg import (_load_metadata,
-                                             _norm_path,
                                              _pick_snapshot,
                                              _scan_files)
-    p = _norm_path(path)
+    p = local_path(path)
     log_dir = os.path.join(p, "_delta_log")
     if os.path.isdir(log_dir) and os.listdir(log_dir):
         raise ValueError(f"{p} already has a _delta_log — refusing "
@@ -380,11 +380,10 @@ def sync_iceberg_to_delta(spark, path: str) -> dict:
                                                   _replay,
                                                   _write_commit)
     from tostore_spark.plans.iceberg import (_load_metadata,
-                                             _norm_path,
                                              _pick_snapshot,
                                              _scan_files,
                                              _schema_for_snapshot)
-    p = _norm_path(path)
+    p = local_path(path)
     state = _replay(p)
     meta_d = dict(state["meta"])
     conf = dict(meta_d.get("configuration") or {})

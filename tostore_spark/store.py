@@ -482,10 +482,14 @@ def _ops_frame(engine, ops, schema=None, keep=None):
 
 
 def _entry_ops(ent: dict) -> list:
-    """A manifest entry's recipe: its ``ops`` (deletion-vector recipes
-    only), else its segment list."""
-    return ent.get("ops") or [["seg", p] for p in
-                              ent.get("segments") or [ent["path"]]]
+    """A manifest or registry entry's recipe: its ``ops``
+    (deletion-vector recipes only), else its segment list; ``[]`` for a
+    registry entry with no path (a frame registered in memory)."""
+    ops = ent.get("ops")
+    if ops:
+        return [list(o) for o in ops]
+    return [["seg", p] for p in ent.get("segments") or
+            ([ent["path"]] if ent.get("path") else [])]
 
 
 def _claim_path(wh: str, space: str, table: str, version: int) -> str:
@@ -971,15 +975,11 @@ def flush_tables(engine, flush_storage: bool = True,
         # the flush (it surfaces in engine.last_mirror_error and heals
         # on the next flush via a refresh/overwrite commit, because the
         # export-state sidecar still matches an older recipe prefix).
-        hooks = [(m, fn) for m, fn in (
-            (getattr(engine, "_delta_mirrors", None), _mirror_delta),
-            (getattr(engine, "_iceberg_mirrors", None), _mirror_iceberg))
-            if m]
-        if hooks:
+        if engine._mirrors:
             engine.last_mirror_error = None
-        for mirrors, export in hooks:
+        for fmt in ("delta", "iceberg"):
             for key, gen, *_ in staged:
-                cfg = mirrors.get(key)
+                cfg = engine._mirrors.get((fmt, key))
                 if cfg is None:
                     continue
                 try:
@@ -987,7 +987,7 @@ def flush_tables(engine, flush_storage: bool = True,
                         raise ValueError(
                             f"mirror table {key} not resolvable from "
                             f"the current space {engine._space!r}")
-                    export(engine, key[1], cfg)
+                    engine._mirror_flush(key[1], cfg)
                 except Exception as exc:      # pragma: no cover
                     engine.last_mirror_error = (key[1], str(exc))
     except ConcurrentWriteError:
@@ -1047,37 +1047,6 @@ def flush_tables(engine, flush_storage: bool = True,
 #: The reference's analog is the in-process change-event push
 #: (notification_manager.dart:9-40).
 _EVENTS_DIR = "_events"
-
-
-def _local_dest(dest: str) -> str:
-    return dest[len("file:"):] if dest.startswith("file:") else dest
-
-
-def _mirror_delta(engine, table: str, cfg: dict) -> None:
-    """One mirror_delta flush hook: the next incremental Delta commit,
-    then (bridge) its fold into the next Iceberg snapshot — the
-    continuous UniForm loop."""
-    from tostore_spark.plans.delta_export import export_delta
-    export_delta(engine, table, cfg["dest"], mode="update",
-                 deletion_vectors=cfg.get("dv", True),
-                 allow_decrypted=cfg.get("allow_decrypted", False))
-    if cfg.get("bridge"):
-        from tostore_spark.plans.iceberg import sync_delta_to_iceberg
-        sync_delta_to_iceberg(engine.spark, _local_dest(cfg["dest"]))
-
-
-def _mirror_iceberg(engine, table: str, cfg: dict) -> None:
-    """One mirror_iceberg flush hook: the next incremental Iceberg
-    snapshot, then (bridge) its fold into the next Delta commit — the
-    continuous reverse bridge."""
-    from tostore_spark.plans.iceberg import export_iceberg
-    export_iceberg(engine, table, cfg["dest"], mode="update",
-                   allow_decrypted=cfg.get("allow_decrypted", False),
-                   delete_route=("position" if cfg.get("bridge")
-                                 else "auto"))
-    if cfg.get("bridge"):
-        from tostore_spark.plans.xtable import sync_iceberg_to_delta
-        sync_iceberg_to_delta(engine.spark, _local_dest(cfg["dest"]))
 
 
 def _write_flush_event(fs, warehouse: str, seq: int,
@@ -2053,11 +2022,15 @@ def apply_changes(engine, table: str, feed, space: str = "default") -> int:
 
 def export_table(engine, table: str, path: str, format: str = "parquet",
                  partition_by=None, mode: str = "error",
-                 **options) -> str:
+                 allow_decrypted: bool = False, **options) -> str:
     """Export a table (current in-memory state, including unflushed
     mutations) to an external location in parquet/csv/json/orc — the
     distributed writer, one file per partition, no driver collect.
-    CSV defaults to header=true.  Returns the path."""
+    CSV defaults to header=true.  A table with at-rest-encrypted
+    fields refuses unless ``allow_decrypted=True``: the export writes
+    ``df()``, which is plaintext.  Returns the path."""
+    from tostore_spark.plans.export_tail import refuse_declassify
+    refuse_declassify(engine, table, "export_table", allow_decrypted)
     df = engine.df(table)
     if format == "csv" and "header" not in options:
         options["header"] = "true"
